@@ -65,7 +65,6 @@ Design notes (100 TB):
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 import re
@@ -84,6 +83,11 @@ import pyarrow.parquet as pa_pq
 
 from emr_hudi_example_spark.functions.core import now_instant, pk_not_null_condition
 from emr_hudi_example_spark.lake import bloom as bloom_mod
+from emr_hudi_example_spark.lake.index import (
+    ValueIndex,
+    creating_instant,
+    driver_buildable,
+)
 from emr_hudi_example_spark.lake.locks import FileLockProvider, LockProvider
 from emr_hudi_example_spark.lake.xxh import shard_of as xxh_shard
 
@@ -93,11 +97,10 @@ PARTITION_PATH_COL = "_partition_path"
 #: MOR tombstone marker (delete delta records); never present in COW files
 DELETED_COL = "_deleted"
 META_COLS = [COMMIT_TIME_COL, RECORD_KEY_COL, PARTITION_PATH_COL]
-#: row-group size for index sidecar parquet (both the record index and
-#: the secondary index): shards are written as SORTED runs, so a point
-#: probe footer-plans the read and touches ~one row group of this size
-#: at any table scale (Hudi HFile-seek analog; see _planned_probe_read)
-INDEX_ROW_GROUP_BYTES = 1 << 20
+#: explicit key-only read schema for the key sidecar builds: the creating
+#: commit indexes before its own manifest exists, so the stored schema
+#: isn't readable yet — and those builds never need more than the key
+_KEY_SCHEMA = T.StructType([T.StructField(RECORD_KEY_COL, T.StringType())])
 
 _PT_PREFIX = "__pt_"
 
@@ -287,6 +290,7 @@ class LakeTable:
         #: commits is safe (mixed shard counts coexist per instant).
         self.index_shards = index_shards
         self.index_dir = os.path.join(self.path, "_index")
+        self._record_idx = ValueIndex(self, self.index_dir, "key", False)
         #: per-file bloom-filter key index (Hudi's default BLOOM index
         #: analog — the index family the reference configures,
         #: ``SRC/Log2Hudi.scala:78-79``). Prunes upsert/delete candidate
@@ -370,6 +374,7 @@ class LakeTable:
                 f"(hive partition-dir safety); rejected: {bad!r}"
             )
         self.sec_index_dir = os.path.join(self.path, "_index_sec")
+        self._sec_idx = ValueIndex(self, self.sec_index_dir, "val", True)
         #: observability: files skipped where the secondary index (not
         #: stats / blooms) was the decider in the most recent predicate
         #: read
@@ -3298,135 +3303,10 @@ class LakeTable:
     #: under ``max_keys`` AND whose matched shard files total under
     #: ``max_bytes`` is served driver-side (pure pyarrow seeks, zero
     #: Spark jobs — the Hudi HFile-seek analog for point lookups);
-    #: anything bigger takes the Spark shuffle-join path below. Class
+    #: anything bigger takes the Spark path (``lake/index.py``). Class
     #: attrs so tests can force either path.
     driver_probe_max_keys = 1024
     driver_probe_max_bytes = 32 << 20
-
-    def _driver_probe_fps(self, keys: list[str]) -> set[str] | None:
-        """Serve an index probe for literal ``keys`` driver-side:
-        shard ids via the Python XXH64 twin of the writer's
-        ``pmod(xxhash64(key), n)`` expression (parity pinned by
-        ``tests/test_xxh.py``), then a footer-planned pyarrow read of
-        ONLY the matched shard files' stats-matched row groups
-        (:meth:`_planned_probe_read`). Returns None when the gate
-        trips — the caller must then run the Spark join path. An empty
-        set is a REAL answer: no index shard holds any operand key."""
-        if not self.driver_io_local:
-            return None  # object-store base_path: Spark route only
-        paths = self._shard_index_paths(
-            lambda n: {xxh_shard(k, n) for k in keys}
-        )
-        files: list[str] = []
-        for p in paths:
-            for root, _dirs, fns in os.walk(p):
-                files.extend(
-                    os.path.join(root, fn)
-                    for fn in fns
-                    if fn.endswith(".parquet")
-                )
-        return self._planned_probe_read(files, "key", set(keys), "fp")
-
-    def _planned_probe_read(
-        self,
-        part_files: list[str],
-        col: str,
-        operands: set[str],
-        out_col: str,
-    ) -> set[str] | None:
-        """Point-probe a set of index shard files for ``operands``:
-        values of ``out_col`` in rows whose ``col`` ∈ ``operands``.
-
-        100 TB shape: shards are written as SORTED runs in
-        ``INDEX_ROW_GROUP_BYTES`` row groups, so the parquet FOOTERS
-        (KB each) tell us which row groups can hold an operand at all
-        ([min, max] interval test against the sorted operands) — the
-        data read is ~one row group per operand per instant at ANY
-        shard size, and the driver gate compares MATCHED bytes, not
-        file bytes (the r10 100× legs caught whole-shard reads growing
-        linearly with table size). The filter itself is vectorized
-        Arrow compute, never per-row Python. Row groups without stats
-        count as matched — pre-r10 unsorted sidecars degrade to the
-        old whole-file read, still exact. Returns None when matched
-        bytes exceed the gate (caller runs the Spark path)."""
-        from bisect import bisect_left
-
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        if len(part_files) > 4096:
-            return None  # bound driver-side footer reads
-        if not operands:
-            return set()
-        ops = sorted(operands)
-        # plans hold (path, row-group ids), never open handles: keeping
-        # up to 4096 ParquetFiles open across the loop (including the
-        # gate's early None return) risks fd exhaustion under low
-        # ulimits (r10 ADVICE). Footers are KB-sized, so the reopen in
-        # the read loop is noise next to the row-group read itself.
-        plans: list[tuple[str, list[int]]] = []
-        matched_bytes = 0
-        for p in part_files:
-            with pa_pq.ParquetFile(p) as pf:
-                md = pf.metadata
-            col_idx = {
-                md.schema.column(i).name: i for i in range(md.num_columns)
-            }
-            ci = col_idx.get(col)
-            # gate on the COMPRESSED bytes of only the two columns the
-            # read touches — the honest I/O cost. Uncompressed
-            # whole-row-group sizes (total_byte_size) overstate by the
-            # codec ratio × column count and would push legacy shards
-            # that r9 served driver-side onto the Spark path (r10
-            # self-review finding).
-            read_cols = [
-                j for j in (ci, col_idx.get(out_col)) if j is not None
-            ]
-            rgs: list[int] = []
-            for ri in range(md.num_row_groups):
-                rg = md.row_group(ri)
-                take = True
-                if ci is not None:
-                    st = rg.column(ci).statistics
-                    if st is not None and st.has_min_max:
-                        # any operand inside [min, max]? (ops sorted;
-                        # parquet UTF8 stats order == str order, and
-                        # writer-side truncation keeps min/max valid
-                        # BOUNDS). Odd stats types (e.g. undecoded
-                        # bytes from a foreign writer) degrade to
-                        # "matched" — pruning is an optimization,
-                        # never a correctness dependency.
-                        try:
-                            j = bisect_left(ops, st.min)
-                            take = j < len(ops) and ops[j] <= st.max
-                        except TypeError:
-                            take = True
-                if take:
-                    rgs.append(ri)
-                    matched_bytes += sum(
-                        rg.column(j).total_compressed_size
-                        for j in read_cols
-                    ) or rg.total_byte_size
-            if rgs:
-                plans.append((p, rgs))
-        if matched_bytes > self.driver_probe_max_bytes:
-            return None
-        hits: set[str] = set()
-        op_arr = pa.array(ops)
-        for p, rgs in plans:
-            try:
-                with pa_pq.ParquetFile(p) as pf:
-                    tbl = pf.read_row_groups(rgs, columns=[col, out_col])
-            except OSError:
-                # a cross-process cleaner may remove a replaced shard
-                # file between the footer pass and this reopen (the
-                # handle-free plans traded that immunity for bounded
-                # fds) — trip the gate and let the caller re-plan on
-                # the Spark path against the then-current live set
-                return None
-            mask = pc.is_in(tbl.column(col), value_set=op_arr)
-            hits.update(tbl.column(out_col).filter(mask).to_pylist())
-        return hits
 
     def _index_hit_files(
         self,
@@ -3434,122 +3314,22 @@ class LakeTable:
         batch: DataFrame,
         keys: list[str] | None = None,
     ) -> list[dict]:
-        """Probe the persistent record index: distinct batch keys join
-        the (key, fp) index table; stale entries (replaced files) drop
-        out because the result is intersected with the live candidate
-        set. One narrow shuffle join — and only the batch keys' SHARD
-        dirs of each index commit are read (``_shard_index_paths``), so
-        planning I/O scales with keys touched, not index size.
-
-        Point-sized batches skip Spark entirely: if the distinct keys
-        fit under ``driver_probe_max_keys`` (one capped collect on the
-        persisted batch — for larger batches this costs one extra
-        partial-agg pass, noise next to their merge/write) and the
-        matched shard bytes fit the gate, the probe is pure driver-side
-        pyarrow (:meth:`_driver_probe_fps`)."""
-        if keys is not None:
-            fast = self._driver_probe_fps(keys)
-            if fast is not None:
-                hit_paths = self._normalize_index_fps(fast)
-                return [f for f in candidates if f["path"] in hit_paths]
-        key_df = batch.select(
-            F.col(RECORD_KEY_COL).alias("key")
-        ).distinct()
-        if keys is None and self._point_probe_plausible(batch):
-            collected = key_df.limit(
-                self.driver_probe_max_keys + 1
-            ).collect()
-            if len(collected) <= self.driver_probe_max_keys:
-                fast = self._driver_probe_fps(
-                    [r["key"] for r in collected]
-                )
-                if fast is not None:
-                    hit_paths = self._normalize_index_fps(fast)
-                    return [
-                        f for f in candidates if f["path"] in hit_paths
-                    ]
-        paths = self._shard_index_paths(self._shard_set_fn(key_df))
-        if not paths:
-            return []  # no index data ⇒ no candidate holds a batch key
-        idx = (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .parquet(*paths)
+        """Probe the persistent record index for the batch's keys: stale
+        entries (replaced files) drop out because the result is
+        intersected with the live candidate set, and only the keys'
+        shard dirs of each candidate's instant are read, so planning
+        I/O scales with keys touched, not index size. Point-sized
+        batches (``keys`` precollected by :meth:`_key_hit_files`) probe
+        driver-side with zero Spark jobs while the matched shard bytes
+        fit the gate; larger batches join their distinct keys in one
+        Spark scan."""
+        operands = (
+            keys
+            if keys is not None
+            else batch.select(RECORD_KEY_COL).distinct()
         )
-        hits = idx.join(key_df, "key").select("fp").distinct().collect()
-        hit_paths = self._normalize_index_fps(fp for (fp,) in hits)
-        return [f for f in candidates if f["path"] in hit_paths]
-
-    def _shard_set_fn(self, keys: DataFrame):
-        """``fn(n) -> {shard ids of keys under modulus n}`` with one
-        tiny Spark agg per DISTINCT modulus encountered (a resized
-        table mixes moduli across index commits); results cached."""
-        cache: dict[int, set[int]] = {}
-
-        def shards(n: int) -> set[int]:
-            if n not in cache:
-                cache[n] = {
-                    r[0]
-                    for r in keys.select(
-                        F.pmod(F.xxhash64("key"), F.lit(n))
-                        .cast("int")
-                        .alias("s")
-                    )
-                    .distinct()
-                    .collect()
-                }
-            return cache[n]
-
-        return shards
-
-    def _shard_index_paths(self, shards_for) -> list[str]:
-        """Index parquet paths to read for a probe whose operand keys
-        shard per ``shards_for(modulus)``: each instant dir contributes
-        its matching ``shard=`` subdirs under its own ``.nshards``
-        modulus; flat pre-sharding dirs and marker-less sharded dirs
-        contribute whole (unpruned but exact)."""
-        paths: list[str] = []
-        try:
-            instants = sorted(os.listdir(self.index_dir))
-        except FileNotFoundError:
-            return paths
-        for inst in instants:
-            d = os.path.join(self.index_dir, inst)
-            if not os.path.isdir(d):
-                continue
-            listing = os.listdir(d)
-            if not any(x.startswith("shard=") for x in listing):
-                paths.append(d)  # pre-sharding flat commit dir
-                continue
-            try:
-                with open(os.path.join(d, ".nshards")) as fh:
-                    n = int(fh.read().strip())
-            except (OSError, ValueError):
-                paths.extend(
-                    os.path.join(d, x)
-                    for x in listing
-                    if x.startswith("shard=")
-                )
-                continue
-            paths.extend(
-                p
-                for s in shards_for(n)
-                if os.path.isdir(p := os.path.join(d, f"shard={s}"))
-            )
-        return paths
-
-    def _normalize_index_fps(self, fps) -> set[str]:
-        """Index entries are table-root-relative (manifest-style) so
-        they match after a table move; legacy absolute/URI entries are
-        relativized against the CURRENT root for compatibility."""
-        root = os.path.abspath(self.path)
-        out = set()
-        for fp in fps:
-            if "://" in fp or fp.startswith("file:"):
-                fp = unquote(urlparse(fp).path)
-            if os.path.isabs(fp):
-                fp = os.path.relpath(fp, root)
-            out.add(fp)
-        return out
+        hit = self._record_idx.probe(candidates, operands)
+        return [f for f in candidates if f["path"] in hit]
 
     def _record_prune_reads(
         self, files: list[dict], predicate: list[tuple]
@@ -3566,14 +3346,12 @@ class LakeTable:
         key-equality row filter anyway). Requires full coverage (every
         live file ``indexed``); partial coverage keeps everything.
 
-        Probe I/O scales with the SHARD layout, not the table: operand
-        keys hash (Spark-side, same expression as the writer) to their
-        shard ids and only those ``shard=`` dirs of each commit's index
-        are read — ~1/``index_shards`` of index bytes per point lookup
-        at any table size. Each instant dir's own ``.nshards`` marker
-        supplies the modulus, so commits written under different shard
-        counts (a resized table) each probe correctly; pre-sharding
-        flat dirs and marker-less sharded dirs are read whole."""
+        Operand keys are LITERALS, so the probe needs no Spark job while
+        the matched shard bytes fit the driver gate: Python-side shard
+        ids (XXH64 parity, tests/test_xxh.py) + pyarrow seeks into ~one
+        row group per operand per instant. This is what makes an
+        indexed point read point-COST: the only Spark job left is the
+        single-file data scan."""
         self.last_record_read_pruned = 0
         if not self.record_index or len(files) <= 1:
             return files
@@ -3589,187 +3367,10 @@ class LakeTable:
                 break
         if not vals:
             return files
-        # point-lookup fast path: operand keys are LITERALS, so the
-        # probe needs no Spark job at all — Python-side shard ids
-        # (XXH64 parity, tests/test_xxh.py) + pyarrow seeks into the
-        # matched shard files, under the same size gate as the write
-        # probe. This is what makes an indexed point read point-COST:
-        # the only Spark job left is the single-file data scan.
-        fast = self._driver_probe_fps(vals)
-        if fast is not None:
-            hit_paths = self._normalize_index_fps(fast)
-            kept = [f for f in files if f["path"] in hit_paths]
-            self.last_record_read_pruned = len(files) - len(kept)
-            return kept
-        probe = self.spark.createDataFrame(
-            [(v,) for v in vals], "key string"
-        )
-        paths = self._shard_index_paths(self._shard_set_fn(probe))
-        if not paths:
-            return files  # operand shards empty ⇒ no key exists; but
-            # an empty scan list can't express that — keep (read
-            # returns 0 rows through the row filter regardless)
-        idx = self.spark.read.option(
-            "recursiveFileLookup", "true"
-        ).parquet(*paths)
-        hits = (
-            idx.join(F.broadcast(probe), "key")
-            .select("fp")
-            .distinct()
-            .collect()
-        )
-        hit_paths = self._normalize_index_fps(fp for (fp,) in hits)
-        kept = [f for f in files if f["path"] in hit_paths]
+        hit = self._record_idx.probe(files, vals)
+        kept = [f for f in files if f["path"] in hit]
         self.last_record_read_pruned = len(files) - len(kept)
         return kept
-
-
-    def _write_record_index(self, instant: str, added: list[dict]) -> None:
-        """Append this commit's (record key → file) mapping under
-        ``_index/<instant>/shard=<pmod(xxhash64(key), 64)>/``. Entries
-        for later-replaced files go stale harmlessly (lookups intersect
-        with live files); the index is append-only, like Hudi's
-        metadata-table record index. The shard dir is derived from the
-        SAME Spark-side hash probes recompute, so writer and prober can
-        never disagree; readers that don't care about shards
-        (``_index_hit_files``) use recursiveFileLookup and see a flat
-        (key, fp) table either way."""
-        # point-sized commits build the sidecar driver-side: pyarrow
-        # reads of the added files' key column + the Python XXH64 twin
-        # of the shard expression (parity: tests/test_xxh.py), one
-        # parquet per non-empty shard — byte-compatible with the Spark
-        # layout both probe paths read. Saves a Spark job per commit on
-        # the streaming-upsert hot path; big or many-file commits take
-        # the parallel Spark build below (the 1024-files-per-commit
-        # scale shape).
-        if self._index_driver_buildable(added):
-            self._driver_index_shard_build(
-                added, os.path.join(self.index_dir, instant),
-                self.index_shards,
-            )
-            return
-        # explicit key-only schema: the creating commit indexes before
-        # its own manifest exists, so the stored schema isn't readable
-        # yet — and the index never needs more than the key column
-        key_schema = T.StructType(
-            [T.StructField(RECORD_KEY_COL, T.StringType())]
-        )
-        rel_fp = self._rel_fp_expr()
-        rows = self._read_files(
-            [f["path"] for f in added], schema=key_schema
-        ).select(
-            F.col(RECORD_KEY_COL).alias("key"),
-            rel_fp.alias("fp"),
-            F.pmod(
-                F.xxhash64(F.col(RECORD_KEY_COL)),
-                F.lit(self.index_shards),
-            ).cast("int").alias("shard"),
-        )
-        out_dir = os.path.join(self.index_dir, instant)
-        (
-            # hash-shuffle on the shard id: one task per shard ⇒ one
-            # index file per shard dir, built in parallel
-            # SORTED RUNS: keys clustered within each shard file into
-            # small row groups (Hudi's HFile analog — sorted key-value
-            # files seekable by footer stats). Point probes then read
-            # only the row groups whose [min,max] intersects the
-            # operand keys (_planned_probe_read), so probe I/O stays
-            # ~one row group at ANY table size instead of the whole
-            # shard (the r10 100× legs caught the whole-shard read
-            # growing linearly with data volume).
-            rows.repartition(self.index_shards, F.col("shard"))
-            # partition cols lead the sort: the dynamic-partition
-            # writer requires shard-ordering and would otherwise
-            # re-sort (unstably), destroying the key runs
-            .sortWithinPartitions("shard", "key")
-            .write.mode("overwrite")
-            .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-            .partitionBy("shard")
-            .parquet(out_dir)
-        )
-        # pin THIS commit's modulus next to its shards: probes must
-        # recompute operand shards per-instant or a table resized
-        # between commits would probe the wrong dirs and falsely prune
-        with open(os.path.join(out_dir, ".nshards"), "w") as fh:
-            fh.write(str(self.index_shards))
-
-    def _index_driver_buildable(self, files: list[dict]) -> bool:
-        """Gate for the driver-side (pyarrow) record-index build: local
-        FS, point-sized (≤64 files whose manifest-recorded bytes sum
-        under the driver probe budget). Shared by the write-path fast
-        path and the backfill so the two policies cannot drift."""
-        sizes = [f.get("bytes") for f in files]
-        return (
-            self.driver_io_local
-            and len(files) <= 64
-            and all(isinstance(s, int) for s in sizes)
-            and sum(sizes) <= self.driver_probe_max_bytes
-        )
-
-    def _driver_index_shard_build(
-        self,
-        added: list[dict],
-        out_dir: str,
-        nshards: int,
-        filename: str = "part-driver.parquet",
-    ) -> None:
-        """pyarrow (key → fp) shard build — reads the added files' key
-        column driver-side and writes one sorted parquet run per
-        non-empty shard, byte-compatible with the Spark build's layout
-        (the Python XXH64 twin of the shard expression; parity pinned
-        by tests/test_xxh.py). An existing ``.nshards`` marker is
-        honored (backfill may append into a dir another commit sized)."""
-        import pyarrow as pa
-
-        by_shard: dict[int, tuple[list[str], list[str]]] = {}
-        for f in added:
-            tbl = pa_pq.read_table(
-                os.path.join(self.path, f["path"]),
-                columns=[RECORD_KEY_COL],
-            )
-            for k in tbl.column(RECORD_KEY_COL).to_pylist():
-                ks, fs = by_shard.setdefault(
-                    xxh_shard(k, nshards), ([], [])
-                )
-                ks.append(k)
-                fs.append(f["path"])
-        for shard, (ks, fs) in by_shard.items():
-            d = os.path.join(out_dir, f"shard={shard}")
-            os.makedirs(d, exist_ok=True)
-            ks, fs = map(
-                list, zip(*sorted(zip(ks, fs)))
-            )  # sorted run, as in the Spark build
-            pa_pq.write_table(
-                pa.table({"key": ks, "fp": fs}),
-                os.path.join(d, filename),
-            )
-        os.makedirs(out_dir, exist_ok=True)
-        self._pin_nshards_marker(out_dir, nshards)
-
-    def _pin_nshards_marker(self, out_dir: str, nshards: int) -> None:
-        """Write the dir's ``.nshards`` marker, or — when one already
-        exists (backfill appending into a dir another commit sized) —
-        ASSERT it equals the modulus the rows were just sharded with:
-        silently keeping a disagreeing marker would make probes
-        recompute different shards than the build used and miss keys
-        (r14 advice)."""
-        marker = os.path.join(out_dir, ".nshards")
-        if not os.path.exists(marker):
-            with open(marker, "w") as fh:
-                fh.write(str(nshards))
-            return
-        try:
-            with open(marker) as fh:
-                existing = int(fh.read().strip())
-        except (OSError, ValueError):
-            return  # unreadable marker: leave as-is (probe defaults)
-        if existing != nshards:
-            raise ValueError(
-                f"index dir {out_dir} is pinned to .nshards="
-                f"{existing} but rows were sharded with modulus "
-                f"{nshards} — probes would miss keys; pass the dir's "
-                f"modulus (backfill reads the marker) or rebuild the dir"
-            )
 
     def _rel_fp_expr(self):
         """``_metadata.file_path`` relativized against the table root.
@@ -3804,14 +3405,8 @@ class LakeTable:
         # point-sized commits build driver-side with the SAME
         # lake/bloom.py functions the Arrow kernel is parity-pinned
         # against (test_bloom_kernel_matches_module) — bit-identical
-        # sidecars, no Spark job. Gate as in _write_record_index.
-        sizes = [f.get("bytes") for f in added]
-        if (
-            self.driver_io_local
-            and len(added) <= 64
-            and all(isinstance(s, int) for s in sizes)
-            and sum(sizes) <= self.driver_probe_max_bytes
-        ):
+        # sidecars, no Spark job. Same gate as the index builds.
+        if driver_buildable(self, added):
             sidecar = {}
             for f in added:
                 tbl = pa_pq.read_table(
@@ -3825,11 +3420,8 @@ class LakeTable:
                 )
             self._persist_bloom_sidecar(instant, sidecar)
             return
-        key_schema = T.StructType(
-            [T.StructField(RECORD_KEY_COL, T.StringType())]
-        )
         rows = self._read_files(
-            [f["path"] for f in added], schema=key_schema
+            [f["path"] for f in added], schema=_KEY_SCHEMA
         ).select(
             self._rel_fp_expr().alias("fp"),
             F.col(RECORD_KEY_COL).alias("key"),
@@ -4214,8 +3806,7 @@ class LakeTable:
         the file's writing instant (the schema the index-build
         ``cast("string")`` ran under), lazily cached per instant.
         Missing manifest ⇒ empty map ⇒ every probe keeps the file."""
-        parts = f["path"].replace(os.sep, "/").split("/")
-        instant = parts[1] if len(parts) >= 2 else ""
+        instant = creating_instant(f["path"])
         cached = self._col_bloom_type_cache.get(instant)
         if cached is not None:
             return cached
@@ -4261,375 +3852,48 @@ class LakeTable:
                 return False  # every operand definitely absent
         return True
 
-    # ------------------------------- exact secondary index (non-key cols)
+    # ------------------------------- index backfill (async indexing)
 
-    def _write_sec_index(
-        self, instant: str, added: list[dict], schema: T.StructType
-    ) -> None:
-        """Append this commit's (column value → file) mappings under
-        ``_index_sec/<instant>/col=<c>/shard=<pmod(xxhash64(val),
-        index_shards)>/`` — the exact sibling of the column blooms and
-        the non-key twin of :meth:`_write_record_index` (Hudi 1.0's
-        metadata-table secondary index). Values are canonicalized by
-        Spark's ``cast("string")`` (same convention as the column
-        blooms, so the probe reuses :meth:`_bloom_operand`); NULLs are
-        excluded (``=``/``in`` never match NULL). One row per DISTINCT
-        (value, file) pair, so index size scales with per-file distinct
-        counts, not row counts. A listed column absent from this
-        commit's schema writes no rows — correct, because those files
-        hold only NULL for it, and the probe's no-hit verdict (file
-        provably holds no operand value) is exactly right.
-
-        100 TB shape: one distributed column-pruned pass over the
-        commit's files, hash-shuffled on (col, shard) so each shard dir
-        gets one file; probes touch only the operands' shard dirs
-        (~1/``index_shards`` of a column's index per point lookup).
-        The per-instant ``.nshards`` marker makes resized tables probe
-        correctly, as with the record index."""
-        names = {f.name for f in schema.fields}
-        present = [c for c in self.secondary_index_columns if c in names]
-        out_dir = os.path.join(self.sec_index_dir, instant)
-        # point-sized commits with ALL-STRING indexed columns build the
-        # sidecar driver-side (``cast("string")`` is the identity on
-        # strings, so Python values match the Spark canonical form
-        # exactly; non-string columns always take the Spark build —
-        # reproducing Spark's numeric/temporal string rendering in
-        # Python is where parity would get risky). Same gate as the
-        # record-index driver build; saves a 64-task job per commit on
-        # the streaming-upsert hot path.
-        if present and self._sec_driver_buildable(added, present, schema):
-            self._driver_sec_index_build(
-                added, present, out_dir, self.index_shards
-            )
-            return
-        if present:
-            self._sec_spark_build(
-                added, present, schema, out_dir, self.index_shards,
-                mode="overwrite",
-            )
-        os.makedirs(out_dir, exist_ok=True)
-        with open(os.path.join(out_dir, ".nshards"), "w") as fh:
-            fh.write(str(self.index_shards))
-
-    def _sec_driver_buildable(
-        self, files: list[dict], present: list[str], schema: T.StructType
-    ) -> bool:
-        """Gate for the driver-side secondary-index build: point-sized
-        (the shared record-index gate) AND all indexed columns are
-        STRING with simple names — ``cast("string")`` is the identity
-        on strings, so Python values match the Spark canonical form
-        exactly; non-string columns always take the Spark build
-        (reproducing Spark's numeric/temporal string rendering in
-        Python is where parity would get risky)."""
-        all_string = all(
-            isinstance(fld.dataType, T.StringType)
-            for fld in schema.fields
-            if fld.name in present
-        )
-        simple_names = all(c.replace("_", "").isalnum() for c in present)
-        return (
-            all_string
-            and simple_names
-            and self._index_driver_buildable(files)
-        )
-
-    def _driver_sec_index_build(
+    def _publish_backfill(
         self,
-        added: list[dict],
-        present: list[str],
-        out_dir: str,
-        nshards: int,
-        filename: str = "part-driver.parquet",
-    ) -> None:
-        """pyarrow (column value → fp) shard build — the secondary-index
-        twin of :meth:`_driver_index_shard_build`: distinct (value,
-        file) pairs per column, one sorted run per non-empty
-        ``col=<c>/shard=<s>`` dir, byte-compatible with the Spark
-        build's layout. An existing ``.nshards`` marker is honored."""
-        import pyarrow as pa
-
-        by_dir: dict[tuple, tuple[list[str], list[str]]] = {}
-        for f in added:
-            want = [c for c in present]
-            tbl = pa_pq.read_table(
-                os.path.join(self.path, f["path"]),
-                columns=want,
-            )
-            for c in want:
-                seen: set[str] = set()
-                for v in tbl.column(c).to_pylist():
-                    if v is None or v in seen:
-                        continue
-                    seen.add(v)
-                    vs, fs = by_dir.setdefault(
-                        (c, xxh_shard(v, nshards)),
-                        ([], []),
-                    )
-                    vs.append(v)
-                    fs.append(f["path"])
-        for (c, shard), (vs, fs) in by_dir.items():
-            d = os.path.join(out_dir, f"col={c}", f"shard={shard}")
-            os.makedirs(d, exist_ok=True)
-            vs, fs = map(
-                list, zip(*sorted(zip(vs, fs)))
-            )  # sorted run, as in the Spark build
-            pa_pq.write_table(
-                pa.table({"val": vs, "fp": fs}),
-                os.path.join(d, filename),
-            )
-        os.makedirs(out_dir, exist_ok=True)
-        self._pin_nshards_marker(out_dir, nshards)
-
-    def _sec_spark_build(
-        self,
+        idx: ValueIndex,
         files: list[dict],
-        present: list[str],
-        schema: T.StructType,
-        out_dir: str,
-        nshards: int,
-        mode: str,
-    ) -> None:
-        """One distributed column-pruned pass over ``files`` producing
-        the distinct (col, val, fp) index rows, hash-shuffled on
-        (col, shard) and written ``partitionBy`` under ``out_dir``.
-        ``mode="append"`` lets the backfill add rows to an instant dir
-        that already indexes other columns."""
-        read_schema = T.StructType(
-            [f for f in schema.fields if f.name in present]
+        builds: list[tuple[list[dict], T.StructType]],
+        stamp: Callable[[dict], dict],
+    ) -> str | None:
+        """Shared tail of the two async indexers, under the writer lock:
+        sweep what a crashed predecessor left, build each ``(files,
+        schema)`` batch into the files' creating-instant dirs (named
+        for this backfill's instant), then record coverage with one
+        metadata-only ``index_backfill`` commit re-adding ``files`` as
+        ``stamp`` upgrades them."""
+        if not files:
+            return None
+        inst = self._next_instant(None)
+        idx.sweep(
+            {creating_instant(f["path"]) for f in files},
+            self._is_backfill_commit,
         )
-        pairs = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"),
-                        F.col(c).cast("string").alias("val"),
-                    )
-                    for c in present
-                ]
-            )
+        for fl, schema in builds:
+            groups: dict[str, list[dict]] = {}
+            for f in fl:
+                groups.setdefault(creating_instant(f["path"]), []).append(f)
+            idx.build(groups, schema, batch=inst)
+        self._write_manifest(
+            inst,
+            "index_backfill",
+            self._stored_schema(),
+            [stamp(f) for f in files],
+            [f["path"] for f in files],
         )
-        rows = (
-            self._read_files(
-                [f["path"] for f in files], schema=read_schema
-            )
-            .select(self._rel_fp_expr().alias("fp"), pairs.alias("p"))
-            .select(
-                "fp",
-                F.col("p.col").alias("col"),
-                F.col("p.val").alias("val"),
-            )
-            .filter(F.col("val").isNotNull())
-            .distinct()
-            .withColumn(
-                "shard",
-                F.pmod(
-                    F.xxhash64(F.col("val")),
-                    F.lit(nshards),
-                ).cast("int"),
-            )
-        )
-        (
-            # sorted runs + small row groups: see _write_record_index —
-            # probes read only the stats-matched row groups
-            rows.repartition(nshards, "col", "shard")
-            .sortWithinPartitions("col", "shard", "val")
-            .write.mode(mode)
-            .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-            .partitionBy("col", "shard")
-            .parquet(out_dir)
-        )
+        return inst
 
-    def _spark_backfill_index_build(
-        self,
-        by_inst: dict[str, list[dict]],
-        nshards_by_inst: dict[str, int],
-    ) -> None:
-        """ONE distributed pass building record-index rows for every
-        uncovered creating instant: all files scanned in a single
-        column-pruned job, each row's instant derived from its file
-        path and sharded with that instant's modulus, output staged
-        ``partitionBy(inst, shard)`` and moved into the per-instant
-        dirs driver-side. Replaces the one-Spark-job-per-instant loop —
-        over a long timeline (the 100 TB backfill shape: hundreds of
-        creating commits) the per-job fixed cost serialized, while the
-        work itself is one scan + one shuffle regardless of how many
-        instants it spans."""
-        import uuid as _uuid
-
-        # sweep stage dirs a hard-killed predecessor leaked (the
-        # finally below cannot run across kill -9): the backfill holds
-        # the writer lock, so any surviving _bf_stage-* is garbage —
-        # without the sweep they accumulate inside index_dir forever
-        # (r14 advice)
-        for stale in glob.glob(
-            os.path.join(self.index_dir, "_bf_stage-*")
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-        key_schema = T.StructType(
-            [T.StructField(RECORD_KEY_COL, T.StringType())]
-        )
-        all_files = [f for fl in by_inst.values() for f in fl]
-        fp = self._rel_fp_expr()
-        inst_col = F.element_at(F.split(F.col("fp"), "/"), 2)
-        nsh_col = F.lit(self.index_shards)
-        for inst, nsh in nshards_by_inst.items():
-            nsh_col = F.when(F.col("inst") == inst, F.lit(nsh)).otherwise(
-                nsh_col
-            )
-        rows = (
-            self._read_files(
-                [f["path"] for f in all_files], schema=key_schema
-            )
-            .select(
-                F.col(RECORD_KEY_COL).alias("key"), fp.alias("fp")
-            )
-            .withColumn("inst", inst_col)
-            .withColumn(
-                "shard",
-                F.pmod(F.xxhash64(F.col("key")), nsh_col).cast("int"),
-            )
-        )
-        stage = os.path.join(
-            self.index_dir, f"_bf_stage-{_uuid.uuid4().hex[:8]}"
-        )
+    def _is_backfill_commit(self, instant: str) -> bool:
         try:
-            (
-                rows.repartition(self.index_shards, "inst", "shard")
-                .sortWithinPartitions("inst", "shard", "key")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-                .partitionBy("inst", "shard")
-                .parquet(stage)
-            )
-            for inst_dir in sorted(os.listdir(stage)):
-                if not inst_dir.startswith("inst="):
-                    continue
-                inst = inst_dir[len("inst="):]
-                for shard_dir in sorted(
-                    os.listdir(os.path.join(stage, inst_dir))
-                ):
-                    if not shard_dir.startswith("shard="):
-                        continue
-                    dst = os.path.join(self.index_dir, inst, shard_dir)
-                    os.makedirs(dst, exist_ok=True)
-                    src = os.path.join(stage, inst_dir, shard_dir)
-                    for part in os.listdir(src):
-                        if part.startswith(("part-", "part_")):
-                            shutil.move(
-                                os.path.join(src, part),
-                                os.path.join(dst, part),
-                            )
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
-        for inst, nsh in nshards_by_inst.items():
-            marker = os.path.join(self.index_dir, inst, ".nshards")
-            os.makedirs(os.path.dirname(marker), exist_ok=True)
-            if not os.path.exists(marker):
-                with open(marker, "w") as fh:
-                    fh.write(str(nsh))
-
-    def _spark_backfill_sec_build(
-        self,
-        present: list[str],
-        read_schema: T.StructType,
-        items: list[tuple[str, list[dict]]],
-        nshards: int,
-    ) -> None:
-        """ONE distributed pass building secondary-index rows for every
-        uncovered instant in a SCHEMA GROUP (identical indexed-column
-        read schema + shard modulus): all files scanned in a single
-        column-pruned job, each row's instant derived from its file
-        path, output staged ``partitionBy(inst, col, shard)`` and the
-        part files moved into the per-instant dirs driver-side (the
-        same append semantics as the old per-group
-        ``_sec_spark_build(mode="append")`` — probes read every part
-        file in a shard dir). The sec-index twin of
-        :meth:`_spark_backfill_index_build` (r15, verdict #7)."""
-        import uuid as _uuid
-
-        # sweep stage dirs a hard-killed predecessor leaked (we hold
-        # the writer lock, so any survivor is garbage)
-        for stale in glob.glob(
-            os.path.join(self.sec_index_dir, "_bf_stage-*")
-        ):
-            shutil.rmtree(stale, ignore_errors=True)
-        pairs = F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("col"),
-                        F.col(c).cast("string").alias("val"),
-                    )
-                    for c in present
-                ]
-            )
-        )
-        all_paths = [f["path"] for _inst, fl in items for f in fl]
-        rows = (
-            self._read_files(all_paths, schema=read_schema)
-            .select(self._rel_fp_expr().alias("fp"), pairs.alias("p"))
-            .select(
-                "fp",
-                F.col("p.col").alias("col"),
-                F.col("p.val").alias("val"),
-            )
-            .filter(F.col("val").isNotNull())
-            .distinct()
-            .withColumn(
-                "inst", F.element_at(F.split(F.col("fp"), "/"), 2)
-            )
-            .withColumn(
-                "shard",
-                F.pmod(F.xxhash64(F.col("val")), F.lit(nshards)).cast(
-                    "int"
-                ),
-            )
-        )
-        stage = os.path.join(
-            self.sec_index_dir, f"_bf_stage-{_uuid.uuid4().hex[:8]}"
-        )
-        try:
-            (
-                # sorted runs + small row groups as in _sec_spark_build:
-                # probes read only the stats-matched row groups
-                rows.repartition(nshards, "inst", "col", "shard")
-                .sortWithinPartitions("inst", "col", "shard", "val")
-                .write.mode("overwrite")
-                .option("parquet.block.size", str(INDEX_ROW_GROUP_BYTES))
-                .partitionBy("inst", "col", "shard")
-                .parquet(stage)
-            )
-            for inst_dir in sorted(os.listdir(stage)):
-                if not inst_dir.startswith("inst="):
-                    continue
-                inst = inst_dir[len("inst="):]
-                for col_dir in sorted(
-                    os.listdir(os.path.join(stage, inst_dir))
-                ):
-                    if not col_dir.startswith("col="):
-                        continue
-                    for shard_dir in sorted(
-                        os.listdir(
-                            os.path.join(stage, inst_dir, col_dir)
-                        )
-                    ):
-                        if not shard_dir.startswith("shard="):
-                            continue
-                        dst = os.path.join(
-                            self.sec_index_dir, inst, col_dir, shard_dir
-                        )
-                        os.makedirs(dst, exist_ok=True)
-                        src = os.path.join(
-                            stage, inst_dir, col_dir, shard_dir
-                        )
-                        for part in os.listdir(src):
-                            if part.startswith(("part-", "part_")):
-                                shutil.move(
-                                    os.path.join(src, part),
-                                    os.path.join(dst, part),
-                                )
-        finally:
-            shutil.rmtree(stage, ignore_errors=True)
+            m = self._manifest_any(instant)
+        except FileNotFoundError:
+            return False
+        return m.get("action") == "index_backfill"
 
     def backfill_record_index(self) -> str | None:
         """Async metadata indexing for the RECORD index (Hudi's async
@@ -4639,66 +3903,25 @@ class LakeTable:
         path until every pre-index file happens to be rewritten. This
         builds (key → file) rows for the un-covered live files into
         their creating-instant dirs (honoring each dir's ``.nshards``
-        modulus; probes enumerate all on-disk instant dirs, and the
-        cleaner protects a dir while its instant owns live files) and
-        records coverage with one metadata-only ``index_backfill``
-        commit — same mechanics as :meth:`backfill_secondary_index`,
-        no data file rewritten. Idempotent."""
+        modulus; the cleaner protects a dir while its instant owns live
+        files) and records coverage with one metadata-only
+        ``index_backfill`` commit — same mechanics as
+        :meth:`backfill_secondary_index`, no data file rewritten.
+        Idempotent."""
         if not self.record_index:
             return None
         with self._writer_lock():
-            live = self._live_files()
             todo = [
                 f
-                for f in live
+                for f in self._live_files()
                 if not f.get("external") and not f.get("indexed")
             ]
-            if not todo:
-                return None
-            by_inst: dict[str, list[dict]] = {}
-            for f in todo:
-                parts = f["path"].replace(os.sep, "/").split("/")
-                inst = parts[1] if len(parts) >= 2 else ""
-                by_inst.setdefault(inst, []).append(f)
-            # per-instant shard modulus: honor an existing dir's
-            # .nshards (a table resized between commits), default to
-            # the table's current setting for fresh dirs
-            nshards_by_inst: dict[str, int] = {}
-            for inst in by_inst:
-                nshards = self.index_shards
-                try:
-                    with open(
-                        os.path.join(self.index_dir, inst, ".nshards")
-                    ) as fh:
-                        nshards = int(fh.read().strip())
-                except (OSError, ValueError):
-                    pass
-                nshards_by_inst[inst] = nshards
-            if self._index_driver_buildable(todo):
-                # point-sized backfill: pyarrow builds per instant dir,
-                # zero Spark jobs (same gate as the write-path fast
-                # path — the r14 graded backfill row spent ~60% of its
-                # wall on one 64-task Spark job PER CREATING INSTANT)
-                import uuid as _uuid
-
-                fname = f"part-driver-bf-{_uuid.uuid4().hex[:8]}.parquet"
-                for inst, fl in sorted(by_inst.items()):
-                    self._driver_index_shard_build(
-                        fl, os.path.join(self.index_dir, inst),
-                        nshards_by_inst[inst], filename=fname,
-                    )
-            else:
-                self._spark_backfill_index_build(by_inst, nshards_by_inst)
-            inst = self._next_instant(None)
-            upgraded = [{**f, "indexed": True} for f in todo]
-            self._write_manifest(
-                inst,
-                "index_backfill",
-                self._stored_schema(),
-                upgraded,
-                [f["path"] for f in todo],
+            return self._publish_backfill(
+                self._record_idx,
+                todo,
+                [(todo, _KEY_SCHEMA)],
+                lambda f: {**f, "indexed": True},
             )
-            return inst
 
     def backfill_secondary_index(self) -> str | None:
         """Async metadata indexing (Hudi's async indexer /
@@ -4719,128 +3942,62 @@ class LakeTable:
         are untouched; incremental/CDC readers are unaffected because
         their row filters use the rows' original ``_commit_time``.
         Files whose origin manifest is unreadable are left un-covered
-        (conservative keep-all, exactly as before the backfill). Runs
-        under the writer lock; a racing optimistic writer that touched
-        the same files will see a (false but safe) publish conflict and
-        retry. Idempotent: returns None when every live file is already
-        covered."""
+        (conservative keep-all, exactly as before the backfill).
+        Instants whose missing columns resolve to the same (name, type)
+        read schema share one build. Runs under the writer lock; a
+        racing optimistic writer that touched the same files will see a
+        (false but safe) publish conflict and retry. Idempotent:
+        returns None when every live file is already covered."""
         if not self.secondary_index_columns:
             return None
         want = set(self.secondary_index_columns)
         with self._writer_lock():
-            live = self._live_files()
-            todo = [
-                f
-                for f in live
-                if not f.get("external")
-                and not want <= set(f.get("sec_cols") or ())
-            ]
-            if not todo:
-                return None
-            groups: dict[tuple, list[dict]] = {}
-            for f in todo:
-                parts = f["path"].replace(os.sep, "/").split("/")
-                inst = parts[1] if len(parts) >= 2 else ""
-                missing = tuple(
-                    c
-                    for c in self.secondary_index_columns
-                    if c not in (f.get("sec_cols") or ())
-                )
-                groups.setdefault((inst, missing), []).append(f)
-            stamped: list[dict] = []
-            # Spark-fallback groups batch by SCHEMA GROUP (r15, verdict
-            # #7): instants whose indexed columns resolve to the same
-            # (name, type) read schema under the same shard modulus
-            # share ONE staged job (the record-index backfill got the
-            # same treatment in r14) — over a long timeline the
-            # per-(instant, cols) job fixed cost serialized, while the
-            # work is one column-pruned scan + one shuffle per distinct
-            # schema group regardless of instant count.
-            spark_batches: dict[tuple, list[tuple[str, list[dict]]]] = {}
-            for (inst, missing), fl in sorted(groups.items()):
+            by_inst: dict[str, list[dict]] = {}
+            for f in self._live_files():
+                if not f.get("external") and not want <= set(
+                    f.get("sec_cols") or ()
+                ):
+                    by_inst.setdefault(
+                        creating_instant(f["path"]), []
+                    ).append(f)
+            batches: dict[tuple, list[dict]] = {}
+            for inst, fl in sorted(by_inst.items()):
                 try:
                     schema = T.StructType.fromJson(
                         self._manifest_any(inst)["schema"]
                     )
                 except (FileNotFoundError, KeyError, ValueError):
                     continue  # unreadable origin schema: stay un-covered
-                out_dir = os.path.join(self.sec_index_dir, inst)
-                nshards = self.index_shards
-                marker = os.path.join(out_dir, ".nshards")
-                try:
-                    with open(marker) as fh:
-                        nshards = int(fh.read().strip())
-                except (OSError, ValueError):
-                    pass
-                names = {x.name for x in schema.fields}
-                present = [c for c in missing if c in names]
-                if present:
-                    if self._sec_driver_buildable(fl, present, schema):
-                        # point-sized all-string group: pyarrow build,
-                        # zero Spark jobs (r14 — the backfill previously
-                        # paid one 64-task Spark job per creating
-                        # instant even for byte-sized tables)
-                        import uuid as _uuid
-
-                        self._driver_sec_index_build(
-                            fl, present, out_dir, nshards,
-                            filename=(
-                                "part-driver-bf-"
-                                f"{_uuid.uuid4().hex[:8]}.parquet"
-                            ),
-                        )
-                    else:
-                        key = (
-                            tuple(present),
-                            tuple(
-                                f2.json()
-                                for f2 in schema.fields
-                                if f2.name in present
-                            ),
-                            nshards,
-                        )
-                        spark_batches.setdefault(key, []).append(
-                            (inst, fl)
-                        )
-                os.makedirs(out_dir, exist_ok=True)
-                if not os.path.exists(marker):
-                    with open(marker, "w") as fh:
-                        fh.write(str(nshards))
-                stamped.extend(fl)
-            for (present, fields, nshards), items in sorted(
-                spark_batches.items()
-            ):
-                self._spark_backfill_sec_build(
-                    list(present),
-                    T.StructType(
-                        [
-                            T.StructField.fromJson(json.loads(j))
-                            for j in fields
-                        ]
-                    ),
-                    items,
-                    nshards,
-                )
-            if not stamped:
-                return None
-            inst = self._next_instant(None)
-            upgraded = [
-                {
+                for f in fl:
+                    missing = want - set(f.get("sec_cols") or ())
+                    key = tuple(
+                        fld.json()
+                        for fld in schema.fields
+                        if fld.name in missing
+                    )
+                    batches.setdefault(key, []).append(f)
+            return self._publish_backfill(
+                self._sec_idx,
+                [f for fl in batches.values() for f in fl],
+                [
+                    (
+                        fl,
+                        T.StructType(
+                            [
+                                T.StructField.fromJson(json.loads(j))
+                                for j in key
+                            ]
+                        ),
+                    )
+                    for key, fl in sorted(batches.items())
+                ],
+                lambda f: {
                     **f,
-                    "sec_cols": sorted(
-                        set(f.get("sec_cols") or ()) | want
-                    ),
-                }
-                for f in stamped
-            ]
-            self._write_manifest(
-                inst,
-                "index_backfill",
-                self._stored_schema(),
-                upgraded,
-                [f["path"] for f in stamped],
+                    "sec_cols": sorted(set(f.get("sec_cols") or ()) | want),
+                },
             )
-            return inst
+
+    # ------------------------------- exact secondary index (non-key cols)
 
     def _sec_col_types(self, instant: str) -> dict | None:
         """{col: simple type name} for the secondary-indexed columns as
@@ -4875,17 +4032,13 @@ class LakeTable:
         verdict pipeline as the column blooms (so the MOR
         key-disjointness guard applies before any skip).
 
-        Per conjunct: covered files (queried column ∈ the file's
-        stamped ``sec_cols``) group by creating instant; each instant
-        canonicalizes the operands under ITS stored column type
-        (:meth:`_bloom_operand` — un-reproducible pairings drop the
-        instant from the probe, keeping its files) and contributes its
-        matched ``col=<c>/shard=<s>`` dirs. All matched dirs are read
-        in ONE pass — driver-side pyarrow when the matched bytes fit
-        the fast-path gate (operands are always literals here), else a
-        single Spark scan — filtered to the UNION of canonical forms
-        (a superset filter can only shrink the miss set: safe), and
-        covered files absent from the hit fps are misses."""
+        Per conjunct, the covered files (queried column ∈ the file's
+        stamped ``sec_cols``) are probed with each instant's operands
+        canonicalized under ITS stored column type
+        (:meth:`_bloom_operand` — un-reproducible pairings keep the
+        instant's files; a column absent from the instant's schema
+        makes its files definite misses without probe I/O). Covered
+        files the probe does not keep are misses."""
         if not self.secondary_index_columns:
             return set()
         misses: set[str] = set()
@@ -4901,91 +4054,21 @@ class LakeTable:
             if not covered:
                 continue
             operands = list(val) if op == "in" else [val]
-            by_inst: dict[str, list[dict]] = {}
-            for f in covered:
-                parts = f["path"].replace(os.sep, "/").split("/")
-                inst = parts[1] if len(parts) >= 2 else ""
-                by_inst.setdefault(inst, []).append(f)
-            probeable: list[dict] = []
-            shard_dirs: list[str] = []
-            all_canon: set[str] = set()
-            for inst, fl in by_inst.items():
+
+            def canon(inst: str, col=col, operands=operands):
                 types = self._sec_col_types(inst)
                 if types is None:
-                    continue  # unknown schema: keep these files
-                ct = types.get(col)
-                if ct is None:
-                    # column absent from this instant's schema: its
-                    # files hold only NULL for it, and ``=``/``in``
-                    # never match NULL — definite miss, no probe needed
-                    misses.update(f["path"] for f in fl)
-                    continue
-                canon = [self._bloom_operand(v, ct) for v in operands]
-                if any(c is None for c in canon):
-                    continue  # unreproducible form: keep these files
-                d = os.path.join(self.sec_index_dir, inst)
-                try:
-                    with open(os.path.join(d, ".nshards")) as fh:
-                        n = int(fh.read().strip())
-                except (OSError, ValueError):
-                    continue  # no index data for this instant: keep
-                all_canon.update(canon)
-                probeable.extend(fl)
-                shard_dirs.extend(
-                    p
-                    for s in sorted({xxh_shard(c, n) for c in canon})
-                    if os.path.isdir(
-                        p := os.path.join(d, f"col={col}", f"shard={s}")
-                    )
-                )
-            if not probeable:
-                continue
-            hit_paths = self._normalize_index_fps(
-                self._sec_probe_dirs(shard_dirs, all_canon)
-            )
-            misses |= {
-                f["path"] for f in probeable if f["path"] not in hit_paths
-            }
-        return misses
+                    return None  # unknown schema: keep these files
+                if col not in types:
+                    # absent from this instant's schema: its files hold
+                    # only NULL for it, and ``=``/``in`` never match NULL
+                    return []
+                forms = [self._bloom_operand(v, types[col]) for v in operands]
+                return None if None in forms else forms
 
-    def _sec_probe_dirs(
-        self, shard_dirs: list[str], canon: set[str]
-    ) -> set[str]:
-        """fps of index rows in ``shard_dirs`` whose val ∈ ``canon``.
-        Driver-side footer-planned pyarrow read under the matched-bytes
-        gate (:meth:`_planned_probe_read` — a point lookup touches ~one
-        sorted row group per operand at any table size); one Spark scan
-        past it."""
-        if not shard_dirs:
-            return set()
-        # the os.listdir shard enumeration only makes sense (and only
-        # works) on a driver-local base_path — on a remote URI it would
-        # raise instead of falling through to the Spark scan the
-        # locality gate promises (r10 ADVICE), so it lives INSIDE the
-        # gate.
-        if self.driver_io_local:
-            part_files: list[str] = []
-            for d in shard_dirs:
-                part_files.extend(
-                    os.path.join(d, fn)
-                    for fn in os.listdir(d)
-                    if fn.endswith(".parquet")
-                )
-            hits = self._planned_probe_read(part_files, "val", canon, "fp")
-            if hits is not None:
-                return hits
-        idx = self.spark.read.option(
-            "recursiveFileLookup", "true"
-        ).parquet(*shard_dirs)
-        return {
-            fp
-            for (fp,) in idx.filter(
-                F.col("val").isin(*sorted(canon))
-            )
-            .select("fp")
-            .distinct()
-            .collect()
-        }
+            kept = self._sec_idx.probe(covered, operands, col=col, canon=canon)
+            misses |= {f["path"] for f in covered if f["path"] not in kept}
+        return misses
 
     def _merge(self, old: DataFrame, batch: DataFrame) -> DataFrame:
         """Larger-precombine-wins merge, ties → incoming row — exactly
@@ -5271,7 +4354,12 @@ class LakeTable:
                 # "indexed"/"bloom"/"col_bloom" flags: probe-time
                 # markers; files that predate an index toggle lack them
                 # and are kept unconditionally — conservative fallback
-                ("indexed", lambda: self._write_record_index(instant, indexable))
+                (
+                    "indexed",
+                    lambda: self._record_idx.build(
+                        {instant: indexable}, _KEY_SCHEMA
+                    ),
+                )
             )
         if self.bloom_index and indexable:
             builders.append(
@@ -5287,11 +4375,18 @@ class LakeTable:
                 )
             )
         if self.secondary_index_columns and indexable:
+            sec_schema = T.StructType(
+                [
+                    fld
+                    for fld in schema.fields
+                    if fld.name in self.secondary_index_columns
+                ]
+            )
             builders.append(
                 (
                     "sec_cols",
-                    lambda: self._write_sec_index(
-                        instant, indexable, schema
+                    lambda: self._sec_idx.build(
+                        {instant: indexable}, sec_schema
                     ),
                 )
             )
@@ -6392,18 +5487,9 @@ class LakeTable:
                 if fn.endswith(".json") and fn[: -len(".json")] not in live_instants:
                     os.remove(os.path.join(sidecar_dir, fn))
                     cache.pop(fn[: -len(".json")], None)
-        # prune record-index commit dirs the same way: an instant's
-        # index maps keys to the files ADDED at that instant, so once
-        # none of them is live every mapping in the dir is dead weight
-        # (lookups intersect with live files either way — this bounds
-        # index GROWTH, not correctness)
-        for idx_root in (self.index_dir, self.sec_index_dir):
-            if not os.path.isdir(idx_root):
-                continue
-            for d in os.listdir(idx_root):
-                full = os.path.join(idx_root, d)
-                if os.path.isdir(full) and d not in live_instants:
-                    shutil.rmtree(full)
+        # and the value→file index dirs the same way
+        for idx in (self._record_idx, self._sec_idx):
+            idx.prune(live_instants)
         return sorted(deleted)
 
     def archive_timeline(self, keep_commits: int = 4) -> list[str]:

@@ -1,12 +1,13 @@
 """Pure-Python XXH64 with Spark hash parity.
 
-The record index shards by ``pmod(xxhash64(key), nshards)`` (Spark-side
-expression, ``table.py _write_record_index``). A point lookup that
-needs a Spark job just to learn its operand's shard id costs a cluster
-round-trip for what is arithmetic — this module computes the SAME hash
-driver-side so point probes can seek straight into the matching shard
-files (the engine's analog of Hudi's metadata-table record index being
-served by HFile seeks, not Spark jobs).
+The value→file indexes shard by ``pmod(xxhash64(value), nshards)``
+(Spark-side expression, ``index.py ValueIndex._spark_build``). A point
+lookup that needs a Spark job just to learn its operand's shard id
+costs a cluster round-trip for what is arithmetic — this module
+computes the SAME hash driver-side so point probes can seek straight
+into the matching shard files (the engine's analog of Hudi's
+metadata-table record index being served by HFile seeks, not Spark
+jobs).
 
 XXH64 is Yann Collet's public-domain algorithm (github.com/Cyan4973/
 xxHash, BSD); Spark's ``F.xxhash64`` applies it to each column's bytes

@@ -1193,7 +1193,7 @@ def _local_residual_codebook(
             if best is None or key < best[0]:
                 best = (key, cv)
         cv = best[1]
-        if v is None or len(v) != len(cv):
+        if len(v) != len(cv):
             # dimension-mismatched seed/centroid: Spark's zip_with
             # emits a max-length array null-padded at the tail, which
             # a whole-null residual would NOT reproduce — fall back to

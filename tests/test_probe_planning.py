@@ -1,5 +1,5 @@
 """Footer-planned index probes (r10): shards are sorted runs in small
-row groups; `_planned_probe_read` must (a) return exact hits, (b) read
+row groups; `planned_probe_read` must (a) return exact hits, (b) read
 only the stats-matched row groups and gate on MATCHED bytes (not file
 bytes) — the property that keeps point reads flat at 100× — and
 (c) stay exact on legacy unsorted shards (no stats advantage, whole
@@ -14,6 +14,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from emr_hudi_example_spark.lake import LakeTable
+from emr_hudi_example_spark.lake.index import planned_probe_read
 
 
 def _table(spark, tmp_path, **kw):
@@ -39,13 +40,19 @@ def test_planned_probe_exact_and_row_group_bounded(spark, tmp_path):
     assert md.num_row_groups >= 10  # multi-group file or the test is vacuous
 
     # exact single-key hit
-    got = t._planned_probe_read([shard], "key", {keys[123_456]}, "fp")
+    got = planned_probe_read(
+        [shard], "key", {keys[123_456]}, "fp", t.driver_probe_max_bytes
+    )
     assert got == {fps[123_456]}
     # absent key: empty is a REAL answer
-    assert t._planned_probe_read([shard], "key", {"zzz"}, "fp") == set()
+    assert planned_probe_read(
+        [shard], "key", {"zzz"}, "fp", t.driver_probe_max_bytes
+    ) == set()
     # multi-operand across distant row groups
     ops = {keys[5], keys[99_999], keys[199_999]}
-    assert t._planned_probe_read([shard], "key", ops, "fp") == {
+    assert planned_probe_read(
+        [shard], "key", ops, "fp", t.driver_probe_max_bytes
+    ) == {
         fps[5], fps[99_999], fps[199_999]
     }
 
@@ -55,13 +62,18 @@ def test_planned_probe_exact_and_row_group_bounded(spark, tmp_path):
     one_rg = md.row_group(0).total_byte_size
     t.driver_probe_max_bytes = max(one_rg * 3, 1)
     assert os.path.getsize(shard) > t.driver_probe_max_bytes
-    got = t._planned_probe_read([shard], "key", {keys[42]}, "fp")
+    got = planned_probe_read(
+        [shard], "key", {keys[42]}, "fp", t.driver_probe_max_bytes
+    )
     assert got == {fps[42]}
     # ... while a full-range operand set trips it -> Spark path (None)
     every_20th = set(keys[::20_000])
     assert len(every_20th) >= 10
     assert (
-        t._planned_probe_read([shard], "key", every_20th, "fp") is None
+        planned_probe_read(
+            [shard], "key", every_20th, "fp", t.driver_probe_max_bytes
+        )
+        is None
     )
 
 
@@ -77,14 +89,19 @@ def test_planned_probe_legacy_unsorted_shard_still_exact(spark, tmp_path):
     pq.write_table(pa.table({"key": keys, "fp": fps}), shard)
     want = {fps[i] for i, k in enumerate(keys) if k == f"{777:012d}"}
     assert want
-    got = t._planned_probe_read([shard], "key", {f"{777:012d}"}, "fp")
+    got = planned_probe_read(
+        [shard], "key", {f"{777:012d}"}, "fp", t.driver_probe_max_bytes
+    )
     assert got == want
 
 
 def test_planned_probe_file_count_bound(spark, tmp_path):
     t = _table(spark, tmp_path)
     fake = [str(tmp_path / f"f{i}.parquet") for i in range(4097)]
-    assert t._planned_probe_read(fake, "key", {"x"}, "fp") is None
+    assert (
+        planned_probe_read(fake, "key", {"x"}, "fp", t.driver_probe_max_bytes)
+        is None
+    )
 
 
 def test_spark_built_index_is_sorted_runs(spark, tmp_path):
@@ -156,9 +173,16 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
 
     t._key_hit_files = spy
     st = spark.sparkContext.statusTracker()
-    j0 = len(st.getJobIdsForGroup(None))
+
+    def last_job_id() -> int:
+        # job ids are sequential; the NUMBER of retained jobs drops by
+        # 100 whenever the status store evicts past
+        # spark.ui.retainedJobs (1000), which a long session crosses
+        return max(st.getJobIdsForGroup(None), default=-1)
+
+    j0 = last_job_id()
     affected, _old = t._affected_files(batch)
-    jobs_fused = len(st.getJobIdsForGroup(None)) - j0
+    jobs_fused = last_job_id() - j0
     # the fusion itself: the key range arrived pre-fused
     assert captured.get("minmax") is not None
     assert captured["minmax"][0] is not None
@@ -169,8 +193,8 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
     # batch-wide aggregation) and require the fused path to plan in
     # strictly fewer Spark jobs on the identical batch
     t._key_hit_files = lambda c, b, minmax=None: orig(c, b, minmax=None)
-    j1 = len(st.getJobIdsForGroup(None))
+    j1 = last_job_id()
     affected2, _old2 = t._affected_files(batch)
-    jobs_unfused = len(st.getJobIdsForGroup(None)) - j1
+    jobs_unfused = last_job_id() - j1
     assert [f["path"] for f in affected2] == [f["path"] for f in affected]
     assert jobs_fused < jobs_unfused, (jobs_fused, jobs_unfused)

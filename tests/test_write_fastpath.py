@@ -105,7 +105,8 @@ def test_nonlocal_base_path_disables_driver_fastpaths(spark, tmp_path):
         record_index=True,
     )
     assert remote.driver_io_local is False
-    assert remote._driver_probe_fps(["42"]) is None  # Spark route only
+    # Spark route only
+    assert remote._record_idx.driver_read([], {"42"}) is None
     for scheme_path in ("s3a://b/w", "hdfs://nn:8020/w", "gs://b/w"):
         assert (
             LakeTable(

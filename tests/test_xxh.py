@@ -1,6 +1,6 @@
 """Parity and path-equivalence gates for the driver-side index probe.
 
-The record-index point-probe fast path (``table.py _driver_probe_fps``)
+The index point-probe fast path (``lake/index.py ValueIndex.probe``)
 recomputes Spark's ``pmod(xxhash64(key), n)`` shard assignment in pure
 Python (``lake/xxh.py``) and seeks the matched shard files with
 pyarrow. A hash mismatch would silently probe the WRONG shard dirs and
