@@ -86,7 +86,6 @@ from emr_hudi_example_spark.lake import bloom as bloom_mod
 from emr_hudi_example_spark.lake.index import (
     ValueIndex,
     creating_instant,
-    driver_buildable,
 )
 from emr_hudi_example_spark.lake.locks import FileLockProvider, LockProvider
 from emr_hudi_example_spark.lake.xxh import shard_of as xxh_shard
@@ -176,11 +175,7 @@ class LakeTable:
         manifest_checkpoint_interval: int | None = 10,
         stats_columns: list[str] | None = None,
         bloom_index: bool = False,
-        bloom_bits: int = bloom_mod.DEFAULT_NBITS,
-        bloom_hashes: int = bloom_mod.DEFAULT_HASHES,
         bloom_columns: list[str] | None = None,
-        col_bloom_bits: int = 1 << 17,
-        col_bloom_hashes: int = 5,
         bucket_index: int | None = None,
         payload: str = "default",
         secondary_index_columns: list[str] | None = None,
@@ -292,52 +287,38 @@ class LakeTable:
         self.index_dir = os.path.join(self.path, "_index")
         self._record_idx = ValueIndex(self, self.index_dir, "key", False)
         #: per-file bloom-filter key index (Hudi's default BLOOM index
-        #: analog — the index family the reference configures,
-        #: ``SRC/Log2Hudi.scala:78-79``). Prunes upsert/delete candidate
-        #: files whose bloom definitely excludes every batch key — the
-        #: RANDOM-key workload (UUIDs, content hashes) where min/max
-        #: range stats prune nothing. Cheaper than the record index
-        #: (fixed bytes per FILE, not a row per RECORD); false positives
-        #: only cost a redundant exact key scan, never a wrong result.
-        #: Geometry is table-wide — see lake/bloom.py for sizing.
+        #: analog, ``SRC/Log2Hudi.scala:78-79``): prunes upsert/delete
+        #: candidate files whose bloom excludes every batch key — the
+        #: random-key workload where min/max range stats prune nothing.
+        #: One instance of the per-file bloom (lake/bloom.py).
         self.bloom_index = bloom_index
-        self.bloom_bits = bloom_bits
-        self.bloom_hashes = bloom_hashes
         self.bloom_dir = os.path.join(self.path, "_bloom")
+        self._key_bloom = bloom_mod.Bloom(
+            self, self.bloom_dir, "bloom", [RECORD_KEY_COL],
+            bloom_mod.KEY_NBITS, bloom_mod.KEY_HASHES,
+        )
         #: observability: candidates dropped by the bloom probe in the
         #: most recent upsert/delete planning pass
         self.last_bloom_pruned = 0
-        #: lazy per-instant sidecar cache: instant -> {rel_path: b64}
-        self._bloom_sidecars: dict[str, dict] = {}
-        #: SECONDARY bloom index on non-key columns (the Hudi
-        #: metadata-table bloom-filter partition generalized beyond the
-        #: record key): per added file, one bloom over each listed
-        #: column's distinct non-null values (canonical STRING forms),
-        #: persisted in a self-describing sidecar
-        #: ``_bloom_cols/<instant>.json``. Predicate reads
-        #: (``snapshot(predicate=...)`` etc.) probe it for ``=``/``in``
-        #: conditions — the high-cardinality-column workload (request
-        #: ids, session keys, emails) where every file spans the full
-        #: value range and min/max stats prune NOTHING. ``=`` / ``in``
-        #: never match NULL rows, so bloom pruning is exact; false
-        #: positives only cost reading a file the filter then empties.
-        #: Geometry is per-SIDECAR (stored in the JSON), so resizing
-        #: the config never invalidates already-written blooms. Default
-        #: 2^17 bits (16 KiB/file/column) / 5 hashes: FPR ~2% at 16k
-        #: distinct values per file.
+        #: column blooms on non-key columns (Hudi's metadata-table
+        #: bloom-filter partition beyond the record key): the other
+        #: instance, probed by ``=``/``in`` predicate reads — the
+        #: high-cardinality-column workload (request ids, emails) where
+        #: min/max stats prune nothing
         self.bloom_columns = list(bloom_columns or [])
-        self.col_bloom_bits = col_bloom_bits
-        self.col_bloom_hashes = col_bloom_hashes
         self.col_bloom_dir = os.path.join(self.path, "_bloom_cols")
+        self._col_bloom = bloom_mod.Bloom(
+            self, self.col_bloom_dir, "col_bloom", self.bloom_columns,
+            bloom_mod.COL_NBITS, bloom_mod.COL_HASHES,
+        )
         #: observability: files skipped in the most recent predicate
         #: read where the COLUMN bloom (not min/max stats) was the
         #: decider — a subset of ``last_files_skipped``
         self.last_col_bloom_pruned = 0
-        #: lazy per-instant sidecar cache:
-        #: instant -> {"nbits", "k", "files": {rel_path: {col: bloom}}}
-        #: (bloom values decoded lazily from b64 to unpacked bit arrays)
-        self._col_bloom_sidecars: dict[str, dict] = {}
-        self._col_bloom_type_cache: dict[str, dict] = {}
+        #: instant -> {col: simple type} of the commit's schema (the
+        #: schema the index builds' cast("string") ran under), None when
+        #: unreadable; instant-keyed ⇒ cleared on restore
+        self._col_type_cache: dict[str, dict | None] = {}
         #: EXACT secondary index on non-key columns (Hudi 1.0's
         #: secondary index, RFC-52 analog — the exact sibling of the
         #: column blooms above): per commit, the DISTINCT (canonical
@@ -379,10 +360,6 @@ class LakeTable:
         #: stats / blooms) was the decider in the most recent predicate
         #: read
         self.last_sec_index_pruned = 0
-        #: instant -> {col: simple type} for the secondary-indexed
-        #: columns (the schema the index build's cast("string") ran
-        #: under); instant-keyed ⇒ cleared on restore
-        self._sec_type_cache: dict[str, dict] = {}
         #: immutable-manifest cache (see :meth:`_manifest`); cleared on
         #: :meth:`restore`, the one operation that can re-allocate an
         #: instant id
@@ -1177,11 +1154,18 @@ class LakeTable:
             if dead_parts and (f.get("partition_path") or "") in dead_parts:
                 return False
             return self._stats_may_match(f, predicate)
-        # exact secondary-index verdicts, computed ONCE per read (the
-        # per-file check below is a set probe); feeds the same pipeline
-        # as the bloom verdicts, so the MOR key-disjointness guard
-        # applies before any skip
-        sec_miss = self._sec_miss_paths(files, predicate)
+        # index verdicts, computed ONCE per read (the per-file checks
+        # below are set probes): the exact secondary index over every
+        # covered file, the column bloom over the stats survivors it
+        # leaves; the MOR key-disjointness guard applies before any skip
+        sec_miss = self._index_misses(
+            self._sec_idx, self.secondary_index_columns, files, predicate,
+            lambda f, c: c in (f.get("sec_cols") or ()), [],
+        )
+        bloom_miss = self._index_misses(
+            self._col_bloom, self.bloom_columns, files, predicate,
+            lambda f, c: f["path"] not in sec_miss and _may_match(f), None,
+        )
         self.last_sec_index_pruned = 0
         mor_merge = self.is_mor and not all_base
         if not mor_merge:
@@ -1192,7 +1176,7 @@ class LakeTable:
                 elif f["path"] in sec_miss:
                     skipped += 1  # stats passed, exact index decided
                     sec_skipped += 1
-                elif not self._col_bloom_may_match(f, predicate):
+                elif f["path"] in bloom_miss:
                     skipped += 1  # stats passed, column bloom decided
                     bloom_skipped += 1
                 else:
@@ -1218,7 +1202,7 @@ class LakeTable:
             elif f["path"] in sec_miss:
                 candidates.append(f)
                 sec_decided.add(id(f))
-            elif not self._col_bloom_may_match(f, predicate):
+            elif f["path"] in bloom_miss:
                 candidates.append(f)
                 bloom_decided.add(id(f))
             else:
@@ -3076,7 +3060,7 @@ class LakeTable:
         survivors' key columns and keep files holding a batch key.
 
         With ``bloom_index``, range-prune survivors are additionally
-        probed against their per-file blooms (``_bloom_hit_files``) —
+        probed against their per-file key blooms (lake/bloom.py) —
         the pruning path for RANDOM keys where min/max covers the whole
         key space. With ``record_index`` and full index coverage of the
         candidates, the persistent key→file index is probed instead —
@@ -3146,7 +3130,13 @@ class LakeTable:
             if not candidates:
                 return []
         if self.bloom_index and len(candidates) > 1:
-            candidates = self._bloom_hit_files(candidates, batch, keys=keys)
+            hit = self._key_bloom.probe(
+                candidates,
+                batch.select(RECORD_KEY_COL) if keys is None else keys,
+            )
+            kept = [f for f in candidates if f["path"] in hit]
+            self.last_bloom_pruned = len(candidates) - len(kept)
+            candidates = kept
             if not candidates:
                 return []
         internal_c = [f for f in candidates if not os.path.isabs(f["path"])]
@@ -3390,384 +3380,6 @@ class LakeTable:
             "",
         )
 
-    def _write_bloom_sidecar(self, instant: str, added: list[dict]) -> None:
-        """Build one bloom per added file and persist the commit's
-        sidecar ``_bloom/<instant>.json`` (``{rel_path: b64_bitset}``,
-        atomic rename).
-
-        The build is DISTRIBUTED: one Arrow-batched ``applyInPandas``
-        pass over the commit's files grouped by file path — each group
-        hashes its own keys and emits a single (fp, bloom) row, so the
-        driver only ever sees file-count rows of ~``nbits/8`` bytes.
-        Matches where Hudi computes blooms: in the writer, once, at
-        file-write time."""
-        nbits, k = self.bloom_bits, self.bloom_hashes
-        # point-sized commits build driver-side with the SAME
-        # lake/bloom.py functions the Arrow kernel is parity-pinned
-        # against (test_bloom_kernel_matches_module) — bit-identical
-        # sidecars, no Spark job. Same gate as the index builds.
-        if driver_buildable(self, added):
-            sidecar = {}
-            for f in added:
-                tbl = pa_pq.read_table(
-                    os.path.join(self.path, f["path"]),
-                    columns=[RECORD_KEY_COL],
-                )
-                sidecar[f["path"]] = bloom_mod.bloom_to_b64(
-                    bloom_mod.build_bloom(
-                        tbl.column(RECORD_KEY_COL).to_pylist(), nbits, k
-                    )
-                )
-            self._persist_bloom_sidecar(instant, sidecar)
-            return
-        rows = self._read_files(
-            [f["path"] for f in added], schema=_KEY_SCHEMA
-        ).select(
-            self._rel_fp_expr().alias("fp"),
-            F.col(RECORD_KEY_COL).alias("key"),
-        )
-
-        # SELF-CONTAINED kernel (imports inside, no package globals):
-        # cloudpickle ships it by value, so Python workers never need
-        # the repo on their import path — the same constraint every
-        # Arrow kernel in operators/ honors. Logic mirrors
-        # lake/bloom.py key_positions/build_bloom exactly (unit-tested
-        # there; test_bloom_kernel_matches_module pins the parity).
-        def _build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-            import base64 as _b64
-            import hashlib as _hashlib
-
-            import numpy as _np
-            import pandas as _pd
-
-            keys = pdf["key"].tolist()
-            h = _np.empty((len(keys), 2), dtype=_np.uint64)
-            for j, key in enumerate(keys):
-                d = _hashlib.blake2b(
-                    str(key).encode("utf-8"), digest_size=16
-                ).digest()
-                h[j, 0] = int.from_bytes(d[:8], "little")
-                h[j, 1] = int.from_bytes(d[8:], "little") | 1
-            i = _np.arange(k, dtype=_np.uint64)
-            pos = (h[:, :1] + i[None, :] * h[:, 1:2]) % _np.uint64(nbits)
-            bits = _np.zeros(nbits, dtype=_np.uint8)
-            if len(keys):
-                bits[pos.ravel()] = 1
-            packed = _np.packbits(bits, bitorder="little").tobytes()
-            return _pd.DataFrame(
-                {
-                    "fp": [pdf["fp"].iloc[0]],
-                    "bloom": [_b64.b64encode(packed).decode("ascii")],
-                }
-            )
-
-        built = (
-            rows.groupBy("fp")
-            .applyInPandas(_build, "fp string, bloom string")
-            .collect()
-        )
-        sidecar = {r["fp"]: r["bloom"] for r in built}
-        # files written empty (e.g. an all-filtered partition split)
-        # produce no group — record an explicit empty bloom so the
-        # probe can prune them instead of falling back to "keep"
-        empty = None
-        for f in added:
-            if f["path"] not in sidecar:
-                if empty is None:
-                    empty = bloom_mod.bloom_to_b64(
-                        bloom_mod.build_bloom([], nbits, k)
-                    )
-                sidecar[f["path"]] = empty
-        self._persist_bloom_sidecar(instant, sidecar)
-
-    def _persist_bloom_sidecar(self, instant: str, sidecar: dict) -> None:
-        os.makedirs(self.bloom_dir, exist_ok=True)
-        tmp = os.path.join(self.bloom_dir, f".{instant}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(sidecar, fh)
-        os.replace(tmp, os.path.join(self.bloom_dir, instant + ".json"))
-        self._bloom_sidecars[instant] = sidecar
-
-    def _bloom_for(self, f: dict) -> str | None:
-        """b64 bloom for a live-file entry, via the lazily-cached
-        per-instant sidecar; None when the file predates the index."""
-        if not f.get("bloom"):
-            return None
-        # manifest paths are data/<instant>/... — derive the sidecar
-        parts = f["path"].replace(os.sep, "/").split("/")
-        if len(parts) < 2:
-            return None
-        instant = parts[1]
-        if instant not in self._bloom_sidecars:
-            try:
-                with open(
-                    os.path.join(self.bloom_dir, instant + ".json")
-                ) as fh:
-                    self._bloom_sidecars[instant] = json.load(fh)
-            except FileNotFoundError:
-                self._bloom_sidecars[instant] = {}
-        return self._bloom_sidecars[instant].get(f["path"])
-
-    def _bloom_hit_files(
-        self,
-        candidates: list[dict],
-        batch: DataFrame,
-        keys: list[str] | None = None,
-    ) -> list[dict]:
-        """Bloom probe between range-pruning and the exact key scan:
-        drop candidate files whose bloom definitely excludes EVERY
-        batch key. Files without a bloom (pre-index commits) are kept
-        unconditionally; bloom false positives survive to the exact
-        scan — either way results are exact, pruning is best-effort.
-
-        100 TB shape: the probe is a single narrow ``mapInPandas`` pass
-        over the batch's distinct keys with the candidate blooms
-        broadcast (~``nbits/8`` bytes × range-prune survivors — the
-        range prune and partition prune bound the broadcast). Each key's
-        k positions are hashed ONCE (table-wide geometry) and tested
-        against every candidate bitset vectorized; output is hit file
-        paths only, bounded by candidate count. No data-file I/O, no
-        shuffle beyond the keys' ``distinct``."""
-        self.last_bloom_pruned = 0
-        with_bloom: list[tuple[dict, str]] = []
-        without: list[dict] = []
-        for f in candidates:
-            b = self._bloom_for(f)
-            if b is None:
-                without.append(f)
-            else:
-                with_bloom.append((f, b))
-        if not with_bloom:
-            return candidates
-        nbits, k = self.bloom_bits, self.bloom_hashes
-        if keys is not None:
-            # precollected point batch: hash the k positions once in
-            # Python (same lake/bloom.py functions the kernel mirrors)
-            # and test each candidate bitset vectorized — no job, no
-            # broadcast
-            pos = bloom_mod.key_positions(keys, nbits, k)
-            hit_paths = {
-                f["path"]
-                for f, b in with_bloom
-                if len(keys)
-                and bool(
-                    bloom_mod.might_contain(
-                        bloom_mod.bloom_from_b64(b), pos
-                    ).any()
-                )
-            }
-            without_ids = {id(f) for f in without}
-            kept = [
-                f
-                for f in candidates
-                if id(f) in without_ids or f["path"] in hit_paths
-            ]
-            self.last_bloom_pruned = len(candidates) - len(kept)
-            return kept
-        payload = [(f["path"], b) for f, b in with_bloom]
-        bc = self.spark.sparkContext.broadcast(payload)
-        key_col = RECORD_KEY_COL
-
-        # self-contained kernel (see _write_bloom_sidecar for why)
-        def _probe(batches):
-            import base64 as _b64
-            import hashlib as _hashlib
-
-            import numpy as _np
-            import pandas as _pd
-
-            decoded = [
-                (
-                    p,
-                    _np.unpackbits(
-                        _np.frombuffer(_b64.b64decode(s), dtype=_np.uint8),
-                        bitorder="little",
-                    ),
-                )
-                for p, s in bc.value
-            ]
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                keys = pdf[key_col].tolist()
-                h = _np.empty((len(keys), 2), dtype=_np.uint64)
-                for j, key in enumerate(keys):
-                    d = _hashlib.blake2b(
-                        str(key).encode("utf-8"), digest_size=16
-                    ).digest()
-                    h[j, 0] = int.from_bytes(d[:8], "little")
-                    h[j, 1] = int.from_bytes(d[8:], "little") | 1
-                i = _np.arange(k, dtype=_np.uint64)
-                pos = (h[:, :1] + i[None, :] * h[:, 1:2]) % _np.uint64(
-                    nbits
-                )
-                hits = [
-                    p
-                    for p, bits in decoded
-                    if bits[pos].all(axis=1).any()
-                ]
-                yield _pd.DataFrame({"fp": hits})
-
-        hit_paths = {
-            r[0]
-            for r in (
-                batch.select(RECORD_KEY_COL)
-                .distinct()
-                .mapInPandas(_probe, "fp string")
-                .distinct()
-                .collect()
-            )
-        }
-        bc.destroy()
-        without_ids = {id(f) for f in without}
-        kept = [
-            f
-            for f in candidates
-            if id(f) in without_ids or f["path"] in hit_paths
-        ]
-        self.last_bloom_pruned = len(candidates) - len(kept)
-        return kept
-
-    # ------------------------------- secondary (non-key-column) blooms
-
-    def _write_col_bloom_sidecar(
-        self, instant: str, added: list[dict], schema: T.StructType
-    ) -> None:
-        """Build one bloom per (added file, bloom column) and persist
-        the commit's sidecar ``_bloom_cols/<instant>.json`` —
-        ``{"nbits": n, "k": k, "files": {rel_path: {col: b64}}}``,
-        atomic rename. Self-describing geometry: probes use the
-        sidecar's recorded (nbits, k), so later config changes never
-        corrupt existing indexes.
-
-        Values are canonicalized by Spark's ``cast("string")`` BEFORE
-        hashing; the read-side probe (:meth:`_bloom_operand`) only
-        hashes operands whose canonical string form it can reproduce
-        exactly (str/int/bool) and keeps the file otherwise — exactness
-        over pruning. NULLs are excluded (``=``/``in`` never match
-        NULL). A bloom column absent from this commit's schema gets an
-        explicit EMPTY bloom: the file provably holds no value of it.
-
-        100 TB shape: like the key bloom, the build is one distributed
-        Arrow pass over the commit's files (one output row per
-        file × column, ~``nbits/8`` bytes each); the probe is
-        driver-side — O(operands · k) hashing + a cached 16 KiB bitset
-        load per candidate file, no data I/O, no jobs."""
-        names = {f.name for f in schema.fields}
-        present = [c for c in self.bloom_columns if c in names]
-        nbits, k = self.col_bloom_bits, self.col_bloom_hashes
-        built: list = []
-        if present:
-            read_schema = T.StructType(
-                [f for f in schema.fields if f.name in present]
-            )
-            rows = self._read_files(
-                [f["path"] for f in added], schema=read_schema
-            ).select(
-                self._rel_fp_expr().alias("fp"),
-                *[F.col(c).cast("string").alias(c) for c in present],
-            )
-            cols = list(present)
-
-            # self-contained kernel (see _write_bloom_sidecar for why);
-            # parity with lake/bloom.py pinned by
-            # test_col_bloom_kernel_matches_module
-            def _build(pdf: "pd.DataFrame") -> "pd.DataFrame":
-                import base64 as _b64
-                import hashlib as _hashlib
-
-                import numpy as _np
-                import pandas as _pd
-
-                out_col, out_bloom = [], []
-                for c in cols:
-                    vals = pdf[c].dropna().unique().tolist()
-                    h = _np.empty((len(vals), 2), dtype=_np.uint64)
-                    for j, v in enumerate(vals):
-                        d = _hashlib.blake2b(
-                            str(v).encode("utf-8"), digest_size=16
-                        ).digest()
-                        h[j, 0] = int.from_bytes(d[:8], "little")
-                        h[j, 1] = int.from_bytes(d[8:], "little") | 1
-                    i = _np.arange(k, dtype=_np.uint64)
-                    pos = (h[:, :1] + i[None, :] * h[:, 1:2]) % _np.uint64(
-                        nbits
-                    )
-                    bits = _np.zeros(nbits, dtype=_np.uint8)
-                    if len(vals):
-                        bits[pos.ravel()] = 1
-                    packed = _np.packbits(
-                        bits, bitorder="little"
-                    ).tobytes()
-                    out_col.append(c)
-                    out_bloom.append(
-                        _b64.b64encode(packed).decode("ascii")
-                    )
-                return _pd.DataFrame(
-                    {
-                        "fp": [pdf["fp"].iloc[0]] * len(out_col),
-                        "col": out_col,
-                        "bloom": out_bloom,
-                    }
-                )
-
-            built = (
-                rows.groupBy("fp")
-                .applyInPandas(_build, "fp string, col string, bloom string")
-                .collect()
-            )
-        files: dict[str, dict[str, str]] = {}
-        for r in built:
-            files.setdefault(r["fp"], {})[r["col"]] = r["bloom"]
-        # empty files produce no group; columns missing from this
-        # commit's schema produce no row — both get explicit empty
-        # blooms (the file provably holds no non-null value)
-        empty = None
-        for f in added:
-            per = files.setdefault(f["path"], {})
-            for c in self.bloom_columns:
-                if c not in per:
-                    if empty is None:
-                        empty = bloom_mod.bloom_to_b64(
-                            bloom_mod.build_bloom([], nbits, k)
-                        )
-                    per[c] = empty
-        sidecar = {"nbits": nbits, "k": k, "files": files}
-        os.makedirs(self.col_bloom_dir, exist_ok=True)
-        tmp = os.path.join(self.col_bloom_dir, f".{instant}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(sidecar, fh)
-        os.replace(
-            tmp, os.path.join(self.col_bloom_dir, instant + ".json")
-        )
-        self._col_bloom_sidecars[instant] = sidecar
-
-    def _col_blooms_for(self, f: dict) -> tuple[int, int, dict] | None:
-        """(nbits, k, {col: b64-or-decoded}) for a live-file entry via
-        the lazily-cached per-instant sidecar; None when the file
-        predates the index (kept unconditionally)."""
-        if not f.get("col_bloom"):
-            return None
-        parts = f["path"].replace(os.sep, "/").split("/")
-        if len(parts) < 2:
-            return None
-        instant = parts[1]
-        if instant not in self._col_bloom_sidecars:
-            try:
-                with open(
-                    os.path.join(self.col_bloom_dir, instant + ".json")
-                ) as fh:
-                    self._col_bloom_sidecars[instant] = json.load(fh)
-            except FileNotFoundError:
-                self._col_bloom_sidecars[instant] = {"files": {}}
-        sc = self._col_bloom_sidecars[instant]
-        per = sc.get("files", {}).get(f["path"])
-        if per is None:
-            return None
-        return sc.get("nbits", self.col_bloom_bits), sc.get(
-            "k", self.col_bloom_hashes
-        ), per
-
     # column types whose Spark cast("string") rendering a same-typed
     # Python operand reproduces verbatim (the only pairings the bloom
     # probe may prune on)
@@ -3800,57 +3412,6 @@ class LakeTable:
         if isinstance(v, int):
             return str(v) if col_type in LakeTable._BLOOM_INTEGRAL_TYPES else None
         return None
-
-    def _col_bloom_types(self, f: dict) -> dict:
-        """{col: simple type name} for the bloom-indexed columns as of
-        the file's writing instant (the schema the index-build
-        ``cast("string")`` ran under), lazily cached per instant.
-        Missing manifest ⇒ empty map ⇒ every probe keeps the file."""
-        instant = creating_instant(f["path"])
-        cached = self._col_bloom_type_cache.get(instant)
-        if cached is not None:
-            return cached
-        types: dict[str, str] = {}
-        try:
-            schema = T.StructType.fromJson(self._manifest(instant)["schema"])
-            for fld in schema.fields:
-                if fld.name in self.bloom_columns:
-                    types[fld.name] = fld.dataType.simpleString()
-        except (FileNotFoundError, KeyError):
-            pass
-        self._col_bloom_type_cache[instant] = types
-        return types
-
-    def _col_bloom_may_match(self, f: dict, predicate: list[tuple]) -> bool:
-        """Can ANY row of file ``f`` satisfy every ``=``/``in``
-        condition on a bloom-indexed column, judging by the file's
-        column blooms? Definite-miss on any conjunct ⇒ False (no row
-        can match). Unprobeable conditions (no bloom, non-canonical
-        operand, other ops) are skipped — conservative, like missing
-        min/max stats."""
-        if not self.bloom_columns:
-            return True
-        info = self._col_blooms_for(f)
-        if info is None:
-            return True
-        nbits, k, per = info
-        col_types = self._col_bloom_types(f)
-        for col, op, val in predicate:
-            if op not in ("=", "in") or per.get(col) is None:
-                continue
-            operands = list(val) if op == "in" else [val]
-            ct = col_types.get(col)
-            canon = [self._bloom_operand(v, ct) for v in operands]
-            if any(c is None for c in canon):
-                continue  # unreproducible form: cannot safely prune
-            bits = per[col]
-            if isinstance(bits, str):  # decode once, cache the array
-                bits = bloom_mod.bloom_from_b64(bits)
-                per[col] = bits
-            pos = bloom_mod.key_positions(canon, nbits, k)
-            if not bloom_mod.might_contain(bits, pos).any():
-                return False  # every operand definitely absent
-        return True
 
     # ------------------------------- index backfill (async indexing)
 
@@ -3999,75 +3560,62 @@ class LakeTable:
 
     # ------------------------------- exact secondary index (non-key cols)
 
-    def _sec_col_types(self, instant: str) -> dict | None:
-        """{col: simple type name} for the secondary-indexed columns as
-        of ``instant`` (the schema the index build's ``cast("string")``
-        ran under), lazily cached. ``None`` when the manifest is
-        unreadable (probe keeps the instant's files, conservative); a
-        column MISSING from the returned dict was absent from the
-        commit's schema — its files provably hold only NULL for it."""
-        if instant in self._sec_type_cache:
-            return self._sec_type_cache[instant]
-        types: dict[str, str] | None = None
-        try:
-            schema = T.StructType.fromJson(
-                self._manifest_any(instant)["schema"]
-            )
-            types = {
-                fld.name: fld.dataType.simpleString()
-                for fld in schema.fields
-                if fld.name in self.secondary_index_columns
-            }
-        except (FileNotFoundError, KeyError, ValueError):
-            pass
-        self._sec_type_cache[instant] = types
-        return types
+    def _col_types(self, instant: str) -> dict | None:
+        """{col: simple type name} of ``instant``'s schema — the schema
+        the index builds' ``cast("string")`` ran under — lazily cached;
+        None when the manifest is unreadable."""
+        if instant not in self._col_type_cache:
+            try:
+                schema = self._manifest_any(instant)["schema"]
+                self._col_type_cache[instant] = {
+                    fld.name: fld.dataType.simpleString()
+                    for fld in T.StructType.fromJson(schema).fields
+                }
+            except (FileNotFoundError, KeyError, ValueError):
+                self._col_type_cache[instant] = None
+        return self._col_type_cache[instant]
 
-    def _sec_miss_paths(
-        self, files: list[dict], predicate: list[tuple]
+    def _index_misses(
+        self,
+        idx: ValueIndex | bloom_mod.Bloom,
+        cols: list[str],
+        files: list[dict],
+        predicate: list[tuple],
+        covered: Callable[[dict, str], bool],
+        absent: list | None,
     ) -> set[str]:
-        """Paths of files the secondary index PROVES hold no operand
-        value for some ``=``/``in`` conjunct on an indexed column —
-        the definite-miss set :meth:`_stats_prune` feeds into the same
-        verdict pipeline as the column blooms (so the MOR
+        """Paths of ``files`` that ``idx`` (the secondary index or the
+        column bloom) PROVES hold no operand value for some ``=``/``in``
+        conjunct on one of ``cols`` — the definite-miss sets
+        :meth:`_stats_prune` feeds into one verdict pipeline (so the MOR
         key-disjointness guard applies before any skip).
 
-        Per conjunct, the covered files (queried column ∈ the file's
-        stamped ``sec_cols``) are probed with each instant's operands
-        canonicalized under ITS stored column type
-        (:meth:`_bloom_operand` — un-reproducible pairings keep the
-        instant's files; a column absent from the instant's schema
-        makes its files definite misses without probe I/O). Covered
-        files the probe does not keep are misses."""
-        if not self.secondary_index_columns:
-            return set()
+        Per conjunct, the ``covered`` files are probed with each
+        instant's operands canonicalized under ITS stored column type
+        (:meth:`_bloom_operand`); an unknown schema or an
+        un-reproducible pairing keeps the instant's files, and a column
+        absent from the instant's schema probes ``absent`` (``[]``: its
+        files hold only NULL, a definite miss; None: keep)."""
         misses: set[str] = set()
         for col, op, val in predicate:
-            if op not in ("=", "in") or col not in self.secondary_index_columns:
+            if op not in ("=", "in") or col not in cols:
                 continue
-            covered = [
-                f
-                for f in files
-                if isinstance(f.get("sec_cols"), list)
-                and col in f["sec_cols"]
-            ]
-            if not covered:
+            fl = [f for f in files if covered(f, col)]
+            if not fl:
                 continue
             operands = list(val) if op == "in" else [val]
 
             def canon(inst: str, col=col, operands=operands):
-                types = self._sec_col_types(inst)
+                types = self._col_types(inst)
                 if types is None:
-                    return None  # unknown schema: keep these files
+                    return None
                 if col not in types:
-                    # absent from this instant's schema: its files hold
-                    # only NULL for it, and ``=``/``in`` never match NULL
-                    return []
+                    return absent
                 forms = [self._bloom_operand(v, types[col]) for v in operands]
                 return None if None in forms else forms
 
-            kept = self._sec_idx.probe(covered, operands, col=col, canon=canon)
-            misses |= {f["path"] for f in covered if f["path"] not in kept}
+            kept = idx.probe(fl, operands, col=col, canon=canon)
+            misses |= {f["path"] for f in fl if f["path"] not in kept}
         return misses
 
     def _merge(self, old: DataFrame, batch: DataFrame) -> DataFrame:
@@ -4363,14 +3911,22 @@ class LakeTable:
             )
         if self.bloom_index and indexable:
             builders.append(
-                ("bloom", lambda: self._write_bloom_sidecar(instant, indexable))
+                (
+                    "bloom",
+                    lambda: self._key_bloom.build(
+                        instant, indexable, _KEY_SCHEMA
+                    ),
+                )
             )
         if self.bloom_columns and indexable:
+            col_schema = T.StructType(
+                [fld for fld in schema.fields if fld.name in self.bloom_columns]
+            )
             builders.append(
                 (
                     "col_bloom",
-                    lambda: self._write_col_bloom_sidecar(
-                        instant, indexable, schema
+                    lambda: self._col_bloom.build(
+                        instant, indexable, col_schema
                     ),
                 )
             )
@@ -4795,10 +4351,9 @@ class LakeTable:
             # files under a different schema)
             self._manifest_mem.clear()
             self._pstats_cache.clear()
-            self._bloom_sidecars.clear()
-            self._col_bloom_sidecars.clear()
-            self._col_bloom_type_cache.clear()
-            self._sec_type_cache.clear()
+            self._key_bloom.clear()
+            self._col_bloom.clear()
+            self._col_type_cache.clear()
             self._commit_summary_cache.clear()
             return doomed
 
@@ -5471,24 +5026,16 @@ class LakeTable:
                 fns for _r, _ds, fns in os.walk(full)
             ):
                 shutil.rmtree(full)
-        # prune bloom sidecars whose instant no longer has any live file
+        # prune the index and bloom sidecars of instants that no longer
+        # own any live file
         live_instants = {
             p.replace(os.sep, "/").split("/")[1]
             for p in keep
             if "/" in p.replace(os.sep, "/")
         }
-        for sidecar_dir, cache in (
-            (self.bloom_dir, self._bloom_sidecars),
-            (self.col_bloom_dir, self._col_bloom_sidecars),
+        for idx in (
+            self._record_idx, self._sec_idx, self._key_bloom, self._col_bloom
         ):
-            if not os.path.isdir(sidecar_dir):
-                continue
-            for fn in os.listdir(sidecar_dir):
-                if fn.endswith(".json") and fn[: -len(".json")] not in live_instants:
-                    os.remove(os.path.join(sidecar_dir, fn))
-                    cache.pop(fn[: -len(".json")], None)
-        # and the value→file index dirs the same way
-        for idx in (self._record_idx, self._sec_idx):
             idx.prune(live_instants)
         return sorted(deleted)
 

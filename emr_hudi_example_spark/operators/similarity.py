@@ -1193,13 +1193,6 @@ def _local_residual_codebook(
             if best is None or key < best[0]:
                 best = (key, cv)
         cv = best[1]
-        if len(v) != len(cv):
-            # dimension-mismatched seed/centroid: Spark's zip_with
-            # emits a max-length array null-padded at the tail, which
-            # a whole-null residual would NOT reproduce — fall back to
-            # the Spark derivation like the other degenerate inputs
-            # (r14 advice)
-            return None
         res = [
             None if (x is None or y is None) else x - y
             for x, y in zip(v, cv)

@@ -1,7 +1,6 @@
 """r15 optimization-round tooling: isolated per-query timing, plan
 capture, and build/count Spark-job profiling over the REAL catalog
-entries (same methodology as scripts/r14_tools.py; plans land in
-plans/r15/).
+entries (plans land in plans/r15/).
 
 Usage:
   python scripts/r15_tools.py time <query> [...] [--runs N]
@@ -65,18 +64,26 @@ def main() -> None:
 
     if mode == "jobs":
         st = spark.sparkContext.statusTracker()
+
+        def newest() -> int:
+            # count by the sequential job id: the number of RETAINED
+            # jobs drops by 100 whenever the status store passes
+            # spark.ui.retainedJobs, so a len() difference undercounts
+            # or goes negative over a multi-query run
+            return max(st.getJobIdsForGroup(None), default=-1)
+
         for name in names:
             _reset_caches()
             fn = catalog.Q[name]
             spark.sparkContext.setJobDescription(f"r15:{name}")
-            j0 = len(st.getJobIdsForGroup(None))
+            j0 = newest()
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t1 = time.perf_counter()
-            j1 = len(st.getJobIdsForGroup(None))
+            j1 = newest()
             n = df.count()
             t2 = time.perf_counter()
-            j2 = len(st.getJobIdsForGroup(None))
+            j2 = newest()
             print(json.dumps({
                 "q": name, "rows": n,
                 "build_jobs": j1 - j0, "build_sec": round(t1 - t0, 3),

@@ -10,7 +10,7 @@ Safety invariants pinned here:
   never pruned (same stale-winner-leak guard as stats pruning)
 - unprobeable operands (floats, timestamps) disable pruning, never
   corrupt it
-- geometry is per-sidecar: resizing the table config never
+- geometry is per-sidecar: changing the build geometry never
   invalidates existing blooms
 """
 
@@ -225,11 +225,12 @@ def test_col_bloom_kernel_matches_module(spark, tmp_path):
     from emr_hudi_example_spark.lake import bloom as B
 
     t = col_bloom_table(spark, tmp_path, name="par")
+    t.driver_probe_max_bytes = -1  # the Spark route: the worker kernel
     rows = tagged_cust(spark).filter(F.col("c_custkey") < 40)
     t.write(rows.coalesce(1), op="insert", instant="001")
-    sc = t._col_bloom_sidecars["001"]
-    assert sc["nbits"] == t.col_bloom_bits
-    assert sc["k"] == t.col_bloom_hashes
+    sc = t._col_bloom._sidecars["001"]
+    assert sc["nbits"] == B.COL_NBITS
+    assert sc["k"] == B.COL_HASHES
     [(path, per)] = list(sc["files"].items())
     tags = [r["tag"] for r in rows.select("tag").distinct().collect()]
     assert per["tag"] == B.bloom_to_b64(
@@ -237,12 +238,16 @@ def test_col_bloom_kernel_matches_module(spark, tmp_path):
     )
 
 
-def test_col_bloom_geometry_is_per_sidecar(spark, tmp_path):
-    """A table handle opened with a DIFFERENT col_bloom_bits config
-    must still probe old sidecars correctly: geometry comes from the
-    sidecar JSON, not the live config."""
-    t = col_bloom_table(spark, tmp_path, name="geo", col_bloom_bits=1 << 14)
+def test_col_bloom_geometry_is_per_sidecar(spark, tmp_path, monkeypatch):
+    """A table handle on a DIFFERENT column-bloom geometry must still
+    probe old sidecars correctly: geometry comes from the sidecar
+    JSON, not the live config."""
+    from emr_hudi_example_spark.lake import bloom as B
+
+    monkeypatch.setattr(B, "COL_NBITS", 1 << 14)
+    t = col_bloom_table(spark, tmp_path, name="geo")
     write_four_interleaved(t, spark)
+    monkeypatch.undo()
     t2 = col_bloom_table(spark, tmp_path, name="geo")  # default 1<<17
     v = tag_of(spark, 8)
     out = t2.snapshot(predicate=[("tag", "=", v)])
@@ -305,3 +310,42 @@ def test_col_bloom_sidecar_cleanup(spark, tmp_path):
     v = tag_of(spark, 8)
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert [r["ver"] for r in out.collect()] == [3]
+
+
+def _commit_jobs(spark, tmp, **kw) -> tuple[int, int]:
+    """Spark jobs for a 3-row insert, then a 3-key upsert, on a table
+    holding one 75-row file."""
+    t = col_bloom_table(spark, tmp, name="jobs", **kw)
+    base = tagged_cust(spark)
+    t.write(
+        base.filter(F.col("c_custkey") % 2 == 0).coalesce(1),
+        op="insert", instant="001",
+    )
+    st = spark.sparkContext.statusTracker()
+
+    def newest() -> int:
+        # the sequential job id: the number of RETAINED jobs drops
+        # whenever the status store evicts past spark.ui.retainedJobs
+        return max(st.getJobIdsForGroup(None), default=-1)
+
+    j0 = newest()
+    t.write(
+        base.filter(F.col("c_custkey").isin(1, 3, 5)),
+        op="insert", instant="002",
+    )
+    j1 = newest()
+    t.write(
+        tagged_cust(spark, ver=2).filter(F.col("c_custkey").isin(2, 4, 6)),
+        op="upsert", instant="003",
+    )
+    return j1 - j0, newest() - j1
+
+
+def test_col_bloom_commit_job_budget(spark, tmp_path):
+    """A point commit on a table blooming a string column issues as
+    many Spark jobs as on a table with no bloom: the column bloom
+    builds driver-side (measured (insert, upsert) = (3, 8) vs (1, 6)
+    jobs while only the key bloom had that route)."""
+    bloomed = _commit_jobs(spark, tmp_path / "cb")
+    plain = _commit_jobs(spark, tmp_path / "pl", bloom_columns=[])
+    assert bloomed == plain, (bloomed, plain)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from emr_hudi_example_spark.lake import (
     COMMIT_TIME_COL,
     META_COLS,
+    RECORD_KEY_COL,
     LakeTable,
 )
 
@@ -2747,6 +2748,12 @@ def test_bloom_module_determinism():
     other = B.key_positions([f"other-{i}" for i in range(1000)], 1 << 16, 5)
     # at 1k keys in 64Kbit/k=5 the FPR is ~2e-5 — and deterministic
     assert B.might_contain(bits, other).sum() <= 2
+    # the packed-bit test agrees with a lookup in the unpacked bitset
+    import numpy as np
+
+    unpacked = np.unpackbits(bits, bitorder="little")
+    for p in (pos, other):
+        assert (B.might_contain(bits, p) == unpacked[p].all(axis=1)).all()
 
 
 def test_bloom_kernel_matches_module(spark, tmp_path):
@@ -2758,11 +2765,75 @@ def test_bloom_kernel_matches_module(spark, tmp_path):
     t = _bloom_table(spark, tmp_path, name="par")
     rows = _hashed_cust(spark, ver=1).filter(F.col("c_custkey") < 40)
     t.write(rows.coalesce(1), op="insert", instant="001")
-    [(path, b64)] = list(t._bloom_sidecars["001"].items())
+    [(path, b64)] = [
+        (p, per[RECORD_KEY_COL])
+        for p, per in t._key_bloom._sidecars["001"]["files"].items()
+    ]
     keys = [r["k"] for r in t.snapshot().select("k").collect()]
     assert b64 == B.bloom_to_b64(
-        B.build_bloom(keys, t.bloom_bits, t.bloom_hashes)
+        B.build_bloom(keys, B.KEY_NBITS, B.KEY_HASHES)
     )
+
+
+def test_bloom_geometry_comes_from_sidecar(spark, tmp_path, monkeypatch):
+    """Probes read the geometry recorded in each sidecar, never the
+    handle's: four single-file commits bloomed at 2^14 bits, upserted
+    through a handle on the default geometry, must prune exactly the
+    three files holding no batch key and land an exact snapshot.
+    Probing with the handle's geometry instead mis-pruned the file
+    holding the keys (duplicate rows) or indexed past the bitset."""
+    from emr_hudi_example_spark.lake import bloom as B
+
+    rows = spark.range(0, 200).select(
+        F.md5(F.col("id").cast("string")).alias("k"),
+        F.col("id"),
+        F.lit(1).cast("long").alias("ver"),
+    )
+    monkeypatch.setattr(B, "KEY_NBITS", 1 << 14)
+    t = _bloom_table(spark, tmp_path, name="geo")
+    for i in range(4):
+        t.write(
+            rows.filter((F.col("id") >= 50 * i) & (F.col("id") < 50 * i + 50))
+            .coalesce(1),
+            op="insert", instant=f"00{i + 1}",
+        )
+    monkeypatch.undo()
+    t2 = _bloom_table(spark, tmp_path, name="geo")
+    upd = rows.filter(F.col("id") < 50).withColumn("ver", F.lit(2).cast("long"))
+    t2.write(upd, op="upsert", instant="005")
+    assert t2.last_bloom_pruned == 3
+    snap = t2.snapshot()
+    assert snap.count() == 200
+    assert snap.filter(F.col("ver") == 2).count() == 50
+
+
+def test_bloom_legacy_flat_sidecar_keeps_files(spark, tmp_path):
+    """A key sidecar in the legacy flat format (``{fp: b64}``, no
+    recorded geometry) counts as no bloom: its file is kept even when
+    the bitset it holds excludes every key, and the upsert is exact."""
+    import json
+
+    from emr_hudi_example_spark.lake import bloom as B
+
+    t = _bloom_table(spark, tmp_path, name="leg")
+    base = _hashed_cust(spark, ver=1)
+    for i in range(2):
+        t.write(
+            base.filter(F.col("c_custkey") % 2 == i).coalesce(1),
+            op="insert", instant=f"00{i + 1}",
+        )
+    legacy = [f["path"] for f in t._manifest("001")["added"]]
+    empty = B.bloom_to_b64(B.build_bloom([], 1 << 20, 7))
+    with open(os.path.join(t.bloom_dir, "001.json"), "w") as fh:
+        json.dump({p: empty for p in legacy}, fh)
+    t2 = _bloom_table(spark, tmp_path, name="leg")
+    upd = _hashed_cust(spark, ver=2).filter(F.col("c_custkey") % 2 == 0)
+    t2.write(upd, op="upsert", instant="003")
+    assert t2.last_bloom_pruned == 1  # file 002's bloom; 001 kept
+    assert set(t2._manifest("003")["replaced"]) == set(legacy)
+    snap = t2.snapshot()
+    assert snap.count() == base.count()
+    assert snap.filter(F.col("ver") == 2).count() == upd.count()
 
 
 # ------------------------------------------- delete_partition / savepoint

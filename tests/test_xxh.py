@@ -106,9 +106,10 @@ def test_driver_probe_matches_spark_join_path(spark, tmp_path):
 
 def test_driver_bloom_sidecar_bit_identical(spark, tmp_path):
     """The driver-side bloom build must emit the SAME bitsets the
-    distributed Arrow-kernel build does (both call through
+    distributed Arrow-kernel build does, for the key bloom and for a
+    column bloom over a string column with NULLs (both routes call
     lake/bloom.py's blake2b double hashing — this pins the pyarrow
-    read + str() canonicalization path end to end)."""
+    read, NULL drop and canonicalization path end to end)."""
     import json as _json
     import os
 
@@ -119,18 +120,22 @@ def test_driver_bloom_sidecar_bit_identical(spark, tmp_path):
     base = spark.range(0, 300).select(
         F.col("id").cast("int").alias("k"),
         F.lit(1).cast("long").alias("ver"),
+        F.when(F.col("id") % 7 != 0, F.md5(F.col("id").cast("string")))
+        .alias("s"),
     )
-    blooms = {}
-    for mode, gate in (("driver", None), ("spark", -1)):
-        t = LakeTable(
-            spark, str(tmp_path / mode), "x", "b", ["k"], "ver",
-            bloom_index=True,
-        )
-        if gate is not None:
-            t.driver_probe_max_bytes = gate
-        t.write(base.coalesce(1), op="insert", instant="001")
-        with open(os.path.join(t.bloom_dir, "001.json")) as fh:
-            vals = sorted(_json.load(fh).values())
-        assert len(vals) == 1
-        blooms[mode] = vals[0]
-    assert blooms["driver"] == blooms["spark"]
+    for sidecar_dir, col in (("bloom_dir", "_record_key"), ("col_bloom_dir", "s")):
+        blooms = {}
+        for mode, gate in (("driver", None), ("spark", -1)):
+            t = LakeTable(
+                spark, str(tmp_path / sidecar_dir / mode), "x", "b", ["k"],
+                "ver", bloom_index=True, bloom_columns=["s"],
+            )
+            if gate is not None:
+                t.driver_probe_max_bytes = gate
+            t.write(base.coalesce(1), op="insert", instant="001")
+            with open(os.path.join(getattr(t, sidecar_dir), "001.json")) as fh:
+                files = _json.load(fh)["files"]
+            vals = sorted(per[col] for per in files.values())
+            assert len(vals) == 1
+            blooms[mode] = vals[0]
+        assert blooms["driver"] == blooms["spark"]
