@@ -75,11 +75,12 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 import pyarrow.parquet as pa_pq
+from py4j.protocol import Py4JJavaError
 
 from emr_hudi_example_spark.functions.core import now_instant, pk_not_null_condition
 from emr_hudi_example_spark.lake import bloom as bloom_mod
@@ -1502,7 +1503,7 @@ class LakeTable:
             ]
             if stable:
                 out = out.filter(self._predicate_condition(stable))
-            out = self._merged_read(out)
+            out = self._merged_read(out, files)
         if predicate:
             out = out.filter(self._predicate_condition(predicate))
         return out
@@ -1614,7 +1615,7 @@ class LakeTable:
             ]
             if stable:
                 pre = pre.filter(self._predicate_condition(stable))
-            out = self._merged_read(pre)
+            out = self._merged_read(pre, fds)
             if predicate:
                 out = out.filter(self._predicate_condition(predicate))
             return out
@@ -1788,7 +1789,9 @@ class LakeTable:
     ) -> str | None:
         """The generic writer — engine analog of ``writeHudiTable``
         (``SRC/package.scala:15-81``). ``op`` ∈ {insert, bulk_insert,
-        upsert, delete}. Returns the committed instant.
+        upsert, delete}. Returns the committed instant, or None when
+        nothing was published (an empty upsert on an existing table —
+        see :meth:`_commit_upsert` — or a replayed checkpoint).
 
         ``sort_mode`` (``bulk_insert`` only — Hudi's
         ``hoodie.bulkinsert.sort.mode``): ``NONE`` writes the batch
@@ -2636,25 +2639,76 @@ class LakeTable:
         )
         return inst
 
-    def _commit_upsert(self, df: DataFrame, instant: str | None) -> str:
+    def _commit_upsert(
+        self, df: DataFrame, instant: str | None
+    ) -> str | None:
+        """Keyed upsert. On an existing table with no checkpoint armed,
+        an EMPTY batch publishes nothing and returns None: one
+        ``Observation`` counts the batch on the write's own jobs (no
+        separate ``isEmpty`` pass), and a zero count drops
+        ``data/<inst>/`` before the manifest — the manifest rename is
+        the commit. A creating commit still publishes (it creates the
+        table), and so does a checkpointed one (its cursor must land).
+        So does a batch from another session (a ``foreachBatch`` frame
+        lives in the stream's cloned session): an observation completes
+        only in the session it was attached in, and the COW merge runs
+        in the table's."""
         inst = self._next_instant(instant)
         batch = self._prepare_batch(df, inst)
+        obs = (
+            Observation()
+            if self.exists()
+            and self._pending_checkpoint is None
+            and df.sparkSession._jsparkSession.equals(
+                self.spark._jsparkSession
+            )
+            else None
+        )
         if self.is_mor:
-            return self._commit_mor_append(batch, inst, "upsert")
+            return self._commit_mor_append(batch, inst, "upsert", obs)
         # M1 — persist around multi-action writes (SRC/package.scala:66,78):
         # on an existing table the batch feeds partition discovery, the
         # key-range agg, the key-hit scan AND the merge; only the
-        # creating commit evaluates it once.
+        # creating commit evaluates it once. The row count observes the
+        # persisted frame, so every action reads through it.
         reuse = self.exists() or bool(self.partition_keys)
         if reuse:
             batch.persist()
         try:
-            return self._commit_upsert_inner(batch, inst)
+            return self._commit_upsert_inner(
+                self._observe_rows(batch, obs), inst, obs
+            )
         finally:
             if reuse:
                 batch.unpersist()
 
-    def _commit_upsert_inner(self, batch: DataFrame, inst: str) -> str:
+    @staticmethod
+    def _observe_rows(
+        batch: DataFrame, obs: Observation | None
+    ) -> DataFrame:
+        if obs is None:
+            return batch
+        return batch.observe(obs, F.count(F.lit(1)).alias("rows"))
+
+    def _discard_if_empty(self, obs: Observation | None, inst: str) -> bool:
+        """After the data write: True when the observed batch had no
+        rows — ``data/<inst>/`` is removed and the caller publishes no
+        manifest. A metric the write did not deliver (Spark hands back
+        an empty row, which ``get`` rejects) publishes as before."""
+        if obs is None:
+            return False
+        try:
+            rows = obs.get["rows"]
+        except Py4JJavaError:
+            return False
+        if rows:
+            return False
+        shutil.rmtree(os.path.join(self.data_dir, inst), ignore_errors=True)
+        return True
+
+    def _commit_upsert_inner(
+        self, batch: DataFrame, inst: str, obs: Observation | None
+    ) -> str | None:
         if not self.exists():
             # intra-batch dedup still applies on the creating commit
             deduped = self._merge(
@@ -2668,6 +2722,8 @@ class LakeTable:
         affected, old = self._affected_files(batch)
         merged = self._merge(old, batch)
         added = self._write_data_files(merged, inst)
+        if self._discard_if_empty(obs, inst):
+            return None
         affected_set = {f["path"] for f in affected}
         self._write_manifest(
             inst, "upsert", batch.schema, added, sorted(affected_set)
@@ -2715,15 +2771,24 @@ class LakeTable:
         return inst
 
     def _commit_mor_append(
-        self, batch: DataFrame, inst: str, action: str
-    ) -> str:
+        self,
+        batch: DataFrame,
+        inst: str,
+        action: str,
+        obs: Observation | None = None,
+    ) -> str | None:
         """MOR write path: append delta files, zero rewrite — write cost
         is O(batch), deferred to the read merge / compaction (the trade
         the reference buys with MERGE_ON_READ, ``SRC/MSK2Hudi.scala:42``).
+        ``obs`` (see :meth:`_commit_upsert`) turns an empty batch into
+        no commit; the delta write IS the batch, so it counts the
+        written rows.
         """
         if self.exists():
             batch = self._align_schema(batch)
-        added = self._write_data_files(batch, inst, kind="delta")
+        added = self._write_data_files(batch, inst, kind="delta", obs=obs)
+        if self._discard_if_empty(obs, inst):
+            return None
         self._write_manifest(inst, action, batch.schema, added, [])
         if self.inline_compact_deltas is not None:
             if self._delta_commits_since_compact() >= self.inline_compact_deltas:
@@ -2743,12 +2808,24 @@ class LakeTable:
                 n += 1
         return n
 
-    def _merged_read(self, df: DataFrame) -> DataFrame:
-        """MOR snapshot merge: newest surviving row per key. Data rows
-        committed before a key's newest tombstone are dead (matching the
-        COW delete-then-reinsert semantics exactly); among the live rows
-        the ``(precombine, _commit_time)`` max wins. Hash aggregations
-        with map-side partial combine — no sort.
+    def _merged_read(
+        self, df: DataFrame, files: list[dict] | None = None
+    ) -> DataFrame:
+        """MOR snapshot merge of ``df``, the scan of the manifest
+        entries ``files`` (None: unknown): newest surviving row per key.
+        Data rows committed before a key's newest tombstone are dead
+        (matching the COW delete-then-reinsert semantics exactly); among
+        the live rows the ``(precombine, _commit_time)`` max wins. Hash
+        aggregations with map-side partial combine — no sort.
+
+        The tombstone sub-plan (a ``groupBy`` of the tombstones joined
+        back onto the data rows — one shuffle job and one broadcast job
+        per read) is planned only when some scanned entry may hold a
+        tombstone: every MOR file records ``"tombstones"`` from its
+        footer's ``_deleted`` max at write time, and an entry without
+        the key (written before the flag existed, or adopted) counts as
+        holding one, as does an unknown scan. An upsert-only table
+        therefore merges with the single aggregation.
 
         With ``payload='partial_update'`` the aggregation additionally
         folds each data column to its newest ELIGIBLE non-null version
@@ -2781,7 +2858,10 @@ class LakeTable:
             else [PARTITION_PATH_COL, RECORD_KEY_COL]
         )
         out_cols = [c for c in df.columns if c != DELETED_COL]
-        if DELETED_COL in df.columns:
+        if DELETED_COL in df.columns and (
+            files is None
+            or any(f.get("tombstones") is not False for f in files)
+        ):
             is_tomb = F.coalesce(F.col(DELETED_COL), F.lit(False))
             tombs = (
                 df.filter(is_tomb)
@@ -3672,11 +3752,14 @@ class LakeTable:
         instant: str,
         kind: str = "base",
         key_sort: bool = True,
+        obs: Observation | None = None,
     ) -> list[dict]:
         """Write one commit's data files under ``data/<instant>/`` with
         hive-style ``__pt_<col>=<val>`` layout; returns file records
         (relative path + partition values + kind base|delta) for the
-        manifest."""
+        manifest. ``obs`` counts the written rows at the top of the
+        write plan: observed below the bucket shuffle, an empty batch's
+        metric would vanish with the empty stage AQE prunes."""
         out_dir = os.path.join(self.data_dir, instant)
         writer = df
         pt_cols = []
@@ -3713,6 +3796,7 @@ class LakeTable:
         # protection if those modes ever change their key.
         if key_sort:
             writer = writer.sortWithinPartitions(*pt_cols, RECORD_KEY_COL)
+        writer = self._observe_rows(writer, obs)
         w = writer.write.mode("overwrite")
         if pt_cols:
             w = w.partitionBy(*pt_cols)
@@ -3737,13 +3821,16 @@ class LakeTable:
                 walked.append((full, rel, partition, bucket, pp))
         stats = self._file_stats_parallel(
             [full for full, *_ in walked],
-            [RECORD_KEY_COL] + self.stats_columns,
+            [RECORD_KEY_COL]
+            + self.stats_columns
+            + ([DELETED_COL] if self.is_mor else []),
         )
         added: list[dict] = []
         for (full, rel, partition, bucket, pp), (ranges, nbytes) in zip(
             walked, stats
         ):
             nrows = ranges.pop("__rows__", None)
+            deleted = ranges.pop(DELETED_COL, None)
             kmin, kmax = ranges.get(RECORD_KEY_COL) or (None, None)
             col_stats = {
                 c: [self._stat_json(r[0]), self._stat_json(r[1])]
@@ -3767,6 +3854,11 @@ class LakeTable:
             }
             if nrows is not None:
                 entry["rows"] = nrows[0]
+            if self.is_mor:
+                # the footer's _deleted max gates the read merge's
+                # tombstone join (:meth:`_merged_read`); no statistic
+                # means "may hold one"
+                entry["tombstones"] = deleted is None or bool(deleted[1])
             if col_stats:
                 entry["col_stats"] = col_stats
             if bucket is not None:
@@ -4433,7 +4525,9 @@ class LakeTable:
             # fold deltas + tombstones into fresh base files; the rows
             # keep their _commit_time, the column set stays the stored
             # schema (all-false _deleted) so later reads are uniform
-            df = self._merged_read(df).withColumn(DELETED_COL, F.lit(False))
+            df = self._merged_read(df, live).withColumn(
+                DELETED_COL, F.lit(False)
+            )
         df = self._cluster_for_compact(
             df, live, target_files_per_partition, sort_by
         )
@@ -4797,7 +4891,7 @@ class LakeTable:
             # this is a full rewrite of the pinned file set)
             df = self._read_files(sorted(pinned_paths))
             if self.is_mor:
-                df = self._merged_read(df).withColumn(
+                df = self._merged_read(df, pinned).withColumn(
                     DELETED_COL, F.lit(False)
                 )
             df = self._cluster_for_compact(

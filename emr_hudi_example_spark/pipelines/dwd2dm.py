@@ -50,32 +50,32 @@ def dm_increment(
     created_ts_millis: int | None = None,
 ) -> str | None:
     """One tick (SRC/DWD2DM.scala:54-85). Returns the committed instant
-    (None when the slice was empty)."""
+    (None when the slice was empty).
+
+    No ``persist``/``isEmpty`` guard: the merged frame goes straight to
+    ``dm.write``, and an upsert into an existing mart publishes nothing
+    for an empty slice (``LakeTable._commit_upsert`` counts the batch
+    on the write's own jobs). An unseeded mart is created by the first
+    tick, empty slice or not: a creating commit always publishes."""
     if not dwd.exists():  # cold start: source not yet seeded
         return None
     inc = dwd.incremental(begin, end)
     inc_agg = inc.groupBy(*group_cols).agg(F.sum(value_col).alias(sum_alias))
-    inc_agg.persist()  # M1 — reused by the empty-guard AND the merge
-    try:
-        if inc_agg.isEmpty():
-            return None
-        if dm.exists():
-            snapshot = dm.logical().select(*group_cols, sum_alias)
-        else:
-            # unseeded mart: the increment IS the seed (fresh empty
-            # LOCAL relation, not a derived one — a self-join would be
-            # ambiguous, and createDataFrame([], schema) is a
-            # LogicalRDD that costs a round of empty tasks per action)
-            from emr_hudi_example_spark.lake.table import _empty_df
+    if dm.exists():
+        snapshot = dm.logical().select(*group_cols, sum_alias)
+    else:
+        # unseeded mart: the increment IS the seed (fresh empty LOCAL
+        # relation, not a derived one — a self-join would be ambiguous,
+        # and createDataFrame([], schema) is a LogicalRDD that costs a
+        # round of empty tasks per action)
+        from emr_hudi_example_spark.lake.table import _empty_df
 
-            sel = inc_agg.select(*group_cols, sum_alias)
-            snapshot = _empty_df(inc_agg.sparkSession, sel.schema)
-        merged = delta_merge_running_agg(
-            inc_agg, snapshot, keys=group_cols, sum_col=sum_alias
-        ).withColumn("created_ts", created_ts_expr(created_ts_millis))
-        return dm.write(merged, op="upsert")
-    finally:
-        inc_agg.unpersist()
+        sel = inc_agg.select(*group_cols, sum_alias)
+        snapshot = _empty_df(inc_agg.sparkSession, sel.schema)
+    merged = delta_merge_running_agg(
+        inc_agg, snapshot, keys=group_cols, sum_col=sum_alias
+    ).withColumn("created_ts", created_ts_expr(created_ts_millis))
+    return dm.write(merged, op="upsert")
 
 
 def run_dwd2dm_loop(

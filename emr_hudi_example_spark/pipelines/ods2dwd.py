@@ -53,6 +53,11 @@ def dwd_increment(
 ) -> str | None:
     """One poll tick (SRC/ODS2DWD.scala:43-69). Returns the new cursor.
 
+    The enriched slice goes straight to ``dwd.write``: no ``persist``,
+    no ``isEmpty`` pass. An empty slice on an existing DWD publishes
+    no commit — the upsert counts its batch on the write's own jobs
+    (``LakeTable._commit_upsert``) — and the cursor still advances.
+
     Column mapping note: the reference enriches TPC-DS ``inventory`` with
     ``item`` (nvl(i_brand,'N/A')); the driver fixtures map this to
     ``lineitem`` enriched with ``part`` (FIXTURES.md §2) — keys are
@@ -92,13 +97,9 @@ def dwd_increment(
         defaults=defaults,
     ).drop(dim_key)
     enriched = enriched.withColumn("created_ts", created_ts_expr(created_ts_millis))
-    enriched.persist()  # M1 — reused by the empty-guard AND the write
-    try:
-        if enriched.isEmpty():  # `if (df.count > 0)`, SRC/ODS2DWD.scala:64
-            return end
-        dwd.write(enriched, op="upsert")
-    finally:
-        enriched.unpersist()
+    # the reference's `if (df.count > 0)` guard (SRC/ODS2DWD.scala:64)
+    # lives in the upsert: an empty slice publishes nothing
+    dwd.write(enriched, op="upsert")
     return end
 
 
@@ -199,34 +200,36 @@ def run_ods2dwd_streaming(
             if cur is None
             else batch_df.filter(F.col(COMMIT_TIME_COL) > cur)
         )
-        rows.persist()
-        try:
-            if rows.isEmpty():
-                return
-            mx = rows.agg(F.max(COMMIT_TIME_COL)).collect()[0][0]
-            new_cur = mx if cur is None else max(cur, mx)
-            enriched = dim_enrich_left_join(
-                rows.drop(*[c for c in rows.columns if c.startswith("_")]),
-                dim_df,
-                on=F.col(fact_key) == F.col(dim_key),
-                defaults=defaults,
-            ).drop(dim_key).withColumn(
-                "created_ts", created_ts_expr(created_ts_millis)
-            )
-            # cursor + replay guard ride the commit manifest (a
-            # replayed batch returns None — already committed WITH its
-            # cursor, so advancing the session cursor stays correct)
-            dwd.write(
-                enriched, op="upsert",
-                checkpoint={
-                    "source_id": query_name,
-                    "batch_id": batch_id,
-                    "cursor": new_cur,
-                },
-            )
-            state["cur"] = new_cur
-        finally:
-            rows.unpersist()
+        # one aggregate yields the cursor AND the emptiness check. No
+        # persist: the first action on a persisted frame runs its own
+        # cache-materialization job, which costs more than the second
+        # scan of a micro-batch's files
+        mx, n = rows.agg(
+            F.max(COMMIT_TIME_COL), F.count(F.lit(1))
+        ).collect()[0]
+        if n == 0:
+            return
+        new_cur = mx if cur is None else max(cur, mx)
+        enriched = dim_enrich_left_join(
+            rows.drop(*[c for c in rows.columns if c.startswith("_")]),
+            dim_df,
+            on=F.col(fact_key) == F.col(dim_key),
+            defaults=defaults,
+        ).drop(dim_key).withColumn(
+            "created_ts", created_ts_expr(created_ts_millis)
+        )
+        # cursor + replay guard ride the commit manifest (a replayed
+        # batch returns None — already committed WITH its cursor, so
+        # advancing the session cursor stays correct)
+        dwd.write(
+            enriched, op="upsert",
+            checkpoint={
+                "source_id": query_name,
+                "batch_id": batch_id,
+                "cursor": new_cur,
+            },
+        )
+        state["cur"] = new_cur
 
     return start_foreach_batch(
         ods.stream(), tick, checkpoint_dir, query_name=query_name

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import math
 from decimal import Decimal
+from typing import Any, Callable
 
 import duckdb
 
@@ -88,3 +89,18 @@ def compare(spark, name, spark_fn, oracle, sf_dir):
     if sc != oc:
         diffs = [(a, b) for a, b in zip(sc, oc) if a != b][:5]
         raise AssertionError(f"{name}: value mismatch, first diffs: {diffs}")
+
+
+def count_jobs(spark, fn: Callable[[], Any]) -> tuple[int, Any]:
+    """``(Spark jobs fn() issued, its result)``, counted by the newest
+    sequential job id: the NUMBER of retained jobs drops whenever the
+    status store evicts past ``spark.ui.retainedJobs``, so a ``len()``
+    difference undercounts, or goes negative, in a long session."""
+    st = spark.sparkContext.statusTracker()
+
+    def newest() -> int:
+        return max(st.getJobIdsForGroup(None), default=-1)
+
+    j0 = newest()
+    out = fn()
+    return newest() - j0, out

@@ -21,6 +21,7 @@ import os
 from pyspark.sql import functions as F
 
 from emr_hudi_example_spark.lake import LakeTable
+from tests.harness import count_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -321,24 +322,15 @@ def _commit_jobs(spark, tmp, **kw) -> tuple[int, int]:
         base.filter(F.col("c_custkey") % 2 == 0).coalesce(1),
         op="insert", instant="001",
     )
-    st = spark.sparkContext.statusTracker()
-
-    def newest() -> int:
-        # the sequential job id: the number of RETAINED jobs drops
-        # whenever the status store evicts past spark.ui.retainedJobs
-        return max(st.getJobIdsForGroup(None), default=-1)
-
-    j0 = newest()
-    t.write(
+    ins, _ = count_jobs(spark, lambda: t.write(
         base.filter(F.col("c_custkey").isin(1, 3, 5)),
         op="insert", instant="002",
-    )
-    j1 = newest()
-    t.write(
+    ))
+    ups, _ = count_jobs(spark, lambda: t.write(
         tagged_cust(spark, ver=2).filter(F.col("c_custkey").isin(2, 4, 6)),
         op="upsert", instant="003",
-    )
-    return j1 - j0, newest() - j1
+    ))
+    return ins, ups
 
 
 def test_col_bloom_commit_job_budget(spark, tmp_path):

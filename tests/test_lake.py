@@ -4839,3 +4839,124 @@ def test_functional_index_statless_and_partition_stats(spark, tmp_path):
     got = t.snapshot(predicate=[("year(ts)", "=", 1999)])
     assert t.last_partitions_pruned == 0
     assert {r["k"][0] for r in got.collect()} == {"b"}
+
+
+@pytest.mark.parametrize(
+    "tt,kw",
+    [
+        ("COPY_ON_WRITE", {}),
+        ("MERGE_ON_READ", {}),
+        # the bucket shuffle's empty stage is pruned by AQE: the count
+        # must sit above it
+        ("MERGE_ON_READ", {"bucket_index": 4}),
+    ],
+)
+def test_empty_upsert_publishes_nothing(spark, tmp_path, tt, kw):
+    """An empty upsert on an existing table returns None, leaves the
+    timeline unchanged and leaves no ``data/<inst>/`` directory; the
+    next non-empty upsert lands exactly. A creating commit and a
+    checkpointed write still publish when empty (the table must come
+    into being; the cursor must land). Before the upsert counted its
+    own batch, both table types published an empty commit."""
+    t = make_table(spark, tmp_path, table_type=tt, **kw)
+    n = cust(spark).count()
+    empty = cust(spark, ver=2).filter("c_custkey < 0")
+    assert t.write(empty, op="upsert", instant="000") == "000"
+    t.write(cust(spark), op="upsert", instant="001")
+    assert t.write(empty, op="upsert", instant="002") is None
+    assert t.timeline() == ["000", "001"]
+    assert not os.path.exists(os.path.join(t.data_dir, "002"))
+
+    upd = cust(spark, ver=3).filter(F.col("c_custkey").isin(1, 2))
+    assert t.write(upd, op="upsert", instant="003") == "003"
+    assert t.timeline() == ["000", "001", "003"]
+    snap = t.snapshot()
+    assert snap.count() == n
+    assert sorted(
+        r["c_custkey"] for r in snap.filter("ver = 3").collect()
+    ) == [1, 2]
+
+    ckpt = {"source_id": "src", "batch_id": 7}
+    assert t.write(empty, op="upsert", instant="004", checkpoint=ckpt) == "004"
+    assert t.timeline()[-1] == "004"
+    assert t.last_checkpoint("src") == 7
+    assert t.snapshot().count() == n
+
+
+def _has_join(df) -> bool:
+    return LakeTable._plan_has_node(
+        df._jdf.queryExecution().analyzed(), ("Join",)
+    )
+
+
+def test_mor_tombstone_gate(spark, tmp_path):
+    """The MOR read merge plans its tombstone join only when a scanned
+    file may hold a tombstone. Upsert-only: no Join in the snapshot or
+    incremental plan. After a serialized delete, an optimistic delete,
+    or a merge with a delete leg, the join is back and the deleted key
+    is gone. Entries without the ``tombstones`` flag keep the join;
+    compaction output carries ``tombstones: false``."""
+    import json
+
+    n = cust(spark).count()
+    tables = {}
+    for name in ("ser", "opt", "mrg"):
+        t = make_table(spark, tmp_path, name=name, table_type="MERGE_ON_READ")
+        t.write(cust(spark), op="upsert", instant="001")
+        t.write(
+            cust(spark, ver=2).filter("c_custkey <= 5"),
+            op="upsert", instant="002",
+        )
+        assert [f["tombstones"] for f in t._live_files()] == [False] * len(
+            t._live_files()
+        )
+        for df in (t.snapshot(), t.incremental(None), t.incremental("001")):
+            assert not _has_join(df)
+        assert t.snapshot().count() == n
+        assert t.incremental("001").count() == (
+            cust(spark).filter("c_custkey <= 5").count()
+        )
+        tables[name] = t
+
+    gone = cust(spark).filter("c_custkey = 3")
+    tables["ser"].write(gone, op="delete", instant="003")
+    tables["opt"].write_optimistic(gone, op="delete", instant="003")
+    tables["mrg"].merge_into(
+        gone.withColumn("ver", F.lit(9).cast("long")),
+        update_set={"ver": "s.ver"},
+        delete_condition="t.c_custkey = 3",
+        instant="003",
+    )
+    for t in tables.values():
+        assert [f["tombstones"] for f in t._manifest("003")["added"]] == [
+            True
+        ] * len(t._manifest("003")["added"])
+        for df in (t.snapshot(), t.incremental(None), t.incremental("002")):
+            assert _has_join(df)
+            assert df.filter("c_custkey = 3").count() == 0
+        assert t.snapshot().count() == n - 1
+
+    # manifests written before the flag existed: the join stays
+    legacy = make_table(spark, tmp_path, name="legacy", table_type="MERGE_ON_READ")
+    legacy.write(cust(spark), op="upsert", instant="001")
+    mpath = os.path.join(legacy.commits_dir, "001.json")
+    with open(mpath) as fh:
+        m = json.load(fh)
+    for f in m["added"]:
+        del f["tombstones"]
+    with open(mpath, "w") as fh:
+        json.dump(m, fh)
+    legacy = make_table(spark, tmp_path, name="legacy", table_type="MERGE_ON_READ")
+    assert all("tombstones" not in f for f in legacy._live_files())
+    assert _has_join(legacy.snapshot())
+    assert legacy.snapshot().count() == n
+
+    # compaction folds the tombstones away: its base files carry none
+    t = tables["ser"]
+    inst = t.compact()
+    assert [f["tombstones"] for f in t._manifest(inst)["added"]] == [
+        False
+    ] * len(t._manifest(inst)["added"])
+    assert not _has_join(t.snapshot())
+    assert t.snapshot().count() == n - 1
+    assert t.snapshot().filter("c_custkey = 3").count() == 0

@@ -7,6 +7,7 @@ import json
 import os
 from datetime import datetime, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from emr_hudi_example_spark.lake import LakeTable
@@ -24,6 +25,7 @@ from emr_hudi_example_spark.pipelines import (
 from emr_hudi_example_spark.pipelines.multitable import TableSpec
 from emr_hudi_example_spark.pipelines.stream2ods import stream2ods_batch
 from emr_hudi_example_spark.streaming.sources import drain, json_lines_stream
+from tests.harness import count_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -1213,3 +1215,108 @@ def test_dwd_increment_cold_start_keeps_cursor_unset(spark, tmp_path):
     cur = dwd_increment(ods, region, dwd, begin=None, **kw)
     assert cur == ods.last_instant()
     assert dwd.snapshot().count() == nation.count()
+
+
+@pytest.mark.parametrize("tt", ["COPY_ON_WRITE", "MERGE_ON_READ"])
+def test_empty_tick_publishes_nothing(spark, tmp_path, tt):
+    """``dwd_increment`` and ``dm_increment`` on an empty slice publish
+    nothing (``dm_increment`` returns None) and leave no data
+    directory behind, and the next non-empty tick lands exactly. The
+    ticks carry no ``isEmpty`` guard: the upsert counts its own batch."""
+    nation = spark.read.parquet(f"{SF}/nation.parquet").withColumn(
+        "created_ts", F.lit(1).cast("long")
+    )
+    region = spark.read.parquet(f"{SF}/region.parquet").select(
+        "r_regionkey", "r_name"
+    )
+
+    def mk(name, keys):
+        return LakeTable(spark, str(tmp_path), "e", name, keys,
+                         "created_ts", table_type=tt)
+
+    ods, dwd, dm = (
+        mk("ods", ["n_nationkey"]), mk("dwd", ["n_nationkey"]),
+        mk("dm", ["r_name"]),
+    )
+    kw = dict(fact_key="n_regionkey", dim_key="r_regionkey",
+              enrich_cols={"r_name": "N/A"})
+    agg = (["r_name"], "n_nationkey", "key_sum")
+    ods.write(nation.filter("n_nationkey < 10"), op="upsert", instant="100")
+    cur = dwd_increment(ods, region, dwd, None, **kw)
+    dm_init(dwd, dm, *agg)
+    dm_cur = dwd.last_instant()
+
+    def state():
+        return [(t.timeline(), sorted(os.listdir(t.data_dir)))
+                for t in (dwd, dm)]
+
+    before = state()
+    # empty slices: no ODS commit in (100, 150], no DWD commit past dm_cur
+    assert dwd_increment(ods, region, dwd, cur, end="150", **kw) == "150"
+    assert dm_increment(dwd, dm, dm_cur, dwd.last_instant(), *agg) is None
+    assert state() == before
+
+    ods.write(nation.filter("n_nationkey >= 10"), op="upsert", instant="200")
+    assert dwd_increment(ods, region, dwd, "150", **kw) == "200"
+    inst = dm_increment(dwd, dm, dm_cur, dwd.last_instant(), *agg)
+    assert inst is not None and inst == dm.last_instant()
+    assert dwd.snapshot().count() == nation.count()
+    expect = (
+        nation.join(region, nation.n_regionkey == region.r_regionkey, "left")
+        .groupBy("r_name").agg(F.sum("n_nationkey").alias("key_sum"))
+    )
+    assert sorted(
+        map(tuple, dm.logical().select("r_name", "key_sum").collect())
+    ) == sorted(map(tuple, expect.collect()))
+
+
+def test_medallion_tick_job_budget(spark, tmp_path):
+    """Spark jobs for one medallion-shaped tick — ``ods.write`` +
+    ``dwd_increment`` + ``dm_increment`` — on a small ODS (MOR) → DWD
+    (MOR) → DM (COW) chain. The same tick took 18 jobs while the ticks
+    guarded the write with ``persist`` → ``isEmpty`` and every MOR read
+    planned the tombstone join; it takes 10 now that the upsert counts
+    its own batch and upsert-only MOR reads merge without the join."""
+    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
+        "l_orderkey", "l_linenumber", "l_partkey", "l_quantity",
+        "l_returnflag",
+    )
+    part = spark.read.parquet(f"{SF}/part.parquet").select(
+        "p_partkey", "p_brand"
+    )
+
+    def mk(name, keys, tt):
+        return LakeTable(spark, str(tmp_path), "b", name, keys,
+                         "created_ts", table_type=tt)
+
+    ods = mk("ods", ["l_orderkey", "l_linenumber"], "MERGE_ON_READ")
+    dwd = mk("dwd", ["l_orderkey", "l_linenumber", "p_brand"],
+             "MERGE_ON_READ")
+    dm = mk("dm", ["p_brand", "l_returnflag"], "COPY_ON_WRITE")
+    agg = (["p_brand", "l_returnflag"], "l_quantity", "qty_sum")
+
+    def sl(t):
+        return li.filter(F.col("l_orderkey") % 4 == t).withColumn(
+            "created_ts", F.lit(t).cast("long")
+        )
+
+    ods.write(sl(0), op="upsert")
+    cur = dwd_increment(ods, part, dwd, None, created_ts_millis=1)
+    dm_init(dwd, dm, *agg, created_ts_millis=1)
+    dm_cur = dwd.last_instant()
+    counts = []
+    for t in (1, 2):
+        def tick():
+            ods.write(sl(t), op="upsert")
+            dwd_increment(ods, part, dwd, cur, created_ts_millis=t + 1)
+            return dm_increment(dwd, dm, dm_cur, dwd.last_instant(), *agg,
+                                created_ts_millis=t + 1)
+
+        jobs, inst = count_jobs(spark, tick)
+        assert inst is not None
+        cur, dm_cur = ods.last_instant(), dwd.last_instant()
+        counts.append(jobs)
+    assert max(counts) <= 10, counts
+    assert dwd.snapshot().count() == li.filter(
+        F.col("l_orderkey") % 4 <= 2
+    ).select("l_orderkey", "l_linenumber").distinct().count()

@@ -15,6 +15,7 @@ import pytest
 
 from emr_hudi_example_spark.lake import LakeTable
 from emr_hudi_example_spark.lake.index import planned_probe_read
+from tests.harness import count_jobs
 
 
 def _table(spark, tmp_path, **kw):
@@ -172,17 +173,9 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
         return orig(c, b, minmax=minmax)
 
     t._key_hit_files = spy
-    st = spark.sparkContext.statusTracker()
-
-    def last_job_id() -> int:
-        # job ids are sequential; the NUMBER of retained jobs drops by
-        # 100 whenever the status store evicts past
-        # spark.ui.retainedJobs (1000), which a long session crosses
-        return max(st.getJobIdsForGroup(None), default=-1)
-
-    j0 = last_job_id()
-    affected, _old = t._affected_files(batch)
-    jobs_fused = last_job_id() - j0
+    jobs_fused, (affected, _old) = count_jobs(
+        spark, lambda: t._affected_files(batch)
+    )
     # the fusion itself: the key range arrived pre-fused
     assert captured.get("minmax") is not None
     assert captured["minmax"][0] is not None
@@ -193,8 +186,8 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
     # batch-wide aggregation) and require the fused path to plan in
     # strictly fewer Spark jobs on the identical batch
     t._key_hit_files = lambda c, b, minmax=None: orig(c, b, minmax=None)
-    j1 = last_job_id()
-    affected2, _old2 = t._affected_files(batch)
-    jobs_unfused = last_job_id() - j1
+    jobs_unfused, (affected2, _old2) = count_jobs(
+        spark, lambda: t._affected_files(batch)
+    )
     assert [f["path"] for f in affected2] == [f["path"] for f in affected]
     assert jobs_fused < jobs_unfused, (jobs_fused, jobs_unfused)

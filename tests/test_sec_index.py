@@ -20,6 +20,7 @@ import os
 from pyspark.sql import functions as F
 
 from emr_hudi_example_spark.lake import LakeTable
+from tests.harness import count_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -603,10 +604,8 @@ def test_backfill_sec_index_spark_path_batched_by_schema_group(
         spark, tmp_path, name="bfsg",
         secondary_index_columns=["tag", "num"],
     )
-    st = spark.sparkContext.statusTracker()
-    j0 = len(st.getJobIdsForGroup(None))
-    assert t2.backfill_secondary_index() is not None
-    jobs = len(st.getJobIdsForGroup(None)) - j0
+    jobs, inst = count_jobs(spark, t2.backfill_secondary_index)
+    assert inst is not None
     # one staged scan+shuffle+write for the whole schema group: the
     # per-instant path paid >= 3 write jobs (plus their scans); allow
     # AQE stage-job slack but pin "does not scale with instant count"
@@ -635,12 +634,10 @@ def _indexed_upsert_jobs(spark, tmp, spark_route: bool) -> int:
     if spark_route:
         t.driver_probe_max_bytes = 0
     upd = tagged_cust(spark, ver=2).filter(F.col("c_custkey") == 8)
-    st = spark.sparkContext.statusTracker()
-    # count by the sequential job id: the number of RETAINED jobs drops
-    # whenever the status store evicts past spark.ui.retainedJobs
-    j0 = max(st.getJobIdsForGroup(None), default=-1)
-    t.write(upd, op="upsert", instant="002")
-    return max(st.getJobIdsForGroup(None), default=-1) - j0
+    jobs, _ = count_jobs(
+        spark, lambda: t.write(upd, op="upsert", instant="002")
+    )
+    return jobs
 
 
 def test_indexed_commit_spark_job_budget(spark, tmp_path):
