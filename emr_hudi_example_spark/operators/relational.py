@@ -16,33 +16,12 @@ from emr_hudi_example_spark.functions.core import nvl, pk_not_null_condition
 
 # ---------------------------------------------------------------- projections
 
-def cast_value_string(df: DataFrame, col: str = "value") -> DataFrame:
-    """P1 — binary→string cast of a stream payload
-    (SRC/Log2Hudi.scala:55 ``selectExpr("CAST(value AS STRING)")``)."""
-    return df.withColumn(col, F.col(col).cast("string"))
-
-
-def parse_json_flatten(df: DataFrame, json_col, schema) -> DataFrame:
-    """P2+P3 — parse a JSON string column against a schema and flatten the
-    struct (SRC/Log2Hudi.scala:69: ``from_json`` + ``select("data.*")``).
-    Unknown/missing fields become null — the reference's implicit schema
-    evolution (SRC/cdc/CanalParser.scala:44-46)."""
-    c = F.col(json_col) if isinstance(json_col, str) else json_col
-    return df.select(F.from_json(c, schema).alias("_d")).select("_d.*")
-
-
 def pack_to_json(df: DataFrame, cols: list[str] | None = None,
                  out: str = "value") -> DataFrame:
     """P4 — struct-pack + JSON-serialize every row
     (SRC/Hudi2MSK.scala:43 ``to_json(struct(cols...))``)."""
     cols = cols or df.columns
     return df.select(F.to_json(F.struct(*[F.col(c) for c in cols])).alias(out))
-
-
-def drop_meta_columns(df: DataFrame, meta_cols: list[str]) -> DataFrame:
-    """P7 — strip engine meta columns to recover the logical schema
-    (SRC/package.scala:166-168 drops the five ``_hoodie_*`` columns)."""
-    return df.drop(*[c for c in meta_cols if c in df.columns])
 
 
 # -------------------------------------------------------------------- filters
@@ -359,19 +338,6 @@ def limited(df: DataFrame, n: int, order_by: list[str] | None = None) -> DataFra
     if order_by:
         df = df.orderBy(*order_by)
     return df.limit(n)
-
-
-def top_k_per_group(df: DataFrame, group_cols: list[str],
-                    order_col: str, k: int, desc: bool = True) -> DataFrame:
-    """Top-K per group — generalization the mart layer needs; window
-    ``row_number`` ≤ k (shuffle on the group key only)."""
-    order = F.col(order_col).desc() if desc else F.col(order_col).asc()
-    w = Window.partitionBy(*group_cols).orderBy(order)
-    return (
-        df.withColumn("_rk", F.row_number().over(w))
-        .filter(F.col("_rk") <= k)
-        .drop("_rk")
-    )
 
 
 # ------------------------------------------------------- scale strategies

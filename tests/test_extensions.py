@@ -16,6 +16,23 @@ from emr_hudi_example_spark.operators.dedup import simhash_near_pairs
 SF = "/root/testdata/sf0.01"
 
 
+def _pagerank_routes(monkeypatch):
+    """Run the loop body once per ``pagerank`` route: the in-driver
+    kernel, then the Spark route, forced by an edge gate no row count
+    meets (-1; an empty edge list meets 0) and a kernel that fails the
+    test if it is called."""
+    from emr_hudi_example_spark.operators import graph as G
+
+    def kernel_must_not_run(*args, **kwargs):
+        raise AssertionError("the kernel ran on the forced Spark route")
+
+    yield "kernel"
+    with monkeypatch.context() as m:
+        m.setattr(G, "LOCAL_MAX_EDGES", -1)
+        m.setattr(G, "_local_pagerank", kernel_must_not_run)
+        yield "spark"
+
+
 def test_ivf_recall_vs_bruteforce(spark):
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
@@ -801,19 +818,21 @@ def test_wav_codec_roundtrip_and_kernel_parity():
         assert row["max_abs"] == int(np.abs(arr).max())
 
 
-def test_pagerank_mass_conserved(spark):
+def test_pagerank_mass_conserved(spark, monkeypatch):
     """Teleport + damped inflow + dangling redistribution must conserve
-    rank mass: Σ rank = 1 (up to the 12-dp contribution rounding)."""
+    rank mass: Σ rank = 1 (up to the 12-dp contribution rounding), on
+    both routes."""
     from emr_hudi_example_spark.operators import graph as G
     from tests.conftest import SF_CORRECT
 
     from emr_hudi_example_spark.catalog import load
 
     edges = G.sequential_interaction_edges(load(spark, SF_CORRECT, "events"))
-    pr = G.pagerank(edges, iterations=3)
-    total = pr.agg(F.sum("rank")).collect()[0][0]
-    assert abs(total - 1.0) < 1e-6
-    assert pr.filter(F.col("rank") <= 0).count() == 0
+    for route in _pagerank_routes(monkeypatch):
+        pr = G.pagerank(edges, iterations=3)
+        total = pr.agg(F.sum("rank")).collect()[0][0]
+        assert abs(total - 1.0) < 1e-6, route
+        assert pr.filter(F.col("rank") <= 0).count() == 0, route
 
 
 def test_soft_dedup_weight_mass_equals_unique_content(spark):
@@ -837,9 +856,10 @@ def test_soft_dedup_weight_mass_equals_unique_content(spark):
     assert abs(total_w - n_unique) < 1e-3
 
 
-def test_pagerank_empty_graph_returns_empty(spark):
+def test_pagerank_empty_graph_returns_empty(spark, monkeypatch):
     """An all-self-loop event stream derives zero edges; pagerank must
-    return an empty (node, rank) frame, not divide by zero."""
+    return an empty (node, rank) frame, not divide by zero, on both
+    routes."""
     from emr_hudi_example_spark.operators import graph as G
 
     ev = spark.createDataFrame(
@@ -851,9 +871,14 @@ def test_pagerank_empty_graph_returns_empty(spark):
     )
     edges = G.sequential_interaction_edges(ev)
     assert edges.count() == 0
-    pr = G.pagerank(edges, iterations=3)
-    assert pr.count() == 0
-    assert pr.columns == ["node", "rank"]
+    for route in _pagerank_routes(monkeypatch):
+        pr = G.pagerank(edges, iterations=3)
+        assert pr.count() == 0, route
+        assert pr.columns == ["node", "rank"], route
+        # the kernel returns a local relation; the Spark route's empty
+        # branch returns its checkpointed (RDD-backed) node set
+        plan = pr._jdf.queryExecution().optimizedPlan().toString()
+        assert ("LogicalRDD" in plan) == (route == "spark"), plan
 
 
 def test_bucketed_edge_derivation_matches_global_window(spark):
@@ -1031,40 +1056,42 @@ def test_lsh_config_eval_size_derived_cap(spark):
     assert both.collect() == manual2.collect()
 
 
-def test_pagerank_weighted_vs_unweighted(spark):
+def test_pagerank_weighted_vs_unweighted(spark, monkeypatch):
     """use_weights=True (r5 advice): handoff multiplicity influences
     ranks. On a 3-node graph where a→b carries 9× the weight of a→c,
     weighted ranks favor b while unweighted ties b and c exactly; both
     modes conserve total mass; unweighted IGNORES the weight column
-    (documented default) — same result with weights present or not."""
+    (documented default) — same result with weights present or not.
+    Both routes."""
     from emr_hudi_example_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [("a", "b", 9), ("a", "c", 1), ("b", "a", 1), ("c", "a", 1)],
         "src string, dst string, weight long",
     )
-    unw = {r["node"]: r["rank"] for r in G.pagerank(edges).collect()}
-    unw2 = {
-        r["node"]: r["rank"]
-        for r in G.pagerank(edges.drop("weight")).collect()
-    }
-    assert unw == unw2  # default genuinely ignores the weight column
-    assert abs(unw["b"] - unw["c"]) < 1e-12  # 1/2 vs 1/2 out-share
-    w = {
-        r["node"]: r["rank"]
-        for r in G.pagerank(edges, use_weights=True).collect()
-    }
-    assert w["b"] > w["c"]  # 9/10 vs 1/10 out-share
-    assert abs(sum(w.values()) - 1.0) < 1e-6
-    assert abs(sum(unw.values()) - 1.0) < 1e-6
-    with pytest.raises(ValueError):
-        G.pagerank(edges.drop("weight"), use_weights=True)
+    for route in _pagerank_routes(monkeypatch):
+        unw = {r["node"]: r["rank"] for r in G.pagerank(edges).collect()}
+        unw2 = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(edges.drop("weight")).collect()
+        }
+        assert unw == unw2, route  # default ignores the weight column
+        assert abs(unw["b"] - unw["c"]) < 1e-12, route  # 1/2 vs 1/2
+        w = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(edges, use_weights=True).collect()
+        }
+        assert w["b"] > w["c"], route  # 9/10 vs 1/10 out-share
+        assert abs(sum(w.values()) - 1.0) < 1e-6, route
+        assert abs(sum(unw.values()) - 1.0) < 1e-6, route
+        with pytest.raises(ValueError):
+            G.pagerank(edges.drop("weight"), use_weights=True)
 
 
-def test_pagerank_null_weight_counts_once_not_dropped(spark):
+def test_pagerank_null_weight_counts_once_not_dropped(spark, monkeypatch):
     """A NULL weight coalesces to 1 (r6 advice): the edge still carries
     rank mass like an unweighted edge, instead of being silently dropped
-    from both the out-degree sum and the contribution."""
+    from both the out-degree sum and the contribution. Both routes."""
     from emr_hudi_example_spark.operators import graph as G
 
     with_null = spark.createDataFrame(
@@ -1075,16 +1102,133 @@ def test_pagerank_null_weight_counts_once_not_dropped(spark):
         [("a", "b", 9), ("a", "c", 1), ("b", "a", 1), ("c", "a", 1)],
         "src string, dst string, weight long",
     )
-    got = {
-        r["node"]: r["rank"]
-        for r in G.pagerank(with_null, use_weights=True).collect()
-    }
-    want = {
-        r["node"]: r["rank"]
-        for r in G.pagerank(explicit_one, use_weights=True).collect()
-    }
-    assert got == want  # bit-identical: NULL == weight 1
-    assert abs(sum(got.values()) - 1.0) < 1e-6  # mass conserved
+    for route in _pagerank_routes(monkeypatch):
+        got = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(with_null, use_weights=True).collect()
+        }
+        want = {
+            r["node"]: r["rank"]
+            for r in G.pagerank(explicit_one, use_weights=True).collect()
+        }
+        assert got == want, route  # bit-identical: NULL == weight 1
+        assert abs(sum(got.values()) - 1.0) < 1e-6, route  # mass kept
+
+
+def test_pagerank_zero_out_weight_source_is_dangling(spark, monkeypatch):
+    """A source whose every out-edge weighs 0 has degree 0: it is
+    dangling (its mass redistributes globally) instead of dividing by
+    zero or leaking its mass. Both routes."""
+    from emr_hudi_example_spark.operators import graph as G
+
+    edges = spark.createDataFrame(
+        [("a", "b", 0), ("b", "a", 1)],
+        "src STRING, dst STRING, weight LONG",
+    )
+    for route in _pagerank_routes(monkeypatch):
+        pr = {r["node"]: r["rank"] for r in G.pagerank(
+            edges, iterations=3, use_weights=True
+        ).collect()}
+        assert abs(sum(pr.values()) - 1.0) < 1e-6, route  # mass conserved
+
+
+def _ranks_on_both_routes(monkeypatch, edges, **kw) -> list:
+    """``[kernel ranks, Spark-route ranks]``, each a sorted list of
+    ``(node, rank)`` with the NULL node last."""
+    from emr_hudi_example_spark.operators import graph as G
+
+    return [
+        sorted((tuple(r) for r in G.pagerank(edges, **kw).collect()),
+               key=lambda r: (r[0] is None, r[0]))
+        for _ in _pagerank_routes(monkeypatch)
+    ]
+
+
+def test_pagerank_kernel_equals_spark_route(spark, monkeypatch):
+    """The in-driver kernel returns the Spark route's ranks EXACTLY
+    (float equality, not a tolerance) on the sf0.01 handoff graph,
+    unweighted and weighted by hop multiplicity."""
+    from emr_hudi_example_spark.catalog import load
+    from emr_hudi_example_spark.operators import graph as G
+    from tests.conftest import SF_CORRECT
+
+    edges = G.sequential_interaction_edges(
+        load(spark, SF_CORRECT, "events")
+    ).localCheckpoint()
+    assert 0 < edges.count() <= G.LOCAL_MAX_EDGES  # the kernel does run
+    for kw in ({}, {"use_weights": True}):
+        kernel, spark_route = _ranks_on_both_routes(monkeypatch, edges, **kw)
+        assert len(kernel) > 100, kw
+        assert kernel == spark_route, kw
+
+
+def test_pagerank_kernel_mirrors_null_and_degenerate_edges(
+    spark, monkeypatch
+):
+    """The kernel keeps the Spark route's semantics on a hand edge list:
+    duplicate rows count twice, a sink with no out-edges and a
+    zero-weight source are dangling, and NULL endpoints never join — a
+    NULL source emits nothing, the NULL node still receives inflow and
+    is always dangling. A DOUBLE weight column (order-dependent double
+    Σ) takes the Spark route when used, and is ignored when not."""
+    rows = [
+        ("a", "b", 2), ("a", "b", 2),  # duplicate row
+        ("a", "c", 1), ("b", "a", 3),
+        ("z", "a", 0),  # zero-weight source
+        ("c", None, 1),  # NULL sink receives c's mass
+        (None, "a", 5),  # NULL source emits nothing
+        ("a", None, None),  # NULL weight counts 1
+        ("b", "d", 1),  # d: sink, dangling
+    ]
+    edges = spark.createDataFrame(rows, "src STRING, dst STRING, weight LONG")
+    as_double = edges.selectExpr(
+        "src", "dst", "CAST(weight AS DOUBLE) + 0.25 AS weight"
+    )
+    for df in (edges, as_double):
+        for kw in ({}, {"use_weights": True}):
+            kernel, spark_route = _ranks_on_both_routes(monkeypatch, df, **kw)
+            assert kernel == spark_route, (df.schema["weight"], kw)
+            assert [r[0] for r in kernel] == ["a", "b", "c", "d", "z", None]
+            assert abs(sum(r[1] for r in kernel) - 1.0) < 1e-6
+
+
+def test_pagerank_job_budget(spark):
+    """``graph_pagerank`` at sf0.01, build plus ``count()``, runs ≤ 8
+    Spark jobs: the edge derivation and one collect, then the kernel on
+    the driver. The Spark route, one round per iteration, ran 36."""
+    from emr_hudi_example_spark.catalog_ext import graph_pagerank
+    from tests.conftest import SF_CORRECT
+    from tests.harness import count_jobs
+
+    jobs, n = count_jobs(
+        spark, lambda: graph_pagerank(spark, SF_CORRECT).count()
+    )
+    assert n > 100
+    assert jobs <= 8, jobs
+
+
+def test_pagerank_above_gate_derives_edges_once(spark, monkeypatch):
+    """Above the gate the capped collect reads the checkpointed edge
+    list, so the upstream edge derivation runs once per call: collect
+    then Spark route costs at most the collect's one job more than the
+    Spark route alone. Deriving the edges twice (once for the collect,
+    once for the Spark route) would add the derivation's jobs again."""
+    from emr_hudi_example_spark.catalog import load
+    from emr_hudi_example_spark.operators import graph as G
+    from tests.conftest import SF_CORRECT
+    from tests.harness import count_jobs
+
+    events = load(spark, SF_CORRECT, "events")
+    jobs = {}
+    for gate in (100, -1):
+        monkeypatch.setattr(G, "LOCAL_MAX_EDGES", gate)
+        # a fresh edge frame per call: no call reuses the other's plan
+        edges = G.sequential_interaction_edges(events)
+        jobs[gate], n = count_jobs(
+            spark, lambda: G.pagerank(edges).count()
+        )
+        assert n > 100
+    assert jobs[100] <= jobs[-1] + 1, jobs
 
 
 def test_sequential_edges_null_ts_dropped_both_paths(spark):
@@ -1488,15 +1632,13 @@ def test_text_corpus_degenerate_input_contracts(spark):
     punctuation), short docs keep a defined rolling fingerprint, empty
     docs emit no phantom tokens/chunks and FAIL (not NULL) gopher
     ratio flags, zero-weight corpora keep max-weight ties, NULL-text
-    docs emit no chunks, and pagerank survives zero-out-weight
-    sources."""
+    docs emit no chunks."""
     from emr_hudi_example_spark.operators.corpus import (
         chunk_windows,
         importance_sample,
         shard_manifest,
         vocab_topk,
     )
-    from emr_hudi_example_spark.operators.graph import pagerank
     from emr_hudi_example_spark.operators.text import (
         gopher_quality,
         rolling_fingerprint,
@@ -1545,15 +1687,6 @@ def test_text_corpus_degenerate_input_contracts(spark):
     )
     assert dict(sm.dtypes)["min_id"] == "string"
     assert sm.agg(F.sum("n_docs")).collect()[0][0] == 2
-    # weighted pagerank: a zero-out-weight source becomes dangling
-    edges = spark.createDataFrame(
-        [("a", "b", 0), ("b", "a", 1)],
-        "src STRING, dst STRING, weight LONG",
-    )
-    pr = {r["node"]: r["rank"] for r in pagerank(
-        edges, iterations=3, use_weights=True
-    ).collect()}
-    assert abs(sum(pr.values()) - 1.0) < 1e-6  # mass conserved
 
 
 def test_local_residual_codebook_parity(spark):
