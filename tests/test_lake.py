@@ -15,6 +15,7 @@ from emr_hudi_example_spark.lake import (
     RECORD_KEY_COL,
     LakeTable,
 )
+from emr_hudi_example_spark.lake import table as table_mod
 
 SF = "/root/testdata/sf0.001"
 
@@ -745,18 +746,30 @@ def test_restore_rolls_back_commits(spark, tmp_path):
 
 
 def test_compact_sort_by_clusters_rows(spark, tmp_path):
-    t = make_table(spark, tmp_path)
-    t.write(cust(spark, ver=1), op="insert", instant="001")
-    t.write(cust(spark, ver=2), op="insert", instant="002")
-    t.compact(instant="003", sort_by=["c_custkey"])
-    # rows inside the (single) compacted file are key-ordered
+    """compact(sort_by=...) and the scheduled route
+    (schedule_compaction(sort_spec=...) + run_compaction) run the same
+    fold: the compacted file stays ordered by the sort key, never
+    re-sorted by record key."""
     import pyarrow.parquet as pq
-    path = [f["path"] for f in t._live_files()]
-    assert len(path) == 1
-    keys = pq.read_table(
-        os.path.join(t.path, path[0]), columns=["c_custkey"]
-    )["c_custkey"].to_pylist()
-    assert keys == sorted(keys)
+
+    routes = {
+        "compact": lambda t: t.compact(instant="003", sort_by=["c_custkey"]),
+        "schedule_run": lambda t: t.run_compaction(
+            t.schedule_compaction(sort_spec=["c_custkey"])
+        ),
+    }
+    for name, fold in routes.items():
+        t = make_table(spark, tmp_path, name=name)
+        t.write(cust(spark, ver=1), op="insert", instant="001")
+        t.write(cust(spark, ver=2), op="insert", instant="002")
+        assert fold(t) is not None
+        # rows inside the (single) compacted file are key-ordered
+        path = [f["path"] for f in t._live_files()]
+        assert len(path) == 1
+        keys = pq.read_table(
+            os.path.join(t.path, path[0]), columns=["c_custkey"]
+        )["c_custkey"].to_pylist()
+        assert keys == sorted(keys), name
 
 
 def mor_table(spark, tmp, **kw):
@@ -2046,19 +2059,52 @@ def test_optimistic_instant_overrun_aborts(spark, tmp_path):
     def lock_after_concurrent_commit():
         if fired["n"] == 0:
             fired["n"] = 1
+            # B adds new keys and replaces no file, so nothing but the
+            # instant order stands between A and a clean publish (an
+            # empty batch would publish nothing and out-run nobody).
+            # Record keys compare as strings: 99001.. sort above A's
+            # "99", so the key ranges are disjoint too.
             t_b.write_optimistic(
-                cust(spark, ver=3).filter(F.col("c_custkey") > 1000),
-                op="upsert", instant="005",  # out-runs A's planned 002
+                cust(spark, ver=3)
+                .filter(F.col("c_custkey") <= 5)
+                .withColumn("c_custkey", F.col("c_custkey") + 99000),
+                op="insert", instant="005",  # out-runs A's planned 002
             )
+            assert t_b._manifest("005")["replaced"] == []
         return orig()
 
     t_a._writer_lock = lock_after_concurrent_commit
-    with pytest.raises(ConcurrentWriteConflict):
+    with pytest.raises(ConcurrentWriteConflict, match="instant order"):
         t_a.write_optimistic(
             cust(spark, ver=2).filter(F.col("c_custkey") <= 5),
             op="upsert", instant="002",
         )
     assert handle().timeline() == ["001", "005"]
+
+
+def test_clean_keeps_commit_published_while_waiting(spark, tmp_path):
+    """A lock-free commit that publishes while clean() waits for the
+    writer lock keeps its files: its inflight marker is gone by the
+    time the cleaner holds the lock, so only a timeline read under the
+    lock protects them."""
+    n = cust(spark).count()
+    make_table(spark, tmp_path, name="cl").write(
+        cust(spark), op="insert", instant="001"
+    )
+    cleaner = make_table(spark, tmp_path, name="cl")
+    writer = make_table(spark, tmp_path, name="cl")
+    orig = cleaner._writer_lock
+    upd = cust(spark, ver=2).filter(F.col("c_custkey") <= 5)
+
+    def lock_after_concurrent_publish():
+        writer.write_optimistic(upd, op="upsert", instant="002")
+        return orig()
+
+    cleaner._writer_lock = lock_after_concurrent_publish
+    cleaner.clean(retain_commits=1)
+    snap = make_table(spark, tmp_path, name="cl").snapshot()
+    assert snap.count() == n
+    assert snap.filter(F.col("ver") == 2).count() == upd.count()
 
 
 def test_optimistic_mor_overlapping_appends_commute(spark, tmp_path):
@@ -2288,7 +2334,7 @@ def test_manifest_checkpoint_bounds_replay(spark, tmp_path):
     orig = LakeTable._manifest_any
     t2._manifest_any = lambda inst: (reads.append(inst), orig(t2, inst))[1]
     live = {f["path"] for f in t2._live_files()}
-    interval = t2.manifest_checkpoint_interval
+    interval = table_mod.MANIFEST_CHECKPOINT_INTERVAL
     assert len(reads) <= interval + 1, (
         f"cold live-set read parsed {len(reads)} manifests; "
         f"expected <= interval ({interval}) + the target probe"
@@ -2314,7 +2360,7 @@ def test_checkpoint_snapshot_correct_after_many_commits(spark, tmp_path):
     t = make_table(spark, tmp_path, name="ck")
     base = cust(spark, ver=1)
     t.write(base, op="upsert", instant="001")
-    for n in range(2, 14):  # 13 commits total, interval is 10
+    for n in range(2, 14):  # 13 commits: past MANIFEST_CHECKPOINT_INTERVAL
         upd = base.filter(F.col("c_custkey") % 13 == n % 13).withColumn(
             "ver", F.lit(n).cast("long")
         )
@@ -2330,11 +2376,12 @@ def test_checkpoint_snapshot_correct_after_many_commits(spark, tmp_path):
     assert inc.select(F.min(COMMIT_TIME_COL)).collect()[0][0] > "011"
 
 
-def test_archival_pins_checkpoint_at_horizon(spark, tmp_path):
+def test_archival_pins_checkpoint_at_horizon(spark, tmp_path, monkeypatch):
     """archive_timeline leaves a checkpoint at the archival horizon so
     active-window replays never read archived manifests."""
+    # force: no periodic checkpoints
+    monkeypatch.setattr(table_mod, "MANIFEST_CHECKPOINT_INTERVAL", 0)
     t = make_table(spark, tmp_path, name="arch", partition_keys=None)
-    t.manifest_checkpoint_interval = 0  # force: no periodic checkpoints
     base = cust(spark, ver=1)
     t.write(base, op="insert", instant="001")
     for n in range(2, 8):
@@ -4881,6 +4928,46 @@ def test_empty_upsert_publishes_nothing(spark, tmp_path, tt, kw):
     assert t.timeline()[-1] == "004"
     assert t.last_checkpoint("src") == 7
     assert t.snapshot().count() == n
+
+    # the optimistic route runs the same compute step: no commit either
+    assert t.write_optimistic(empty, op="upsert", instant="005") is None
+    assert t.timeline()[-1] == "004"
+    assert not os.path.exists(os.path.join(t.data_dir, "005"))
+    assert t.write_optimistic(upd, op="upsert", instant="006") == "006"
+    assert t.snapshot().count() == n
+
+
+@pytest.mark.parametrize("tt", ["COPY_ON_WRITE", "MERGE_ON_READ"])
+@pytest.mark.parametrize(
+    "route",
+    [
+        f"{api}-{op}"
+        for api in ("write", "write_optimistic")
+        for op in ("insert", "upsert", "delete")
+    ]
+    + ["merge_into"],
+)
+def test_write_routes_leave_cache_empty(spark, tmp_path, tt, route):
+    """Every write route unpersists what it persisted: after the call
+    the session's cache holds nothing."""
+    t = make_table(
+        spark, tmp_path, table_type=tt, partition_keys=["c_mktsegment"]
+    )
+    t.write(cust(spark), op="upsert", instant="001")
+    batch = cust(spark, ver=2).filter("c_custkey % 7 = 0")
+    spark.catalog.clearCache()
+    if route == "merge_into":
+        t.merge_into(
+            batch,
+            update_set={"ver": "s.ver"},
+            delete_condition="s.c_custkey % 2 = 0",
+        )
+    else:
+        api, op = route.split("-")
+        getattr(t, api)(batch, op=op)
+    assert len(t.timeline()) == 2
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty()
 
 
 def _has_join(df) -> bool:

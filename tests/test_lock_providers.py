@@ -6,6 +6,10 @@ or (documented, stubbed) S3 conditional PUT."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
 import time
 
 import pytest
@@ -251,3 +255,24 @@ def test_retry_on_contention_no_trailing_sleep():
     with pytest.raises(LockContention):
         retry_on_contention(always, attempts=0)
     assert retry_on_contention(lambda: 42, attempts=0) == 42
+
+
+@pytest.mark.slow
+def test_occ_multiprocess_probe():
+    """The multi-process check of the lock-free publish path:
+    ``scripts/occ_multiprocess_probe.py`` runs two JVM-backed writer
+    processes (disjoint, adversarial, MOR-commute, compaction-race and
+    kill -9 lease phases) and must report ``"ok": true``."""
+    script = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scripts",
+        "occ_multiprocess_probe.py",
+    )
+    proc = subprocess.run(
+        [sys.executable, script], capture_output=True, text=True,
+        timeout=1200,
+    )
+    tail = proc.stdout[-3000:] + proc.stderr[-3000:]
+    assert proc.returncode == 0, tail
+    report = json.loads(proc.stdout[proc.stdout.rindex('{\n  "probe"'):])
+    assert report["ok"] is True, tail
