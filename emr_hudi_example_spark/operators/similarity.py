@@ -120,17 +120,36 @@ def quantize_embeddings(
     working-set shrink that lets an ANN index (IVF cells, LSH buckets)
     hold 4× more vectors per executor-GB; cosine on int8 codes needs
     only the two scales alongside the integer dot product.
+
+    One pass per vector: ``(dv, scale)`` is bound as the variable of a
+    one-element ``transform`` and the codes are cut from it. Named
+    inside the per-element lambda, ``scale`` (a max over the whole
+    vector) was re-evaluated for every element, O(dim²), because
+    Catalyst neither hoists nor common-subexpression-eliminates lambda
+    bodies. The second ``select`` only unpacks the struct; CollapseProject
+    keeps it apart rather than duplicate the ``transform``.
     """
     dv = _as_double(vec_col)
     mx = F.array_max(F.transform(dv, lambda x: F.abs(x)))
-    q = F.when(mx == 0.0, F.transform(dv, lambda x: F.lit(0))).otherwise(
-        F.transform(
-            dv,
-            lambda x: F.floor(x / mx * 127.0 + 0.5).cast("int"),
+
+    def codes(s: Column) -> Column:
+        v, scale = s["v"], s["scale"]
+        return F.struct(
+            scale.alias("scale"),
+            F.when(scale == 0.0, F.transform(v, lambda x: F.lit(0)))
+            .otherwise(
+                F.transform(
+                    v, lambda x: F.floor(x / scale * 127.0 + 0.5).cast("int")
+                )
+            )
+            .alias("qvec"),
         )
-    )
-    return df.select(
-        F.col(id_col), mx.alias("scale"), q.alias("qvec")
+
+    bound = F.transform(
+        F.array(F.struct(dv.alias("v"), mx.alias("scale"))), codes
+    )[0]
+    return df.select(F.col(id_col), bound.alias("_q")).select(
+        id_col, "_q.scale", "_q.qvec"
     )
 
 

@@ -140,14 +140,20 @@ def repetition_score(text: Column | str, k: int = 3) -> Column:
     """Intra-document repetition: fraction of duplicate ``k``-word
     shingles, ``1 - distinct/total`` (0 for documents shorter than
     ``k`` tokens). The MassiveText/Gopher-style repeated-n-gram filter
-    signal; narrow per-row expression, no shuffle."""
-    sh = shingles(text, k)
-    n = F.size(sh).cast("double")
-    return F.when(
-        n <= 0, F.lit(0.0)
-    ).otherwise(
-        F.lit(1.0) - F.size(F.array_distinct(sh)).cast("double") / n
-    )
+    signal; narrow per-row expression, no shuffle.
+
+    The shingle array is bound once per row as the variable of a
+    one-element ``transform``: Spark does not common-subexpression-
+    eliminate higher-order expressions, so naming it three times in the
+    formula would split and window each document three times."""
+
+    def score(sh: Column) -> Column:
+        n = F.size(sh).cast("double")
+        return F.when(n <= 0, F.lit(0.0)).otherwise(
+            F.lit(1.0) - F.size(F.array_distinct(sh)).cast("double") / n
+        )
+
+    return F.transform(F.array(shingles(text, k)), score)[0]
 
 
 # PII detection/redaction patterns — kept to syntax both Java regex
@@ -178,13 +184,24 @@ def redact_pii(text: Column | str) -> Column:
 
 def shingles(text: Column | str, k: int = 3) -> Column:
     """All ``k``-word shingles (space-joined token windows), as an array;
-    empty array when the document has fewer than ``k`` tokens."""
-    toks = tokens(text)
-    n = F.size(toks)
-    idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
-        F.array().cast("array<int>")
-    )
-    return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
+    empty array when the document has fewer than ``k`` tokens.
+
+    Each document is split exactly once, so the cost is linear in its
+    length (Broder's w-shingling is one pass). The token array is bound
+    as the variable of a one-element ``transform`` and the windows are
+    cut from that variable. Named inside the window lambda, the split
+    would run once per window, O(tokens²): Catalyst neither hoists nor
+    common-subexpression-eliminates lambda bodies, and CollapseProject
+    may inline a preceding ``select`` of the tokens back into them."""
+
+    def windows(toks: Column) -> Column:
+        n = F.size(toks)
+        idx = F.when(n >= k, F.sequence(F.lit(1), n - (k - 1))).otherwise(
+            F.array().cast("array<int>")
+        )
+        return F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i, k)))
+
+    return F.transform(F.array(tokens(text)), windows)[0]
 
 
 def tfidf_topk(

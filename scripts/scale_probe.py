@@ -424,6 +424,10 @@ def run_ext_probe(spark: SparkSession, mult: int) -> list[dict]:
       pipeline with ``max_bucket_size=64`` (< the 100× clone density),
       so the 100× leg exercises the skew guard actually DROPPING the
       clone mega-buckets — the at-scale configuration of item #4.
+    - ``minhash_lsh_pairs_long_x16``: the default pipeline over the
+      same documents with each text repeated 16 times (~870 tokens per
+      document, same document count): its wall shows whether shingling
+      stays linear in document length.
     - ``cluster_groups_star``: star contraction over the UNGUARDED
       candidate pairs (cap 256 keeps the 100-clone cliques intact —
       ~C(mult,2)·n_docs edges), recording LAST_STAR_ROUNDS to pin the
@@ -451,6 +455,16 @@ def run_ext_probe(spark: SparkSession, mult: int) -> list[dict]:
                     docs, max_bucket_size=64
                 ).count()
             },
+        )
+    )
+
+    long_docs = docs.withColumn(
+        "text", F.concat_ws(" ", F.array_repeat("text", 16))
+    )
+    recs.append(
+        timed(
+            "minhash_lsh_pairs_long_x16", mult,
+            lambda: {"rows": D.minhash_lsh_dedup(long_docs).count()},
         )
     )
 

@@ -148,6 +148,83 @@ def test_repetition_score_detects_repeats(spark):
     assert got[3] == 0.0   # shorter than k → no shingles
 
 
+#: NULL, empty, whitespace-only, shorter than / exactly k, mixed
+#: whitespace runs, repeated tokens; Spark's ``trim`` strips spaces only
+_SHINGLE_TEXTS = [
+    None, "", "   ", "\t\n ", "a b", "a b c", "one two three four five",
+    "  a\tb\n\nc   d  ", "\ta b c d e f\n", "x x x x x x",
+    "a b c a b c a b c",
+]
+
+
+def _py_shingles(text, k):
+    """Pure-Python twin of ``shingles``: Java's ``\\s`` class, and the
+    leading/trailing empty tokens ``split`` keeps."""
+    import re
+
+    if text is None:
+        return []
+    toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+    return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
+
+
+@pytest.mark.parametrize("k", [1, 3, 5])
+def test_shingles_and_repetition_match_python_reference(spark, k):
+    from emr_hudi_example_spark.operators.text import (
+        repetition_score,
+        shingles,
+    )
+
+    df = spark.createDataFrame(
+        list(enumerate(_SHINGLE_TEXTS)), "id INT, text STRING"
+    )
+    rows = df.select(
+        "id",
+        shingles("text", k).alias("sh"),
+        repetition_score("text", k).alias("rep"),
+    ).collect()
+    assert len(rows) == len(_SHINGLE_TEXTS)
+    for r in rows:
+        want = _py_shingles(_SHINGLE_TEXTS[r["id"]], k)
+        assert r["sh"] == want, (k, _SHINGLE_TEXTS[r["id"]])
+        rep = 1.0 - len(set(want)) / len(want) if want else 0.0
+        assert r["rep"] == rep, (k, _SHINGLE_TEXTS[r["id"]])
+
+
+def test_quantize_embeddings_edge_vectors_bit_identical(spark):
+    """Zero, 1-element, all-negative and mixed-sign vectors (plus NULL
+    and empty): the codes and scales the per-element formula produced
+    before the scale was bound once per vector, pinned exactly. Row 5
+    holds the rounding ties ±0.5 (x/scale*127 = ±0.5)."""
+    from emr_hudi_example_spark.operators.similarity import (
+        quantize_embeddings,
+    )
+
+    vecs = [
+        (1, [0.0, 0.0, 0.0]),
+        (2, [-2.5]),
+        (3, [-1.0, -0.5, -0.25, -3.0]),
+        (4, [0.3, -1.7, 2.9, -0.0, 1e-9, -2.9, 1.45]),
+        (5, [254.0, 1.0, -1.0, 3.0, -3.0]),
+        (6, None),
+        (7, []),
+    ]
+    df = spark.createDataFrame(vecs, "vec_id LONG, embedding ARRAY<DOUBLE>")
+    got = {
+        r["vec_id"]: (r["scale"], r["qvec"])
+        for r in quantize_embeddings(df).collect()
+    }
+    assert got == {
+        1: (0.0, [0, 0, 0]),
+        2: (2.5, [-127]),
+        3: (3.0, [-42, -21, -11, -127]),
+        4: (2.9, [13, -74, 127, 0, 0, -127, 64]),
+        5: (254.0, [127, 1, 0, 2, -1]),
+        6: (None, None),
+        7: (None, []),
+    }
+
+
 def test_pii_redaction_roundtrip(spark):
     from emr_hudi_example_spark.operators.text import pii_count, redact_pii
 

@@ -357,3 +357,100 @@ def test_ivfpq_probe_join_broadcasts_panel_side(spark):
             f"{q}: corpus cell assignment is shuffled by cell_id — the "
             "probe join lost its panel-side broadcast:\n" + plan
         )
+
+
+_EXPR = "org.apache.spark.sql.catalyst.expressions."
+#: per-row inputs that must not be recomputed once per array element
+_PER_ROW = {"StringSplit": "split", "ArrayMax": "array_max"}
+
+
+def _cls(node) -> str:
+    return node[0]["class"].removeprefix(_EXPR)
+
+
+def _tree(nodes: list, i: int = 0):
+    """The expression tree rooted at ``nodes[i]`` as ``(fields,
+    children)``, and the index after its last node."""
+    children, j = [], i + 1
+    for _ in range(nodes[i]["num-children"]):
+        child, j = _tree(nodes, j)
+        children.append(child)
+    return (nodes[i], children), j
+
+
+def _expr_trees(value):
+    """Every expression tree in a ``TreeNode.toJSON`` value. toJSON
+    writes an expression as the list of its nodes in pre-order, each
+    with its ``num-children``."""
+    if isinstance(value, dict):
+        for v in value.values():
+            yield from _expr_trees(v)
+    elif isinstance(value, list):
+        if value and all(
+            isinstance(n, dict) and n.get("class", "").startswith(_EXPR)
+            for n in value
+        ):
+            i = 0
+            while i < len(value):
+                tree, i = _tree(value, i)
+                yield tree
+        else:
+            for v in value:
+                yield from _expr_trees(v)
+
+
+def _walk(node, into_lambdas: bool = True):
+    yield node
+    for c in node[1]:
+        if into_lambdas or _cls(c) != "LambdaFunction":
+            yield from _walk(c, into_lambdas)
+
+
+def _var_ids(node) -> set[str]:
+    return {
+        repr(sorted(n[0]["exprId"].items()))
+        for n in _walk(node)
+        if _cls(n) == "NamedLambdaVariable"
+    }
+
+
+def _lambda_recomputes(plan_json) -> list[str]:
+    """``split(...)`` / ``array_max(...)`` calls in a lambda body whose
+    input does not reference that lambda's own variables: the input is
+    then the same for every element, yet Catalyst evaluates the body,
+    and so the call, once per element."""
+    found = []
+    for tree in _expr_trees(plan_json):
+        for lam in _walk(tree):
+            if _cls(lam) != "LambdaFunction":
+                continue
+            body, *args = lam[1]
+            own = set().union(*(_var_ids(a) for a in args))
+            for n in _walk(body, into_lambdas=False):
+                if _cls(n) in _PER_ROW and not _var_ids(n[1][0]) & own:
+                    found.append(_PER_ROW[_cls(n)])
+    return found
+
+
+def test_lambda_bodies_do_not_recompute_per_row_inputs(spark):
+    """A per-row input named inside a ``transform`` lambda body is
+    re-evaluated for every element: ``shingles`` re-split each document
+    once per window (O(tokens²)) and int8 quantization took the max
+    over the whole vector once per element (O(dim²)). Such inputs are
+    bound once per row as a lambda variable instead. Checked on the
+    optimized plan of every catalog row that does not write a table;
+    one ``toJSON`` call per plan, walked on the driver."""
+    import json
+
+    offenders = {}
+    for name in catalog.Q:
+        if name.startswith(("lake_", "pipe_")):
+            continue
+        df = catalog.Q[name](spark, SF_CORRECT)
+        plan = json.loads(df._jdf.queryExecution().optimizedPlan().toJSON())
+        found = _lambda_recomputes(plan)
+        if found:
+            offenders[name] = sorted(set(found))
+    assert not offenders, "per-element recompute in: " + ", ".join(
+        f"{name} {calls}" for name, calls in sorted(offenders.items())
+    )
