@@ -563,7 +563,7 @@ def lake_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = t.snapshot(predicate=[("o_custkey", "between", (1250, 1350))])
     return out.select(
         "o_orderkey", "o_custkey", "o_totalprice",
-        F.lit(t.last_files_skipped).cast("int").alias("files_skipped"),
+        F.lit(t.last_scan.dropped).cast("int").alias("files_skipped"),
     )
 
 
@@ -653,7 +653,7 @@ def lake_functional_index_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = t.snapshot(predicate=[("year(o_orderdate)", "=", 1997)])
     return out.select(
         "o_orderkey", "o_custkey", "o_totalprice",
-        F.lit(t.last_files_skipped).cast("int").alias("files_skipped"),
+        F.lit(t.last_scan.dropped).cast("int").alias("files_skipped"),
     )
 
 
@@ -688,7 +688,7 @@ def lake_bulk_insert_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = str(orders.agg(F.max("o_orderkey")).collect()[0][0])
     out = t.snapshot(predicate=[("_record_key", "=", probe)])
-    scanned = len(t._live_files()) - t.last_files_skipped
+    scanned = t.last_scan.kept
     return out.select(
         "o_orderkey", "o_custkey", "o_totalprice",
         F.lit(scanned).cast("int").alias("files_scanned"),
@@ -743,7 +743,7 @@ def lake_partition_stats_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "o_orderkey", "o_custkey", "o_totalprice",
-        F.lit(t.last_partitions_pruned).cast("int").alias(
+        F.lit(t.last_scan.partitions_pruned).cast("int").alias(
             "partitions_pruned"
         ),
     )
@@ -798,7 +798,7 @@ def lake_zorder_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioner sampling, but clustered stats must prune >= 1 file
     return out.select(
         "o_orderkey", "o_custkey", "o_totalprice",
-        F.lit(1 if t.last_files_skipped > 0 else 0)
+        F.lit(1 if t.last_scan.dropped > 0 else 0)
         .cast("int")
         .alias("skipped_any"),
     )
@@ -876,10 +876,11 @@ def lake_bloom_index_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ver", F.lit(2).cast("long")),
         op="upsert", instant="005",
     )
+    scan = t.last_scan
     return t.snapshot().select(
         "k", "c_custkey", "c_name", "c_acctbal", "ver",
-        F.lit(t.last_range_pruned).cast("int").alias("range_pruned"),
-        F.lit(t.last_bloom_pruned).cast("int").alias("bloom_pruned"),
+        F.lit(scan["key_range"]).cast("int").alias("range_pruned"),
+        F.lit(scan["key_bloom"]).cast("int").alias("bloom_pruned"),
     )
 
 
@@ -933,7 +934,7 @@ def lake_col_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = t.snapshot(predicate=[("tag", "=", probe)])
     return out.select(
         "c_custkey", "c_name", "c_acctbal", "tag",
-        F.lit(t.last_col_bloom_pruned).cast("int").alias(
+        F.lit(t.last_scan["col_bloom"]).cast("int").alias(
             "col_bloom_pruned"
         ),
     )
@@ -987,12 +988,12 @@ def lake_secondary_index_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             op="insert", instant=f"00{i + 1}",
         )
     t.snapshot(predicate=[("tag", "=", "no-such-value")]).count()
-    miss_pruned = t.last_sec_index_pruned
+    miss_pruned = t.last_scan["sec_index"]
     probe = hashlib.md5(b"8").hexdigest()  # custkey 8 -> file 001
     out = t.snapshot(predicate=[("tag", "=", probe)])
     return out.select(
         "c_custkey", "c_name", "c_acctbal", "tag",
-        F.lit(t.last_sec_index_pruned).cast("int").alias("sec_pruned"),
+        F.lit(t.last_scan["sec_index"]).cast("int").alias("sec_pruned"),
         F.lit(miss_pruned).cast("int").alias("miss_pruned"),
     )
 
@@ -1087,7 +1088,7 @@ def lake_secondary_index_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.snapshot(
         predicate=[("tag", "=", hashlib.md5(b"absent-needle").hexdigest())]
     ).count()
-    all_pruned = t.last_sec_index_pruned == len(t._live_files())
+    all_pruned = t.last_scan["sec_index"] == len(t._live_files())
     probes = [
         hashlib.md5(b"7").hexdigest(),
         hashlib.md5(b"10x").hexdigest(),
@@ -1150,13 +1151,13 @@ def lake_index_backfill_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probe = hashlib.md5(b"8").hexdigest()  # custkey 8 -> file 001
     t.snapshot(predicate=[("tag", "=", probe)]).count()
-    pre_pruned = t.last_sec_index_pruned
+    pre_pruned = t.last_scan["sec_index"]
     t.backfill_secondary_index()
     out = t.snapshot(predicate=[("tag", "=", probe)])
     return out.select(
         "c_custkey", "c_name", "c_acctbal", "tag",
         F.lit(pre_pruned).cast("int").alias("pre_pruned"),
-        F.lit(t.last_sec_index_pruned).cast("int").alias("post_pruned"),
+        F.lit(t.last_scan["sec_index"]).cast("int").alias("post_pruned"),
     )
 
 
@@ -1199,12 +1200,12 @@ def lake_bucket_index_pointread(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("ver", F.lit(2).cast("long")),
         op="upsert", instant="002",
     )
-    bucket_pruned = t.last_bucket_pruned
+    bucket_pruned = t.last_scan["bucket"]
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
     return out.select(
         "c_custkey", "c_name", "c_acctbal", "ver",
         F.lit(bucket_pruned).cast("int").alias("bucket_pruned"),
-        F.lit(t.last_bucket_read_pruned).cast("int").alias("read_pruned"),
+        F.lit(t.last_scan["bucket"]).cast("int").alias("read_pruned"),
     )
 
 
@@ -1488,7 +1489,7 @@ def lake_record_index_pointread(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
     return out.select(
         "c_custkey", "c_name", "c_acctbal", "ver",
-        F.lit(t.last_record_read_pruned).cast("int").alias("read_pruned"),
+        F.lit(t.last_scan["record_index"]).cast("int").alias("read_pruned"),
     )
 
 
@@ -1545,7 +1546,7 @@ def lake_bucket_mor_pointread(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "c_custkey", "c_name", "c_acctbal", "ver",
-        F.lit(t.last_bucket_read_pruned).cast("int").alias("read_pruned"),
+        F.lit(t.last_scan["bucket"]).cast("int").alias("read_pruned"),
         F.lit(deltas).cast("int").alias("delta_files"),
     )
 

@@ -72,6 +72,7 @@ import shutil
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
 from typing import Callable
 from urllib.parse import unquote, urlparse
 
@@ -130,6 +131,43 @@ class ConcurrentWriteConflict(RuntimeError):
     data files it did write are orphans for the lazy cleaner, exactly
     like any failed write)."""
 
+@dataclass(frozen=True)
+class ScanReport:
+    """What one planning pass did: the files it considered and, in
+    pipeline order, how many files each layer that ran dropped.
+
+    Read layers: ``bucket`` → ``record_index`` → ``partition_stats`` →
+    ``col_stats`` → ``sec_index`` → ``col_bloom``. Write layers:
+    ``partition`` → ``bucket`` → ``record_index`` → ``key_range`` →
+    ``key_bloom`` → ``key_scan``. ``partitions_pruned`` counts the
+    whole partitions the partition-stats layer proved dead."""
+
+    considered: int = 0
+    pruned: tuple[tuple[str, int], ...] = ()
+    partitions_pruned: int = 0
+
+    def __getitem__(self, layer: str) -> int:
+        """Files ``layer`` dropped (0 when it did not run)."""
+        return sum(n for name, n in self.pruned if name == layer)
+
+    @property
+    def dropped(self) -> int:
+        return sum(n for _, n in self.pruned)
+
+    @property
+    def kept(self) -> int:
+        return self.considered - self.dropped
+
+
+class Kept(list):
+    """The file entries a planning pass kept, carrying its
+    :class:`ScanReport` — a list, so callers iterate the survivors."""
+
+    def __init__(self, files, report: ScanReport) -> None:
+        super().__init__(files)
+        self.report = report
+
+
 #: datetime-shaped strings for predicate-vs-stat comparisons: ISO 'T'
 #: operand form vs the ' '-separated form _stat_json serializes
 _ISO_T = re.compile(r"^\d{4}-\d{2}-\d{2}T\d{2}:\d{2}")
@@ -142,6 +180,12 @@ _DATE_ONLY = re.compile(r"^\d{4}-\d{2}-\d{2}$")
 #: (no expression stats are ever persisted or maintained).
 _FN_COL = re.compile(r"^(year|date)\((\w+)\)$")
 _DATE_PREFIX = re.compile(r"^\d{4}-\d{2}-\d{2}")
+#: column types whose Spark cast("string") rendering a same-typed
+#: Python operand reproduces verbatim (the only pairings the bloom
+#: probe may prune on)
+_BLOOM_INTEGRAL_TYPES = frozenset(
+    ("byte", "tinyint", "short", "smallint", "integer", "int", "long", "bigint")
+)
 
 
 def reference_table_type(partition_keys: list[str] | None) -> str:
@@ -249,9 +293,12 @@ class LakeTable:
         self.inline_compact_deltas = inline_compact_deltas
         self.commits_dir = os.path.join(self.path, "_commits")
         self.data_dir = os.path.join(self.path, "data")
-        #: observability: candidates dropped by key-range pruning in the
-        #: most recent upsert/delete planning pass
-        self.last_range_pruned = 0
+        #: what the most recent snapshot / read_optimized / incremental /
+        #: write / write_optimistic / merge_into call planned: files
+        #: considered and files each pruning layer dropped. Replaced
+        #: whole at the end of each such call; a call that planned
+        #: nothing installs an empty report.
+        self.last_scan = ScanReport()
         #: column-stats data skipping (Hudi 0.11 metadata-table column
         #: stats analog, the reference's engine dependency pom.xml:104):
         #: per-file parquet-FOOTER min/max are harvested for these
@@ -262,12 +309,6 @@ class LakeTable:
         #: stat types: int/float/string/date/timestamp (Decimal columns
         #: are skipped — lossless JSON round-trip isn't guaranteed).
         self.stats_columns = list(stats_columns or [])
-        #: observability: files skipped by column-stats pruning in the
-        #: most recent predicate read
-        self.last_files_skipped = 0
-        #: observability: partitions wholesale-pruned by the
-        #: partition-stats index in the most recent predicate read
-        self.last_partitions_pruned = 0
         #: how long a writer waits on a held lock before failing (0 =
         #: fail fast); live contention (async compactor vs ingest) waits,
         #: stale locks from crashed writers still surface as errors
@@ -301,9 +342,6 @@ class LakeTable:
             self, self.bloom_dir, "bloom", [RECORD_KEY_COL],
             bloom_mod.KEY_NBITS, bloom_mod.KEY_HASHES,
         )
-        #: observability: candidates dropped by the bloom probe in the
-        #: most recent upsert/delete planning pass
-        self.last_bloom_pruned = 0
         #: column blooms on non-key columns (Hudi's metadata-table
         #: bloom-filter partition beyond the record key): the other
         #: instance, probed by ``=``/``in`` predicate reads — the
@@ -315,10 +353,6 @@ class LakeTable:
             self, self.col_bloom_dir, "col_bloom", self.bloom_columns,
             bloom_mod.COL_NBITS, bloom_mod.COL_HASHES,
         )
-        #: observability: files skipped in the most recent predicate
-        #: read where the COLUMN bloom (not min/max stats) was the
-        #: decider — a subset of ``last_files_skipped``
-        self.last_col_bloom_pruned = 0
         #: instant -> {col: simple type} of the commit's schema (the
         #: schema the index builds' cast("string") ran under), None when
         #: unreadable; instant-keyed ⇒ cleared on restore
@@ -360,10 +394,6 @@ class LakeTable:
             )
         self.sec_index_dir = os.path.join(self.path, "_index_sec")
         self._sec_idx = ValueIndex(self, self.sec_index_dir, "val", True)
-        #: observability: files skipped where the secondary index (not
-        #: stats / blooms) was the decider in the most recent predicate
-        #: read
-        self.last_sec_index_pruned = 0
         #: immutable-manifest cache (see :meth:`_manifest`); cleared on
         #: :meth:`restore`, the one operation that can re-allocate an
         #: instant id
@@ -388,16 +418,6 @@ class LakeTable:
         #: bucket too. Size n for ~1 GB per bucket per commit: every
         #: commit (and every compaction fold) shuffles into n tasks.
         self.bucket_index = bucket_index
-        #: observability: candidates dropped by bucket targeting in the
-        #: most recent upsert/delete planning pass
-        self.last_bucket_pruned = 0
-        #: observability: files dropped by record-key bucket pruning in
-        #: the most recent predicate read
-        self.last_bucket_read_pruned = 0
-        #: files dropped by the read-side record-index probe
-        #: (:meth:`_record_prune_reads`) in the most recent predicate
-        #: read
-        self.last_record_read_pruned = 0
         #: OCC seam (SRC/package.scala:38-47 parity): default is the
         #: single-host O_EXCL file lock; a multi-host deployment plugs
         #: in a coordination-service provider here (see lake/locks.py)
@@ -1039,7 +1059,7 @@ class LakeTable:
         Hudi 1.0's ``partition_stats`` metadata index): one pseudo-file
         per partition whose [min, max] covers every live file in it, so
         a predicate that fails the aggregate provably fails every file
-        and :meth:`_stats_prune` drops the whole partition in
+        and :meth:`_plan_read` drops the whole partition in
         O(partitions) without touching its files' stats or bloom
         sidecars. At 100 TB this is the difference between planning
         over millions of file entries and thousands of partitions for
@@ -1104,24 +1124,31 @@ class LakeTable:
         self._pstats_cache[instant] = out
         return out
 
-    def _stats_prune(
+    def _plan_read(
         self,
         files: list[dict],
         predicate: list[tuple] | None,
         all_base: bool = False,
         instant: str | None = None,
-    ) -> list[dict]:
-        """Driver-side file skipping on the manifest's column stats (the
-        read-path analog of upsert planning's key-range prune). Updates
-        ``last_files_skipped``.
+    ) -> Kept:
+        """Driver-side file skipping for a predicate read, layer by
+        layer: record-key point lookups (bucket, then record index),
+        then the manifest's stats (partition aggregates, per-file
+        min/max) and the secondary index and column bloom verdicts.
+        Returns the kept files with the pass's :class:`ScanReport`.
 
-        MOR rule (unless ``all_base`` — the read-optimized view, where
-        no merge follows): delta files are never skipped — a delta row
-        may rewrite a key's column values in either direction — and a
-        stats-failing BASE file is skippable only when its KEY RANGE
-        intersects no RETAINED file's key range (deltas AND surviving
-        bases). The key-disjointness clause matters because the merge
-        is ``max_by((precombine, commit_time))`` across ALL live files:
+        The key layers are unconditionally MOR-safe: a file they drop
+        provably holds no operand key, and any row the merge could
+        surface from it would fail the key-equality row filter anyway.
+
+        MOR rule for the other layers (unless ``all_base`` — the
+        read-optimized view, where no merge follows): delta files are
+        never skipped — a delta row may rewrite a key's column values
+        in either direction — and a stats-failing BASE file is
+        skippable only when its KEY RANGE intersects no RETAINED
+        file's key range (deltas AND surviving bases). The
+        key-disjointness clause matters because the merge is
+        ``max_by((precombine, commit_time))`` across ALL live files:
         a retained row with a LOWER precombine for a shared key loses
         the merge only while the pruned file's winning row is present —
         prune it and the stale version wins unopposed and leaks through
@@ -1132,21 +1159,40 @@ class LakeTable:
         predicate, so whichever would win the merge is filtered out
         either way. Empty files (rows == 0) skip unconditionally — no
         row of theirs can win any merge."""
+        considered = len(files)
         if not predicate:
-            self.last_files_skipped = 0
-            self.last_col_bloom_pruned = 0
-            self.last_bucket_read_pruned = 0
-            self.last_record_read_pruned = 0
-            self.last_partitions_pruned = 0
-            self.last_sec_index_pruned = 0
-            return files
+            return Kept(files, ScanReport(considered))
         for col, op, _val in predicate:
             if op not in self._PRED_OPS:
                 raise ValueError(
                     f"unknown predicate op {op!r}; use one of {self._PRED_OPS}"
                 )
-        files = self._bucket_prune_reads(files, predicate)
-        files = self._record_prune_reads(files, predicate)
+        pruned: list[tuple[str, int]] = []
+
+        def drop(layer: str, before: list[dict], kept: list[dict]):
+            pruned.append((layer, len(before) - len(kept)))
+            return kept
+
+        # record-key point lookups: the first ``=``/``in`` conjunct on
+        # the key whose operands are all strings
+        keys: list | None = None
+        for col, op, val in predicate:
+            if col == RECORD_KEY_COL and op in ("=", "in"):
+                ops = list(val) if op == "in" else [val]
+                if all(isinstance(v, str) for v in ops):
+                    keys = ops
+                    break
+        if keys and self.bucket_index:
+            files = drop("bucket", files, self._bucket_hit_files(files, keys))
+        if (
+            keys
+            and self.record_index
+            and len(files) > 1
+            and all(f.get("indexed") for f in files)
+        ):
+            files = drop(
+                "record_index", files, self._index_hit_files(files, keys)
+            )
         # partition-stats index pass: wholesale-dead partitions (their
         # aggregate stats prove no row can match) short-circuit the
         # per-file checks below — identical verdicts, O(partitions)
@@ -1158,12 +1204,14 @@ class LakeTable:
                 for pp, pf in self._partition_stats_at(instant).items()
                 if not self._stats_may_match(pf, predicate)
             }
-        self.last_partitions_pruned = len(dead_parts)
 
-        def _may_match(f: dict) -> bool:
+        def verdict(f: dict) -> str | None:
+            """The stats layer that drops ``f``, or None."""
             if dead_parts and (f.get("partition_path") or "") in dead_parts:
-                return False
-            return self._stats_may_match(f, predicate)
+                return "partition_stats"
+            if not self._stats_may_match(f, predicate):
+                return "col_stats"
+            return None
         # index verdicts, computed ONCE per read (the per-file checks
         # below are set probes): the exact secondary index over every
         # covered file, the column bloom over the stats survivors it
@@ -1174,128 +1222,74 @@ class LakeTable:
         )
         bloom_miss = self._index_misses(
             self._col_bloom, self.bloom_columns, files, predicate,
-            lambda f, c: f["path"] not in sec_miss and _may_match(f), None,
+            lambda f, c: f["path"] not in sec_miss and verdict(f) is None,
+            None,
         )
-        self.last_sec_index_pruned = 0
-        mor_merge = self.is_mor and not all_base
-        if not mor_merge:
-            keep, skipped, bloom_skipped, sec_skipped = [], 0, 0, 0
+
+        def layer_of(f: dict) -> str | None:
+            v = verdict(f)
+            if v is None and f["path"] in sec_miss:
+                v = "sec_index"  # stats passed, exact index decided
+            elif v is None and f["path"] in bloom_miss:
+                v = "col_bloom"  # stats passed, column bloom decided
+            return v
+
+        layers = ("partition_stats", "col_stats", "sec_index", "col_bloom")
+        skipped = dict.fromkeys(layers, 0)
+        if not (self.is_mor and not all_base):
+            keep = []
             for f in files:
-                if not _may_match(f):
-                    skipped += 1
-                elif f["path"] in sec_miss:
-                    skipped += 1  # stats passed, exact index decided
-                    sec_skipped += 1
-                elif f["path"] in bloom_miss:
-                    skipped += 1  # stats passed, column bloom decided
-                    bloom_skipped += 1
-                else:
+                v = layer_of(f)
+                if v is None:
                     keep.append(f)
-            self.last_files_skipped = skipped
-            self.last_col_bloom_pruned = bloom_skipped
-            self.last_sec_index_pruned = sec_skipped
-            return keep
+                else:
+                    skipped[v] += 1
+        else:
+            # pass 1: a verdict per file; deltas are always retained
+            candidates: list[tuple[dict, str]] = []
+            retained: list[dict] = []
+            for f in files:
+                if f.get("rows") == 0:
+                    skipped["col_stats"] += 1  # rowless: cannot win a merge
+                elif f.get("kind", "base") != "base":
+                    retained.append(f)
+                elif (v := layer_of(f)) is not None:
+                    candidates.append((f, v))
+                else:
+                    retained.append(f)
+            # pass 2: a candidate skips only if key-disjoint from every
+            # retained file (unknown ranges are treated as overlapping)
+            retained_ranges = [
+                (f.get("key_min"), f.get("key_max")) for f in retained
+            ]
 
-        # pass 1: stats verdict per file; deltas are always retained
-        candidates: list[dict] = []  # stats-failing, non-empty base files
-        bloom_decided: set[int] = set()  # candidates the col bloom failed
-        sec_decided: set[int] = set()  # candidates the exact index failed
-        retained: list[dict] = []
-        empty_skipped = 0
-        for f in files:
-            if f.get("rows") == 0:
-                empty_skipped += 1  # rowless: cannot win any merge
-            elif f.get("kind", "base") != "base":
-                retained.append(f)
-            elif not _may_match(f):
-                candidates.append(f)
-            elif f["path"] in sec_miss:
-                candidates.append(f)
-                sec_decided.add(id(f))
-            elif f["path"] in bloom_miss:
-                candidates.append(f)
-                bloom_decided.add(id(f))
-            else:
-                retained.append(f)
-        # pass 2: a candidate skips only if key-disjoint from every
-        # retained file (unknown ranges are treated as overlapping)
-        retained_ranges = [
-            (f.get("key_min"), f.get("key_max")) for f in retained
-        ]
+            def overlaps_retained(f: dict) -> bool:
+                kmin, kmax = f.get("key_min"), f.get("key_max")
+                if kmin is None or kmax is None:
+                    return True  # unknown candidate key range: conservative
+                for rmin, rmax in retained_ranges:
+                    if rmin is None or rmax is None:
+                        return True  # unknown retained key range
+                    if not (rmax < kmin or rmin > kmax):
+                        return True
+                return False
 
-        def overlaps_retained(f: dict) -> bool:
-            kmin, kmax = f.get("key_min"), f.get("key_max")
-            if kmin is None or kmax is None:
-                return True  # unknown candidate key range: conservative
-            for rmin, rmax in retained_ranges:
-                if rmin is None or rmax is None:
-                    return True  # unknown retained key range
-                if not (rmax < kmin or rmin > kmax):
-                    return True
-            return False
-
-        keep, skipped, bloom_skipped, sec_skipped = (
-            list(retained), empty_skipped, 0, 0,
+            kept_paths = {f["path"] for f in retained}
+            for f, v in candidates:
+                if overlaps_retained(f):
+                    kept_paths.add(f["path"])
+                else:
+                    skipped[v] += 1
+            # preserve input order (manifest order) for deterministic scans
+            keep = [f for f in files if f["path"] in kept_paths]
+        return Kept(
+            keep,
+            ScanReport(
+                considered,
+                tuple(pruned) + tuple(skipped.items()),
+                len(dead_parts),
+            ),
         )
-        for f in candidates:
-            if overlaps_retained(f):
-                keep.append(f)
-            else:
-                skipped += 1
-                if id(f) in bloom_decided:
-                    bloom_skipped += 1
-                if id(f) in sec_decided:
-                    sec_skipped += 1
-        self.last_files_skipped = skipped
-        self.last_col_bloom_pruned = bloom_skipped
-        self.last_sec_index_pruned = sec_skipped
-        # preserve input order (manifest order) for deterministic scans
-        kept_paths = {f["path"] for f in keep}
-        return [f for f in files if f["path"] in kept_paths]
-
-    def _bucket_prune_reads(
-        self, files: list[dict], predicate: list[tuple]
-    ) -> list[dict]:
-        """Point-lookup pruning on a bucket-indexed table: an ``=`` /
-        ``in`` condition on the RECORD KEY confines matching rows to
-        the operands' buckets, so files of other buckets are dropped
-        before any scan — one tiny probe job (operands → bucket ids),
-        no data I/O. Unconditionally safe, even under the MOR merge:
-        a pruned file provably holds NO row with an operand key, and
-        every row the merge could surface from it would fail the
-        key-equality row filter anyway (unlike non-key column pruning,
-        which needs the key-overlap guard). Unstamped files and files
-        written under a different bucket count are kept."""
-        self.last_bucket_read_pruned = 0
-        n = self.bucket_index
-        if not n:
-            return files
-        vals: list | None = None
-        for col, op, val in predicate:
-            if col != RECORD_KEY_COL or op not in ("=", "in"):
-                continue
-            ops = list(val) if op == "in" else [val]
-            if all(isinstance(v, str) for v in ops):
-                vals = ops  # first probeable key condition suffices
-                break
-        if not vals or not any(
-            f.get("bucket") is not None and f.get("bucket_n") == n
-            for f in files
-        ):
-            return files
-        # literal operand keys: bucket ids are pure arithmetic — the
-        # Python XXH64 twin (parity pinned, tests/test_xxh.py) replaces
-        # the createDataFrame+agg Spark job a point read paid here
-        op_buckets = {xxh_shard(v, n) for v in set(vals)}
-        kept = [
-            f
-            for f in files
-            if f.get("bucket") is None
-            or f.get("bucket_n") != n
-            or f["bucket"] in op_buckets
-        ]
-        self.last_bucket_read_pruned = len(files) - len(kept)
-        return kept
 
     @staticmethod
     def _predicate_condition(predicate: list[tuple]):
@@ -1327,7 +1321,7 @@ class LakeTable:
                 cond = cond & (c > F.lit(val))
             elif op == ">=":
                 cond = cond & (c >= F.lit(val))
-            else:  # unreachable after _stats_prune validation; belt+braces
+            else:  # unreachable after _plan_read validation; belt+braces
                 raise ValueError(f"unknown predicate op {op!r}")
         return cond
 
@@ -1342,7 +1336,7 @@ class LakeTable:
         aggregates. ``(None, None, None)`` means the as_of predates the
         table (empty view); schema is None for the latest view (stored
         schema). The resolved instant keys the partition-stats index
-        lookup in :meth:`_stats_prune`."""
+        lookup in :meth:`_plan_read`."""
         schema = None
         if as_of is not None:
             past = [i for i in self.timeline() if i <= as_of]
@@ -1484,12 +1478,14 @@ class LakeTable:
         ``=, <, <=, >, >=, between, in`` — returns exactly
         ``snapshot().filter(pred)`` but first SKIPS files whose manifest
         column stats (``stats_columns``) prove no row can match (Hudi
-        0.11 data skipping); ``last_files_skipped`` records the count.
+        0.11 data skipping); ``last_scan`` reports what each layer
+        pruned.
         """
         files, schema, inst = self._view_files(partition_filter, as_of)
         if files is None:
+            self.last_scan = ScanReport()
             return _empty_df(self.spark, self._stored_schema())
-        files = self._stats_prune(files, predicate, instant=inst)
+        files = self._plan_read(files, predicate, instant=inst)
         if as_of is not None and inst != self.last_instant():
             # time travel only — the latest view's files are live by
             # the cleaner's keep-set invariant
@@ -1515,6 +1511,7 @@ class LakeTable:
             out = self._merged_read(out, files)
         if predicate:
             out = out.filter(self._predicate_condition(predicate))
+        self.last_scan = files.report
         return out
 
     def read_optimized(
@@ -1531,15 +1528,16 @@ class LakeTable:
         files = [f for f in self._live_files() if f.get("kind", "base") == "base"]
         # base-only read: no merge follows, so no delta can resurface a
         # skipped row — prune as if COW (all_base lifts the MOR rules
-        # while keeping op validation and the skip counter consistent).
+        # while keeping op validation and the report consistent).
         # The partition-stats aggregate covers deltas too — a superset
         # only widens ranges, so wholesale-prunes stay conservative.
-        files = self._stats_prune(
+        files = self._plan_read(
             files, predicate, all_base=True, instant=self.last_instant()
         )
         out = self._read_files([f["path"] for f in files]).drop(DELETED_COL)
         if predicate:
             out = out.filter(self._predicate_condition(predicate))
+        self.last_scan = files.report
         return out
 
     def incremental(
@@ -1593,7 +1591,7 @@ class LakeTable:
         fds = [f for f in added if f["path"] in live_at_end]
         # in-range files are a subset of the live set at the range end,
         # so that instant's partition-stats aggregate applies (superset)
-        fds = self._stats_prune(
+        fds = self._plan_read(
             fds, predicate, instant=in_range[-1] if in_range else None
         )
         # an in-range file live at `end` can still be cleaned once the
@@ -1627,10 +1625,12 @@ class LakeTable:
             out = self._merged_read(pre, fds)
             if predicate:
                 out = out.filter(self._predicate_condition(predicate))
-            return out
-        if predicate:
-            cond = cond & self._predicate_condition(predicate)
-        return df.filter(cond)
+        else:
+            if predicate:
+                cond = cond & self._predicate_condition(predicate)
+            out = df.filter(cond)
+        self.last_scan = fds.report
+        return out
 
     def changes(self, begin: str | None, end: str | None = None) -> DataFrame:
         """CDC read of ``(begin, end]`` with BEFORE/AFTER images — the
@@ -1832,18 +1832,21 @@ class LakeTable:
             if checkpoint is not None:
                 last = self.last_checkpoint(checkpoint["source_id"])
                 if last is not None and last >= checkpoint["batch_id"]:
+                    self.last_scan = ScanReport()
                     return None  # replayed batch — already committed
                 self._pending_checkpoint = dict(checkpoint)
             try:
                 inst = self._next_instant(instant)
-                out = self._commit(op, df, inst, sort_mode, sort_files)
-                return self._publish(inst, out)
+                out, scan = self._commit(op, df, inst, sort_mode, sort_files)
+                published = self._publish(inst, out)
             finally:
                 # a FAILED commit must not leave its checkpoint armed:
                 # it would ride on the NEXT successful manifest (e.g. a
                 # later compact()), falsely marking the failed batch
                 # committed and silently skipping its replay
                 self._pending_checkpoint = None
+        self.last_scan = scan
+        return published
 
     def _commit(
         self,
@@ -1852,20 +1855,24 @@ class LakeTable:
         inst: str,
         sort_mode: str = "NONE",
         sort_files: int | None = None,
-    ) -> tuple | None:
+    ) -> tuple[tuple | None, ScanReport]:
         """The compute step of every write op, shared by :meth:`write`
         and :meth:`write_optimistic`: write the op's data files under
-        ``inst`` and return ``(action, schema, added, replaced)`` for
-        the publish step, or None when there is nothing to publish."""
+        ``inst``. Returns ``(out, report)``: ``out`` is ``(action,
+        schema, added, replaced)`` for the publish step, or None when
+        there is nothing to publish; ``report`` is the file planning
+        of a keyed COW rewrite (empty for every other op)."""
         if op in ("insert", "bulk_insert"):
-            return self._commit_insert(df, inst, sort_mode, sort_files)
-        if op == "upsert":
+            out = self._commit_insert(df, inst, sort_mode, sort_files)
+        elif op == "upsert":
             return self._commit_upsert(df, inst)
-        if op == "delete":
+        elif op == "delete":
             return self._commit_delete(df, inst)
-        if op == "insert_overwrite":
-            return self._commit_insert_overwrite(df, inst)
-        raise ValueError(f"unknown write op: {op}")
+        elif op == "insert_overwrite":
+            out = self._commit_insert_overwrite(df, inst)
+        else:
+            raise ValueError(f"unknown write op: {op}")
+        return out, ScanReport()
 
     def _publish(self, inst: str, out: tuple | None) -> str | None:
         """The serialized publish step (writer lock held): the manifest
@@ -1954,20 +1961,20 @@ class LakeTable:
         # manifest) never reaps the in-flight files as orphans
         self._mark_inflight(inst)
         try:
-            out = self._commit(op, df, inst)
-            if out is None:
-                return None
-            with self._writer_lock():
-                self._survive_or_orphan(
-                    out[2],
-                    lambda: self._check_publish_conflicts(
-                        base, inst, op, out[2], out[3]
-                    ),
-                )
-                self._write_manifest(inst, *out)
-                return inst
+            out, scan = self._commit(op, df, inst)
+            if out is not None:
+                with self._writer_lock():
+                    self._survive_or_orphan(
+                        out[2],
+                        lambda: self._check_publish_conflicts(
+                            base, inst, op, out[2], out[3]
+                        ),
+                    )
+                    self._write_manifest(inst, *out)
         finally:
             self._clear_inflight(inst)
+        self.last_scan = scan
+        return None if out is None else inst
 
     def _survive_or_orphan(
         self, added: list[dict], check: Callable[[], None]
@@ -2332,10 +2339,13 @@ class LakeTable:
             if self.is_mor:
                 tomb = dl.withColumn(DELETED_COL, F.lit(True))
                 out = self._mor_append(up.unionByName(tomb), inst, "merge")
+                scan = ScanReport()
             else:
                 up, dl = self._align_schema(up), self._align_schema(dl)
-                out = self._keyed_rewrite("merge", inst, up, dl)
-            return self._publish(inst, out)
+                out, scan = self._keyed_rewrite("merge", inst, up, dl)
+            published = self._publish(inst, out)
+        self.last_scan = scan
+        return published
 
     def _writer_lock(self):
         """Acquire the table's writer lock via the pluggable provider
@@ -2585,7 +2595,9 @@ class LakeTable:
             added = self._write_data_files(batch, inst, kind="base")
         return "insert_overwrite", batch.schema, added, doomed
 
-    def _commit_upsert(self, df: DataFrame, inst: str) -> tuple | None:
+    def _commit_upsert(
+        self, df: DataFrame, inst: str
+    ) -> tuple[tuple | None, ScanReport]:
         """Keyed upsert. On an existing table with no checkpoint armed,
         an EMPTY batch publishes nothing and returns None: one
         ``Observation`` counts the batch on the write's own jobs (no
@@ -2608,7 +2620,7 @@ class LakeTable:
             else None
         )
         if self.is_mor:
-            return self._mor_append(batch, inst, "upsert", obs)
+            return self._mor_append(batch, inst, "upsert", obs), ScanReport()
         if self.exists():
             batch = self._align_schema(batch)
         return self._keyed_rewrite("upsert", inst, batch, obs=obs)
@@ -2637,7 +2649,9 @@ class LakeTable:
         shutil.rmtree(os.path.join(self.data_dir, inst), ignore_errors=True)
         return True
 
-    def _commit_delete(self, df: DataFrame, inst: str) -> tuple:
+    def _commit_delete(
+        self, df: DataFrame, inst: str
+    ) -> tuple[tuple | None, ScanReport]:
         """Delete by key (Hudi ``delete`` op; CDC DELETE routing,
         ``SRC/cdc/CanalParser.scala:13``). Partition-scoped unless
         ``global_index``; the delete batch only needs the key columns
@@ -2648,9 +2662,10 @@ class LakeTable:
             # tombstone delta: stored-schema row with _deleted=true; the
             # read merge kills every data row committed before it
             tomb = self._prepare_batch(df, inst, combine=False)
-            return self._mor_append(
+            out = self._mor_append(
                 tomb.withColumn(DELETED_COL, F.lit(True)), inst, "delete"
             )
+            return out, ScanReport()
         keys = df.filter(pk_not_null_condition(self.record_keys))
         return self._keyed_rewrite(
             "delete", inst, deletes=self._stamp(keys, inst)
@@ -2663,7 +2678,7 @@ class LakeTable:
         upserts: DataFrame | None = None,
         deletes: DataFrame | None = None,
         obs: Observation | None = None,
-    ) -> tuple | None:
+    ) -> tuple[tuple | None, ScanReport]:
         """The ONE copy-on-write keyed rewrite behind upsert, delete and
         the COW leg of :meth:`merge_into`: find the files holding a key
         of either frame (:meth:`_affected_files`), anti-join the
@@ -2671,7 +2686,8 @@ class LakeTable:
         (:meth:`_merge`) and write the result; the affected files are
         the commit's ``replaced``. A creating upsert has no files: it
         only dedups the batch. ``obs`` (see :meth:`_commit_upsert`)
-        observes ``upserts`` and turns an empty batch into no commit."""
+        observes ``upserts`` and turns an empty batch into no commit.
+        Returns ``(out, report)`` — see :meth:`_commit`."""
         # M1 — persist around multi-action writes (SRC/package.scala:66,
         # 78): on an existing table the frames feed partition discovery,
         # the key-range agg, the key-hit scan AND the merge; only the
@@ -2686,7 +2702,7 @@ class LakeTable:
             if upserts is not None:
                 upserts = self._observe_rows(upserts, obs)
             if not self.exists():
-                affected = []
+                affected = Kept([], ScanReport())
                 rows = _empty_df(self.spark, upserts.schema)
             else:
                 keys = upserts if deletes is None else deletes
@@ -2707,9 +2723,10 @@ class LakeTable:
             for f in cached:
                 f.unpersist()
         if self._discard_if_empty(obs, inst):
-            return None
+            return None, affected.report
         schema = self._stored_schema() if upserts is None else upserts.schema
-        return action, schema, added, sorted({f["path"] for f in affected})
+        replaced = sorted({f["path"] for f in affected})
+        return (action, schema, added, replaced), affected.report
 
     def _mor_append(
         self,
@@ -2959,8 +2976,9 @@ class LakeTable:
                 cols.append(F.col(c))
         return batch.select(*cols)
 
-    def _affected_files(self, batch: DataFrame) -> tuple[list[dict], DataFrame]:
-        """Files that must be rewritten for this batch, plus their rows.
+    def _affected_files(self, batch: DataFrame) -> tuple[Kept, DataFrame]:
+        """Files that must be rewritten for this batch (with the
+        planning pass's :class:`ScanReport`), plus their rows.
 
         Two-level pruning — the engine's bloom-index analog
         (``SRC/Log2Hudi.scala:78-79``):
@@ -2993,12 +3011,17 @@ class LakeTable:
             batch_pps = set(row["pps"])
             minmax = (row["lo"], row["hi"])
             candidates = [f for f in live if f["partition_path"] in batch_pps]
+            pruned = (("partition", len(live) - len(candidates)),)
         else:
             # unpartitioned table (single "" partition) or global index
-            candidates = live
-        if len(candidates) > 1:
-            candidates = self._key_hit_files(candidates, batch, minmax=minmax)
-        return candidates, self._read_files([f["path"] for f in candidates])
+            candidates, pruned = live, ()
+        hits = (
+            self._key_hit_files(candidates, batch, minmax=minmax)
+            if len(candidates) > 1
+            else Kept(candidates, ScanReport(len(candidates)))
+        )
+        report = ScanReport(len(live), pruned + hits.report.pruned)
+        return Kept(hits, report), self._read_files([f["path"] for f in hits])
 
     @staticmethod
     def _plan_has_node(plan, names: tuple[str, ...], cap: int = 512) -> bool:
@@ -3067,10 +3090,11 @@ class LakeTable:
         candidates: list[dict],
         batch: DataFrame,
         minmax: tuple | None = None,
-    ) -> list[dict]:
+    ) -> Kept:
         """File targeting: range-prune candidates against the manifest's
         per-file key stats (driver-side, no I/O), then scan the
         survivors' key columns and keep files holding a batch key.
+        Returns the hit files with the pass's :class:`ScanReport`.
 
         With ``bloom_index``, range-prune survivors are additionally
         probed against their per-file key blooms (lake/bloom.py) —
@@ -3079,9 +3103,12 @@ class LakeTable:
         candidates, the persistent key→file index is probed instead —
         the candidate set comes from a join against the (narrow) index
         table, and no data file's key column is scanned at all."""
-        self.last_range_pruned = 0
-        self.last_bloom_pruned = 0
-        self.last_bucket_pruned = 0
+        considered, pruned = len(candidates), []
+
+        def drop(layer: str, before: list[dict], kept: list[dict]) -> Kept:
+            pruned.append((layer, len(before) - len(kept)))
+            return Kept(kept, ScanReport(considered, tuple(pruned)))
+
         join_cols = self._key_cols()
         # ONE capped collect of the batch's distinct join pairs turns
         # every probe below into driver-side arithmetic for point-sized
@@ -3107,14 +3134,23 @@ class LakeTable:
                     if None not in (t := tuple(r[c] for c in join_cols))
                 ]
         keys = sorted({p[-1] for p in pairs}) if pairs is not None else None
+        # the batch's keys for the key layers: the collected list, else
+        # the key column of the batch frame
+        key_src = keys if keys is not None else batch.select(RECORD_KEY_COL)
         if self.bucket_index and len(candidates) > 1:
-            candidates = self._bucket_hit_files(candidates, batch, keys=keys)
+            candidates = drop(
+                "bucket", candidates,
+                self._bucket_hit_files(candidates, key_src),
+            )
             if not candidates:
-                return []
+                return candidates
         if self.record_index and candidates and all(
             f.get("indexed") for f in candidates
         ):
-            return self._index_hit_files(candidates, batch, keys=keys)
+            return drop(
+                "record_index", candidates,
+                self._index_hit_files(candidates, key_src),
+            )
         if keys is not None:
             lo, hi = (keys[0], keys[-1]) if keys else (None, None)
         elif minmax is not None:
@@ -3128,26 +3164,22 @@ class LakeTable:
                 ).collect()[0]
             )
         if lo is not None:
-            pruned = [
+            candidates = drop("key_range", candidates, [
                 f
                 for f in candidates
                 if f.get("key_min") is None
                 or not (f["key_max"] < lo or f["key_min"] > hi)
-            ]
-            self.last_range_pruned = len(candidates) - len(pruned)
-            candidates = pruned
+            ])
             if not candidates:
-                return []
+                return candidates
         if self.bloom_index and len(candidates) > 1:
-            hit = self._key_bloom.probe(
-                candidates,
-                batch.select(RECORD_KEY_COL) if keys is None else keys,
+            hit = self._key_bloom.probe(candidates, key_src)
+            candidates = drop(
+                "key_bloom", candidates,
+                [f for f in candidates if f["path"] in hit],
             )
-            kept = [f for f in candidates if f["path"] in hit]
-            self.last_bloom_pruned = len(candidates) - len(kept)
-            candidates = kept
             if not candidates:
-                return []
+                return candidates
         internal_c = [f for f in candidates if not os.path.isabs(f["path"])]
         external_c = [f for f in candidates if os.path.isabs(f["path"])]
         if pairs is not None and not external_c and self.driver_io_local:
@@ -3165,7 +3197,8 @@ class LakeTable:
                 import pyarrow.compute as pc
 
                 if not pairs:
-                    return []  # no non-null batch keys ⇒ no key hits
+                    # no non-null batch keys ⇒ no key hits
+                    return drop("key_scan", candidates, [])
                 want = set(pairs)
                 per_col = [
                     pa.array(sorted({p[i] for p in pairs}))
@@ -3195,7 +3228,7 @@ class LakeTable:
                         )
                     ):
                         kept.append(f)
-                return kept
+                return drop("key_scan", candidates, kept)
         scans = []
         if internal_c:
             scans.append(
@@ -3242,11 +3275,11 @@ class LakeTable:
             else r[0]
             for r in hits
         }
-        return [
+        return drop("key_scan", candidates, [
             f
             for f in candidates
             if os.path.abspath(os.path.join(self.path, f["path"])) in hit_paths
-        ]
+        ])
 
     def _bucket_expr(self):
         """A record key's bucket id: ``pmod(xxhash64(key), n)``.
@@ -3259,44 +3292,41 @@ class LakeTable:
         ).cast("int")
 
     def _bucket_hit_files(
-        self,
-        candidates: list[dict],
-        batch: DataFrame,
-        keys: list[str] | None = None,
+        self, files: list[dict], keys: list[str] | DataFrame
     ) -> list[dict]:
-        """Bucket-index candidate targeting: one tiny agg job derives
-        the batch's distinct bucket ids (≤ n ints to the driver) and
-        the candidate set shrinks to the hit buckets' files — no index
-        table, no bloom I/O, no key scan. Files with no bucket stamp,
-        or stamped under a DIFFERENT bucket count (pre-bucketing
-        vintage, adopted externals, a resized table), are kept
-        unconditionally: a key can only be guaranteed absent from a
-        file that was provably written under the CURRENT modulus."""
+        """The bucket-index layer, shared by predicate reads and write
+        planning: ``keys`` (literal keys, or a frame with the record
+        key column) map to bucket ids and ``files`` shrink to the hit
+        buckets' files — no index table, no bloom I/O, no key scan.
+        Literal keys take the Python XXH64 twin (parity pinned,
+        tests/test_xxh.py); a key frame costs one tiny agg job (≤ n
+        ints to the driver). Files with no bucket stamp, or stamped
+        under a DIFFERENT bucket count (pre-bucketing vintage, adopted
+        externals, a resized table), are kept unconditionally: a key
+        can only be guaranteed absent from a file that was provably
+        written under the CURRENT modulus."""
         n = self.bucket_index
         if not any(
             f.get("bucket") is not None and f.get("bucket_n") == n
-            for f in candidates
+            for f in files
         ):
-            return candidates
-        if keys is not None:
-            # precollected point batch: bucket ids via the XXH64 twin
-            batch_buckets = {xxh_shard(k, n) for k in keys}
-        else:
-            batch_buckets = {
+            return files
+        if isinstance(keys, DataFrame):
+            buckets = {
                 r[0]
-                for r in batch.select(self._bucket_expr().alias("b"))
+                for r in keys.select(self._bucket_expr().alias("b"))
                 .distinct()
                 .collect()
             }
-        kept = [
+        else:
+            buckets = {xxh_shard(k, n) for k in set(keys)}
+        return [
             f
-            for f in candidates
+            for f in files
             if f.get("bucket") is None
             or f.get("bucket_n") != n
-            or f["bucket"] in batch_buckets
+            or f["bucket"] in buckets
         ]
-        self.last_bucket_pruned = len(candidates) - len(kept)
-        return kept
 
     #: driver-probe gates: a probe whose DISTINCT operand keys fit
     #: under ``max_keys`` AND whose matched shard files total under
@@ -3308,68 +3338,27 @@ class LakeTable:
     driver_probe_max_bytes = 32 << 20
 
     def _index_hit_files(
-        self,
-        candidates: list[dict],
-        batch: DataFrame,
-        keys: list[str] | None = None,
+        self, files: list[dict], keys: list[str] | DataFrame
     ) -> list[dict]:
-        """Probe the persistent record index for the batch's keys: stale
-        entries (replaced files) drop out because the result is
-        intersected with the live candidate set, and only the keys'
-        shard dirs of each candidate's instant are read, so planning
-        I/O scales with keys touched, not index size. Point-sized
-        batches (``keys`` precollected by :meth:`_key_hit_files`) probe
-        driver-side with zero Spark jobs while the matched shard bytes
-        fit the gate; larger batches join their distinct keys in one
-        Spark scan."""
-        operands = (
-            keys
-            if keys is not None
-            else batch.select(RECORD_KEY_COL).distinct()
+        """The record-index layer, shared by predicate reads and write
+        planning: probe the persistent key→file index for ``keys``
+        (literal keys, or a frame with the record key column) and keep
+        exactly the files it maps a key to. Exact: every indexed file's
+        keys were written to its commit's index shard at publish, so a
+        no-hit file provably holds no key, and stale entries (replaced
+        files) drop out because the result is intersected with
+        ``files``. Callers require full coverage (every file
+        ``indexed``). Only the keys' shard dirs of each file's creating
+        instant are read, so I/O scales with keys, not index size:
+        literal keys probe driver-side with zero Spark jobs while the
+        matched shard bytes fit the gate; a key frame joins its
+        distinct keys in one Spark scan."""
+        hit = self._record_idx.probe(
+            files,
+            keys.distinct() if isinstance(keys, DataFrame)
+            else sorted(set(keys)),
         )
-        hit = self._record_idx.probe(candidates, operands)
-        return [f for f in candidates if f["path"] in hit]
-
-    def _record_prune_reads(
-        self, files: list[dict], predicate: list[tuple]
-    ) -> list[dict]:
-        """Read-side record-index point-lookup pruning (the read twin
-        of ``_index_hit_files``'s write planning): an ``=``/``in``
-        condition on the RECORD KEY probes the persistent key→file
-        index and keeps exactly the files the index maps an operand key
-        to. EXACT, not probabilistic: every indexed file's keys were
-        written to its commit's index shard at publish, so a no-hit
-        file provably holds no operand key — and, as with bucket
-        pruning, that makes the prune unconditionally MOR-safe (any row
-        the merge could surface from a pruned file would fail the
-        key-equality row filter anyway). Requires full coverage (every
-        live file ``indexed``); partial coverage keeps everything.
-
-        Operand keys are LITERALS, so the probe needs no Spark job while
-        the matched shard bytes fit the driver gate: Python-side shard
-        ids (XXH64 parity, tests/test_xxh.py) + pyarrow seeks into ~one
-        row group per operand per instant. This is what makes an
-        indexed point read point-COST: the only Spark job left is the
-        single-file data scan."""
-        self.last_record_read_pruned = 0
-        if not self.record_index or len(files) <= 1:
-            return files
-        if not all(f.get("indexed") for f in files):
-            return files  # partial coverage: conservative keep-all
-        vals: list[str] | None = None
-        for col, op, val in predicate:
-            if col != RECORD_KEY_COL or op not in ("=", "in"):
-                continue
-            ops = list(val) if op == "in" else [val]
-            if all(isinstance(v, str) for v in ops):
-                vals = sorted(set(ops))
-                break
-        if not vals:
-            return files
-        hit = self._record_idx.probe(files, vals)
-        kept = [f for f in files if f["path"] in hit]
-        self.last_record_read_pruned = len(files) - len(kept)
-        return kept
+        return [f for f in files if f["path"] in hit]
 
     def _rel_fp_expr(self):
         """``_metadata.file_path`` relativized against the table root.
@@ -3388,13 +3377,6 @@ class LakeTable:
             "^" + re.escape(root),
             "",
         )
-
-    # column types whose Spark cast("string") rendering a same-typed
-    # Python operand reproduces verbatim (the only pairings the bloom
-    # probe may prune on)
-    _BLOOM_INTEGRAL_TYPES = frozenset(
-        ("byte", "tinyint", "short", "smallint", "integer", "int", "long", "bigint")
-    )
 
     @staticmethod
     def _bloom_operand(v, col_type: str | None) -> str | None:
@@ -3419,7 +3401,7 @@ class LakeTable:
         if isinstance(v, str):
             return v if col_type == "string" else None
         if isinstance(v, int):
-            return str(v) if col_type in LakeTable._BLOOM_INTEGRAL_TYPES else None
+            return str(v) if col_type in _BLOOM_INTEGRAL_TYPES else None
         return None
 
     # ------------------------------- index backfill (async indexing)
@@ -3596,7 +3578,7 @@ class LakeTable:
         """Paths of ``files`` that ``idx`` (the secondary index or the
         column bloom) PROVES hold no operand value for some ``=``/``in``
         conjunct on one of ``cols`` — the definite-miss sets
-        :meth:`_stats_prune` feeds into one verdict pipeline (so the MOR
+        :meth:`_plan_read` feeds into one verdict pipeline (so the MOR
         key-disjointness guard applies before any skip).
 
         Per conjunct, the ``covered`` files are probed with each

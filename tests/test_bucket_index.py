@@ -56,7 +56,7 @@ def test_bucket_upsert_targets_hit_buckets(spark, tmp_path):
     t.write(cust(spark), op="insert", instant="001")
     point = cust(spark, ver=2).filter(F.col("c_custkey") == 8)
     t.write(point, op="upsert", instant="002")
-    assert t.last_bucket_pruned == 7
+    assert t.last_scan["bucket"] == 7
     assert len(t._manifest("002")["replaced"]) == 1
     snap = t.snapshot()
     assert snap.filter(F.col("ver") == 2).count() == 1
@@ -74,15 +74,15 @@ def test_bucket_point_lookup_read_prune(spark, tmp_path):
     t = bucket_table(spark, tmp_path, name="pr")
     t.write(cust(spark), op="insert", instant="001")
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "=", "8")])
-    assert t.last_bucket_read_pruned == 7
+    assert t.last_scan["bucket"] == 7
     assert [r["c_custkey"] for r in out.collect()] == [8]
     # `in` across keys of (possibly) different buckets
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "in", ("8", "9"))])
     assert sorted(r["c_custkey"] for r in out.collect()) == [8, 9]
-    assert t.last_bucket_read_pruned >= 6
+    assert t.last_scan["bucket"] >= 6
     # a non-string operand is unprobeable: no pruning, exact result
     out = t.snapshot(predicate=[("c_custkey", "=", 8)])
-    assert t.last_bucket_read_pruned == 0
+    assert t.last_scan["bucket"] == 0
     assert [r["c_custkey"] for r in out.collect()] == [8]
 
 
@@ -99,7 +99,7 @@ def test_bucket_read_prune_mor_safe(spark, tmp_path):
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "=", "8")])
     rows = out.collect()
     assert [(r["c_custkey"], r["ver"]) for r in rows] == [(8, 2)]
-    assert t.last_bucket_read_pruned == 7  # 7 other-bucket bases
+    assert t.last_scan["bucket"] == 7  # 7 other-bucket bases
 
 
 def test_bucket_read_prune_mor_supersession_and_out_of_order(
@@ -136,7 +136,7 @@ def test_bucket_read_prune_mor_supersession_and_out_of_order(
     # point read: precombine winner ver=3, NOT the late-arriving ver=2
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "=", "8")])
     assert [(r["c_custkey"], r["ver"]) for r in out.collect()] == [(8, 3)]
-    assert t.last_bucket_read_pruned == 7  # other buckets' bases only
+    assert t.last_scan["bucket"] == 7  # other buckets' bases only
     # an untouched key still reads its base version through the prune
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "=", "9")])
     assert [(r["c_custkey"], r["ver"]) for r in out.collect()] == [(9, 1)]
@@ -157,7 +157,7 @@ def test_bucket_resize_is_conservative(spark, tmp_path):
     t8 = bucket_table(spark, tmp_path, name="rs", n=8)
     point = cust(spark, ver=2).filter(F.col("c_custkey") == 8)
     t8.write(point, op="upsert", instant="002")
-    assert t8.last_bucket_pruned == 0  # old stamps: all conservative
+    assert t8.last_scan["bucket"] == 0  # old stamps: all conservative
     snap = t8.snapshot()
     assert snap.count() == cust(spark).count()  # no duplicated key
     assert snap.filter(F.col("ver") == 2).count() == 1
@@ -177,5 +177,5 @@ def test_bucket_compact_preserves_layout(spark, tmp_path):
     added = t._manifest("003")["added"]
     assert sorted(f["bucket"] for f in added) == list(range(8))
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "=", "8")])
-    assert t.last_bucket_read_pruned == 7
+    assert t.last_scan["bucket"] == 7
     assert [(r["c_custkey"], r["ver"]) for r in out.collect()] == [(8, 2)]

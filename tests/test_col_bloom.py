@@ -74,15 +74,15 @@ def test_col_bloom_prunes_equality_read(spark, tmp_path):
     out = t.snapshot(predicate=[("tag", "=", v)])
     rows = out.select("c_custkey", "tag", "ver").collect()
     assert [(r["c_custkey"], r["tag"]) for r in rows] == [(8, v)]
-    assert t.last_col_bloom_pruned == 3
-    assert t.last_files_skipped == 3
+    assert t.last_scan["col_bloom"] == 3
+    assert t.last_scan.dropped == 3
     # a miss value prunes everything
     out = t.snapshot(predicate=[("tag", "=", "no-such-hash")])
     assert out.count() == 0
-    assert t.last_col_bloom_pruned == 4
+    assert t.last_scan["col_bloom"] == 4
     # and a predicate-free read resets the counter
     assert t.snapshot().count() == base.count()
-    assert t.last_col_bloom_pruned == 0
+    assert t.last_scan["col_bloom"] == 0
 
 
 def test_col_bloom_in_predicate_prunes_union(spark, tmp_path):
@@ -93,7 +93,7 @@ def test_col_bloom_in_predicate_prunes_union(spark, tmp_path):
     v0, v1 = tag_of(spark, 4), tag_of(spark, 5)  # files 001 and 002
     out = t.snapshot(predicate=[("tag", "in", (v0, v1))])
     assert sorted(r["c_custkey"] for r in out.collect()) == [4, 5]
-    assert t.last_col_bloom_pruned == 2
+    assert t.last_scan["col_bloom"] == 2
 
 
 def test_col_bloom_unprobeable_operand_keeps_files(spark, tmp_path):
@@ -112,7 +112,7 @@ def test_col_bloom_unprobeable_operand_keeps_files(spark, tmp_path):
     )
     out = t.snapshot(predicate=[("c_acctbal", "=", float(some))])
     assert out.count() >= 1  # exact result, no false prune
-    assert t.last_col_bloom_pruned == 0  # float operand: unprobeable
+    assert t.last_scan["col_bloom"] == 0  # float operand: unprobeable
     # ints ARE probeable: c_custkey cast to string is canonical
     t2 = col_bloom_table(
         spark, tmp_path, name="unpr2", bloom_columns=["c_nationkey"]
@@ -152,7 +152,7 @@ def test_col_bloom_type_mismatch_operand_keeps_files(spark, tmp_path):
         )
     out = t.snapshot(predicate=[("bal", "=", 8)])  # int vs double col
     assert [r["c_custkey"] for r in out.collect()] == [8]  # coerced hit
-    assert t.last_col_bloom_pruned == 0  # mismatched pairing: keep all
+    assert t.last_scan["col_bloom"] == 0  # mismatched pairing: keep all
     # numeric-string operand vs integral column: also unprobeable
     t2 = col_bloom_table(
         spark, tmp_path, name="tym2", bloom_columns=["c_nationkey"]
@@ -165,13 +165,13 @@ def test_col_bloom_type_mismatch_operand_keeps_files(spark, tmp_path):
         .collect()[0][0]
     )
     out = t2.snapshot(predicate=[("c_nationkey", "=", str(nk))])
-    assert t2.last_col_bloom_pruned == 0
+    assert t2.last_scan["col_bloom"] == 0
     assert out.count() == tagged_cust(spark).filter(
         F.col("c_nationkey") == nk
     ).count()
     # the MATCHED pairing still prunes: int operand, integral column
     out = t2.snapshot(predicate=[("c_nationkey", "=", nk)])
-    assert out.count() >= 1 and t2.last_files_skipped >= 0
+    assert out.count() >= 1 and t2.last_scan.dropped >= 0
     # bool operand vs boolean column: the one bool pairing that IS
     # probeable (int-vs-boolean never reaches the probe: Spark's row
     # filter rejects boolean=int at analysis, loudly not silently)
@@ -187,7 +187,7 @@ def test_col_bloom_type_mismatch_operand_keeps_files(spark, tmp_path):
             op="insert", instant=f"00{i + 1}",
         )
     out = t3.snapshot(predicate=[("flag", "=", True)])
-    assert t3.last_col_bloom_pruned == 1  # bool vs boolean: prunes
+    assert t3.last_scan["col_bloom"] == 1  # bool vs boolean: prunes
     assert out.count() == brows.filter("flag").count()
 
 
@@ -212,11 +212,11 @@ def test_col_bloom_mor_stale_winner_guard(spark, tmp_path):
     t.write(stale, op="upsert", instant="002")  # MOR: appends a delta
     out = t.snapshot(predicate=[("tag", "=", "stale-value")])
     assert out.count() == 0  # ver=2 base row wins; filter drops it
-    assert t.last_col_bloom_pruned == 0  # base kept: key-overlaps delta
+    assert t.last_scan["col_bloom"] == 0  # base kept: key-overlaps delta
     # read-optimized (base-only, no merge follows): pruning is free
     ro = t.read_optimized(predicate=[("tag", "=", "stale-value")])
     assert ro.count() == 0
-    assert t.last_col_bloom_pruned == 1
+    assert t.last_scan["col_bloom"] == 1
 
 
 def test_col_bloom_kernel_matches_module(spark, tmp_path):
@@ -253,7 +253,7 @@ def test_col_bloom_geometry_is_per_sidecar(spark, tmp_path, monkeypatch):
     v = tag_of(spark, 8)
     out = t2.snapshot(predicate=[("tag", "=", v)])
     assert [r["c_custkey"] for r in out.collect()] == [8]
-    assert t2.last_col_bloom_pruned == 3
+    assert t2.last_scan["col_bloom"] == 3
 
 
 def test_col_bloom_pre_index_and_missing_column(spark, tmp_path):
@@ -275,7 +275,7 @@ def test_col_bloom_pre_index_and_missing_column(spark, tmp_path):
     v = tag_of(spark, 8)
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert [r["c_custkey"] for r in out.collect()] == [8]
-    assert t.last_col_bloom_pruned == 1
+    assert t.last_scan["col_bloom"] == 1
     # schema evolution: a commit WITHOUT the tag column
     t3 = LakeTable(
         spark, str(tmp_path), "testdb", "evo",
@@ -295,7 +295,7 @@ def test_col_bloom_pre_index_and_missing_column(spark, tmp_path):
     )
     out = t3.snapshot(predicate=[("tag", "=", v)])  # custkey 8: even,
     assert out.count() == 0  # but its row was written WITHOUT tag
-    assert t3.last_col_bloom_pruned == 2  # both files pruned
+    assert t3.last_scan["col_bloom"] == 2  # both files pruned
 
 
 def test_col_bloom_sidecar_cleanup(spark, tmp_path):

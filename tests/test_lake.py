@@ -4,6 +4,7 @@ partition-move under global index, incremental ranges, cleaner."""
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 import pytest
@@ -872,7 +873,7 @@ def test_key_range_stats_prune_candidates(spark, tmp_path):
     # "100".."99" lexicographically? use 5 (< "10") to stay disjoint
     t.write(cust(spark, ver=2).filter(F.col("c_custkey") == 0),
             op="upsert", instant="003")
-    assert t.last_range_pruned >= 1  # the hi-range file never scanned
+    assert t.last_scan["key_range"] >= 1  # the hi-range file never scanned
     m = t._manifest("003")
     lo_files = {f["path"] for f in t._manifest("001")["added"]}
     assert set(m["replaced"]) <= lo_files
@@ -2438,7 +2439,7 @@ def test_stats_skipping_cow_snapshot(spark, tmp_path):
 
     pred = [("o_orderdate", "between", ("1999-03-01", "1999-06-30"))]
     got = t.snapshot(predicate=pred)
-    skipped = t.last_files_skipped  # set at plan time; later reads reset it
+    skipped = t.last_scan.dropped  # set at plan time; later reads reset it
     want = t.snapshot().filter(
         (F.col("o_orderdate") >= "1999-03-01")
         & (F.col("o_orderdate") <= "1999-06-30")
@@ -2482,7 +2483,7 @@ def test_stats_skipping_mor_keeps_deltas(spark, tmp_path):
     ).coalesce(1)
     t.write(delta, op="upsert", instant="002")
     got = t.snapshot(predicate=[("price", "=", 999999.0)])
-    skipped = t.last_files_skipped
+    skipped = t.last_scan.dropped
     assert got.count() == 5
     assert skipped == 1  # the a* base: fails stats AND key-disjoint
     # now an OVERLAPPING delta (key a5 moved out of range): the base may
@@ -2494,7 +2495,7 @@ def test_stats_skipping_mor_keeps_deltas(spark, tmp_path):
         op="upsert", instant="003",
     )
     stale = t.snapshot(predicate=[("price", "=", 505.0)])  # a5's old price
-    skipped = t.last_files_skipped
+    skipped = t.last_scan.dropped
     assert stale.count() == 0  # newest version (0.01) fails the filter
     assert skipped == 0  # overlap forces the base through the merge
 
@@ -2523,7 +2524,7 @@ def test_stats_skipping_mor_lower_precombine_delta(spark, tmp_path):
     assert t.snapshot().filter(F.col("price") == 100.0).count() == 0
     got = t.snapshot(predicate=[("price", "=", 100.0)])
     assert got.count() == 0, "stale lower-precombine delta resurfaced"
-    assert t.last_files_skipped == 0
+    assert t.last_scan.dropped == 0
 
 
 def test_stats_skipping_incremental(spark, tmp_path):
@@ -2540,7 +2541,7 @@ def test_stats_skipping_incremental(spark, tmp_path):
     t.write(hi_half, op="insert", instant="002")
     pred = [("o_orderdate", ">=", "2000-06-01")]
     got = t.incremental(None, "002", predicate=pred)
-    assert t.last_files_skipped == 1  # the pre-1998 file
+    assert t.last_scan.dropped == 1  # the pre-1998 file
     assert got.count() == o.filter(
         F.col("o_orderdate") >= "2000-06-01"
     ).count()
@@ -2570,7 +2571,7 @@ def test_zorder_compact_improves_skipping(spark, tmp_path):
     ).collect()[0]
     pred = [("o_custkey", "<=", int(cust_max) // 8)]
     before = t.snapshot(predicate=pred)
-    skipped_before = t.last_files_skipped
+    skipped_before = t.last_scan.dropped
     n_match = before.count()
     assert skipped_before == 0  # interleaved: nothing prunable
 
@@ -2587,12 +2588,12 @@ def test_zorder_compact_improves_skipping(spark, tmp_path):
     after = t.snapshot(predicate=pred)
     assert after.count() == n_match
     assert after.exceptAll(before).count() == 0
-    skipped_cust = t.last_files_skipped
+    skipped_cust = t.last_scan.dropped
     assert skipped_cust > 0, "z-order clustering must enable file skips"
     # the SECOND z-order dimension prunes too (the point of interleaving
     # bits instead of lexicographic (custkey, orderkey) sort)
     t.snapshot(predicate=[("o_orderkey", "<=", int(okey_hi) // 8)])
-    assert t.last_files_skipped > 0
+    assert t.last_scan.dropped > 0
 
 
 def test_stats_skipping_iso_t_separator_predicate(spark, tmp_path):
@@ -2615,7 +2616,7 @@ def test_stats_skipping_iso_t_separator_predicate(spark, tmp_path):
     want = o.filter(F.col("o_orderdate") > "1999-06-01 12:00:00").count()
     got = t.snapshot(predicate=[("o_orderdate", ">", "1999-06-01T12:00:00")])
     n = got.count()
-    skipped = t.last_files_skipped
+    skipped = t.last_scan.dropped
     # the 'T' operand must not lexicographically out-rank every stat
     # (' ' < 'T') and prune BOTH files to zero rows
     assert n == want > 0
@@ -2637,9 +2638,9 @@ def test_read_optimized_predicate_validation_and_counter(spark, tmp_path):
     with pytest.raises(ValueError, match="unknown predicate op"):
         t.read_optimized(predicate=[("price", "!=", 3.0)])
     t.snapshot(predicate=[("price", "=", 99999.0)])
-    assert t.last_files_skipped == 1
+    assert t.last_scan.dropped == 1
     t.read_optimized()  # no predicate: counter must reset
-    assert t.last_files_skipped == 0
+    assert t.last_scan.dropped == 0
 
 
 def test_stats_skipping_mor_base_base_duplicate_keys(spark, tmp_path):
@@ -2665,7 +2666,7 @@ def test_stats_skipping_mor_base_base_duplicate_keys(spark, tmp_path):
     assert t.snapshot().filter(F.col("price") == 1.0).count() == 0
     got = t.snapshot(predicate=[("price", "=", 1.0)])
     assert got.count() == 0, "stale base-base duplicate resurfaced"
-    assert t.last_files_skipped == 0  # key overlap keeps both bases
+    assert t.last_scan.dropped == 0  # key overlap keeps both bases
 
 
 def test_stats_skipping_string_stats_stay_raw(spark, tmp_path):
@@ -2690,7 +2691,7 @@ def test_stats_skipping_string_stats_stay_raw(spark, tmp_path):
     pred = [("s", ">=", "2026-01-01A")]
     got = t.snapshot(predicate=pred)
     assert got.count() == 2, "string-column file wrongly pruned"
-    assert t.last_files_skipped == 0
+    assert t.last_scan.dropped == 0
 
 
 # ------------------------------------------------------ bloom key index
@@ -2729,8 +2730,8 @@ def test_bloom_prunes_random_key_files(spark, tmp_path):
         _hashed_cust(spark, ver=2).filter(F.col("c_custkey") % 4 == 0)
     )
     t.write(batch, op="upsert", instant="005")
-    assert t.last_range_pruned == 0  # random keys: ranges overlap
-    assert t.last_bloom_pruned == 3  # blooms prune the other files
+    assert t.last_scan["key_range"] == 0  # random keys: ranges overlap
+    assert t.last_scan["key_bloom"] == 3  # blooms prune the other files
     only_file_1 = {f["path"] for f in t._manifest("001")["added"]}
     assert set(t._manifest("005")["replaced"]) == only_file_1
     snap = t.snapshot()
@@ -2757,7 +2758,7 @@ def test_bloom_fallback_for_pre_index_files(spark, tmp_path):
     # bloom keeps it; file 002's bloom excludes every batch key
     upd = _hashed_cust(spark, ver=2).filter(F.col("c_custkey") % 2 == 0)
     t.write(upd, op="upsert", instant="003")
-    assert t.last_bloom_pruned == 1
+    assert t.last_scan["key_bloom"] == 1
     snap = t.snapshot()
     assert snap.filter(F.col("ver") == 2).count() == upd.count()
     assert snap.count() == a.count() + b.count()
@@ -2772,12 +2773,42 @@ def test_bloom_sidecar_cleanup_and_counter_reset(spark, tmp_path):
     t.write(base.coalesce(1), op="insert", instant="001")
     t.write(_hashed_cust(spark, ver=2), op="upsert", instant="002")
     t.write(_hashed_cust(spark, ver=3), op="upsert", instant="003")
-    assert t.last_bloom_pruned == 0  # single candidate: probe skipped
+    assert t.last_scan["key_bloom"] == 0  # single candidate: probe skipped
     t.clean(retain_commits=1)
     assert sorted(os.listdir(t.bloom_dir)) == ["003.json"]
     snap = t.snapshot()
     assert snap.count() == base.count()
     assert snap.filter(F.col("ver") != 3).count() == 0
+
+
+def test_scan_report_not_left_over_from_previous_write(spark, tmp_path):
+    """Every write installs its own report. An upsert whose bloom probe
+    pruned three files is followed by an ``insert_overwrite`` to one
+    file and a one-key upsert: that upsert has a single candidate, so
+    no key layer runs, and its report must not carry the earlier
+    pass's bloom count."""
+    t = _bloom_table(spark, tmp_path, name="stale")
+    base = _hashed_cust(spark, ver=1)
+    for i in range(4):
+        t.write(
+            base.filter(F.col("c_custkey") % 4 == i).coalesce(1),
+            op="insert", instant=f"00{i + 1}",
+        )
+    t.write(
+        _hashed_cust(spark, ver=2).filter(F.col("c_custkey") % 4 == 0),
+        op="upsert", instant="005",
+    )
+    assert t.last_scan["key_bloom"] == 3
+    t.write(base.coalesce(1), op="insert_overwrite", instant="006")
+    assert t.last_scan.considered == 0  # no keyed planning
+    assert len(t._live_files()) == 1
+    t.write(
+        _hashed_cust(spark, ver=3).filter(F.col("c_custkey") == 8),
+        op="upsert", instant="007",
+    )
+    assert t.last_scan.considered == 1
+    assert t.last_scan["key_bloom"] == 0
+    assert t.last_scan.kept == len(t._manifest("007")["replaced"]) == 1
 
 
 def test_bloom_module_determinism():
@@ -2848,7 +2879,7 @@ def test_bloom_geometry_comes_from_sidecar(spark, tmp_path, monkeypatch):
     t2 = _bloom_table(spark, tmp_path, name="geo")
     upd = rows.filter(F.col("id") < 50).withColumn("ver", F.lit(2).cast("long"))
     t2.write(upd, op="upsert", instant="005")
-    assert t2.last_bloom_pruned == 3
+    assert t2.last_scan["key_bloom"] == 3
     snap = t2.snapshot()
     assert snap.count() == 200
     assert snap.filter(F.col("ver") == 2).count() == 50
@@ -2876,7 +2907,7 @@ def test_bloom_legacy_flat_sidecar_keeps_files(spark, tmp_path):
     t2 = _bloom_table(spark, tmp_path, name="leg")
     upd = _hashed_cust(spark, ver=2).filter(F.col("c_custkey") % 2 == 0)
     t2.write(upd, op="upsert", instant="003")
-    assert t2.last_bloom_pruned == 1  # file 002's bloom; 001 kept
+    assert t2.last_scan["key_bloom"] == 1  # file 002's bloom; 001 kept
     assert set(t2._manifest("003")["replaced"]) == set(legacy)
     snap = t2.snapshot()
     assert snap.count() == base.count()
@@ -3986,7 +4017,7 @@ def test_async_clustering_through_schedule_run_split(spark, tmp_path):
         + appended.filter(F.col("o_custkey") <= cut).count()
     )
     assert out.count() == expect
-    assert reader.last_files_skipped > 0
+    assert reader.last_scan.dropped > 0
 
 
 def test_clustering_auto_ranges_from_manifest_stats(spark, tmp_path):
@@ -4035,7 +4066,7 @@ def test_clustering_auto_ranges_from_manifest_stats(spark, tmp_path):
     cut = int(hi_c) // 8
     out = t.snapshot(predicate=[("o_custkey", "<=", cut)])
     assert out.count() == orders.filter(F.col("o_custkey") <= cut).count()
-    assert t.last_files_skipped > 0  # clustered layout skips
+    assert t.last_scan.dropped > 0  # clustered layout skips
     # un-tracked column: loud schedule-time failure, not a daemon crash
     import pytest as _pytest
 
@@ -4066,15 +4097,15 @@ def test_record_index_read_prune_exact_and_mor_safe(spark, tmp_path):
         )
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
     assert [(r["c_custkey"], r["ver"]) for r in out.collect()] == [(8, 1)]
-    assert t.last_record_read_pruned == 3  # exactly one containing file
+    assert t.last_scan["record_index"] == 3  # exactly one containing file
     # `in` across two files keeps both, prunes the other two
     out = t.snapshot(predicate=[("_record_key", "in", ("8", "9"))])
     assert sorted(r["c_custkey"] for r in out.collect()) == [8, 9]
-    assert t.last_record_read_pruned == 2
+    assert t.last_scan["record_index"] == 2
     # absent key: every file pruned, empty exact result
     out = t.snapshot(predicate=[("_record_key", "=", "no-such-key")])
     assert out.count() == 0
-    assert t.last_record_read_pruned == 4
+    assert t.last_scan["record_index"] == 4
     # sharded layout on disk: commit dirs hold shard=N subdirs
     import os as _os
 
@@ -4099,7 +4130,7 @@ def test_record_index_read_prune_exact_and_mor_safe(spark, tmp_path):
     )
     out = m.snapshot(predicate=[("_record_key", "=", "8")])
     assert [(r["c_custkey"], r["ver"]) for r in out.collect()] == [(8, 3)]
-    assert m.last_record_read_pruned >= 1
+    assert m.last_scan["record_index"] >= 1
     out = m.snapshot(predicate=[("_record_key", "=", "12")])
     assert out.count() == 0  # tombstone delta kept by its index entry
     # full snapshot unaffected by any of this
@@ -4129,7 +4160,7 @@ def test_record_index_read_prune_coverage_and_cleaner(spark, tmp_path):
     )
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
     assert [r["c_custkey"] for r in out.collect()] == [8]
-    assert t.last_record_read_pruned == 0  # 001 unindexed: keep all
+    assert t.last_scan["record_index"] == 0  # 001 unindexed: keep all
 
     # fully-indexed table: upserts then clean() — dead instants' index
     # dirs are reaped, live mappings keep answering
@@ -4183,7 +4214,7 @@ def test_record_index_shard_resize_probes_per_instant_modulus(
     for k in ("8", "9"):
         out = t.snapshot(predicate=[("_record_key", "=", k)])
         assert [r["c_custkey"] for r in out.collect()] == [int(k)]
-        assert t.last_record_read_pruned == 1
+        assert t.last_scan["record_index"] == 1
     # marker-less sharded dir: unpruned-but-exact fallback
     _os.remove(_os.path.join(t.index_dir, "001", ".nshards"))
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
@@ -4618,14 +4649,14 @@ def test_partition_stats_index_prunes_whole_partitions(spark, tmp_path):
     )
     assert n_a_files >= 2  # the point: MANY files die with one check
     got = t.snapshot(predicate=[("price", ">=", 1000.0)])
-    assert t.last_partitions_pruned == 1  # partition A, wholesale
-    assert t.last_files_skipped == n_a_files
+    assert t.last_scan.partitions_pruned == 1  # partition A, wholesale
+    assert t.last_scan.dropped == n_a_files
     assert got.count() == 21
     assert {r["p"] for r in got.collect()} == {"B"}
     assert "002" in t._pstats_cache  # aggregate cached per instant
     # cached plan, same verdicts
     again = t.snapshot(predicate=[("price", ">=", 1000.0)])
-    assert t.last_partitions_pruned == 1 and again.count() == 21
+    assert t.last_scan.partitions_pruned == 1 and again.count() == 21
 
 
 def test_partition_stats_statless_file_vetoes_wholesale_prune(spark, tmp_path):
@@ -4648,8 +4679,8 @@ def test_partition_stats_statless_file_vetoes_wholesale_prune(spark, tmp_path):
         instant="002",
     )
     got = t.snapshot(predicate=[("price", ">=", 1000.0)])
-    assert t.last_partitions_pruned == 0  # stat-less file vetoed it
-    assert t.last_files_skipped == 1  # the 001 file still dies per-file
+    assert t.last_scan.partitions_pruned == 0  # stat-less file vetoed it
+    assert t.last_scan.dropped == 1  # the 001 file still dies per-file
     assert got.count() == 0
     agg = t._partition_stats_at("002")["p=A"]
     assert "price" not in agg.get("col_stats", {})
@@ -4677,7 +4708,7 @@ def test_partition_stats_mor_dead_partition_keeps_merge_exact(spark, tmp_path):
         instant="002",
     )
     got = t.snapshot(predicate=[("price", "=", 999999.0)])
-    assert t.last_partitions_pruned == 1  # A: agg [5..7] disproves =
+    assert t.last_scan.partitions_pruned == 1  # A: agg [5..7] disproves =
     assert got.count() == 5 and {r["p"] for r in got.collect()} == {"B"}
     # and the merged view (no predicate) still reflects the delta
     assert t.snapshot().filter(F.col("k") == "a0").collect()[0]["ver"] == 2
@@ -4702,10 +4733,10 @@ def test_partition_stats_as_of_keys_cache_per_instant(spark, tmp_path):
     )
     pred = [("price", ">=", 1000.0)]
     old = t.snapshot(predicate=pred, as_of="001")
-    assert t.last_partitions_pruned == 1  # A dead as of 001
+    assert t.last_scan.partitions_pruned == 1  # A dead as of 001
     assert old.count() == 3 and {r["p"] for r in old.collect()} == {"B"}
     new = t.snapshot(predicate=pred)
-    assert t.last_partitions_pruned == 0  # A alive now (5000.0)
+    assert t.last_scan.partitions_pruned == 0  # A alive now (5000.0)
     assert new.count() == 4
     assert {"001", "002"} <= set(t._pstats_cache)
 
@@ -4739,7 +4770,7 @@ def test_stats_prune_date_only_operand_midnight_boundary(spark, tmp_path):
     # row filter keeps the exact-midnight 09-30 row: its file must
     # survive pruning (upper bound normalizes to '1997-09-30 00:00:00')
     assert [r["k"] for r in got.collect()] == ["x1"]
-    assert t.last_files_skipped == 1  # the 1995 file still prunes
+    assert t.last_scan.dropped == 1  # the 1995 file still prunes
     # single-sided ops get the same normalization
     ge = t.snapshot(predicate=[("ts", ">=", "1997-10-02")])
     assert [r["k"] for r in ge.collect()] == ["x2"]
@@ -4763,7 +4794,7 @@ def test_bulk_insert_global_sort_disjoint_key_ranges(spark, tmp_path):
     assert t.snapshot().count() == cust(spark).count()
     got = t.snapshot(predicate=[("_record_key", "=", "75")])
     assert got.count() == 1 and got.collect()[0]["c_custkey"] == 75
-    assert t.last_files_skipped == len(files) - 1  # ONE file scanned
+    assert t.last_scan.dropped == len(files) - 1  # ONE file scanned
 
 
 def test_bulk_insert_partition_sort_and_validation(spark, tmp_path):
@@ -4835,18 +4866,18 @@ def test_functional_index_year_and_date_pruning(spark, tmp_path):
     t.write(batch(1999, "c"), op="insert", instant="003")
 
     got = t.snapshot(predicate=[("year(ts)", "=", 1997)])
-    assert t.last_files_skipped == 2
+    assert t.last_scan.dropped == 2
     assert sorted(r["k"] for r in got.collect()) == ["b0", "b1", "b2"]
 
     got = t.snapshot(
         predicate=[("date(ts)", "between", ("1999-04-01", "1999-12-31"))]
     )
-    assert t.last_files_skipped == 2
+    assert t.last_scan.dropped == 2
     assert sorted(r["k"] for r in got.collect()) == ["c1", "c2"]
 
     # >= / < shapes work through the transform too
     got = t.snapshot(predicate=[("year(ts)", ">=", 1999)])
-    assert t.last_files_skipped == 2
+    assert t.last_scan.dropped == 2
     assert {r["k"][0] for r in got.collect()} == {"c"}
 
 
@@ -4873,7 +4904,7 @@ def test_functional_index_statless_and_partition_stats(spark, tmp_path):
         op="insert", instant="001",
     )
     got = t.snapshot(predicate=[("year(ts)", "=", 1999)])
-    assert t.last_partitions_pruned == 1  # p=old dies wholesale
+    assert t.last_scan.partitions_pruned == 1  # p=old dies wholesale
     assert {r["k"][0] for r in got.collect()} == {"b"}
     # stat-less inner column (all-NULL ts) vetoes pruning, rows exact
     t.write(
@@ -4884,7 +4915,7 @@ def test_functional_index_statless_and_partition_stats(spark, tmp_path):
         op="insert", instant="002",
     )
     got = t.snapshot(predicate=[("year(ts)", "=", 1999)])
-    assert t.last_partitions_pruned == 0
+    assert t.last_scan.partitions_pruned == 0
     assert {r["k"][0] for r in got.collect()} == {"b"}
 
 
@@ -5047,3 +5078,117 @@ def test_mor_tombstone_gate(spark, tmp_path):
     assert not _has_join(t.snapshot())
     assert t.snapshot().count() == n - 1
     assert t.snapshot().filter("c_custkey = 3").count() == 0
+
+
+# ------------------------------------------------------ scan reports
+
+
+def _report_rows(spark, ver=1):
+    """Four commits × partitions A/B × ten keys ``<p><commit><i>``: the
+    two partitions hold disjoint key and price ranges (A: 0..39, B:
+    1000 + 100·commit + i), so every read layer has files it can prove
+    dead, also under the MOR key-overlap guard."""
+    rows = []
+    for c in range(4):
+        for p in ("A", "B"):
+            for i in range(10):
+                k = f"{p}{c}{i:02d}"
+                price = float(c * 10 + i) if p == "A" else 1000.0 + 100 * c + i
+                tag = hashlib.md5(k.encode()).hexdigest()
+                rows.append((k, p, price, tag, "t" + k, c, ver))
+    return spark.createDataFrame(
+        rows, "k STRING, p STRING, price DOUBLE, tag STRING, tag2 STRING, "
+        "c INT, ver LONG",
+    )
+
+
+def _report_table(spark, tmp, name, **kw):
+    kw.setdefault("partition_keys", ["p"])
+    t = LakeTable(
+        spark, str(tmp), "testdb", name, record_keys=["k"],
+        precombine="ver", **kw,
+    )
+    rows = _report_rows(spark)
+    for c in range(4):
+        t.write(
+            rows.filter(F.col("c") == c).coalesce(1),
+            op="insert", instant=f"00{c + 1}",
+        )
+    return t
+
+
+_LAYER_PREDICATES = {
+    "bucket": [(RECORD_KEY_COL, "=", "A008")],
+    "record_index": [(RECORD_KEY_COL, "in", ("A008", "B309"))],
+    "partition_stats": [("price", ">=", 1000.0)],
+    "col_stats": [("price", "between", (1000.0, 1050.0))],
+    "sec_index": [("tag", "=", hashlib.md5(b"A008").hexdigest())],
+    "col_bloom": [("tag2", "=", "tA008")],
+}
+
+
+@pytest.mark.parametrize("layer", sorted(_LAYER_PREDICATES))
+@pytest.mark.parametrize("table_type", ["COPY_ON_WRITE", "MERGE_ON_READ"])
+def test_scan_report_accounts_for_every_read(
+    spark, tmp_path, table_type, layer
+):
+    """Each read layer prunes, and for every read the report accounts
+    for exactly the files the scan opens: considered − Σ pruned ==
+    ``len(df.inputFiles())``."""
+    t = _report_table(
+        spark, tmp_path, "rep", table_type=table_type, stats_columns=["price"],
+        bucket_index=2, record_index=True, secondary_index_columns=["tag"],
+        bloom_columns=["tag2"],
+    )
+    pred = _LAYER_PREDICATES[layer]
+    reads = [
+        lambda: t.snapshot(predicate=pred),
+        lambda: t.read_optimized(predicate=pred),
+        lambda: t.incremental(None, predicate=pred),
+        lambda: t.incremental("001", predicate=pred),
+        lambda: t.snapshot(as_of="002", predicate=pred),
+        lambda: t.snapshot(partition_filter={"p": "A"}, predicate=pred),
+        lambda: t.snapshot(),
+    ]
+    for read in reads:
+        df = read()
+        scan = t.last_scan
+        assert scan.considered - scan.dropped == len(df.inputFiles()), (
+            scan
+        )
+    t.snapshot(predicate=pred)
+    assert t.last_scan.considered == len(t._live_files())
+    assert t.last_scan[layer] > 0, t.last_scan
+
+
+@pytest.mark.parametrize(
+    "config",
+    [
+        {},
+        {"partition_keys": [], "bloom_index": True},
+        {"bucket_index": 2, "record_index": True},
+    ],
+    ids=["partition+range+scan", "bloom", "bucket+record_index"],
+)
+def test_scan_report_accounts_for_every_cow_keyed_write(
+    spark, tmp_path, config
+):
+    """For every COW keyed write the report's survivors are exactly the
+    commit's replaced files, out of every live file considered."""
+    t = _report_table(spark, tmp_path, "wrep", **config)
+    rows = _report_rows(spark, ver=2)
+    writes = [
+        lambda: t.write(rows.filter("k in ('A008', 'B109')"), op="upsert"),
+        lambda: t.write(rows.filter("k = 'B305'").select("k", "p"),
+                        op="delete"),
+        lambda: t.write_optimistic(rows.filter("k = 'A209'"), op="upsert"),
+        lambda: t.merge_into(
+            rows.filter("k = 'A008'"), update_set={"ver": "t.ver + 1"}
+        ),
+    ]
+    for write in writes:
+        live = len(t._live_files())
+        inst = write()
+        scan = t.last_scan
+        assert scan.considered == live
+        assert scan.kept == len(t._manifest(inst)["replaced"]) > 0, scan

@@ -109,7 +109,7 @@ def test_bootstrap_column_stats_skip_files(spark, tmp_path):
     assert all("c_custkey" in f.get("col_stats", {}) for f in live)
     got = t.snapshot(predicate=[("c_custkey", "<", 5)])
     assert got.count() == 5  # keys 0..4
-    assert t.last_files_skipped >= 2  # upper-range files never scanned
+    assert t.last_scan.dropped >= 2  # upper-range files never scanned
 
 
 def test_upsert_migrates_only_key_hit_files(
@@ -318,5 +318,5 @@ def test_bootstrap_string_key_ranges_prune_upsert_planning(
         .withColumn("ver", F.lit(2).cast("long"))
     )
     t.write(one, op="upsert", instant="002")
-    assert t.last_range_pruned >= 2  # only the low-range file scanned
+    assert t.last_scan["key_range"] >= 2  # only the low-range file scanned
     assert len(t._manifest("002")["replaced"]) == 1

@@ -75,13 +75,13 @@ def test_sec_index_prunes_equality_read(spark, tmp_path):
     out = t.snapshot(predicate=[("tag", "=", v)])
     rows = out.select("c_custkey", "tag").collect()
     assert [(r["c_custkey"], r["tag"]) for r in rows] == [(8, v)]
-    assert t.last_sec_index_pruned == 3
-    assert t.last_files_skipped == 3
+    assert t.last_scan["sec_index"] == 3
+    assert t.last_scan.dropped == 3
     out = t.snapshot(predicate=[("tag", "=", "no-such-hash")])
     assert out.count() == 0
-    assert t.last_sec_index_pruned == 4
+    assert t.last_scan["sec_index"] == 4
     assert t.snapshot().count() == base.count()
-    assert t.last_sec_index_pruned == 0  # predicate-free read resets
+    assert t.last_scan["sec_index"] == 0  # predicate-free read resets
 
 
 def test_sec_index_in_predicate_prunes_union(spark, tmp_path):
@@ -90,7 +90,7 @@ def test_sec_index_in_predicate_prunes_union(spark, tmp_path):
     v0, v1 = tag_of(spark, 4), tag_of(spark, 5)  # files 001 and 002
     out = t.snapshot(predicate=[("tag", "in", (v0, v1))])
     assert sorted(r["c_custkey"] for r in out.collect()) == [4, 5]
-    assert t.last_sec_index_pruned == 2
+    assert t.last_scan["sec_index"] == 2
 
 
 def test_sec_index_spark_build_matches_driver_build(spark, tmp_path):
@@ -105,7 +105,7 @@ def test_sec_index_spark_build_matches_driver_build(spark, tmp_path):
     # int operand on a bigint column: canonical form is reproducible
     out = t.snapshot(predicate=[("num", "=", 8 * 7)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
-    assert t.last_sec_index_pruned == 3
+    assert t.last_scan["sec_index"] == 3
     # Spark (not driver) build artifacts exist
     inst_dir = os.path.join(t.sec_index_dir, "001", "col=num")
     assert os.path.isdir(inst_dir)
@@ -127,10 +127,10 @@ def test_sec_index_unprobeable_operand_keeps_files(spark, tmp_path):
     write_four_interleaved(t, spark)
     out = t.snapshot(predicate=[("num", "=", float(8 * 7))])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
-    assert t.last_sec_index_pruned == 0
+    assert t.last_scan["sec_index"] == 0
     # str operand on a numeric column: same conservative keep
     t.snapshot(predicate=[("num", "=", "56")]).count()
-    assert t.last_sec_index_pruned == 0
+    assert t.last_scan["sec_index"] == 0
 
 
 def test_sec_index_mor_stale_winner_guard(spark, tmp_path):
@@ -153,11 +153,11 @@ def test_sec_index_mor_stale_winner_guard(spark, tmp_path):
     t.write(stale, op="upsert", instant="002")  # MOR: appends a delta
     out = t.snapshot(predicate=[("tag", "=", "stale-value")])
     assert out.count() == 0  # ver=2 base row wins; filter drops it
-    assert t.last_sec_index_pruned == 0  # base kept: key-overlaps delta
+    assert t.last_scan["sec_index"] == 0  # base kept: key-overlaps delta
     # read-optimized (base-only, no merge follows): pruning is free
     ro = t.read_optimized(predicate=[("tag", "=", "stale-value")])
     assert ro.count() == 0
-    assert t.last_sec_index_pruned == 1
+    assert t.last_scan["sec_index"] == 1
 
 
 def test_sec_index_pre_index_files_kept(spark, tmp_path):
@@ -182,7 +182,7 @@ def test_sec_index_pre_index_files_kept(spark, tmp_path):
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
     # only the indexed file 002 was prunable
-    assert t.last_sec_index_pruned == 1
+    assert t.last_scan["sec_index"] == 1
 
 
 def test_sec_index_config_growth_no_misprune(spark, tmp_path):
@@ -205,12 +205,12 @@ def test_sec_index_config_growth_no_misprune(spark, tmp_path):
     out = t2.snapshot(predicate=[("num", "=", 8 * 7)])  # even key: file 001
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
     # file 001 is NOT covered for num (kept); file 002 is and misses
-    assert t2.last_sec_index_pruned == 1
+    assert t2.last_scan["sec_index"] == 1
     # the old column stays fully covered: both files probeable
     v = tag_of(spark, 8)
     out = t2.snapshot(predicate=[("tag", "=", v)])
     assert out.count() == 1
-    assert t2.last_sec_index_pruned == 1
+    assert t2.last_scan["sec_index"] == 1
 
 
 def test_sec_index_absent_column_is_definite_miss(spark, tmp_path):
@@ -234,7 +234,7 @@ def test_sec_index_absent_column_is_definite_miss(spark, tmp_path):
     v = tag_of(spark, 9)
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [9]
-    assert t.last_sec_index_pruned == 1  # the tag-less file 001
+    assert t.last_scan["sec_index"] == 1  # the tag-less file 001
 
 
 def test_sec_index_survives_compaction_and_clean(spark, tmp_path):
@@ -262,7 +262,7 @@ def test_sec_index_survives_compaction_and_clean(spark, tmp_path):
     v = tag_of(spark, 8)
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert out.count() == 1
-    assert t.last_sec_index_pruned >= 1
+    assert t.last_scan["sec_index"] >= 1
 
 
 def test_sec_index_equivalence_sweep(spark, tmp_path):
@@ -319,13 +319,13 @@ def test_backfill_enables_pruning_without_rewrites(spark, tmp_path):
     t = sec_table(spark, tmp_path, name="bf")
     v = tag_of(spark, 8)
     t.snapshot(predicate=[("tag", "=", v)]).count()
-    assert t.last_sec_index_pruned == 0  # nothing covered yet
+    assert t.last_scan["sec_index"] == 0  # nothing covered yet
     inst = t.backfill_secondary_index()
     assert inst is not None
     assert {f["path"] for f in t._live_files()} == data_files  # no rewrite
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
-    assert t.last_sec_index_pruned == 3
+    assert t.last_scan["sec_index"] == 3
     assert t.backfill_secondary_index() is None  # idempotent
     assert t.snapshot().count() == base.count()
 
@@ -347,11 +347,11 @@ def test_backfill_config_growth_honors_existing_shards(spark, tmp_path):
     assert t2.backfill_secondary_index() is not None
     out = t2.snapshot(predicate=[("num", "=", 8 * 7)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
-    assert t2.last_sec_index_pruned == 1
+    assert t2.last_scan["sec_index"] == 1
     # the old column's coverage is intact too
     out = t2.snapshot(predicate=[("tag", "=", tag_of(spark, 9))])
     assert out.count() == 1
-    assert t2.last_sec_index_pruned == 1
+    assert t2.last_scan["sec_index"] == 1
 
 
 def test_backfill_timeline_semantics(spark, tmp_path):
@@ -373,7 +373,7 @@ def test_backfill_timeline_semantics(spark, tmp_path):
     assert t.snapshot().count() == base.count()  # data files survive
     # post-restore the files are un-covered again: conservative keep
     t.snapshot(predicate=[("tag", "=", tag_of(spark, 8))]).count()
-    assert t.last_sec_index_pruned == 0
+    assert t.last_scan["sec_index"] == 0
 
 
 def test_backfill_mor_with_deltas(spark, tmp_path):
@@ -398,10 +398,10 @@ def test_backfill_mor_with_deltas(spark, tmp_path):
     assert t.backfill_secondary_index() is not None
     out = t.snapshot(predicate=[("tag", "=", "stale")])
     assert out.count() == 0  # ver=2 base wins; guard kept the base file
-    assert t.last_sec_index_pruned == 0
+    assert t.last_scan["sec_index"] == 0
     ro = t.read_optimized(predicate=[("tag", "=", "stale")])
     assert ro.count() == 0
-    assert t.last_sec_index_pruned == 1
+    assert t.last_scan["sec_index"] == 1
 
 
 def test_backfill_record_index_enables_point_planning(spark, tmp_path):
@@ -445,7 +445,7 @@ def test_backfill_record_index_enables_point_planning(spark, tmp_path):
     assert t.backfill_record_index() is None  # idempotent
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
     assert [r["ver"] for r in out.select("ver").collect()] == [2]
-    assert t.last_record_read_pruned >= 3
+    assert t.last_scan["record_index"] >= 3
     # every row still present exactly once
     assert t.snapshot().count() == base.count()
 
@@ -618,7 +618,7 @@ def test_backfill_sec_index_spark_path_batched_by_schema_group(
     # exact probes on the backfilled long column AND the original tag
     out = t2.snapshot(predicate=[("num", "=", 8 * 7)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
-    assert t2.last_sec_index_pruned == 2
+    assert t2.last_scan["sec_index"] == 2
     out = t2.snapshot(predicate=[("tag", "=", tag_of(spark, 9))])
     assert out.count() == 1
     assert t2.snapshot().count() == base.count()
@@ -708,10 +708,10 @@ def test_backfill_retry_after_crash_appends_no_duplicates(spark, tmp_path):
                 assert len(rows) == len(set(rows)), (route, d)
         out = t.snapshot(predicate=[("_record_key", "=", "8")])
         assert [r["c_custkey"] for r in out.collect()] == [8]
-        assert t.last_record_read_pruned == 2
+        assert t.last_scan["record_index"] == 2
         out = t.snapshot(predicate=[("tag", "=", tag_of(spark, 8))])
         assert [r["c_custkey"] for r in out.collect()] == [8]
-        assert t.last_sec_index_pruned == 2
+        assert t.last_scan["sec_index"] == 2
 
 
 def test_leaked_stage_dir_is_not_probed(spark, tmp_path):
@@ -728,7 +728,7 @@ def test_leaked_stage_dir_is_not_probed(spark, tmp_path):
     )
     write_four_interleaved(t, spark)
     t.snapshot(predicate=[("_record_key", "=", "8")]).count()
-    want = t.last_record_read_pruned
+    want = t.last_scan["record_index"]
     assert want == 3
     wrong = next(
         f["path"] for f in t._live_files() if f["path"].startswith("data/002/")
@@ -741,4 +741,4 @@ def test_leaked_stage_dir_is_not_probed(spark, tmp_path):
     )
     out = t.snapshot(predicate=[("_record_key", "=", "8")])
     assert [r["c_custkey"] for r in out.collect()] == [8]
-    assert t.last_record_read_pruned == want
+    assert t.last_scan["record_index"] == want

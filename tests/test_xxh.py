@@ -60,7 +60,7 @@ def test_driver_probe_matches_spark_join_path(spark, tmp_path):
         rows = sorted(
             t.snapshot(predicate=[("_record_key", "=", key)]).collect()
         )
-        return rows, t.last_record_read_pruned
+        return rows, t.last_scan["record_index"]
 
     # default gates: driver-side pyarrow probe
     fast_rows, fast_pruned = pointread("7")
