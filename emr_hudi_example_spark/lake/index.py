@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from emr_hudi_example_spark.lake.columns import RECORD_KEY_COL
 from emr_hudi_example_spark.lake.xxh import shard_of as xxh_shard
 
 if TYPE_CHECKING:
@@ -277,8 +278,6 @@ class ValueIndex:
     def _distinct(schema: T.StructType) -> bool:
         """Record keys are unique per file by construction, so only
         non-key columns pay the (value, file) distinct."""
-        from emr_hudi_example_spark.lake.table import RECORD_KEY_COL
-
         return schema.fieldNames() != [RECORD_KEY_COL]
 
     def _driver_build(
