@@ -794,8 +794,8 @@ def pipe_stream_dedup_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(ind)
     )
     outd = os.path.join(base, "out")
-    # State shuffle sized to CORES, not scoped down to 8 (r12 profile,
-    # scripts/profile_slow_rows.py + knob sweep in BASELINE.md): the
+    # State shuffle sized to CORES, not scoped down to 8 (r12 profile
+    # and knob sweep in BASELINE.md "Round 12"): the
     # pandas-state operator is PYTHON-compute-bound, so fewer state
     # partitions serialize the per-batch work onto fewer workers —
     # 2 parts 13 s, 8 parts 4.8 s, 24-32 parts 2.8-3.3 s on local[32].

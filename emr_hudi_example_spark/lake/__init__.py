@@ -15,6 +15,7 @@ from emr_hudi_example_spark.lake.locks import (
     LockProvider,
     retry_on_contention,
 )
+from emr_hudi_example_spark.lake.prune import ScanReport
 from emr_hudi_example_spark.lake.table import (
     COMMIT_TIME_COL,
     ConcurrentWriteConflict,
@@ -41,6 +42,7 @@ __all__ = [
     "retry_on_contention",
     "ConcurrentWriteConflict",
     "LakeTable",
+    "ScanReport",
     "META_COLS",
     "COMMIT_TIME_COL",
     "RECORD_KEY_COL",

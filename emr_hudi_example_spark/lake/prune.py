@@ -1,23 +1,13 @@
-"""One stateless file planner: read and write pruning.
+"""One stateless file planner for reads and writes.
 
-The engine's analog of Hudi's index layer — bloom, bucket and
-record-index tagging plus the metadata table's column and partition
-stats, which the reference leaves to Hudi (``SRC/Log2Hudi.scala:78-79``,
-Hudi 0.11 in ``pom.xml:104``). A planning pass takes manifest file
-entries and returns the entries it kept as a :class:`Kept`, carrying a
-frozen :class:`ScanReport` of the files it considered and the files
-each layer dropped:
-
-- reads (:meth:`FilePlanner._plan_read`): bucket → record index →
-  partition stats → column stats → secondary index → column bloom;
-- writes (:meth:`FilePlanner._affected_files`): partition → bucket →
-  record index → key range → key bloom → key scan.
-
-The bucket and record-index layers are one implementation each, taking
-either literal keys (read operands, a collected point batch) or a key
-frame. :class:`FilePlanner` is mixed into ``LakeTable``: it reads the
-table's configuration, manifests and index components, and keeps no
-per-call state; its two caches are keyed by immutable instants.
+The engine's analog of the index layer the reference leaves to Hudi
+(bloom, bucket and record-index tagging, metadata-table column stats;
+``SRC/Log2Hudi.scala:78-79``, Hudi 0.11 in ``pom.xml:104``). A
+planning pass returns the manifest file entries it kept as a
+:class:`Kept`, carrying a frozen :class:`ScanReport` of what each layer
+dropped. :class:`FilePlanner` is mixed into ``LakeTable``: it reads the
+table's configuration, manifests and indexes and keeps no per-call
+state; its two caches are keyed by immutable instants.
 """
 
 from __future__ import annotations
@@ -33,10 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from emr_hudi_example_spark.lake.columns import (
-    PARTITION_PATH_COL,
-    RECORD_KEY_COL,
-)
+from emr_hudi_example_spark.lake.columns import PARTITION_PATH_COL, RECORD_KEY_COL
 from emr_hudi_example_spark.lake.xxh import shard_of as xxh_shard
 
 if TYPE_CHECKING:
@@ -400,62 +387,53 @@ class FilePlanner:
                 v = "col_bloom"  # stats passed, column bloom decided
             return v
 
-        layers = ("partition_stats", "col_stats", "sec_index", "col_bloom")
-        skipped = dict.fromkeys(layers, 0)
-        if not (self.is_mor and not all_base):
-            keep = []
-            for f in files:
-                v = layer_of(f)
-                if v is None:
-                    keep.append(f)
-                else:
-                    skipped[v] += 1
-        else:
-            # pass 1: a verdict per file; deltas are always retained
-            candidates: list[tuple[dict, str]] = []
-            retained: list[dict] = []
-            for f in files:
-                if f.get("rows") == 0:
-                    skipped["col_stats"] += 1  # rowless: cannot win a merge
-                elif f.get("kind", "base") != "base":
-                    retained.append(f)
-                elif (v := layer_of(f)) is not None:
-                    candidates.append((f, v))
-                else:
-                    retained.append(f)
-            # pass 2: a candidate skips only if key-disjoint from every
-            # retained file (unknown ranges are treated as overlapping)
-            retained_ranges = [
-                (f.get("key_min"), f.get("key_max")) for f in retained
-            ]
-
-            def overlaps_retained(f: dict) -> bool:
-                kmin, kmax = f.get("key_min"), f.get("key_max")
-                if kmin is None or kmax is None:
-                    return True  # unknown candidate key range: conservative
-                for rmin, rmax in retained_ranges:
-                    if rmin is None or rmax is None:
-                        return True  # unknown retained key range
-                    if not (rmax < kmin or rmin > kmax):
-                        return True
-                return False
-
-            kept_paths = {f["path"] for f in retained}
-            for f, v in candidates:
-                if overlaps_retained(f):
-                    kept_paths.add(f["path"])
-                else:
-                    skipped[v] += 1
-            # preserve input order (manifest order) for deterministic scans
-            keep = [f for f in files if f["path"] in kept_paths]
-        return Kept(
-            keep,
-            ScanReport(
-                considered,
-                tuple(pruned) + tuple(skipped.items()),
-                len(dead_parts),
-            ),
+        # pass 1: a verdict per file. Under the MOR merge, deltas are
+        # always retained and rowless files skip (they cannot win it).
+        mor = self.is_mor and not all_base
+        skipped = dict.fromkeys(
+            ("partition_stats", "col_stats", "sec_index", "col_bloom"), 0
         )
+        candidates: list[tuple[dict, str]] = []
+        retained: list[dict] = []
+        for f in files:
+            if mor and f.get("rows") == 0:
+                skipped["col_stats"] += 1
+            elif mor and f.get("kind", "base") != "base":
+                retained.append(f)
+            elif (v := layer_of(f)) is not None:
+                candidates.append((f, v))
+            else:
+                retained.append(f)
+        # pass 2: without the merge every candidate skips; under it a
+        # candidate skips only if key-disjoint from every retained file
+        # (unknown ranges are treated as overlapping)
+        retained_ranges = [
+            (f.get("key_min"), f.get("key_max")) for f in retained
+        ]
+
+        def overlaps_retained(f: dict) -> bool:
+            kmin, kmax = f.get("key_min"), f.get("key_max")
+            if kmin is None or kmax is None:
+                return True  # unknown candidate key range: conservative
+            for rmin, rmax in retained_ranges:
+                if rmin is None or rmax is None:
+                    return True  # unknown retained key range
+                if not (rmax < kmin or rmin > kmax):
+                    return True
+            return False
+
+        kept_paths = {f["path"] for f in retained}
+        for f, v in candidates:
+            if mor and overlaps_retained(f):
+                kept_paths.add(f["path"])
+            else:
+                skipped[v] += 1
+        # preserve input order (manifest order) for deterministic scans
+        keep = [f for f in files if f["path"] in kept_paths]
+        report = ScanReport(
+            considered, tuple(pruned) + tuple(skipped.items()), len(dead_parts)
+        )
+        return Kept(keep, report)
 
     @staticmethod
     def _predicate_condition(predicate: list[tuple]):

@@ -123,6 +123,16 @@ def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     )
 
 
+def _json_stems(d: str) -> list[str]:
+    """Names of the ``*.json`` files in directory ``d`` without the
+    suffix, ascending; [] when ``d`` does not exist."""
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        f[: -len(".json")] for f in os.listdir(d) if f.endswith(".json")
+    )
+
+
 class ConcurrentWriteConflict(RuntimeError):
     """Optimistic commit aborted: a concurrent commit invalidated this
     writer's read set, or out-ran its instant. The write published
@@ -411,13 +421,7 @@ class LakeTable(FilePlanner):
         table that has seen a lease takeover, manifests published by a
         superseded (fenced) writer are excluded — see
         :meth:`_zombie_instants`."""
-        if not os.path.isdir(self.commits_dir):
-            return []
-        names = sorted(
-            f[: -len(".json")]
-            for f in os.listdir(self.commits_dir)
-            if f.endswith(".json")
-        )
+        names = _json_stems(self.commits_dir)
         zombies = self._zombie_instants(names)
         if zombies:
             names = [i for i in names if i not in zombies]
@@ -553,27 +557,15 @@ class LakeTable(FilePlanner):
     def _full_timeline(self) -> list[str]:
         """Archived + active instants, ascending (archived always sort
         before the active window — archival moves a prefix)."""
-        arch = os.path.join(self.commits_dir, "_archived")
-        archived = (
-            sorted(
-                f[: -len(".json")]
-                for f in os.listdir(arch)
-                if f.endswith(".json")
-            )
-            if os.path.isdir(arch)
-            else []
-        )
-        return archived + self.timeline()
+        return self._archived() + self.timeline()
+
+    def _archived(self) -> list[str]:
+        """Archived instants, ascending."""
+        return _json_stems(os.path.join(self.commits_dir, "_archived"))
 
     def _checkpoints(self) -> list[str]:
         """Instants with a full live-file checkpoint, ascending."""
-        if not os.path.isdir(self.ckpt_dir):
-            return []
-        return sorted(
-            f[: -len(".json")]
-            for f in os.listdir(self.ckpt_dir)
-            if f.endswith(".json")
-        )
+        return _json_stems(self.ckpt_dir)
 
     def _live_files(self) -> list[dict]:
         last = self.last_instant()
@@ -737,16 +729,7 @@ class LakeTable(FilePlanner):
         archived commit, so ranges raise regardless (and ``begin is
         None`` — "from the beginning of time" — always overlaps the
         archived era)."""
-        arch = os.path.join(self.commits_dir, "_archived")
-        archived = (
-            sorted(
-                f[: -len(".json")]
-                for f in os.listdir(arch)
-                if f.endswith(".json")
-            )
-            if os.path.isdir(arch)
-            else []
-        )
+        archived = self._archived()
         if point and begin is not None and archived and begin < archived[0]:
             return  # pre-table point lookup: contractual empty view
         if (
@@ -1287,19 +1270,10 @@ class LakeTable(FilePlanner):
         the newest checkpoint-bearing commit out of the active
         timeline, and losing sight of it would silently re-apply a
         replayed batch."""
-        for i in reversed(self.timeline()):
-            cp = self._manifest(i).get("checkpoint")
+        for i in reversed(self._full_timeline()):
+            cp = self._manifest_any(i).get("checkpoint")
             if cp and cp.get("source_id") == source_id:
                 return cp
-        arch = os.path.join(self.commits_dir, "_archived")
-        if os.path.isdir(arch):
-            for f in sorted(os.listdir(arch), reverse=True):
-                if not f.endswith(".json"):
-                    continue
-                with open(os.path.join(arch, f)) as fh:
-                    cp = json.load(fh).get("checkpoint")
-                if cp and cp.get("source_id") == source_id:
-                    return cp
         return None
 
     def write(
@@ -2525,39 +2499,94 @@ class LakeTable(FilePlanner):
 
     # ------------------------------- index backfill (async indexing)
 
-    def _publish_backfill(
+    def _backfill(
         self,
         idx: ValueIndex,
-        files: list[dict],
-        builds: list[tuple[list[dict], T.StructType]],
+        cols: list[str],
+        covered: Callable[[dict], set[str]],
         stamp: Callable[[dict], dict],
     ) -> str | None:
-        """Shared tail of the two async indexers, under the writer lock:
-        sweep what a crashed predecessor left, build each ``(files,
-        schema)`` batch into the files' creating-instant dirs (named
-        for this backfill's instant), then record coverage with one
-        metadata-only ``index_backfill`` commit re-adding ``files`` as
-        ``stamp`` upgrades them."""
-        if not files:
-            return None
-        inst = self._next_instant(None)
-        idx.sweep(
-            {creating_instant(f["path"]) for f in files},
-            self._is_backfill_commit,
-        )
-        for fl, schema in builds:
-            groups: dict[str, list[dict]] = {}
-            for f in fl:
-                groups.setdefault(creating_instant(f["path"]), []).append(f)
-            idx.build(groups, schema, batch=inst)
-        self._write_manifest(
-            inst,
-            "index_backfill",
-            self._stored_schema(),
-            [stamp(f) for f in files],
-            [f["path"] for f in files],
-        )
-        return inst
+        """The one async indexer over ``cols`` behind
+        :meth:`backfill_record_index` and
+        :meth:`backfill_secondary_index` (Hudi's async indexer /
+        ``hoodie.metadata.index.async`` analog): index the live files
+        written before an index was enabled — or before a column
+        joined it — WITHOUT rewriting any data. At 100 TB this is the
+        difference between "index the table" costing one
+        column-pruned index scan versus a full rewrite of every file.
+
+        Under the writer lock: find the live files whose ``covered``
+        columns miss one of ``cols``, per creating instant; batch them
+        by the read schema of their missing columns (the record key
+        reads as the string the engine stamps; data columns read as
+        the creating commit's schema, and a file whose origin manifest
+        is unreadable stays un-covered — conservative keep-all); sweep
+        what a crashed predecessor left; build each batch into the
+        files' CREATING-instant dirs (where probes look — the dirs the
+        cleaner protects while the files are live), honoring each
+        dir's ``.nshards`` modulus and naming the parts for this
+        backfill's instant; then record coverage with one
+        metadata-only ``index_backfill`` commit that re-adds the files
+        as ``stamp`` upgrades them (the ordinary replaced+added replay
+        applies it — no new timeline semantics). Data files are
+        untouched; incremental/CDC readers are unaffected because
+        their row filters use the rows' original ``_commit_time``. A
+        racing optimistic writer that touched the same files sees a
+        (false but safe) publish conflict and retries. Idempotent:
+        returns None when every live file is covered."""
+        want = set(cols)
+        with self._writer_lock():
+            by_inst: dict[str, list[dict]] = {}
+            for f in self._live_files():
+                if not f.get("external") and not want <= covered(f):
+                    by_inst.setdefault(
+                        creating_instant(f["path"]), []
+                    ).append(f)
+            batches: dict[tuple, list[dict]] = {}
+            for inst, fl in sorted(by_inst.items()):
+                if want == {RECORD_KEY_COL}:
+                    schema = _KEY_SCHEMA
+                else:
+                    try:
+                        schema = T.StructType.fromJson(
+                            self._manifest_any(inst)["schema"]
+                        )
+                    except (FileNotFoundError, KeyError, ValueError):
+                        continue  # unreadable origin schema: un-covered
+                for f in fl:
+                    missing = want - covered(f)
+                    key = tuple(
+                        fld.json()
+                        for fld in schema.fields
+                        if fld.name in missing
+                    )
+                    batches.setdefault(key, []).append(f)
+            if not batches:
+                return None
+            files = [f for fl in batches.values() for f in fl]
+            inst = self._next_instant(None)
+            idx.sweep(
+                {creating_instant(f["path"]) for f in files},
+                self._is_backfill_commit,
+            )
+            for key, fl in sorted(batches.items()):
+                groups: dict[str, list[dict]] = {}
+                for f in fl:
+                    groups.setdefault(
+                        creating_instant(f["path"]), []
+                    ).append(f)
+                schema = T.StructType(
+                    [T.StructField.fromJson(json.loads(j)) for j in key]
+                )
+                idx.build(groups, schema, batch=inst)
+            self._write_manifest(
+                inst,
+                "index_backfill",
+                self._stored_schema(),
+                [stamp(f) for f in files],
+                [f["path"] for f in files],
+            )
+            return inst
 
     def _is_backfill_commit(self, instant: str) -> bool:
         try:
@@ -2571,102 +2600,39 @@ class LakeTable(FilePlanner):
         indexer building the metadata-table ``record_index`` partition
         for an existing table): the record index only probes under FULL
         coverage, so enabling it mid-life leaves planning on the scan
-        path until every pre-index file happens to be rewritten. This
-        builds (key → file) rows for the un-covered live files into
-        their creating-instant dirs (honoring each dir's ``.nshards``
-        modulus; the cleaner protects a dir while its instant owns live
-        files) and records coverage with one metadata-only
-        ``index_backfill`` commit — same mechanics as
-        :meth:`backfill_secondary_index`, no data file rewritten.
-        Idempotent."""
+        path until every pre-index file happens to be rewritten. Builds
+        (key → file) rows for the un-covered live files and stamps them
+        ``indexed`` — see :meth:`_backfill`. Idempotent."""
         if not self.record_index:
             return None
-        with self._writer_lock():
-            todo = [
-                f
-                for f in self._live_files()
-                if not f.get("external") and not f.get("indexed")
-            ]
-            return self._publish_backfill(
-                self._record_idx,
-                todo,
-                [(todo, _KEY_SCHEMA)],
-                lambda f: {**f, "indexed": True},
-            )
+        return self._backfill(
+            self._record_idx,
+            [RECORD_KEY_COL],
+            lambda f: {RECORD_KEY_COL} if f.get("indexed") else set(),
+            lambda f: {**f, "indexed": True},
+        )
 
     def backfill_secondary_index(self) -> str | None:
-        """Async metadata indexing (Hudi's async indexer /
-        ``hoodie.metadata.index.async`` analog): build secondary-index
-        coverage for live files written BEFORE the index was enabled —
-        or before a column joined the config — WITHOUT rewriting any
-        data. At 100 TB this is the difference between "index the
-        table" costing one column-pruned index scan versus a full
-        rewrite of every file.
-
-        Mechanics: index rows land in each file's CREATING-instant dir
-        (where probes look — the dir the cleaner already protects while
-        the file is live), honoring that dir's existing ``.nshards``
-        modulus; coverage is then recorded by one metadata-only
-        ``index_backfill`` commit that re-adds the same file records
-        with upgraded ``sec_cols`` stamps (the ordinary replaced+added
-        replay applies them — no new timeline semantics). Data files
-        are untouched; incremental/CDC readers are unaffected because
-        their row filters use the rows' original ``_commit_time``.
-        Files whose origin manifest is unreadable are left un-covered
-        (conservative keep-all, exactly as before the backfill).
-        Instants whose missing columns resolve to the same (name, type)
-        read schema share one build. Runs under the writer lock; a
-        racing optimistic writer that touched the same files will see a
-        (false but safe) publish conflict and retry. Idempotent:
-        returns None when every live file is already covered."""
+        """Async metadata indexing for the secondary index: builds
+        (value → file) rows for every ``secondary_index_columns``
+        column a live file is not yet covered for — files written
+        before the index was enabled, or before a column joined the
+        config — and upgrades the files' ``sec_cols`` stamps; see
+        :meth:`_backfill`. Instants whose missing columns resolve to
+        the same (name, type) read schema share one build.
+        Idempotent."""
         if not self.secondary_index_columns:
             return None
         want = set(self.secondary_index_columns)
-        with self._writer_lock():
-            by_inst: dict[str, list[dict]] = {}
-            for f in self._live_files():
-                if not f.get("external") and not want <= set(
-                    f.get("sec_cols") or ()
-                ):
-                    by_inst.setdefault(
-                        creating_instant(f["path"]), []
-                    ).append(f)
-            batches: dict[tuple, list[dict]] = {}
-            for inst, fl in sorted(by_inst.items()):
-                try:
-                    schema = T.StructType.fromJson(
-                        self._manifest_any(inst)["schema"]
-                    )
-                except (FileNotFoundError, KeyError, ValueError):
-                    continue  # unreadable origin schema: stay un-covered
-                for f in fl:
-                    missing = want - set(f.get("sec_cols") or ())
-                    key = tuple(
-                        fld.json()
-                        for fld in schema.fields
-                        if fld.name in missing
-                    )
-                    batches.setdefault(key, []).append(f)
-            return self._publish_backfill(
-                self._sec_idx,
-                [f for fl in batches.values() for f in fl],
-                [
-                    (
-                        fl,
-                        T.StructType(
-                            [
-                                T.StructField.fromJson(json.loads(j))
-                                for j in key
-                            ]
-                        ),
-                    )
-                    for key, fl in sorted(batches.items())
-                ],
-                lambda f: {
-                    **f,
-                    "sec_cols": sorted(set(f.get("sec_cols") or ()) | want),
-                },
-            )
+        return self._backfill(
+            self._sec_idx,
+            self.secondary_index_columns,
+            lambda f: set(f.get("sec_cols") or ()),
+            lambda f: {
+                **f,
+                "sec_cols": sorted(set(f.get("sec_cols") or ()) | want),
+            },
+        )
 
     def _merge(self, old: DataFrame, batch: DataFrame) -> DataFrame:
         """Larger-precombine-wins merge, ties → incoming row — exactly
@@ -3336,13 +3302,7 @@ class LakeTable(FilePlanner):
             pass
 
     def savepoints(self) -> list[str]:
-        if not os.path.isdir(self.savepoint_dir):
-            return []
-        return sorted(
-            f[: -len(".json")]
-            for f in os.listdir(self.savepoint_dir)
-            if f.endswith(".json")
-        )
+        return _json_stems(self.savepoint_dir)
 
     # ------------------------------------------------------------- restore
 
@@ -3374,14 +3334,10 @@ class LakeTable(FilePlanner):
                 for f in self._manifest(i)["added"]
             }
             keep_files |= {f["path"] for f in self._live_files_at(instant)}
-            arch = os.path.join(self.commits_dir, "_archived")
-            if os.path.isdir(arch):
-                for fn in os.listdir(arch):
-                    if fn.endswith(".json"):
-                        with open(os.path.join(arch, fn)) as fh:
-                            keep_files |= {
-                                f["path"] for f in json.load(fh)["added"]
-                            }
+            for i in self._archived():
+                keep_files |= {
+                    f["path"] for f in self._manifest_any(i)["added"]
+                }
             for i in doomed:
                 for f in self._manifest(i)["added"]:
                     if f["path"] in keep_files or f.get("external"):
@@ -3771,14 +3727,7 @@ class LakeTable(FilePlanner):
 
     def pending_compactions(self) -> list[str]:
         """Scheduled-but-unexecuted plan ids, ascending."""
-        pdir = os.path.join(self.commits_dir, "_compaction")
-        if not os.path.isdir(pdir):
-            return []
-        return sorted(
-            f[: -len(".json")]
-            for f in os.listdir(pdir)
-            if f.endswith(".json")
-        )
+        return _json_stems(os.path.join(self.commits_dir, "_compaction"))
 
     def run_compaction(
         self,

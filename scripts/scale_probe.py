@@ -25,6 +25,7 @@ in BASELINE.md.
 from __future__ import annotations
 
 import json
+import os
 import shutil
 import sys
 import time
@@ -32,6 +33,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF_DIR = "/root/testdata/sf0.1"
 WORK = "/tmp/scale_probe"
 
@@ -185,7 +187,8 @@ def run_probe(
 
     def _point_read():
         out = ti.snapshot(predicate=[("_record_key", "=", probe_key)])
-        return {"rows": out.count(), "read_pruned": ti.last_record_read_pruned}
+        pruned = ti.last_scan["record_index"]
+        return {"rows": out.count(), "read_pruned": pruned}
 
     recs.append(timed("record_index_pointread_1024", mult, _point_read))
 
@@ -215,7 +218,7 @@ def run_probe(
         out = ti4.snapshot(predicate=[("_record_key", "=", probe_key)])
         return {
             "rows": out.count(),
-            "read_pruned": ti4.last_record_read_pruned,
+            "read_pruned": ti4.last_scan["record_index"],
         }
 
     recs.append(timed("record_index_pointread_4096", mult, _point_read_4k))
@@ -250,7 +253,7 @@ def run_probe(
         out = tb.snapshot(predicate=[("_record_key", "=", probe_key)])
         return {
             "rows": out.count(),
-            "bucket_pruned": tb.last_bucket_read_pruned,
+            "bucket_pruned": tb.last_scan["bucket"],
         }
 
     recs.append(timed("bucket_mor_pointread", mult, _bucket_point))
@@ -285,7 +288,7 @@ def run_probe(
         )
         return {
             "rows": out.count(),
-            "partitions_pruned": tp.last_partitions_pruned,
+            "partitions_pruned": tp.last_scan.partitions_pruned,
         }
 
     recs.append(timed("partition_stats_prune_read", mult, _pstats_read))
@@ -312,7 +315,7 @@ def run_probe(
 
     def _fn_read():
         out = tf.snapshot(predicate=[("year(o_orderdate)", "=", 1997)])
-        return {"rows": out.count(), "files_skipped": tf.last_files_skipped}
+        return {"rows": out.count(), "files_skipped": tf.last_scan.dropped}
 
     recs.append(timed("functional_index_read", mult, _fn_read))
 
@@ -345,13 +348,13 @@ def run_probe(
 
     def _sec_miss():
         out = ts.snapshot(predicate=[("tag", "=", "no-such-hash")])
-        return {"rows": out.count(), "sec_pruned": ts.last_sec_index_pruned}
+        return {"rows": out.count(), "sec_pruned": ts.last_scan["sec_index"]}
 
     recs.append(timed("sec_index_missing_read", mult, _sec_miss))
 
     def _sec_hit():
         out = ts.snapshot(predicate=[("tag", "=", one_tag)])
-        return {"rows": out.count(), "sec_pruned": ts.last_sec_index_pruned}
+        return {"rows": out.count(), "sec_pruned": ts.last_scan["sec_index"]}
 
     recs.append(timed("sec_index_hit_read", mult, _sec_hit))
 
@@ -635,14 +638,12 @@ def main() -> None:
         for a in args
         if a not in ("--lake-only", "--ext-only", "--pipe-only", "--ann-only")
     ] or [1, 5, 25]
-    sys.path.insert(0, "/root/repo")
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.driver.memory", "48g")
-        .appName("scale-probe")
-        .getOrCreate()
+    sys.path.insert(0, ROOT)
+    from emr_hudi_example_spark.session import get_spark_session
+
+    # cores and shuffle partitions from $SPARK_GRAFT_CPUS
+    spark = get_spark_session(
+        app_name="scale-probe", extra_conf={"spark.driver.memory": "48g"}
     )
     spark.sparkContext.setLogLevel("ERROR")
     all_recs = []

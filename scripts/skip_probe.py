@@ -1,8 +1,9 @@
 """Driver-side cost probe for column-stats file skipping.
 
 Predicate reads prune files by evaluating the predicate against per-file
-min/max already resident in the manifest (``LakeTable._stats_prune``) —
-pure Python over JSON dicts, no Spark job, no I/O. This probe times that
+min/max already resident in the manifest (the read planner,
+``FilePlanner._plan_read`` in ``lake/prune.py``) — pure Python over JSON
+dicts, no Spark job, no I/O. This probe times that
 planning loop at 1k / 10k / 100k live files (100k files ≈ a 100 TB table
 at 1 GB per file) to show the 100 TB planning cost is milliseconds on
 the driver.
@@ -56,12 +57,12 @@ def main() -> None:
     print("|---|---|---|")
     for n in (1_000, 10_000, 100_000):
         files = synth_files(n)
-        t._stats_prune(files, pred)  # warm
+        t._plan_read(files, pred)  # warm
         t0 = time.perf_counter()
-        kept = t._stats_prune(files, pred)
+        kept = t._plan_read(files, pred)
         ms = (time.perf_counter() - t0) * 1000
         assert len(kept) == 10
-        print(f"| {n:,} | {ms:.1f} ms | {t.last_files_skipped:,} |")
+        print(f"| {n:,} | {ms:.1f} ms | {kept.report.dropped:,} |")
 
 
 if __name__ == "__main__":

@@ -5127,19 +5127,32 @@ _LAYER_PREDICATES = {
 }
 
 
+@pytest.fixture(scope="module")
+def report_tables(spark, tmp_path_factory):
+    """One table per type with every read layer configured, shared by
+    the read-accounting cases (they only read)."""
+    built = {}
+
+    def get(table_type):
+        if table_type not in built:
+            built[table_type] = _report_table(
+                spark, tmp_path_factory.mktemp("rep"), "rep",
+                table_type=table_type, stats_columns=["price"],
+                bucket_index=2, record_index=True,
+                secondary_index_columns=["tag"], bloom_columns=["tag2"],
+            )
+        return built[table_type]
+
+    return get
+
+
 @pytest.mark.parametrize("layer", sorted(_LAYER_PREDICATES))
 @pytest.mark.parametrize("table_type", ["COPY_ON_WRITE", "MERGE_ON_READ"])
-def test_scan_report_accounts_for_every_read(
-    spark, tmp_path, table_type, layer
-):
+def test_scan_report_accounts_for_every_read(report_tables, table_type, layer):
     """Each read layer prunes, and for every read the report accounts
     for exactly the files the scan opens: considered − Σ pruned ==
     ``len(df.inputFiles())``."""
-    t = _report_table(
-        spark, tmp_path, "rep", table_type=table_type, stats_columns=["price"],
-        bucket_index=2, record_index=True, secondary_index_columns=["tag"],
-        bloom_columns=["tag2"],
-    )
+    t = report_tables(table_type)
     pred = _LAYER_PREDICATES[layer]
     reads = [
         lambda: t.snapshot(predicate=pred),
