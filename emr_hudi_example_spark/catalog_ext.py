@@ -22,7 +22,7 @@ from emr_hudi_example_spark.operators import text as TX
 
 # ---------------------------------------------------------------- SQL bits
 
-_TOKS = "string_split_regex(trim(text), '\\s+')"
+_TOKS = "string_split_regex(trim(text, ' \t\n\r\f'), '\\s+')"
 
 
 def _shingles_sql(k: int, toks: str = "tk") -> str:
@@ -139,16 +139,16 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     "text_fingerprints",
     oracle=f"""
     WITH t AS (SELECT doc_id, text,
-                      string_split_regex(trim(lower(text)), '\\s+') AS ltk
+                      string_split_regex(trim(lower(text), ' \t\n\r\f'), '\\s+') AS ltk
                FROM documents)
     SELECT doc_id,
-           md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+           md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ', 'g')) AS fp,
            -- short docs (< k tokens) fall back to the exact-content
            -- fingerprint (r13, lockstep with rolling_fingerprint)
            coalesce(
              list_min(list_transform({_shingles_sql(5, "ltk")},
                                      s -> md5(s))),
-             md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
+             md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ', 'g'))
            ) AS rolling_fp
     FROM t
     """,
@@ -170,7 +170,7 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_exact",
     oracle="""
-    SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp,
+    SELECT md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ', 'g')) AS fp,
            min(doc_id) AS keep_id, count(*) AS n_dups
     FROM documents GROUP BY 1
     """,
@@ -460,7 +460,7 @@ def dedup_embedding_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep AS (
       SELECT min(doc_id) AS doc_id
       FROM documents
-      GROUP BY md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')))
+      GROUP BY md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ', 'g')))
     SELECT s.doc_id, s.n_tokens, s.quality
     FROM scored s JOIN keep k ON s.doc_id = k.doc_id
     WHERE s.quality >= 0.6
@@ -1444,7 +1444,7 @@ def corpus_resample_boost(spark: SparkSession, sf_dir: str) -> DataFrame:
     return C.apply_mixture_boost(load(spark, sf_dir, "documents"))
 
 
-_MD5_NORM = "md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))"
+_MD5_NORM = "md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ', 'g'))"
 
 
 @query(
@@ -1487,7 +1487,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
                  trim(para) AS para
           FROM px WHERE length(trim(para)) > 0),
     f AS (SELECT doc_id, para_idx,
-                 md5(regexp_replace(lower(trim(para)), '\\s+', ' ', 'g'))
+                 md5(regexp_replace(lower(trim(para, ' \t\n\r\f')), '\\s+', ' ', 'g'))
                    AS fp
           FROM p)
     SELECT fp, doc_id, para_idx,
@@ -1526,7 +1526,7 @@ def dedup_paragraphs(spark: SparkSession, sf_dir: str) -> DataFrame:
                  trim(para) AS para
           FROM px WHERE length(trim(para)) > 0),
     f AS (SELECT doc_id, para_idx, para,
-                 md5(regexp_replace(lower(trim(para)), '\\s+', ' ', 'g'))
+                 md5(regexp_replace(lower(trim(para, ' \t\n\r\f')), '\\s+', ' ', 'g'))
                    AS fp
           FROM p),
     surv AS (SELECT fp, doc_id AS keep_id, para_idx AS keep_idx
@@ -1570,7 +1570,7 @@ def dedup_paragraph_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_split_leakage_safe",
     oracle="""
     WITH f AS (SELECT doc_id,
-                      md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
+                      md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ',
                                          'g')) AS fp
                FROM documents),
     b AS (SELECT doc_id, fp,
@@ -1901,7 +1901,7 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                  trim(line) AS line
           FROM lx WHERE length(trim(line)) > 0),
     f AS (SELECT doc_id, line_idx, line,
-                 md5(regexp_replace(lower(trim(line)), '\\s+', ' ', 'g'))
+                 md5(regexp_replace(lower(trim(line, ' \t\n\r\f')), '\\s+', ' ', 'g'))
                    AS fp
           FROM l),
     bp AS (SELECT fp
@@ -2463,7 +2463,7 @@ def corpus_rarity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     "dedup_soft_weights",
     oracle="""
     WITH k AS (SELECT doc_id,
-                      md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
+                      md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ',
                                          'g')) AS fp
                FROM documents),
     c AS (SELECT fp, count(*) AS dup_count FROM k GROUP BY 1)
@@ -2707,11 +2707,11 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     "corpus_dedup_funnel",
     oracle="""
     WITH f AS (SELECT doc_id,
-                      md5(regexp_replace(lower(trim(text)), '\\s+', ' ',
+                      md5(regexp_replace(lower(trim(text, ' \t\n\r\f')), '\\s+', ' ',
                                          'g')) AS fp,
                       n_chars, text
                FROM documents),
-    p AS (SELECT md5(regexp_replace(lower(trim(para)), '\\s+', ' ', 'g'))
+    p AS (SELECT md5(regexp_replace(lower(trim(para, ' \t\n\r\f')), '\\s+', ' ', 'g'))
                    AS pfp
           FROM (SELECT unnest(str_split(text, chr(10) || chr(10))) AS para
                 FROM f)

@@ -712,7 +712,7 @@ def pipe_stream_runsum_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
                  trim(para) AS para
           FROM px WHERE length(trim(para)) > 0),
     f AS (SELECT doc_id, para_idx,
-                 md5(regexp_replace(lower(trim(para)), '\\s+', ' ', 'g'))
+                 md5(regexp_replace(lower(trim(para, ' \t\n\r\f')), '\\s+', ' ', 'g'))
                    AS fp
           FROM p),
     m AS (SELECT fp, CAST(min(doc_id % 2) AS INT) AS first_batch

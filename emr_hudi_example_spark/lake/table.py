@@ -83,6 +83,7 @@ from py4j.protocol import Py4JJavaError
 
 from emr_hudi_example_spark.functions.core import now_instant, pk_not_null_condition
 from emr_hudi_example_spark.lake import bloom as bloom_mod
+from emr_hudi_example_spark.lake import fold as fold_mod
 from emr_hudi_example_spark.lake.columns import (
     COMMIT_TIME_COL,
     DELETED_COL,
@@ -1903,9 +1904,10 @@ class LakeTable(FilePlanner):
         ``(ver=5, c=null)`` + one batch ``{(3,B),(4,C)}`` read ``C`` on
         COW but fill-first ``B`` on MOR (the r12 ADVICE finding, pinned
         by ``tests/test_lake.py::
-        test_partial_update_duplicate_keys_in_batch``). One hash
-        aggregation over the batch (map-side combinable, batch-sized —
-        the same shuffle Hudi's combine-before-upsert pays). The
+        test_partial_update_duplicate_keys_in_batch``). One
+        aggregation over the batch (a partial aggregate before the
+        shuffle, batch-sized — the same shuffle Hudi's
+        combine-before-upsert pays). The
         default payload is untouched: there the whole-row max-by folds
         already collapse in-batch duplicates identically on both table
         types, and the insert duplicate-key contract stays as
@@ -1937,8 +1939,11 @@ class LakeTable(FilePlanner):
         (``part_cols`` group): whole-row columns (meta, precombine,
         tombstone flag, ``extra_whole``) follow the max-``order`` row;
         every data column takes its max-``order`` NON-NULL version,
-        falling back to the winner's (all-null) value. One hash
-        aggregation, map-side combinable. (:meth:`_merged_read` is the
+        falling back to the winner's (all-null) value. One
+        aggregation with a partial aggregate before the shuffle; Spark
+        plans it as a ``SortAggregate`` (a ``Sort`` on each side of the
+        exchange), because a struct ``max_by`` buffer is not a mutable
+        fixed-width one. (:meth:`_merged_read` is the
         read-side twin with commit-time eligibility — a different
         contract, intentionally not unified.)"""
         winner = F.max_by(F.struct(*df.columns), order).alias("_r")
@@ -2262,8 +2267,11 @@ class LakeTable(FilePlanner):
         entries ``files`` (None: unknown): newest surviving row per key.
         Data rows committed before a key's newest tombstone are dead
         (matching the COW delete-then-reinsert semantics exactly); among
-        the live rows the ``(precombine, _commit_time)`` max wins. Hash
-        aggregations with map-side partial combine — no sort.
+        the live rows the ``(precombine, _commit_time)`` max wins.
+        Aggregations with a partial aggregate before the shuffle; Spark
+        plans them as ``SortAggregate``s with a ``Sort`` on each side of
+        the exchange (struct ``max_by`` and string ``max`` buffers are
+        not mutable fixed-width, so no hash aggregate serves them).
 
         The tombstone sub-plan (a ``groupBy`` of the tombstones joined
         back onto the data rows — one shuffle job and one broadcast job
@@ -2339,7 +2347,8 @@ class LakeTable(FilePlanner):
             # supersedes everything before it — else the FIRST non-null
             # version ever (it filled the null owner, and later
             # non-eligible versions can never overwrite a non-null).
-            # Two hash aggs per column + one running-max window; the
+            # Two aggregate functions per column + one running-max
+            # window (its sort also orders the aggregation input); the
             # window only on partial_update tables, and versions per
             # key between compactions are few by design. (The
             # fill-from-stale leg was missing before r11: MOR read
@@ -2452,9 +2461,15 @@ class LakeTable(FilePlanner):
         column arriving at a WIDER primitive type (int→long,
         float→double, …) widens the column in place (see
         :meth:`_widen`). No history rewrite: evolution is
-        metadata-only, exactly the COW-cheap path.
+        metadata-only, exactly the COW-cheap path. A batch that already
+        has the stored columns, in order and at their types, is returned
+        as it is: nothing to cast, and no per-column projection to build.
         """
         stored = self._stored_schema()
+        if [(f.name, f.dataType) for f in batch.schema.fields] == [
+            (f.name, f.dataType) for f in stored.fields
+        ]:
+            return batch
         stored_names = [f.name for f in stored.fields]
         batch_fields = {f.name: f for f in batch.schema.fields}
         cols = []
@@ -2640,10 +2655,12 @@ class LakeTable(FilePlanner):
         ``max_by`` over the key with ordering ``(precombine, _is_new)``.
         Handles intra-batch duplicates in the same pass.
 
-        Hash aggregation, not a sort-window: partial (map-side) combine
-        collapses duplicate keys before the shuffle and no per-partition
-        sort is needed — the cheaper plan at every scale, and ~25% faster
-        even at fixture scale. Null precombine loses to any non-null
+        An aggregation, not a sort-window: the partial aggregate
+        collapses duplicate keys before the shuffle, and the plan was
+        ~25% faster than the window even at fixture scale. It is not a
+        hash aggregation: Spark plans the struct ``max_by`` as a
+        ``SortAggregate``, with a ``Sort`` on each side of the exchange.
+        Null precombine loses to any non-null
         (struct comparison ranks null lowest), matching the window
         ``desc``-nulls-last behavior it replaces."""
         old = old.withColumn("_is_new", F.lit(0))
@@ -2666,9 +2683,9 @@ class LakeTable(FilePlanner):
         # inherits the stored value, so producers can upsert sparse
         # column patches. Meta columns, the precombine and anything the
         # fold can't see a non-null value for follow the overall winner.
-        # Still ONE hash aggregation (a max_by per column, all with
-        # map-side partial combine): same shuffle shape as the default
-        # payload at any scale. This is the COW (write-time) fold;
+        # Still ONE aggregation (a max_by per column, all in the same
+        # partial + final SortAggregate): same shuffle shape as the
+        # default payload at any scale. This is the COW (write-time) fold;
         # deletes materialize eagerly here, so inheritance can never
         # look through a tombstone. The MOR twin folds at read/compact
         # (:meth:`_merged_read`), where the tombstone filter precedes
@@ -2733,11 +2750,21 @@ class LakeTable(FilePlanner):
         if pt_cols:
             w = w.partitionBy(*pt_cols)
         w.parquet(out_dir)
+        return self._describe_data_files(out_dir, kind)
 
+    def _describe_data_files(self, out_dir: str, kind: str) -> list[dict]:
+        """Manifest entries for the parquet files under ``out_dir`` (one
+        commit's data dir), from the layout and each file's footer:
+        partition values and bucket from the ``__pt_``/``__bk=`` dirs,
+        ``rows``, ``key_min``/``key_max``, ``col_stats``, ``bytes`` and
+        on MOR ``tombstones``. The one describer behind both writers, the
+        Spark write and the in-driver fold (``lake/fold.py``). Hidden
+        names (``.``/``_`` prefixes: checksums, markers, temp files) are
+        not data files."""
         walked: list[tuple[str, str, dict, int | None, str]] = []
         for root, _dirs, files in os.walk(out_dir):
             for fn in files:
-                if not fn.endswith(".parquet"):
+                if not fn.endswith(".parquet") or fn[0] in "._":
                     continue
                 full = os.path.join(root, fn)
                 rel = os.path.relpath(full, self.path)
@@ -2830,25 +2857,31 @@ class LakeTable(FilePlanner):
         index, the analog of what Hudi's metadata table stores per file.
         Stored in the manifest so upsert/delete planning AND predicate
         reads can prune files entirely driver-side. A column with any
-        stats-less row group maps to None (conservative: unprunable)."""
+        stats-less row group, or whose stats pyarrow cannot convert
+        (INT64-backed decimals, ``timestamp_ntz``), maps to None
+        (conservative: unprunable) without costing the other columns
+        theirs."""
         out: dict[str, tuple | None] = {c: None for c in cols}
         out["__rows__"] = None
-        try:
-            import pyarrow.parquet as pq
+        import pyarrow.parquet as pq
 
+        try:
             md = pq.ParquetFile(path).metadata
-            out["__rows__"] = (md.num_rows, md.num_rows)
-            if md.num_row_groups == 0:
-                return out
-            idx_by_name = {
-                md.row_group(0).column(i).path_in_schema: i
-                for i in range(md.num_columns)
-            }
-            for c in cols:
-                i = idx_by_name.get(c)
-                if i is None:
-                    continue
-                mins, maxs = [], []
+        except Exception:
+            return out  # stats are an optimization, never required
+        out["__rows__"] = (md.num_rows, md.num_rows)
+        if md.num_row_groups == 0:
+            return out
+        idx_by_name = {
+            md.row_group(0).column(i).path_in_schema: i
+            for i in range(md.num_columns)
+        }
+        for c in cols:
+            i = idx_by_name.get(c)
+            if i is None:
+                continue
+            mins, maxs = [], []
+            try:
                 for rg in range(md.num_row_groups):
                     st = md.row_group(rg).column(i).statistics
                     if st is None or not st.has_min_max:
@@ -2856,10 +2889,10 @@ class LakeTable(FilePlanner):
                         break
                     mins.append(st.min)
                     maxs.append(st.max)
-                if mins:
-                    out[c] = (min(mins), max(maxs))
-        except Exception:
-            pass  # stats are an optimization, never required
+            except Exception:
+                continue  # stats pyarrow cannot convert: unprunable
+            if mins:
+                out[c] = (min(mins), max(maxs))
         return out
 
     @staticmethod
@@ -3463,7 +3496,17 @@ class LakeTable(FilePlanner):
         fresh base files under ``inst``. On MOR the deltas and
         tombstones fold in; the rows keep their ``_commit_time`` and
         the column set stays the stored schema (all-false ``_deleted``)
-        so later reads are uniform."""
+        so later reads are uniform.
+
+        Files under the shared driver gate, of a table shape
+        ``lake/fold.py`` serves, fold in-driver with pyarrow: the same
+        rows, one key-sorted file, no Spark job. Everything else folds
+        through Spark below."""
+        out_dir = os.path.join(self.data_dir, inst)
+        if fold_mod.fold(
+            self, files, out_dir, target_files_per_partition, sort_by
+        ):
+            return self._describe_data_files(out_dir, "base")
         df = self._read_files([f["path"] for f in files])
         if self.is_mor:
             df = self._merged_read(df, files).withColumn(

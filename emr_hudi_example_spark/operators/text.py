@@ -30,14 +30,27 @@ LANG_STOPWORDS: dict[str, list[str]] = {
 }
 
 
+#: the characters ``tokens`` and ``normalize_text`` trim from both ends:
+#: the regex ``\s`` class of DuckDB's RE2 oracles. Spark's one-argument
+#: ``trim`` strips spaces only, so a document starting with a tab split
+#: into a leading empty token.
+_WS = " \t\n\r\f"
+
+
+def _trim_ws(c: Column) -> Column:
+    # a bare string names a column: the set goes in as a literal
+    return F.trim(c, F.lit(_WS))
+
+
 def tokens(text: Column | str) -> Column:
-    """Whitespace tokenization (trim first so trailing blanks don't emit
-    empty tokens mid-document). NOTE: a fully empty/whitespace-only
-    document yields ``['']`` — one empty token — in BOTH Spark and the
-    DuckDB oracle (identical split semantics, so parity holds); callers
-    feeding possibly-empty documents should pre-filter them."""
+    """Whitespace tokenization (trim first so leading and trailing
+    whitespace don't emit empty tokens). NOTE: a fully
+    empty/whitespace-only document yields ``['']`` — one empty token —
+    in BOTH Spark and the DuckDB oracle (identical split semantics, so
+    parity holds); callers feeding possibly-empty documents should
+    pre-filter them."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.split(F.trim(c), r"\s+")
+    return F.split(_trim_ws(c), r"\s+")
 
 
 def token_count(text: Column | str) -> Column:
@@ -109,7 +122,7 @@ def lang_id(text: Column | str) -> Column:
 def normalize_text(text: Column | str) -> Column:
     """Lowercase + collapse whitespace — canonical form for hashing."""
     c = F.col(text) if isinstance(text, str) else text
-    return F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")
+    return F.regexp_replace(F.lower(_trim_ws(c)), r"\s+", " ")
 
 
 def fingerprint(text: Column | str) -> Column:

@@ -11,12 +11,14 @@ cluster. Documents are key-shifted WITHOUT text perturbation, matching
 the round-1 probe: the resulting clone clusters are a worst-case
 duplicate-heavy corpus and exercise the LSH skew caps for real.
 
-Usage: python scripts/scale_probe.py [--lake-only|--ext-only|--pipe-only]
-[mult ...] (default mults: 1 5 25; ``--lake-only`` runs just the
-lake-kernel legs — point reads, index/sidecar builds, bucket MOR — for
-the deep 100× runs where the corpus operators would dominate
+Usage: python scripts/scale_probe.py [--lake-only|--ext-only|--pipe-only|
+--compact-only] [mult ...] (default mults: 1 5 25; ``--lake-only`` runs
+just the lake-kernel legs — point reads, index/sidecar builds, bucket
+MOR — for the deep 100× runs where the corpus operators would dominate
 wall-clock; ``--ext-only`` the dedup/ANN extension legs;
-``--pipe-only`` the streaming-state + medallion legs, r13)
+``--pipe-only`` the streaming-state + medallion legs, r13;
+``--compact-only`` the in-driver compaction fold against the Spark fold
+on a medallion-shaped ODS table, e.g. ``--compact-only 1 10 100``)
 Writes scaled parquet under /tmp/scale_probe/ and prints one JSON line
 per (multiplier, operator) plus a summary table; results are recorded
 in BASELINE.md.
@@ -627,17 +629,122 @@ def run_ann_probe(spark: SparkSession, mult: int) -> list[dict]:
     return recs
 
 
+class _PeakRss:
+    """Peak resident-set growth of some processes over a ``with`` block,
+    sampled every 10 ms from ``/proc/<pid>/statm`` (Linux)."""
+
+    def __init__(self, pids: dict[str, int]) -> None:
+        self.pids = pids
+        self.growth_mb: dict[str, float] = {}
+
+    @staticmethod
+    def _rss_mb(pid: int) -> float:
+        with open(f"/proc/{pid}/statm") as fh:
+            return int(fh.read().split()[1]) * os.sysconf("SC_PAGE_SIZE") / 2**20
+
+    def _sample(self) -> None:
+        while not self._stop.is_set():
+            for k, pid in self.pids.items():
+                self._peak[k] = max(self._peak[k], self._rss_mb(pid))
+            self._stop.wait(0.01)
+
+    def __enter__(self) -> "_PeakRss":
+        import threading
+
+        self._base = {k: self._rss_mb(p) for k, p in self.pids.items()}
+        self._peak = dict(self._base)
+        self._stop = threading.Event()
+        self._thread = threading.Thread(target=self._sample, daemon=True)
+        self._thread.start()
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self._stop.set()
+        self._thread.join(timeout=5)
+        self.growth_mb = {
+            k: round(self._peak[k] - self._base[k], 1) for k in self.pids
+        }
+
+
+def run_compact_probe(spark: SparkSession, mult: int) -> list[dict]:
+    """The compaction fold at ``mult``× the medallion ODS table after
+    10 ticks (1× = 6,000 first rows, then 1,900-2,100 rows a tick with
+    a fifth re-emitted; two files a commit, as ``local[2]`` writes
+    them): the in-driver kernel (``lake/fold.py``, its gate forced
+    open) against the Spark fold (gate forced shut), min of 2 over
+    fresh copies of one table. Each record says whether the files sit
+    under the shared driver gate (``index.driver_buildable``), and
+    gives the fold's wall time and the peak RSS growth of the Python
+    driver and of the JVM during it — the measurement that shows
+    whether the gate sits below the speed crossover."""
+    import pandas as pd
+
+    from emr_hudi_example_spark.lake import LakeTable
+    from emr_hudi_example_spark.lake.index import driver_buildable
+    from lakebench.gen import medallion_plan
+
+    plan = medallion_plan(
+        1, 11, first_rows=6_000 * mult,
+        tick_rows=(1_900 * mult, 2_100 * mult),
+    )
+    src = f"{WORK}/compact_x{mult}"
+    shutil.rmtree(src, ignore_errors=True)
+
+    def table(base: str) -> LakeTable:
+        return LakeTable(
+            spark, base, "bench", "ods", ["l_orderkey", "l_linenumber"],
+            "created_ts", table_type="MERGE_ON_READ",
+        )
+
+    ods = table(src)
+    for sl in plan["slices"]:
+        ods.write(
+            spark.createDataFrame(pd.DataFrame(sl)).coalesce(2), op="upsert"
+        )
+    files = ods._live_files()
+    pids = {
+        "py": os.getpid(),
+        "jvm": spark.sparkContext._jvm.ProcessHandle.current().pid(),
+    }
+    recs = []
+    for route, gate in (("kernel", 1 << 62), ("spark", 0)):
+        best = None
+        for _ in range(2):
+            dst = f"{WORK}/compact_x{mult}_{route}"
+            shutil.rmtree(dst, ignore_errors=True)
+            shutil.copytree(src, dst)
+            t = table(dst)
+            t.driver_probe_max_bytes = gate
+            with _PeakRss(pids) as rss:
+                t0 = time.perf_counter()
+                t.compact()
+                wall = round(time.perf_counter() - t0, 3)
+            if best is None or wall < best[0]:
+                best = (wall, rss.growth_mb)
+        rec = {
+            "op": f"compact_{route}", "mult": mult, "wall_sec": best[0],
+            "rows": t.snapshot().count(), "files": len(files),
+            "in_mb": round(sum(f["bytes"] for f in files) / 2**20, 2),
+            "under_gate": driver_buildable(ods, files),
+            "rss_growth_mb": best[1],
+        }
+        print(json.dumps(rec), flush=True)
+        recs.append(rec)
+    return recs
+
+
 def main() -> None:
     args = sys.argv[1:]
     lake_only = "--lake-only" in args
     ext_only = "--ext-only" in args
     pipe_only = "--pipe-only" in args
     ann_only = "--ann-only" in args
-    mults = [
-        int(a)
-        for a in args
-        if a not in ("--lake-only", "--ext-only", "--pipe-only", "--ann-only")
-    ] or [1, 5, 25]
+    compact_only = "--compact-only" in args
+    flags = (
+        "--lake-only", "--ext-only", "--pipe-only", "--ann-only",
+        "--compact-only",
+    )
+    mults = [int(a) for a in args if a not in flags] or [1, 5, 25]
     sys.path.insert(0, ROOT)
     from emr_hudi_example_spark.session import get_spark_session
 
@@ -648,7 +755,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     all_recs = []
     for m in mults:
-        if ann_only:
+        if compact_only:
+            all_recs.extend(run_compact_probe(spark, m))
+        elif ann_only:
             all_recs.extend(run_ann_probe(spark, m))
         elif pipe_only:
             all_recs.extend(run_pipe_probe(spark, m))

@@ -149,22 +149,30 @@ def test_repetition_score_detects_repeats(spark):
 
 
 #: NULL, empty, whitespace-only, shorter than / exactly k, mixed
-#: whitespace runs, repeated tokens; Spark's ``trim`` strips spaces only
+#: whitespace runs, repeated tokens; documents that start or end with a
+#: tab, newline, carriage return or form feed (Spark's one-argument
+#: ``trim`` strips spaces only: they once split into empty end tokens,
+#: ``"\\ta b c d e f\\n"`` shingling to ``" a b"`` and ``"e f "``)
 _SHINGLE_TEXTS = [
     None, "", "   ", "\t\n ", "a b", "a b c", "one two three four five",
     "  a\tb\n\nc   d  ", "\ta b c d e f\n", "x x x x x x",
-    "a b c a b c a b c",
+    "a b c a b c a b c", "\r\n a b c \f", "\n\none two three\t\t",
 ]
 
 
-def _py_shingles(text, k):
-    """Pure-Python twin of ``shingles``: Java's ``\\s`` class, and the
-    leading/trailing empty tokens ``split`` keeps."""
+def _py_tokens(text):
+    """Pure-Python twin of ``tokens``: trim ``" \\t\\n\\r\\f"``, then split
+    on Java's ``\\s`` class."""
     import re
 
+    return re.split(r"[ \t\n\x0b\f\r]+", text.strip(" \t\n\r\f"))
+
+
+def _py_shingles(text, k):
+    """Pure-Python twin of ``shingles``."""
     if text is None:
         return []
-    toks = re.split(r"[ \t\n\x0b\f\r]+", text.strip(" "))
+    toks = _py_tokens(text)
     return [" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)]
 
 
@@ -173,6 +181,7 @@ def test_shingles_and_repetition_match_python_reference(spark, k):
     from emr_hudi_example_spark.operators.text import (
         repetition_score,
         shingles,
+        token_count,
     )
 
     df = spark.createDataFrame(
@@ -182,13 +191,16 @@ def test_shingles_and_repetition_match_python_reference(spark, k):
         "id",
         shingles("text", k).alias("sh"),
         repetition_score("text", k).alias("rep"),
+        token_count("text").alias("n"),
     ).collect()
     assert len(rows) == len(_SHINGLE_TEXTS)
     for r in rows:
-        want = _py_shingles(_SHINGLE_TEXTS[r["id"]], k)
-        assert r["sh"] == want, (k, _SHINGLE_TEXTS[r["id"]])
+        text = _SHINGLE_TEXTS[r["id"]]
+        assert r["n"] == (None if text is None else len(_py_tokens(text)))
+        want = _py_shingles(text, k)
+        assert r["sh"] == want, (k, text)
         rep = 1.0 - len(set(want)) / len(want) if want else 0.0
-        assert r["rep"] == rep, (k, _SHINGLE_TEXTS[r["id"]])
+        assert r["rep"] == rep, (k, text)
 
 
 def test_quantize_embeddings_edge_vectors_bit_identical(spark):

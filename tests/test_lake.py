@@ -538,6 +538,28 @@ def test_schema_align_missing_and_extra(spark, tmp_path):
     assert all(r["c_name"] is None for r in rows)
 
 
+def test_align_schema_noop_returns_batch(spark, tmp_path):
+    """A batch that already has the stored columns at their types comes
+    back as the same frame, with no projection built; a narrower stored
+    type met by a wider batch column still widens, and a missing column
+    still fills with typed nulls."""
+    t = LakeTable(spark, str(tmp_path), "d", "t", ["k"], "ver")
+    t.write(spark.createDataFrame([("a", 1, 7)], "k string, ver long, v int"),
+            op="insert", instant="001")
+    stored = t._stored_schema()
+    same = spark.createDataFrame([("b", 2, 8, "002", "b", "")], stored)
+    assert t._align_schema(same) is same
+    wide = same.withColumn("v", F.col("v").cast("long"))
+    aligned = t._align_schema(wide)
+    assert aligned is not wide
+    assert dict(aligned.dtypes)["v"] == "bigint"
+    missing = same.drop("v")
+    aligned = t._align_schema(missing)
+    assert dict(aligned.dtypes)["v"] == "int"
+    assert aligned.columns == stored.fieldNames()
+    assert aligned.collect()[0]["v"] is None
+
+
 def test_schema_evolution_additive(spark, tmp_path):
     """New batch columns widen the table (Hudi-style additive evolution):
     appended after stored fields, null for pre-evolution rows/files."""

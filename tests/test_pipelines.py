@@ -1276,7 +1276,10 @@ def test_medallion_tick_job_budget(spark, tmp_path):
     (MOR) → DM (COW) chain. The same tick took 18 jobs while the ticks
     guarded the write with ``persist`` → ``isEmpty`` and every MOR read
     planned the tombstone join; it takes 10 now that the upsert counts
-    its own batch and upsert-only MOR reads merge without the join."""
+    its own batch and upsert-only MOR reads merge without the join. A
+    compaction tick's ``ods.compact(); dwd.compact()`` folds in-driver
+    under the shared driver gate (``lake/fold.py``): 0 jobs, where the
+    Spark fold took 2 per table."""
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity",
         "l_returnflag",
@@ -1317,6 +1320,8 @@ def test_medallion_tick_job_budget(spark, tmp_path):
         cur, dm_cur = ods.last_instant(), dwd.last_instant()
         counts.append(jobs)
     assert max(counts) <= 10, counts
+    jobs, _ = count_jobs(spark, lambda: (ods.compact(), dwd.compact()))
+    assert jobs == 0, jobs
     assert dwd.snapshot().count() == li.filter(
         F.col("l_orderkey") % 4 <= 2
     ).select("l_orderkey", "l_linenumber").distinct().count()
