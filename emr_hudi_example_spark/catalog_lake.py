@@ -217,7 +217,7 @@ def lake_compact_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
         b1.filter(F.col("c_custkey") % 100 == 0), op="delete", instant="003"
     )
     t.compact(instant="004")
-    live = t._live_files()
+    live = t.tl.live_files()
     if not (live and all(f.get("kind", "base") == "base" for f in live)):
         # RuntimeError, not assert: the gate must survive python -O
         raise RuntimeError("compaction must leave only base files live")
@@ -287,8 +287,8 @@ def lake_small_file_compact_endstate(
     inst = t.run_compaction(pid)
     if inst is None:
         raise RuntimeError("partial compaction did not commit")
-    folded = t._manifest(inst)["replaced"]
-    live = {f["path"]: f for f in t._live_files()}
+    folded = t.tl.manifest(inst)["replaced"]
+    live = {f["path"]: f for f in t.tl.live_files()}
     # layout gates (RuntimeError, not assert: must survive python -O):
     # only BUILDING files were folded, BUILDING is now delta-free, and
     # commit 001's other-partition files are still live verbatim
@@ -301,7 +301,7 @@ def lake_small_file_compact_endstate(
             and f.get("kind") == "delta"
         ):
             raise RuntimeError("BUILDING still carries delta files")
-    for f in t._manifest("001")["added"]:
+    for f in t.tl.manifest("001")["added"]:
         if f["partition_path"] != "c_mktsegment=BUILDING" and f[
             "path"
         ] not in live:
@@ -1088,7 +1088,7 @@ def lake_secondary_index_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.snapshot(
         predicate=[("tag", "=", hashlib.md5(b"absent-needle").hexdigest())]
     ).count()
-    all_pruned = t.last_scan["sec_index"] == len(t._live_files())
+    all_pruned = t.last_scan["sec_index"] == len(t.tl.live_files())
     probes = [
         hashlib.md5(b"7").hexdigest(),
         hashlib.md5(b"10x").hexdigest(),
@@ -1541,7 +1541,7 @@ def lake_bucket_mor_pointread(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas = sum(
         1
         for inst in ("002", "003")
-        for f in t._manifest(inst)["added"]
+        for f in t.tl.manifest(inst)["added"]
         if f["kind"] == "delta"
     )
     return out.select(
@@ -1856,7 +1856,7 @@ def lake_locked_writers_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lake_archive_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timeline ARCHIVAL through the value gate: after four commits the
     active timeline is trimmed to the newest two (older instants move
-    to ``_archived/`` — Hudi's archived timeline, which bounds active-
+    to the archived timeline — as in Hudi, which bounds active-
     timeline listing cost at high commit counts), and the snapshot must
     be byte-identical — archival moves timeline METADATA only, never
     data files. The assert guards the degenerate nothing-archived
@@ -1969,14 +1969,15 @@ def lake_fenced_writer_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zombie-writer fencing through the VALUE gate (r5 verdict #2,
     ``SRC/package.scala:38-47`` ZK-OCC intent): writer A passes the
     pre-publish validate, stalls until its lease expires, writer B
-    takes over (recording the fence snapshot in ``_lease/fences.json``),
+    takes over (recording the fence snapshot in its
+    ``_lease/fence-<token>.json`` record),
     then A's delayed ``os.replace`` lands its manifest AND A crashes
     before the post-publish re-validate can roll it back — the worst
     case the two in-line checks cannot catch. The graded end-state is
     batch1 ⊎ batch3 ONLY: the zombie's '002' manifest exists on disk
     but read planning discards it (older fence token, instant not in
     the takeover snapshot), so its ver=2 rows never surface. Exercises
-    ``locks.py:_record_fence`` + ``table.py:_zombie_instants``."""
+    ``locks.py:_record_fence`` + ``timeline.py:Timeline._zombies``."""
     import time as _time
 
     from emr_hudi_example_spark.lake.locks import LeaseLockProvider
@@ -2028,7 +2029,7 @@ def lake_fenced_writer_endstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_b.write(b3, op="upsert", instant="003")
     if os.path.exists(
-        os.path.join(w_b.commits_dir, "002.json")
+        os.path.join(w_b.tl.commits_dir, "002.json")
     ) is False:
         # the scenario must genuinely leave the zombie file behind —
         # otherwise this query silently degrades to plain OCC
@@ -2127,7 +2128,7 @@ def lake_optimistic_writers_endstate(
     replaced files, disjoint (partition, key-range) additions) and BOTH
     commits survive — the end-state equals the serialized two-commit
     upsert. Exercises ``LakeTable.write_optimistic`` +
-    ``_check_publish_conflicts``."""
+    ``Timeline.check_conflicts``."""
     t_seed = LakeTable(
         spark, _tmp_base(), "q", "optw", ["c_custkey"], "ver",
         partition_keys=["c_mktsegment"],
@@ -2218,7 +2219,7 @@ def lake_bootstrap_adopt(spark: SparkSession, sf_dir: str) -> DataFrame:
         if fn.endswith(".parquet")
     ) if os.path.isdir(t.data_dir) else 0
     if n_engine != 0 or not all(
-        f.get("external") for f in t._live_files()
+        f.get("external") for f in t.tl.live_files()
     ):
         raise RuntimeError("bootstrap rewrote data")
     t.write(
@@ -2226,12 +2227,12 @@ def lake_bootstrap_adopt(spark: SparkSession, sf_dir: str) -> DataFrame:
         op="upsert",
         instant="002",
     )
-    live = t._live_files()
+    live = t.tl.live_files()
     if not any(f.get("external") for f in live) or not any(
         not f.get("external") for f in live
     ):
         raise RuntimeError("snapshot is not served from mixed files")
-    replaced = t._manifest("002")["replaced"]
+    replaced = t.tl.manifest("002")["replaced"]
     if not all(os.path.isabs(p) and os.path.exists(p) for p in replaced):
         raise RuntimeError("upsert deleted or relocated adopted files")
     return t.snapshot().select(

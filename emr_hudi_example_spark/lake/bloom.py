@@ -53,6 +53,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from emr_hudi_example_spark.lake.index import creating_instant, driver_buildable
+from emr_hudi_example_spark.lake.timeline import write_json
 
 if TYPE_CHECKING:
     from emr_hudi_example_spark.lake.table import LakeTable
@@ -225,11 +226,7 @@ class Bloom:
                     empty = empty or bloom_to_b64(build_bloom([], nbits, k))
                     per[c] = empty
         sidecar = {"nbits": nbits, "k": k, "files": files}
-        os.makedirs(self.root, exist_ok=True)
-        tmp = os.path.join(self.root, f".{instant}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(sidecar, fh)
-        os.replace(tmp, os.path.join(self.root, instant + ".json"))
+        write_json(os.path.join(self.root, instant + ".json"), sidecar)
         self._sidecars[instant] = sidecar
 
     # ----------------------------------------------------- prune / clear

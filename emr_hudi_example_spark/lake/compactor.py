@@ -35,8 +35,8 @@ class AsyncCompactor:
     to ``max_generic_attempts`` times (a transient executor loss / OOM
     must not discard the compaction intent on first sight — r14 review)
     before the plan is abandoned. Abandonment MOVES the plan file to a
-    durable ``_compaction/_abandoned/`` sidecar (with the error recorded
-    in the JSON) rather than unlinking it: the in-process ``failed``
+    durable abandoned-plan sidecar (``Timeline.abandon_plan``, with the
+    error recorded in the JSON) rather than unlinking it: the in-process ``failed``
     list dies with the daemon, and a silently-vanished plan would leave
     MOR read amplification growing with nothing flagging the drop. An
     operator inspects the sidecar and re-schedules if the intent still
@@ -73,32 +73,18 @@ class AsyncCompactor:
         return self
 
     def _abandon(self, plan_id: str, exc: Exception) -> None:
-        """Move the plan to the durable ``_abandoned/`` sidecar (error
-        recorded inside) instead of unlinking (r14 review): removes it
-        from ``pending_compactions()`` — no restart re-spin, exactly as
-        the r13 unlink achieved — while keeping a durable record of the
-        dropped intent that survives the process."""
-        import json
-        import os
-
+        """Park the plan in the abandoned-plan sidecar: it leaves
+        ``pending_compactions()`` (no restart re-spin) while a durable
+        record of the dropped intent survives the process."""
         self._abandoned.add(plan_id)
         self.failed.append((plan_id, exc))
-        pdir = os.path.join(self.table.commits_dir, "_compaction")
-        pfile = os.path.join(pdir, plan_id + ".json")
-        sidecar_dir = os.path.join(pdir, "_abandoned")
-        try:
-            with open(pfile) as fh:
-                plan = json.load(fh)
-        except (OSError, ValueError):
-            plan = {}  # unreadable/corrupt plan — tombstone carries the error
-        plan["abandoned_error"] = repr(exc)
-        plan["abandoned_attempts"] = self._attempts.get(plan_id, 0)
-        os.makedirs(sidecar_dir, exist_ok=True)
-        tmp = os.path.join(sidecar_dir, plan_id + ".json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(plan, fh)
-        os.replace(tmp, os.path.join(sidecar_dir, plan_id + ".json"))
-        self.table._discard_plan(pfile)
+        self.table.tl.abandon_plan(
+            plan_id,
+            {
+                "abandoned_error": repr(exc),
+                "abandoned_attempts": self._attempts.get(plan_id, 0),
+            },
+        )
 
     def _drain_once(self) -> bool:
         """Execute one pending plan; True if progress was made (executed,

@@ -21,9 +21,12 @@ locks (crashed writer) still fail loudly with the lock path surfaced.
 
 from __future__ import annotations
 
+import errno
+import json
 import os
 import threading
 import time
+import uuid
 from contextlib import contextmanager
 
 
@@ -158,8 +161,6 @@ class LocalFSStore(PutIfAbsentStore):
         return os.path.join(self.root, key)
 
     def _tmp(self, key: str) -> str:
-        import uuid
-
         # pid+uuid: concurrent threads of one process never collide
         return self._p(f".{key}.{os.getpid()}.{uuid.uuid4().hex[:8]}.tmp")
 
@@ -173,8 +174,6 @@ class LocalFSStore(PutIfAbsentStore):
         except FileExistsError:
             return False
         except OSError as e:
-            import errno
-
             # link(2) unsupported (many FUSE mounts — s3fs etc.): fall
             # back to O_EXCL create+write. Weaker only in that a reader
             # could glimpse a part-written body mid-write; exclusivity
@@ -227,8 +226,6 @@ class MemoryStore(PutIfAbsentStore):
     multi-threaded writers without touching disk."""
 
     def __init__(self) -> None:
-        import threading
-
         self._objects: dict[str, str] = {}
         self._mu = threading.Lock()
 
@@ -303,6 +300,30 @@ class S3ConditionalPutStore(PutIfAbsentStore):
         self._nope(f'delete_object(Key="{self.prefix}{key}")')
 
 
+def read_fences(store: PutIfAbsentStore) -> list[dict]:
+    """The one parser of takeover fence records: every
+    ``fence-<token>.json`` in ``store`` (one immutable record per
+    takeover, :meth:`LeaseLockProvider._record_fence`) plus the shared
+    ``fences.json`` list older builds wrote, ascending by token. A
+    record absent or torn mid-write is skipped; the next listing picks
+    it up."""
+    names = sorted(
+        n for n in store.list()
+        if n.startswith("fence-") and n.endswith(".json")
+    )
+    fences: list[dict] = []
+    for name in ["fences.json"] + names:
+        body = store.get(name)
+        try:
+            rec = json.loads(body) if body is not None else None
+        except ValueError:
+            continue
+        if rec is None:
+            continue
+        fences.extend(rec.get("fences", []) if name == "fences.json" else [rec])
+    return sorted(fences, key=lambda f: f["token"])
+
+
 class LeaseLockProvider(LockProvider):
     """Multi-host writer lease on shared storage with a monotone FENCING
     TOKEN — the genuinely multi-host analog of the reference's ZooKeeper
@@ -331,7 +352,7 @@ class LeaseLockProvider(LockProvider):
       check: mutual exclusion alone cannot protect a paused/partitioned
       writer, the token comparison at the resource does.
 
-      ``validate()`` and the manifest ``os.replace`` in ``table.py``
+      ``validate()`` and the manifest ``os.replace`` in ``timeline.py``
       are two separate syscalls, so a writer paused *between* them can
       still rename its manifest into the timeline after a takeover.
       That late rename is made HARMLESS by the fence record (r5
@@ -368,7 +389,7 @@ class LeaseLockProvider(LockProvider):
         store: PutIfAbsentStore | None = None,
     ) -> None:
         self.lease_dir = os.path.join(table_path, "_lease")
-        self._commits_dir = os.path.join(table_path, "_commits")
+        self._table_path = table_path
         self.lease_seconds = lease_seconds
         self.poll_seconds = poll_seconds
         self.holder = holder or f"pid-{os.getpid()}"
@@ -399,8 +420,6 @@ class LeaseLockProvider(LockProvider):
         return sorted(n for n in self.store.list() if n.startswith(self.PREFIX))
 
     def _read_claim(self, name: str) -> dict | None:
-        import json
-
         body = self.store.get(name)
         if body is None:
             return None
@@ -471,8 +490,6 @@ class LeaseLockProvider(LockProvider):
         """Put-if-absent of ``lease-<token>`` — the atomic CAS. True iff
         this process won the name. A takeover of an unreleased lease
         additionally publishes a fence record (:meth:`_record_fence`)."""
-        import json
-
         self.store.ensure()
         body = {
             "token": token,
@@ -514,7 +531,7 @@ class LeaseLockProvider(LockProvider):
         one atomic syscall — no shared-file read-modify-replace, so a
         taker paused between its CAS and its fence write can never race
         a later takeover's record; r6 advice). Read planning
-        (``LakeTable.timeline``) discards any manifest stamped with a
+        (``Timeline.instants``) discards any manifest stamped with a
         token older than ``token`` whose instant sorts after this
         snapshot's head — by mutual exclusion such a manifest can only
         be a superseded writer's late ``os.replace`` (paused between its
@@ -531,16 +548,10 @@ class LeaseLockProvider(LockProvider):
         its own takeover. Takeovers are crash events, so the directory
         stays operator-log sized.
         """
-        import json
+        from emr_hudi_example_spark.lake.timeline import Timeline
 
-        try:
-            head = max(
-                f[: -len(".json")]
-                for f in os.listdir(self._commits_dir)
-                if f.endswith(".json")
-            )
-        except (FileNotFoundError, ValueError):
-            head = ""  # empty timeline: every old-token instant fences
+        # "" on an empty timeline: every old-token instant fences
+        head = Timeline(self._table_path).head()
         # atomic-and-exclusive via the store primitive; duplicate
         # recorders are harmless (the fence is already on record)
         self.store.ensure()
@@ -561,18 +572,7 @@ class LeaseLockProvider(LockProvider):
         Read planning merges these with any filesystem fence files so a
         reader configured with the deployment's store (ZK/S3/...) sees
         takeovers no matter which backend recorded them."""
-        import json
-
-        out = []
-        for name in sorted(n for n in self.store.list() if n.startswith("fence-")):
-            body = self.store.get(name)
-            if body is None:
-                continue
-            try:
-                out.append(json.loads(body))
-            except ValueError:
-                continue
-        return out
+        return read_fences(self.store)
 
     def validate(self) -> None:
         with self._tlock:
@@ -621,8 +621,6 @@ class LeaseLockProvider(LockProvider):
             pass  # pruned/superseded — nothing to release
 
     def _rewrite_own(self, token: int, **updates) -> None:
-        import json
-
         key = self._key(token)
         claim = self._read_claim(key)
         if claim is None:
@@ -646,7 +644,7 @@ class ConditionalPutLockProvider(LeaseLockProvider):
     ``put_if_absent`` on the store. A LakeTable whose reader sessions
     use a non-filesystem store must construct THEIR tables with a
     provider sharing that store, so read planning sees the fences
-    (``LakeTable._fences`` merges provider-store fences with on-disk
+    (``Timeline.fences`` merges provider-store fences with on-disk
     ones)."""
 
     def __init__(

@@ -6,8 +6,9 @@ The engine's analog of the index layer the reference leaves to Hudi
 planning pass returns the manifest file entries it kept as a
 :class:`Kept`, carrying a frozen :class:`ScanReport` of what each layer
 dropped. :class:`FilePlanner` is mixed into ``LakeTable``: it reads the
-table's configuration, manifests and indexes and keeps no per-call
-state; its two caches are keyed by immutable instants.
+table's configuration, commit log (``tl``, ``lake/timeline.py``) and
+indexes and keeps no per-call state; its two caches are keyed by
+immutable instants, and the commit log's reset clears them.
 """
 
 from __future__ import annotations
@@ -232,7 +233,7 @@ class FilePlanner:
         if hit is not None:
             return hit
         groups: dict[str, list[dict]] = {}
-        for f in self._live_files_at(instant):
+        for f in self.tl.live_files(instant):
             if f.get("rows") == 0:
                 continue  # rowless files can't match; don't let their
                 # stat-less footers veto the partition aggregate
@@ -494,12 +495,12 @@ class FilePlanner:
                 )
                 return None, None, None
             inst = past[-1]
-            m = self._manifest(inst)
-            files = self._live_files_at(inst)
+            m = self.tl.manifest(inst)
+            files = self.tl.live_files(inst)
             schema = T.StructType.fromJson(m["schema"])  # as-of schema
         else:
             inst = self.last_instant()
-            files = self._live_files()
+            files = self.tl.live_files()
         if partition_filter:
             want = {k: str(v) for k, v in partition_filter.items()}
             files = [
@@ -529,7 +530,7 @@ class FilePlanner:
            carried over by manifest reference, so COW write
            amplification scales with keys touched, not partition size.
         """
-        live = self._live_files()
+        live = self.tl.live_files()
         minmax = None
         if self.partition_keys and not self.global_index:
             # ONE fused aggregate (r14): partition discovery AND the
@@ -919,7 +920,7 @@ class FilePlanner:
         None when the manifest is unreadable."""
         if instant not in self._col_type_cache:
             try:
-                schema = self._manifest_any(instant)["schema"]
+                schema = self.tl.manifest_any(instant)["schema"]
                 self._col_type_cache[instant] = {
                     fld.name: fld.dataType.simpleString()
                     for fld in T.StructType.fromJson(schema).fields

@@ -28,26 +28,14 @@ semantics the reference delegates to Apache Hudi (SURVEY.md §1.1, §2.2 K1):
 - **Cleaner / archival**: retain the files of the last N commits
   (``SRC/package.scala:26-30``).
 
-Storage layout::
-
-    base_path/db/table/
-      _commits/<instant>.json      # manifest (log entry: added/replaced
-                                   # DELTAS only); writing it IS the commit
-      _commits/_ckpt/<instant>.json  # periodic full live-file checkpoint
-      data/<instant>/__pt_<col>=<val>/part-*.parquet
+The commit log — manifests, checkpoints, fences, inflight markers,
+compaction plans, stream offsets and savepoints — is
+``lake/timeline.py`` (:class:`Timeline`); its docstring holds the
+storage layout and the manifest-log design. This module writes the data
+files and index sidecars the manifests name.
 
 Design notes (100 TB):
 
-- The *manifest log is the file index* (Iceberg-style log + checkpoint):
-  each commit's manifest records only its ``added``/``replaced`` delta;
-  every ``MANIFEST_CHECKPOINT_INTERVAL`` commits the full live-file list
-  is checkpointed under ``_commits/_ckpt/``. Readers materialize the
-  live set from the newest checkpoint plus the ≤ interval manifests
-  after it — O(delta), never O(commits) — and an in-session cache rolls
-  forward incrementally across commits. Partition / commit-range pruning
-  happens driver-side on that file index before any scan — the analog of
-  Hudi's timeline+file-index. Parquet row-group stats then prune further
-  inside files.
 - Partition values are **duplicated** into ``__pt_<col>`` directory
   columns purely for layout; the real columns stay in the data files, so
   readers never depend on directory-schema inference and explicit
@@ -57,10 +45,10 @@ Design notes (100 TB):
   found with a key-column-only scan, i.e. a column-pruned semi-join, the
   engine's bloom-index analog). Untouched partitions are carried over by
   manifest reference — zero data movement.
-- The commit point is the atomic rename-free write of one small JSON
-  manifest; a crashed write leaves invisible orphan data files that the
-  cleaner removes. Single-writer by design (the reference's ZK-lock OCC
-  is out of scope, SURVEY.md §4).
+- A crashed write leaves invisible orphan data files that the
+  cleaner removes; writers serialize on the pluggable lock
+  (``lake/locks.py``), or publish optimistically
+  (:meth:`LakeTable.write_optimistic`).
 """
 
 from __future__ import annotations
@@ -69,8 +57,7 @@ import json
 import os
 import re
 import shutil
-import threading
-import time
+import uuid
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 from urllib.parse import unquote, urlparse
@@ -81,7 +68,7 @@ from pyspark.sql import types as T
 
 from py4j.protocol import Py4JJavaError
 
-from emr_hudi_example_spark.functions.core import now_instant, pk_not_null_condition
+from emr_hudi_example_spark.functions.core import pk_not_null_condition
 from emr_hudi_example_spark.lake import bloom as bloom_mod
 from emr_hudi_example_spark.lake import fold as fold_mod
 from emr_hudi_example_spark.lake.columns import (
@@ -97,6 +84,11 @@ from emr_hudi_example_spark.lake.index import (
 )
 from emr_hudi_example_spark.lake.locks import FileLockProvider, LockProvider
 from emr_hudi_example_spark.lake.prune import FilePlanner, Kept, ScanReport
+from emr_hudi_example_spark.lake.timeline import (
+    ConcurrentWriteConflict,
+    Timeline,
+    write_json,
+)
 
 #: explicit key-only read schema for the key sidecar builds: the creating
 #: commit indexes before its own manifest exists, so the stored schema
@@ -104,10 +96,6 @@ from emr_hudi_example_spark.lake.prune import FilePlanner, Kept, ScanReport
 _KEY_SCHEMA = T.StructType([T.StructField(RECORD_KEY_COL, T.StringType())])
 
 _PT_PREFIX = "__pt_"
-#: full live-file checkpoint every N commits (the Iceberg-style
-#: log+checkpoint evolution of the manifest); 0 disables it — the live
-#: set then replays the whole manifest log
-MANIFEST_CHECKPOINT_INTERVAL = 10
 
 
 def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
@@ -123,23 +111,6 @@ def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
         *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
     )
 
-
-def _json_stems(d: str) -> list[str]:
-    """Names of the ``*.json`` files in directory ``d`` without the
-    suffix, ascending; [] when ``d`` does not exist."""
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        f[: -len(".json")] for f in os.listdir(d) if f.endswith(".json")
-    )
-
-
-class ConcurrentWriteConflict(RuntimeError):
-    """Optimistic commit aborted: a concurrent commit invalidated this
-    writer's read set, or out-ran its instant. The write published
-    NOTHING; retry re-runs the merge against fresh table state (the
-    data files it did write are orphans for the lazy cleaner, exactly
-    like any failed write)."""
 
 def reference_table_type(partition_keys: list[str] | None) -> str:
     """The reference's dynamic storage-type rule
@@ -185,30 +156,16 @@ class LakeTable(FilePlanner):
             raise ValueError(f"unknown table type: {table_type}")
         if payload not in ("default", "partial_update"):
             raise ValueError(f"unknown payload: {payload}")
-        # partial_update works on BOTH table types (r8 verdict #6): COW
-        # folds at write (:meth:`_merge`), MOR folds at read/compact
-        # (:meth:`_merged_read`) — the read-time tombstone filter gives
-        # MOR the same can't-inherit-through-a-delete guarantee COW
-        # gets from eager delete materialization.
         super().__init__()
         self.spark = spark
-        #: the driver fast paths (pyarrow seeks into data/index files,
-        #: driver-side sidecar builds) assume ``base_path`` is a
-        #: POSIX-local directory. On an object-store/remote URI
-        #: (s3://, s3a://, hdfs://, …) they must disable themselves so
-        #: the Spark route — which resolves the scheme through Hadoop
-        #: FileSystem — remains the only path (r9 verdict watch item).
-        #: A one-char scheme is a Windows drive letter, still local.
-        #: ``file://`` IS local — but the scheme must be STRIPPED, or
-        #: every os-path operation (manifest open, os.walk) would
-        #: resolve a relative "file:/…" path and silently see an empty
-        #: table (r10 self-review finding). Only strip when the netloc
-        #: is empty or localhost: ``file://server/share`` names a REMOTE
-        #: share that NO route can serve — the driver paths would read
-        #: local "/share", and Hadoop's LocalFileSystem either drops the
-        #: authority (same silent wrong-directory read) or throws
-        #: "Wrong FS" mid-job — so it is rejected at construction
-        #: instead of merely de-gated (r10 ADVICE + r11 self-review).
+        #: the driver fast paths (pyarrow reads, driver-side sidecar
+        #: builds) need a POSIX-local ``base_path``; on a remote URI
+        #: (s3://, hdfs://, …) they disable themselves and the Spark
+        #: route (Hadoop FileSystem) is the only path. A one-char scheme
+        #: is a Windows drive letter, still local. ``file://`` is local
+        #: and its scheme is stripped, or every os-path call would see
+        #: an empty table; ``file://server/share`` names a remote share
+        #: no route can serve, so it is rejected here.
         _parsed = urlparse(str(base_path))
         _scheme = _parsed.scheme
         if _scheme == "file":
@@ -235,8 +192,8 @@ class LakeTable(FilePlanner):
         #: row); "partial_update" = PartialUpdateAvroPayload (per
         #: COLUMN, the newest non-null version wins — null incoming
         #: fields inherit stored values, so producers can send sparse
-        #: column patches). COW folds at write (:meth:`_merge`), MOR at
-        #: read/compact (:meth:`_merged_read`).
+        #: column patches). Both table types: COW folds at write
+        #: (:meth:`_merge`), MOR at read/compact (:meth:`_merged_read`).
         self.payload = payload
         #: COW rewrites key-hit files per upsert; MOR appends delta files
         #: and merges at read (the reference picks MOR for partitioned
@@ -245,7 +202,6 @@ class LakeTable(FilePlanner):
         #: MOR inline compaction every N delta commits — the reference's
         #: ``inlineMax`` knob (default 20, SRC/conf/Config.scala:24).
         self.inline_compact_deltas = inline_compact_deltas
-        self.commits_dir = os.path.join(self.path, "_commits")
         self.data_dir = os.path.join(self.path, "data")
         #: what the most recent snapshot / read_optimized / incremental /
         #: write / write_optimistic / merge_into call planned: files
@@ -344,14 +300,6 @@ class LakeTable(FilePlanner):
             )
         self.sec_index_dir = os.path.join(self.path, "_index_sec")
         self._sec_idx = ValueIndex(self, self.sec_index_dir, "val", True)
-        #: immutable-manifest cache (see :meth:`_manifest`); cleared on
-        #: :meth:`restore`, the one operation that can re-allocate an
-        #: instant id
-        self._manifest_mem: dict[str, dict] = {}
-        #: instant → per-partition key envelope for publish conflict
-        #: checks (see :meth:`_commit_summary`); instant-keyed, so
-        #: cleared on restore with the other caches
-        self._commit_summary_cache: dict[str, dict] = {}
         #: BUCKET index (Hudi's ``hoodie.index.type=BUCKET`` simple
         #: bucket engine): data files are written per
         #: ``pmod(xxhash64(record_key), n)`` bucket (one shuffle task →
@@ -374,39 +322,19 @@ class LakeTable(FilePlanner):
         self.lock_provider: LockProvider = (
             lock_provider or FileLockProvider(self.path)
         )
-        self._pending_checkpoint: dict | None = None
-        #: streaming source offsets armed by OffsetCommitListener —
-        #: embedded in the next manifest (see record_stream_offsets).
-        #: The lock makes the writer's read-and-clear atomic against
-        #: the LISTENER thread's writes (Spark delivers progress events
-        #: on its own thread; an unguarded read→clear could discard a
-        #: payload written in between — r13 review)
-        self._pending_offsets: dict | None = None
-        self._offsets_lock = threading.Lock()
-        self.ckpt_dir = os.path.join(self.commits_dir, "_ckpt")
-        #: in-session live-file cache: (instant, files) — rolled forward
-        #: incrementally per commit so repeated planning is O(delta)
-        self._live_cache: tuple[str, list[dict]] | None = None
-        #: lock-free writers (optimistic publish, async compaction fold)
-        #: drop a marker under ``_commits/.inflight/`` before writing
-        #: data files so a concurrent ``clean()`` never reaps an
-        #: in-flight commit's files as orphans (Hudi's heartbeat file
-        #: analog). Markers older than this TTL are treated as crashed
-        #: writers: clean() removes the marker and reclaims the files; a
-        #: writer that out-lives its own marker is still SAFE because
-        #: the publish critical section re-verifies every added file
-        #: exists and aborts with :class:`ConcurrentWriteConflict`.
-        self.inflight_ttl_seconds: float = 900.0
-        self.inflight_dir = os.path.join(self.commits_dir, ".inflight")
-        #: instant → (stop-Event, Thread) of its live heartbeat (see
-        #: :meth:`_mark_inflight`; the Thread is joined at clear so a
-        #: last beat can't resurrect the marker after the unlink);
-        #: crashed writers leave no entry — their markers go stale
-        #: exactly as before
-        self._inflight_heartbeats: dict[str, tuple] = {}
-        #: instants cleared against the zombie fences (see
-        #: :meth:`_zombie_instants`) — clean verdicts are immutable
-        self._fence_ok: set[str] = set()
+        #: the commit log; restore re-allocates instant ids, so its one
+        #: reset also clears the planner's and the blooms' instant-keyed
+        #: caches
+        self.tl = Timeline(
+            self.path,
+            self.lock_provider,
+            caches=(
+                self._pstats_cache,
+                self._col_type_cache,
+                self._key_bloom,
+                self._col_bloom,
+            ),
+        )
         #: lazy cache of ``_external/bases.json`` (metadata-only
         #: bootstrap registry; see :meth:`bootstrap_metadata_only`)
         self._external_cache: list[dict] | None = None
@@ -418,218 +346,71 @@ class LakeTable(FilePlanner):
     # ------------------------------------------------------------ timeline
 
     def timeline(self) -> list[str]:
-        """Committed instants, ascending (the commit timeline). On a
-        table that has seen a lease takeover, manifests published by a
-        superseded (fenced) writer are excluded — see
-        :meth:`_zombie_instants`."""
-        names = _json_stems(self.commits_dir)
-        zombies = self._zombie_instants(names)
-        if zombies:
-            names = [i for i in names if i not in zombies]
-        return names
-
-    def _zombie_instants(self, instants: list[str]) -> set[str]:
-        """Instants published by a fenced (superseded) lease holder.
-
-        ``LeaseLockProvider`` records a fence ``{token, timeline_head}``
-        as ``_lease/fence-<token>.json`` when it takes over an expired lease
-        (``locks.py:_record_fence``). A manifest whose ``fence_token``
-        is older than a fence's token AND whose instant was not in that
-        fence's timeline snapshot can only be the superseded writer's
-        late rename (paused between its commit-point ``validate()`` and
-        the ``os.replace``): mutual exclusion means the old holder was
-        the only writer up to the takeover, so every legitimate
-        old-token instant is ≤ the snapshot head. Zero cost on tables
-        that never had a takeover (one negative ``open`` per listing);
-        instants once judged clean are cached, zombie verdicts are
-        re-checked so a later legitimate writer reusing the instant
-        name (millisecond collision after the zombie was excluded from
-        ``_next_instant``'s view) is picked up."""
-        fences = self._fences()
-        if not fences:
-            return set()
-        zombies: set[str] = set()
-        for inst in instants:
-            if inst in self._fence_ok:
-                continue
-            suspect = [f for f in fences if inst > f["timeline_head"]]
-            if not suspect:
-                self._fence_ok.add(inst)
-                continue
-            try:
-                token = self._manifest(inst).get("fence_token")
-            except (FileNotFoundError, ValueError):
-                continue  # mid-rename/torn read: keep, re-check later
-            if token is None:
-                # no fencing token = written under a non-lease provider
-                # (FileLockProvider stamps None). Such a writer cannot
-                # be a superseded LEASE holder — only lease zombies are
-                # what fences condemn, and they always carry a token —
-                # so condemning None would silently drop real commits in
-                # mixed-lock-provider use (r6 advice, medium). Keep.
-                self._fence_ok.add(inst)
-                continue
-            if any(token < f["token"] for f in suspect):
-                zombies.add(inst)
-            else:
-                self._fence_ok.add(inst)
-        return zombies
-
-    def _fences(self) -> list[dict]:
-        """Takeover fence records, ascending by token. One immutable
-        ``_lease/fence-<token>.json`` per takeover (written atomically
-        by the CAS winner, ``locks.py:_record_fence``); the legacy
-        shared ``fences.json`` list is still read for tables fenced by
-        older builds."""
-        lease_dir = os.path.join(self.path, "_lease")
-        fences: list[dict] = []
-        try:
-            with open(os.path.join(lease_dir, "fences.json")) as fh:
-                fences.extend(json.load(fh).get("fences", []))
-        except (FileNotFoundError, ValueError):
-            pass
-        try:
-            names = sorted(
-                n
-                for n in os.listdir(lease_dir)
-                if n.startswith("fence-") and n.endswith(".json")
-            )
-        except FileNotFoundError:
-            names = []  # no on-disk fences; provider store may have some
-        for n in names:
-            try:
-                with open(os.path.join(lease_dir, n)) as fh:
-                    fences.append(json.load(fh))
-            except (FileNotFoundError, ValueError):
-                continue  # mid-link torn read: picked up next listing
-        # a non-filesystem lock store (ZK/S3 conditional-put) records
-        # fences in ITS store; merge them so readers configured with the
-        # deployment's provider see takeovers from either backend
-        provider_fences = getattr(self.lock_provider, "fences", None)
-        if callable(provider_fences):
-            seen = {f["token"] for f in fences}
-            fences.extend(
-                f for f in provider_fences() if f["token"] not in seen
-            )
-        return sorted(fences, key=lambda f: f["token"])
+        """Committed instants, ascending (see :meth:`Timeline.instants`)."""
+        return self.tl.instants()
 
     def last_instant(self) -> str | None:
-        tl = self.timeline()
-        return tl[-1] if tl else None
+        return self.tl.last()
 
-    def _manifest(self, instant: str) -> dict:
-        """Commit manifest by instant, cached in-memory: manifests are
-        IMMUTABLE once published (writers os.replace a fully-written
-        temp file; nothing ever rewrites one), so a cache hit can never
-        be stale — it turns the O(commits-since-base × files) manifest
-        re-reads of optimistic publish conflict checks (r7 verdict
-        watch item) and repeated planning walks into dict lookups.
-        Bounded: evicted wholesale past 4096 entries (a table handle
-        outliving that many commits is a long-lived daemon; correctness
-        is unaffected, the next read re-warms).
+    def last_checkpoint(self, source_id: str) -> int | None:
+        """Newest committed checkpoint value for ``source_id`` (the
+        exactly-once replay guard's read side)."""
+        cp = self.last_checkpoint_entry(source_id)
+        return cp.get("batch_id") if cp else None
 
-        INVARIANT — callers MUST treat the returned dict (and every
-        nested ``added`` file record) as frozen: the same objects are
-        shared by every later call AND by the live sets
-        ``_live_files_at`` assembles from ``m["added"]``. The only
-        in-place file-dict mutation in the codebase (``f[flag] = True``
-        during write assembly) happens on pre-publish records that have
-        never entered this cache; any new mutation site must copy
-        first."""
-        cached = self._manifest_mem.get(instant)
-        if cached is not None:
-            return cached
-        with open(os.path.join(self.commits_dir, instant + ".json")) as fh:
-            m = json.load(fh)
-        if len(self._manifest_mem) >= 4096:
-            self._manifest_mem.clear()
-        self._manifest_mem[instant] = m
-        return m
+    def last_checkpoint_entry(self, source_id: str) -> dict | None:
+        """Newest committed checkpoint dict for ``source_id``, extra
+        keys (the pipelines' source-slice ``cursor``) included."""
+        return self.tl.last_checkpoint_entry(source_id)
 
-    def _manifest_any(self, instant: str) -> dict:
-        """Manifest by instant, falling back to the archived timeline."""
-        try:
-            return self._manifest(instant)
-        except FileNotFoundError:
-            arch = os.path.join(self.commits_dir, "_archived", instant + ".json")
-            with open(arch) as fh:
-                return json.load(fh)
+    def record_stream_offsets(
+        self, query_name: str, batch_id: int, sources: list[dict]
+    ) -> None:
+        """Persist a streaming batch's per-source end offsets — the
+        engine-native replacement for the reference's Kafka
+        consumer-group commit-back (``SRC/Log2Hudi.scala:47-48``): a
+        per-query offsets file lag monitors read now, and
+        ``stream_offsets`` in the next manifest. Called by
+        ``streaming.sources.OffsetCommitListener``."""
+        self.tl.record_stream_offsets(query_name, batch_id, sources)
 
-    def _full_timeline(self) -> list[str]:
-        """Archived + active instants, ascending (archived always sort
-        before the active window — archival moves a prefix)."""
-        return self._archived() + self.timeline()
+    def stream_offsets(self, query_name: str) -> dict | None:
+        """Newest recorded offsets for ``query_name``, or None."""
+        return self.tl.stream_offsets(query_name)
 
-    def _archived(self) -> list[str]:
-        """Archived instants, ascending."""
-        return _json_stems(os.path.join(self.commits_dir, "_archived"))
+    def savepoint(self, instant: str) -> None:
+        """Pin ``instant`` against the cleaner (Hudi savepoint): the
+        files live AT it are retained by ``clean()`` regardless of its
+        retention horizon, so time travel to it keeps working — audit /
+        reproducibility pins. Archival stops at the earliest
+        savepoint."""
+        self.tl.savepoint(instant)
 
-    def _checkpoints(self) -> list[str]:
-        """Instants with a full live-file checkpoint, ascending."""
-        return _json_stems(self.ckpt_dir)
+    def release_savepoint(self, instant: str) -> None:
+        """Unpin; the next ``clean()`` may reap the instant's files."""
+        self.tl.release_savepoint(instant)
 
-    def _live_files(self) -> list[dict]:
-        last = self.last_instant()
-        if last is None:
-            return []
-        return self._live_files_at(last)
+    def savepoints(self) -> list[str]:
+        return self.tl.savepoints()
 
-    def _live_files_at(self, instant: str) -> list[dict]:
-        """Live file records as of ``instant`` — materialized from the
-        newest full checkpoint ≤ instant (falling back to the in-session
-        cache when that is newer) plus a forward replay of the ≤
-        ``MANIFEST_CHECKPOINT_INTERVAL`` manifest deltas after it. Never
-        O(commits) once a checkpoint exists. Legacy manifests that embed
-        a full ``live_files`` list act as materialized points too.
+    def pending_compactions(self) -> list[str]:
+        """Scheduled-but-unexecuted plan ids, ascending."""
+        return self.tl.pending_plans()
 
-        The returned list's dict entries are SHARED with the in-memory
-        manifest cache (``_manifest``) — read-only by contract; mutate a
-        copy, never in place (see the invariant note on ``_manifest``)."""
-        if self._live_cache is not None and self._live_cache[0] == instant:
-            return self._live_cache[1]
-        target = self._manifest_any(instant)
-        if "live_files" in target:  # legacy full-list manifest: direct
-            # copy: the manifest dict is cache-backed and immutable
-            return list(target["live_files"])
-        live: list[dict] = []
-        start: str | None = None
-        cks = [c for c in self._checkpoints() if c <= instant]
-        if cks:
-            start = cks[-1]
-            with open(os.path.join(self.ckpt_dir, start + ".json")) as fh:
-                live = json.load(fh)["live_files"]
-        if (
-            self._live_cache is not None
-            and self._live_cache[0] <= instant
-            and (start is None or self._live_cache[0] > start)
-        ):
-            start, live = self._live_cache[0], list(self._live_cache[1])
-        for i in self._full_timeline():
-            if (start is not None and i <= start) or i > instant:
-                continue
-            m = self._manifest_any(i)
-            if "live_files" in m:  # legacy full-list manifest
-                live = m["live_files"]
-                continue
-            replaced = set(m["replaced"])
-            live = [f for f in live if f["path"] not in replaced] + m["added"]
-        if instant == self.last_instant():
-            self._live_cache = (instant, live)
-        return live
+    def archive_timeline(self, keep_commits: int = 4) -> list[str]:
+        """Move manifests older than the last ``keep_commits`` to the
+        archived timeline (``SRC/package.scala:26-27``: min 3 / max
+        4), stopping at the earliest savepoint (Hudi's rule: archiving
+        its manifest would break the pinned ``as_of`` read)."""
+        return self.tl.archive(keep_commits)
 
-    def _next_instant(self, requested: str | None) -> str:
-        """Monotone instant allocation; explicit instants (tests,
-        deterministic replays) must still advance the timeline."""
-        inst = requested or now_instant()
-        last = self.last_instant()
-        if last is not None and inst <= last:
-            if requested is not None:
-                raise ValueError(
-                    f"instant {inst!r} not after last commit {last!r}"
-                )
-            # same-millisecond wall clock: extend to preserve total order
-            inst = last + "0"
-        return inst
+    def restore(self, instant: str) -> list[str]:
+        """Roll the table back to ``instant`` (Hudi savepoint+restore
+        analog) under the writer lock: later commits leave the timeline
+        and their data files are deleted. Returns the discarded
+        instants."""
+        with self._writer_lock():
+            return self.tl.restore(instant)
 
     def exists(self) -> bool:
         return self.last_instant() is not None
@@ -730,7 +511,7 @@ class LakeTable(FilePlanner):
         archived commit, so ranges raise regardless (and ``begin is
         None`` — "from the beginning of time" — always overlaps the
         archived era)."""
-        archived = self._archived()
+        archived = self.tl.archived()
         if point and begin is not None and archived and begin < archived[0]:
             return  # pre-table point lookup: contractual empty view
         if (
@@ -772,7 +553,7 @@ class LakeTable(FilePlanner):
         last = self.last_instant()
         if last is None:
             raise ValueError(f"table {self.db}.{self.table} does not exist")
-        return T.StructType.fromJson(self._manifest(last)["schema"])
+        return T.StructType.fromJson(self.tl.manifest(last)["schema"])
 
     # ---------------------------------- externally-adopted file reads
     # (metadata-only bootstrap; see bootstrap_metadata_only below)
@@ -1028,7 +809,7 @@ class LakeTable(FilePlanner):
         skippable)."""
         if not self.is_mor:
             return self.snapshot(predicate=predicate)
-        files = [f for f in self._live_files() if f.get("kind", "base") == "base"]
+        files = [f for f in self.tl.live_files() if f.get("kind", "base") == "base"]
         # base-only read: no merge follows, so no delta can resurface a
         # skipped row — prune as if COW (all_base lifts the MOR rules
         # while keeping op validation and the report consistent).
@@ -1071,7 +852,7 @@ class LakeTable(FilePlanner):
         added: list[dict] = []
         seen_paths: set[str] = set()
         for inst in in_range:
-            m = self._manifest(inst)
+            m = self.tl.manifest(inst)
             if m.get("action") == "index_backfill":
                 # metadata-only commit: it re-lists EXISTING files purely
                 # to upgrade their index-coverage stamps and adds no rows.
@@ -1089,7 +870,7 @@ class LakeTable(FilePlanner):
         # range that are live at `end`, plus row-filter.
         live_at_end = {
             f["path"]
-            for f in (self._live_files_at(in_range[-1]) if in_range else [])
+            for f in (self.tl.live_files(in_range[-1]) if in_range else [])
         }
         fds = [f for f in added if f["path"] in live_at_end]
         # in-range files are a subset of the live set at the range end,
@@ -1162,7 +943,7 @@ class LakeTable(FilePlanner):
         ]
         touched: list[str] = []
         for inst in in_range:
-            m = self._manifest(inst)
+            m = self.tl.manifest(inst)
             if m.get("action") == "index_backfill":
                 # metadata-only: re-lists every covered file but
                 # changes no row — including it would key-scan the
@@ -1255,28 +1036,6 @@ class LakeTable(FilePlanner):
 
     # --------------------------------------------------------------- writes
 
-    def last_checkpoint(self, source_id: str) -> int | None:
-        """Newest committed checkpoint value for ``source_id`` (the
-        exactly-once replay guard's read side)."""
-        cp = self.last_checkpoint_entry(source_id)
-        return cp.get("batch_id") if cp else None
-
-    def last_checkpoint_entry(self, source_id: str) -> dict | None:
-        """Newest committed checkpoint DICT for ``source_id``, scanning
-        the timeline backwards. Besides the replay-guard ``batch_id``,
-        callers may ride extra keys in the checkpoint (e.g. the
-        medallion pipelines' source-slice ``cursor`` — r13) and recover
-        them here on restart, atomic with the data they describe. Falls
-        back to archived manifests: ``archive_timeline`` may have moved
-        the newest checkpoint-bearing commit out of the active
-        timeline, and losing sight of it would silently re-apply a
-        replayed batch."""
-        for i in reversed(self._full_timeline()):
-            cp = self._manifest_any(i).get("checkpoint")
-            if cp and cp.get("source_id") == source_id:
-                return cp
-        return None
-
     def write(
         self,
         df: DataFrame,
@@ -1328,17 +1087,11 @@ class LakeTable(FilePlanner):
                 if last is not None and last >= checkpoint["batch_id"]:
                     self.last_scan = ScanReport()
                     return None  # replayed batch — already committed
-                self._pending_checkpoint = dict(checkpoint)
-            try:
-                inst = self._next_instant(instant)
-                out, scan = self._commit(op, df, inst, sort_mode, sort_files)
-                published = self._publish(inst, out)
-            finally:
-                # a FAILED commit must not leave its checkpoint armed:
-                # it would ride on the NEXT successful manifest (e.g. a
-                # later compact()), falsely marking the failed batch
-                # committed and silently skipping its replay
-                self._pending_checkpoint = None
+            inst = self.tl.next_instant(instant)
+            out, scan = self._commit(
+                op, df, inst, sort_mode, sort_files, checkpoint
+            )
+            published = self._publish(inst, out, checkpoint)
         self.last_scan = scan
         return published
 
@@ -1349,17 +1102,20 @@ class LakeTable(FilePlanner):
         inst: str,
         sort_mode: str = "NONE",
         sort_files: int | None = None,
+        checkpoint: dict | None = None,
     ) -> tuple[tuple | None, ScanReport]:
         """The compute step of every write op, shared by :meth:`write`
         and :meth:`write_optimistic`: write the op's data files under
         ``inst``. Returns ``(out, report)``: ``out`` is ``(action,
         schema, added, replaced)`` for the publish step, or None when
         there is nothing to publish; ``report`` is the file planning
-        of a keyed COW rewrite (empty for every other op)."""
+        of a keyed COW rewrite (empty for every other op).
+        ``checkpoint`` is the streaming checkpoint the publish will
+        carry: an upsert with one always publishes."""
         if op in ("insert", "bulk_insert"):
             out = self._commit_insert(df, inst, sort_mode, sort_files)
         elif op == "upsert":
-            return self._commit_upsert(df, inst)
+            return self._commit_upsert(df, inst, checkpoint)
         elif op == "delete":
             return self._commit_delete(df, inst)
         elif op == "insert_overwrite":
@@ -1368,14 +1124,16 @@ class LakeTable(FilePlanner):
             raise ValueError(f"unknown write op: {op}")
         return out, ScanReport()
 
-    def _publish(self, inst: str, out: tuple | None) -> str | None:
+    def _publish(
+        self, inst: str, out: tuple | None, checkpoint: dict | None = None
+    ) -> str | None:
         """The serialized publish step (writer lock held): the manifest
         write, then the MOR inline-compaction check after a commit that
         appended delta files. Lock-free publishers never fold inline —
         it would stretch their short critical section."""
         if out is None:
             return None
-        self._write_manifest(inst, *out)
+        self._write_manifest(inst, *out, checkpoint=checkpoint)
         if (
             self.inline_compact_deltas is not None
             and any(f["kind"] == "delta" for f in out[2])
@@ -1444,29 +1202,29 @@ class LakeTable(FilePlanner):
             # uniquify: concurrent writers allocating in the same
             # millisecond must not share a data directory / manifest
             # name (the suffix keeps the instant sorting after `base`)
-            import uuid
 
-            inst = self._next_instant(None) + "w" + uuid.uuid4().hex[:4]
+            inst = self.tl.next_instant(None) + "w" + uuid.uuid4().hex[:4]
         else:
-            inst = self._next_instant(instant)
+            inst = self.tl.next_instant(instant)
 
         # announce the lock-free write BEFORE any data file exists so a
         # concurrent clean() (which cannot see our not-yet-published
         # manifest) never reaps the in-flight files as orphans
-        self._mark_inflight(inst)
+        self.tl.mark_inflight(inst)
         try:
             out, scan = self._commit(op, df, inst)
             if out is not None:
                 with self._writer_lock():
                     self._survive_or_orphan(
                         out[2],
-                        lambda: self._check_publish_conflicts(
-                            base, inst, op, out[2], out[3]
+                        lambda: self.tl.check_conflicts(
+                            base, inst, out[2], out[3],
+                            check_keys=not (op == "insert" or self.is_mor),
                         ),
                     )
                     self._write_manifest(inst, *out)
         finally:
-            self._clear_inflight(inst)
+            self.tl.clear_inflight(inst)
         self.last_scan = scan
         return None if out is None else inst
 
@@ -1489,141 +1247,11 @@ class LakeTable(FilePlanner):
                 raise ConcurrentWriteConflict(
                     f"in-flight data files reaped by the cleaner "
                     f"(marker exceeded inflight_ttl_seconds="
-                    f"{self.inflight_ttl_seconds}): {missing[:3]}"
+                    f"{self.tl.inflight_ttl_seconds}): {missing[:3]}"
                 )
         except ConcurrentWriteConflict:
             self._orphan(added)
             raise
-
-    @staticmethod
-    def _key_summary(files: list[dict]) -> dict:
-        """Per-partition ``[key_min, key_max]`` envelope over file
-        records; a ``None`` envelope means at least one file in that
-        partition lacks key stats (the envelope is unknowable and any
-        check must fall back to the per-file proof)."""
-        out: dict = {}
-        for f in files:
-            pp = f.get("partition_path")
-            if pp in out and out[pp] is None:
-                continue
-            kmin, kmax = f.get("key_min"), f.get("key_max")
-            if kmin is None or kmax is None:
-                out[pp] = None
-            elif pp not in out:
-                out[pp] = [kmin, kmax]
-            else:
-                e = out[pp]
-                if kmin < e[0]:
-                    e[0] = kmin
-                if kmax > e[1]:
-                    e[1] = kmax
-        return out
-
-    def _commit_summary(self, instant: str, m: dict) -> dict:
-        """A commit's per-partition key envelope: read from the
-        manifest's ``key_summary`` (written since r9), derived once
-        from ``added`` for legacy manifests; memoized per instant
-        (manifests are immutable; cleared on restore with the other
-        instant-keyed caches)."""
-        cached = self._commit_summary_cache.get(instant)
-        if cached is not None:
-            return cached
-        raw = m.get("key_summary")
-        s = (
-            {e["pp"]: e["env"] for e in raw}
-            if raw is not None
-            else self._key_summary(m["added"])
-        )
-        self._commit_summary_cache[instant] = s
-        return s
-
-    def _check_publish_conflicts(
-        self,
-        base: str | None,
-        inst: str,
-        op: str,
-        added: list[dict],
-        replaced: list[str],
-    ) -> None:
-        """Raise :class:`ConcurrentWriteConflict` unless publishing a
-        commit computed at snapshot ``base`` is equivalent to SOME
-        serial order (see :meth:`write_optimistic` for the rules).
-
-        Cost (r8 verdict #5): O(commits since base) SUMMARY lookups —
-        the added-vs-added key-overlap proof compares per-partition
-        [min,max] envelopes recorded in each manifest (``key_summary``)
-        and only descends to the exact per-file pairwise proof for the
-        (commit, partition) pairs whose envelopes intersect, which for
-        disjoint-key writers (the normal optimistic-concurrency
-        workload) is none of them. Disjoint envelopes imply no file
-        pair can overlap, so the pruning is exact, never unsound. A
-        pathological 50-commit publish backlog therefore costs ~50
-        dict probes, not 50 × files comparisons."""
-        tl = self.timeline()
-        if tl and tl[-1] >= inst:
-            raise ConcurrentWriteConflict(
-                f"instant order: published {tl[-1]!r} >= planned {inst!r}"
-            )
-        newer = [i for i in tl if base is None or i > base]
-        if not newer:
-            return
-        ours_replaced = set(replaced)
-        check_keys = not (op == "insert" or self.is_mor)
-        # inserts are not key-unique (Hudi semantics); MOR appends
-        # COMMUTE under the precombine read merge — neither needs
-        # the added-vs-added key-overlap proof
-        ours = self._key_summary(added) if check_keys else {}
-        our_by_pp: dict = {}
-        if check_keys:
-            for f in added:
-                our_by_pp.setdefault(f.get("partition_path"), []).append(f)
-        for i in newer:
-            m = self._manifest(i)
-            clash = ours_replaced.intersection(m["replaced"])
-            if clash:
-                raise ConcurrentWriteConflict(
-                    f"read-set overlap on {sorted(clash)[:3]} with "
-                    f"concurrent commit {i}"
-                )
-            if not check_keys:
-                continue
-            theirs = self._commit_summary(i, m)
-            their_by_pp: dict | None = None
-            for pp, env in ours.items():
-                if pp not in theirs:
-                    continue  # commit i touched no files in pp
-                tenv = theirs[pp]
-                if (
-                    env is not None
-                    and tenv is not None
-                    and (env[1] < tenv[0] or tenv[1] < env[0])
-                ):
-                    continue  # disjoint envelopes: no pair can overlap
-                # envelopes intersect (or stats incomplete): exact
-                # per-file proof for THIS (commit, partition) only
-                if their_by_pp is None:
-                    their_by_pp = {}
-                    for g in m["added"]:
-                        their_by_pp.setdefault(
-                            g.get("partition_path"), []
-                        ).append(g)
-                for f in our_by_pp[pp]:
-                    for g in their_by_pp.get(pp, []):
-                        fmin, fmax = f.get("key_min"), f.get("key_max")
-                        gmin, gmax = g.get("key_min"), g.get("key_max")
-                        if None in (fmin, fmax, gmin, gmax):
-                            # missing key stats: cannot prove disjoint —
-                            # abort (conservative, never unsound)
-                            raise ConcurrentWriteConflict(
-                                f"no key stats to prove {f['path']} "
-                                f"disjoint from concurrent {g['path']}"
-                            )
-                        if not (fmax < gmin or gmax < fmin):
-                            raise ConcurrentWriteConflict(
-                                f"key-range overlap: {f['path']} "
-                                f"[{fmin},{fmax}] vs concurrent "
-                                f"{g['path']} [{gmin},{gmax}]"
-                            )
 
     def delete_partitions(
         self, partitions: list[dict], instant: str | None = None
@@ -1652,10 +1280,10 @@ class LakeTable(FilePlanner):
                 "/".join(f"{k}={p[k]}" for k in self.partition_keys)
             )
         with self._writer_lock():
-            inst = self._next_instant(instant)
+            inst = self.tl.next_instant(instant)
             doomed = [
                 f["path"]
-                for f in self._live_files()
+                for f in self.tl.live_files()
                 if f["partition_path"] in pps
             ]
             self._write_manifest(
@@ -1823,7 +1451,7 @@ class LakeTable(FilePlanner):
                 # exact (a concurrent duplicate-landing writer now trips
                 # the gate instead of evading it).
                 upserts, del_full, tcols = plan()
-            inst = self._next_instant(instant)
+            inst = self.tl.next_instant(instant)
             up = self._prepare_batch(upserts, inst)
             # delete leg: combine=False — the ambiguity gate above
             # already guarantees one matched row per key, so a
@@ -2072,7 +1700,7 @@ class LakeTable(FilePlanner):
         batch = self._prepare_batch(df, inst)
         if self.exists():
             batch = self._align_schema(batch)
-        live = self._live_files() if self.exists() else []
+        live = self.tl.live_files()
         if self.partition_keys and live:
             batch.persist()
             try:
@@ -2094,9 +1722,9 @@ class LakeTable(FilePlanner):
         return "insert_overwrite", batch.schema, added, doomed
 
     def _commit_upsert(
-        self, df: DataFrame, inst: str
+        self, df: DataFrame, inst: str, checkpoint: dict | None = None
     ) -> tuple[tuple | None, ScanReport]:
-        """Keyed upsert. On an existing table with no checkpoint armed,
+        """Keyed upsert. On an existing table with no ``checkpoint``,
         an EMPTY batch publishes nothing and returns None: one
         ``Observation`` counts the batch on the write's own jobs (no
         separate ``isEmpty`` pass), and a zero count drops
@@ -2111,7 +1739,7 @@ class LakeTable(FilePlanner):
         obs = (
             Observation()
             if self.exists()
-            and self._pending_checkpoint is None
+            and checkpoint is None
             and df.sparkSession._jsparkSession.equals(
                 self.spark._jsparkSession
             )
@@ -2253,7 +1881,7 @@ class LakeTable(FilePlanner):
         trigger premature full-table rewrites (Hudi counts the same)."""
         n = 0
         for i in reversed(self.timeline()):
-            m = self._manifest(i)
+            m = self.tl.manifest(i)
             if m["action"] == "compact":
                 break
             if any(f.get("kind") == "delta" for f in m["added"]):
@@ -2552,7 +2180,7 @@ class LakeTable(FilePlanner):
         want = set(cols)
         with self._writer_lock():
             by_inst: dict[str, list[dict]] = {}
-            for f in self._live_files():
+            for f in self.tl.live_files():
                 if not f.get("external") and not want <= covered(f):
                     by_inst.setdefault(
                         creating_instant(f["path"]), []
@@ -2564,7 +2192,7 @@ class LakeTable(FilePlanner):
                 else:
                     try:
                         schema = T.StructType.fromJson(
-                            self._manifest_any(inst)["schema"]
+                            self.tl.manifest_any(inst)["schema"]
                         )
                     except (FileNotFoundError, KeyError, ValueError):
                         continue  # unreadable origin schema: un-covered
@@ -2579,7 +2207,7 @@ class LakeTable(FilePlanner):
             if not batches:
                 return None
             files = [f for fl in batches.values() for f in fl]
-            inst = self._next_instant(None)
+            inst = self.tl.next_instant(None)
             idx.sweep(
                 {creating_instant(f["path"]) for f in files},
                 self._is_backfill_commit,
@@ -2605,7 +2233,7 @@ class LakeTable(FilePlanner):
 
     def _is_backfill_commit(self, instant: str) -> bool:
         try:
-            m = self._manifest_any(instant)
+            m = self.tl.manifest_any(instant)
         except FileNotFoundError:
             return False
         return m.get("action") == "index_backfill"
@@ -2924,14 +2552,12 @@ class LakeTable(FilePlanner):
         schema: T.StructType,
         added: list[dict],
         replaced: list[str],
+        checkpoint: dict | None = None,
     ) -> None:
-        """Writing the manifest IS the commit (atomic rename). The
-        manifest records only this commit's ``added``/``replaced`` delta
-        (the log entry); the full live set is maintained incrementally in
-        the session cache and checkpointed to ``_ckpt/`` every
-        ``MANIFEST_CHECKPOINT_INTERVAL`` commits, so neither writes nor
-        reads ever serialize O(live_files) JSON per commit."""
-        os.makedirs(self.commits_dir, exist_ok=True)
+        """Build the enabled index sidecars over ``added``, stamp the
+        files they cover, then publish the commit through
+        :meth:`Timeline.publish` (writing the manifest IS the
+        commit)."""
         # adopted (external) files are not index-built: they lack the
         # engine meta columns the builders read. Unflagged files make
         # the planners fall back conservatively (record index requires
@@ -3022,137 +2648,9 @@ class LakeTable(FilePlanner):
             )
             for f in indexable:
                 f[flag] = val  # same dicts enter the live set
-        # roll the live set forward BEFORE the manifest lands (while
-        # last_instant() still names the previous commit)
-        prev = self._live_files()
-        replaced_set = set(replaced)
-        live = [f for f in prev if f["path"] not in replaced_set] + added
-        manifest = {
-            "instant": instant,
-            "action": action,
-            "schema": schema.jsonValue(),
-            "added": added,
-            "replaced": replaced,
-            # per-partition key envelope (r8 verdict #5): lets a later
-            # optimistic publish prove disjointness against this commit
-            # with one dict probe instead of a per-file pairwise walk
-            "key_summary": [
-                {"pp": pp, "env": env}
-                for pp, env in self._key_summary(added).items()
-            ],
-            # writer's fencing token (lease providers; None for the
-            # O_EXCL file lock) — lets read planning discard a zombie
-            # manifest renamed into the timeline after a lease takeover
-            "fence_token": getattr(self.lock_provider, "token", None),
-        }
-        if self._pending_checkpoint is not None:
-            # source checkpoint recorded IN the commit (Hudi stores the
-            # streaming checkpoint in commit metadata the same way) —
-            # the atomic manifest write makes data+cursor one transaction
-            manifest["checkpoint"] = self._pending_checkpoint
-            self._pending_checkpoint = None
-        # per-source streaming offsets (OffsetCommitListener) — the
-        # engine-native analog of the reference's Kafka offset
-        # commit-back (SRC/Log2Hudi.scala:47-48); at least one batch
-        # behind by construction (progress events fire asynchronously
-        # after the batch's commit). Atomic swap-out under the lock: a
-        # payload the listener writes between read and clear stays
-        # armed for the NEXT manifest instead of being discarded
-        with self._offsets_lock:
-            pending_offsets, self._pending_offsets = (
-                self._pending_offsets, None
-            )
-        if pending_offsets is not None:
-            manifest["stream_offsets"] = pending_offsets
-        tmp = os.path.join(self.commits_dir, f".{instant}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        # fencing check at the commit point: a lease-based provider
-        # raises LockFenced here if this writer was superseded (lease
-        # expired + taken over) — the zombie publishes nothing. No-op
-        # for the O_EXCL file lock (cannot be superseded while held).
-        self.lock_provider.validate()
-        final = os.path.join(self.commits_dir, instant + ".json")
-        os.replace(tmp, final)
-        # validate() is not atomic with the rename: a writer paused
-        # (GC/SIGSTOP) between the two can still publish after a lease
-        # takeover (r4 advice). Re-validate AFTER publish and roll the
-        # manifest back if fenced, shrinking the zombie window from
-        # "unbounded pause" to the microseconds between rename and this
-        # check. Residual (documented) window: a zombie that crashes
-        # after the rename but before the rollback leaves its manifest
-        # in the timeline; a reader racing between rename and unlink
-        # can transiently observe it.
-        try:
-            self.lock_provider.validate()
-        except Exception:
-            try:
-                os.unlink(final)
-            except FileNotFoundError:
-                pass
-            raise
-        self._live_cache = (instant, live)
-        if MANIFEST_CHECKPOINT_INTERVAL:
-            newest = (self._checkpoints() or [None])[-1]
-            n_since = len(
-                [i for i in self.timeline() if newest is None or i > newest]
-            )
-            if n_since >= MANIFEST_CHECKPOINT_INTERVAL:
-                self._write_files_checkpoint(instant, live)
-
-    def _write_files_checkpoint(self, instant: str, live: list[dict]) -> None:
-        """Materialize the full live-file list at ``instant`` under
-        ``_ckpt/`` (atomic rename — losing one is harmless, readers just
-        replay a longer manifest suffix)."""
-        os.makedirs(self.ckpt_dir, exist_ok=True)
-        tmp = os.path.join(self.ckpt_dir, f".{instant}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"instant": instant, "live_files": live}, fh)
-        os.replace(tmp, os.path.join(self.ckpt_dir, instant + ".json"))
-
-    # ------------------------------------------------------ stream offsets
-
-    def record_stream_offsets(
-        self, query_name: str, batch_id: int, sources: list[dict]
-    ) -> None:
-        """Persist a streaming batch's per-source end offsets — the
-        engine-native replacement for the reference's Kafka
-        consumer-group commit-back (``SRC/Log2Hudi.scala:47-48``, the
-        net.heartsavior listener). Two sinks: an atomically-replaced
-        ``_commits/_offsets/<query>.json`` (durable the instant the
-        progress event fires — lag monitors read this without touching
-        the timeline) and ``stream_offsets`` embedded in the NEXT
-        commit's manifest (the same place the streaming checkpoint
-        rides, so offsets and data share the timeline's atomicity).
-        Called by ``streaming.sources.OffsetCommitListener``."""
-        payload = {
-            "query": query_name,
-            "batch_id": batch_id,
-            "sources": sources,
-        }
-        d = os.path.join(self.commits_dir, "_offsets")
-        os.makedirs(d, exist_ok=True)
-        safe = "".join(c if c.isalnum() or c in "-_." else "_"
-                       for c in query_name) or "query"
-        tmp = os.path.join(d, f".{safe}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(payload, fh)
-        os.replace(tmp, os.path.join(d, f"{safe}.json"))
-        with self._offsets_lock:
-            self._pending_offsets = payload
-
-    def stream_offsets(self, query_name: str) -> dict | None:
-        """Newest recorded offsets for ``query_name`` (durable
-        sidecar), or None if the query never reported progress."""
-        safe = "".join(c if c.isalnum() or c in "-_." else "_"
-                       for c in query_name) or "query"
-        try:
-            with open(
-                os.path.join(self.commits_dir, "_offsets", f"{safe}.json")
-            ) as fh:
-                return json.load(fh)
-        except (FileNotFoundError, ValueError):
-            return None
+        self.tl.publish(
+            instant, action, schema.jsonValue(), added, replaced, checkpoint
+        )
 
     # ------------------------------------------ metadata-only bootstrap
 
@@ -3288,120 +2786,20 @@ class LakeTable(FilePlanner):
                 raise ConcurrentWriteConflict(
                     "another writer initialized the table during bootstrap"
                 )
-            inst = self._next_instant(instant)
+            inst = self.tl.next_instant(instant)
             stamped = self._stamp(raw, inst)
             if self.is_mor:
                 stamped = stamped.withColumn(DELETED_COL, F.lit(False))
-            ext_dir = os.path.join(self.path, "_external")
-            os.makedirs(ext_dir, exist_ok=True)
             bases = [{"base": base, "instant": inst}]
-            with open(os.path.join(ext_dir, "bases.json"), "w") as fh:
-                json.dump({"bases": bases}, fh)
+            write_json(
+                os.path.join(self.path, "_external", "bases.json"),
+                {"bases": bases},
+            )
             self._external_cache = bases
             self._write_manifest(
                 inst, "bootstrap", stamped.schema, records, []
             )
         return inst
-
-    # ---------------------------------------------------------- savepoints
-
-    @property
-    def savepoint_dir(self) -> str:
-        return os.path.join(self.path, "_savepoints")
-
-    def savepoint(self, instant: str) -> None:
-        """Pin ``instant`` against the cleaner (Hudi savepoint): the
-        files live AT a savepointed instant are retained by ``clean()``
-        regardless of its retention horizon, so ``time_travel`` to the
-        savepoint keeps working forever — the mechanism behind audit /
-        reproducibility pins ("the corpus exactly as trained on").
-        Timeline archival is unaffected (archived manifests stay
-        readable), only file retention changes."""
-        if instant not in self._full_timeline():
-            raise ValueError(f"unknown instant {instant!r}")
-        os.makedirs(self.savepoint_dir, exist_ok=True)
-        tmp = os.path.join(self.savepoint_dir, f".{instant}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump({"instant": instant}, fh)
-        os.replace(
-            tmp, os.path.join(self.savepoint_dir, instant + ".json")
-        )
-
-    def release_savepoint(self, instant: str) -> None:
-        """Unpin; the next ``clean()`` may reap the instant's files."""
-        try:
-            os.remove(os.path.join(self.savepoint_dir, instant + ".json"))
-        except FileNotFoundError:
-            pass
-
-    def savepoints(self) -> list[str]:
-        return _json_stems(self.savepoint_dir)
-
-    # ------------------------------------------------------------- restore
-
-    def restore(self, instant: str) -> list[str]:
-        """Roll the table back to ``instant`` (Hudi savepoint+restore
-        analog): commits after it are removed from the timeline and
-        their data files deleted. Single-writer operation, taken under
-        the writer lock. Returns the discarded instants."""
-        with self._writer_lock():
-            tl = self.timeline()
-            if instant not in tl:
-                raise ValueError(f"unknown instant {instant!r}")
-            doomed = [i for i in tl if i > instant]
-            # data paths are instant-scoped (data/<instant>/...), so a
-            # pre-restore commit can never reference a doomed commit's
-            # files — but a doomed METADATA-ONLY commit (index_backfill)
-            # re-lists LIVE files from arbitrarily old creating commits,
-            # so the keep-set must cover the whole pre-restore history,
-            # not just the active timeline: the restore-point LIVE SET
-            # (checkpoint-replayed, so it sees through the archival
-            # horizon) plus every active and ARCHIVED pre-restore
-            # manifest. Active manifests alone lost data when creating
-            # commits had been archived (r13: restore deleted live
-            # data/001 files re-listed by a doomed backfill).
-            keep_files = {
-                f["path"]
-                for i in tl
-                if i <= instant
-                for f in self._manifest(i)["added"]
-            }
-            keep_files |= {f["path"] for f in self._live_files_at(instant)}
-            for i in self._archived():
-                keep_files |= {
-                    f["path"] for f in self._manifest_any(i)["added"]
-                }
-            for i in doomed:
-                for f in self._manifest(i)["added"]:
-                    if f["path"] in keep_files or f.get("external"):
-                        continue  # adopted source files are user-owned
-                    full = os.path.join(self.path, f["path"])
-                    if os.path.exists(full):
-                        os.remove(full)
-                os.remove(os.path.join(self.commits_dir, i + ".json"))
-            # checkpoints taken after the restore point describe a live
-            # set that no longer exists — drop them, and the cache
-            for c in self._checkpoints():
-                if c > instant:
-                    os.remove(os.path.join(self.ckpt_dir, c + ".json"))
-            # savepoints pinning now-removed instants are meaningless
-            for sp in self.savepoints():
-                if sp > instant:
-                    self.release_savepoint(sp)
-            self._live_cache = None
-            # a doomed instant id can be re-allocated by a later write
-            # (instants are dense) — drop EVERY instant-keyed cache with
-            # it: manifest, partition stats, bloom sidecars, and the
-            # column-type map that authorizes bloom pruning (a stale
-            # cached type for a re-allocated id could wrongly prune
-            # files under a different schema)
-            self._manifest_mem.clear()
-            self._pstats_cache.clear()
-            self._key_bloom.clear()
-            self._col_bloom.clear()
-            self._col_type_cache.clear()
-            self._commit_summary_cache.clear()
-            return doomed
 
     # ----------------------------------------------------------- compaction
 
@@ -3472,8 +2870,8 @@ class LakeTable(FilePlanner):
         target_files_per_partition: int,
         sort_by: list | None = None,
     ) -> str:
-        inst = self._next_instant(instant)
-        live = self._live_files()
+        inst = self.tl.next_instant(instant)
+        live = self.tl.live_files()
         added = self._fold(live, inst, target_files_per_partition, sort_by)
         self._write_manifest(
             inst,
@@ -3699,7 +3097,7 @@ class LakeTable(FilePlanner):
         if not self.exists():
             return None
         with self._writer_lock():
-            live = self._live_files()
+            live = self.tl.live_files()
             if strategy == "small_files":
                 # the selection itself guarantees worthwhile work: a
                 # delta to fold, or ≥2 small files to squash
@@ -3711,7 +3109,7 @@ class LakeTable(FilePlanner):
                     return None
             elif len(live) <= 1:
                 return None
-            pid = plan_id or self._next_instant(None)
+            pid = plan_id or self.tl.next_instant(None)
             plan = {
                 "plan_id": pid,
                 "scheduled_after": self.last_instant(),
@@ -3724,13 +3122,7 @@ class LakeTable(FilePlanner):
                 plan["sort_spec"] = sort_spec
             if target_files_per_partition is not None:
                 plan["target_files"] = int(target_files_per_partition)
-            pdir = os.path.join(self.commits_dir, "_compaction")
-            os.makedirs(pdir, exist_ok=True)
-            tmp = os.path.join(pdir, pid + ".json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(plan, fh)
-            os.replace(tmp, os.path.join(pdir, pid + ".json"))
-            return pid
+            return self.tl.write_plan(plan)
 
     def _file_bytes(self, f: dict) -> int:
         """Manifest-recorded size; stat fallback for pre-r7 manifests
@@ -3767,10 +3159,6 @@ class LakeTable(FilePlanner):
             if has_delta or len(small_bases) >= 2:
                 picked.extend(files)  # WHOLE partition, never a subset
         return picked
-
-    def pending_compactions(self) -> list[str]:
-        """Scheduled-but-unexecuted plan ids, ascending."""
-        return _json_stems(os.path.join(self.commits_dir, "_compaction"))
 
     def run_compaction(
         self,
@@ -3809,7 +3197,7 @@ class LakeTable(FilePlanner):
         Concurrency (r6 verdict #1): the HEAVY fold — the same
         :meth:`_fold` :meth:`compact` runs, over the pinned files —
         holds NO table lock, like ``write_optimistic``'s compute step
-        (an ``.inflight`` marker keeps the cleaner off the half-written
+        (an inflight marker keeps the cleaner off the half-written
         files). The lock is taken only for a short publish through the
         step ``write_optimistic`` uses (:meth:`_survive_or_orphan`):
         re-verify the plan file still exists, its pinned files are all
@@ -3823,40 +3211,35 @@ class LakeTable(FilePlanner):
         also surface as a read error inside the Spark job: same
         situation one step earlier — the plan was doomed either way).
         """
-        pending = self.pending_compactions()
         if plan_id is None:
+            pending = self.pending_compactions()
             if not pending:
                 return None
             plan_id = pending[0]
-        pdir = os.path.join(self.commits_dir, "_compaction")
-        pfile = os.path.join(pdir, plan_id + ".json")
         # ---- plan read + staleness pre-check: NO LOCK (plan files are
         # immutable once scheduled; a concurrent executor either
         # finished — file gone — or discarded it as stale)
-        try:
-            with open(pfile) as fh:
-                plan = json.load(fh)
-        except FileNotFoundError:
+        plan = self.tl.read_plan(plan_id)
+        if plan is None:
             return None
         if sort_by is None and plan.get("sort_spec") is not None:
             sort_by = self._sort_by_from_spec(plan["sort_spec"])
         if target_files_per_partition is None:
             target_files_per_partition = int(plan.get("target_files", 1))
-        live_by_path = {f["path"]: f for f in self._live_files()}
+        live_by_path = {f["path"]: f for f in self.tl.live_files()}
         pinned_paths = set(plan["files"])
         if not pinned_paths <= set(live_by_path):
-            self._discard_plan(pfile)  # a pinned file was replaced
+            self.tl.discard_plan(plan_id)  # a pinned file was replaced
             return None
         pinned = [live_by_path[p] for p in sorted(pinned_paths)]
-        import uuid
 
         # provisional instant for the fold's data dir (uniquified like
         # write_optimistic's — concurrent executors must not collide);
         # the PUBLISHED instant is allocated later, under the lock, and
         # the dir renamed to it so path-derived instants (bloom sidecar
         # lookup, cleaner pruning) stay consistent
-        prov = self._next_instant(None) + "c" + uuid.uuid4().hex[:4]
-        self._mark_inflight(prov)
+        prov = self.tl.next_instant(None) + "c" + uuid.uuid4().hex[:4]
+        self.tl.mark_inflight(prov)
         try:
             # ---- fold: NO LOCK HELD (the expensive part — at 100 TB
             # this is a full rewrite of the pinned file set)
@@ -3865,12 +3248,12 @@ class LakeTable(FilePlanner):
             )
 
             def plan_holds() -> None:
-                if not os.path.exists(pfile):
+                if self.tl.read_plan(plan_id) is None:
                     raise ConcurrentWriteConflict(
                         f"compaction plan {plan_id} run by another executor"
                     )
-                if not pinned_paths <= {f["path"] for f in self._live_files()}:
-                    self._discard_plan(pfile)
+                if not pinned_paths <= {f["path"] for f in self.tl.live_files()}:
+                    self.tl.discard_plan(plan_id)
                     raise ConcurrentWriteConflict(
                         f"compaction plan {plan_id} went stale during the fold"
                     )
@@ -3883,7 +3266,7 @@ class LakeTable(FilePlanner):
                     self._survive_or_orphan(added, plan_holds)
                 except ConcurrentWriteConflict:
                     return None
-                inst = self._next_instant(None)
+                inst = self.tl.next_instant(None)
                 added = self._relocate_fold(prov, inst, added)
                 self._write_manifest(
                     inst,
@@ -3892,17 +3275,10 @@ class LakeTable(FilePlanner):
                     added,
                     sorted(pinned_paths),
                 )
-                self._discard_plan(pfile)
+                self.tl.discard_plan(plan_id)
                 return inst
         finally:
-            self._clear_inflight(prov)
-
-    @staticmethod
-    def _discard_plan(pfile: str) -> None:
-        try:
-            os.remove(pfile)
-        except FileNotFoundError:
-            pass  # concurrent executor discarded it first
+            self.tl.clear_inflight(prov)
 
     def _orphan(self, added: list[dict]) -> None:
         """Best-effort unlink of an abandoned write's files; the lazy
@@ -3935,97 +3311,6 @@ class LakeTable(FilePlanner):
             out.append(g)
         return out
 
-    # ---------------------------------------------------- inflight markers
-
-    def _mark_inflight(self, instant: str) -> None:
-        """Announce a LOCK-FREE write in progress (optimistic writer /
-        async-compaction fold): ``_commits/.inflight/<instant>.json``
-        tells a concurrent ``clean()`` that ``data/<instant>/`` belongs
-        to a live writer, not a crashed one — without it the cleaner
-        would reap the half-written files and the later publish would
-        reference deleted data (silent loss; r6 advice, high). The
-        serialized ``write()`` path doesn't need one: it holds the same
-        writer lock ``clean()`` takes.
-
-        The marker is HEARTBEATED (r7 advice, low): a daemon thread
-        rewrites its ``at`` timestamp every ``ttl/3`` until
-        ``_clear_inflight``. Without it, any fold whose compute phase
-        out-lives the TTL gets reaped by a periodic cleaner, aborts at
-        publish, and retries just as slowly — a livelock on exactly the
-        100 TB-scale compactions the marker exists to protect. A
-        CRASHED writer's heartbeat dies with its process, so staleness
-        detection is unchanged for the case the TTL is really for."""
-        self._write_inflight_marker(instant)
-        import threading
-
-        stop = threading.Event()
-        interval = max(1.0, self.inflight_ttl_seconds / 3.0)
-
-        def beat() -> None:
-            while not stop.wait(interval):
-                try:
-                    self._write_inflight_marker(instant)
-                except OSError:
-                    pass  # dir vanished (table dropped mid-write): moot
-
-        th = threading.Thread(
-            target=beat, daemon=True, name=f"inflight-hb-{instant}"
-        )
-        self._inflight_heartbeats[instant] = (stop, th)
-        th.start()
-
-    def _write_inflight_marker(self, instant: str) -> None:
-        os.makedirs(self.inflight_dir, exist_ok=True)
-        tmp = os.path.join(self.inflight_dir, f".{instant}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(
-                {"instant": instant, "pid": os.getpid(), "at": time.time()},
-                fh,
-            )
-        os.replace(tmp, os.path.join(self.inflight_dir, instant + ".json"))
-
-    def _clear_inflight(self, instant: str) -> None:
-        hb = self._inflight_heartbeats.pop(instant, None)
-        if hb is not None:
-            stop, th = hb
-            stop.set()
-            # JOIN before unlinking: a beat already past its stop check
-            # could os.replace the marker back after the unlink,
-            # resurrecting a fresh-timestamped marker for a completed
-            # commit (r8 advice). The thread spends its life in
-            # Event.wait, so the join returns in at most one marker
-            # write; the timeout only guards a wedged filesystem.
-            th.join(timeout=10.0)
-        try:
-            os.unlink(os.path.join(self.inflight_dir, instant + ".json"))
-        except OSError:
-            pass  # already reaped as stale, or never created
-
-    def _inflight_split(self) -> tuple[set[str], set[str]]:
-        """(live, stale) in-flight instants: markers younger than
-        ``inflight_ttl_seconds`` protect their data dir from the
-        cleaner; older ones are crashed writers whose files are fair
-        game (and whose marker clean() removes)."""
-        live: set[str] = set()
-        stale: set[str] = set()
-        try:
-            names = os.listdir(self.inflight_dir)
-        except FileNotFoundError:
-            return live, stale
-        horizon = time.time() - self.inflight_ttl_seconds
-        for n in names:
-            if not n.endswith(".json") or n.startswith("."):
-                continue
-            inst = n[: -len(".json")]
-            try:
-                with open(os.path.join(self.inflight_dir, n)) as fh:
-                    at = json.load(fh).get("at", 0.0)
-            except (FileNotFoundError, ValueError):
-                live.add(inst)  # torn read / mid-replace: assume live
-                continue
-            (live if at > horizon else stale).add(inst)
-        return live, stale
-
     # -------------------------------------------------------------- cleaner
 
     def clean(self, retain_commits: int = 2) -> list[str]:
@@ -4039,8 +3324,8 @@ class LakeTable(FilePlanner):
         exist before its manifest does and would otherwise look like
         orphans — cleaning them mid-write would corrupt the commit.
         LOCK-FREE writers (``write_optimistic`` / the async-compaction
-        fold) are instead protected by their ``_commits/.inflight/``
-        markers: their data dirs are skipped while the marker is younger
+        fold) are instead protected by their inflight markers
+        (:meth:`Timeline.mark_inflight`): their data dirs are skipped while the marker is younger
         than ``inflight_ttl_seconds``; older markers are crashed writers
         — the marker is removed and the files reclaimed (any such writer
         still alive aborts at publish via the added-files existence
@@ -4056,14 +3341,14 @@ class LakeTable(FilePlanner):
     def _clean_locked(self, tl: list[str], retain_commits: int) -> list[str]:
         keep = set()
         for inst in tl[-retain_commits:]:
-            keep |= {f["path"] for f in self._live_files_at(inst)}
+            keep |= {f["path"] for f in self.tl.live_files(inst)}
         # savepointed instants pin their whole live set regardless of
         # the retention horizon (Hudi savepoint semantics)
         for sp in self.savepoints():
-            keep |= {f["path"] for f in self._live_files_at(sp)}
-        inflight, stale_inflight = self._inflight_split()
+            keep |= {f["path"] for f in self.tl.live_files(sp)}
+        inflight, stale_inflight = self.tl.inflight_split()
         for inst in stale_inflight:
-            self._clear_inflight(inst)  # crashed writer: files now fair game
+            self.tl.clear_inflight(inst)  # crashed writer: files now fair game
         deleted = []
         for root, _dirs, files in os.walk(self.data_dir):
             for fn in files:
@@ -4095,40 +3380,6 @@ class LakeTable(FilePlanner):
         ):
             idx.prune(live_instants)
         return sorted(deleted)
-
-    def archive_timeline(self, keep_commits: int = 4) -> list[str]:
-        """Move manifests older than the last ``keep_commits`` into
-        ``_commits/_archived/`` (timeline archival,
-        ``SRC/package.scala:26-27``: min 3 / max 4).
-
-        Archival stops at the earliest savepointed instant (Hudi's
-        rule): a savepoint promises a reproducible ``as_of`` read, and
-        archiving its manifest would turn that read into the
-        archived-horizon error while the pinned files still exist."""
-        tl = self.timeline()
-        to_archive = tl[:-keep_commits] if len(tl) > keep_commits else []
-        sps = self.savepoints()
-        if sps:
-            first_sp = min(sps)
-            to_archive = [i for i in to_archive if i < first_sp]
-        if not to_archive:
-            return []
-        # pin a checkpoint at the archival horizon so live-set replays of
-        # the active window never need to read archived manifests (the
-        # _manifest_any fallback still covers a lost checkpoint)
-        horizon = to_archive[-1]
-        if not any(c >= horizon for c in self._checkpoints()):
-            self._write_files_checkpoint(
-                horizon, self._live_files_at(horizon)
-            )
-        arch = os.path.join(self.commits_dir, "_archived")
-        os.makedirs(arch, exist_ok=True)
-        for inst in to_archive:
-            os.replace(
-                os.path.join(self.commits_dir, inst + ".json"),
-                os.path.join(arch, inst + ".json"),
-            )
-        return to_archive
 
     # ----------------------------------------------------------- hive sync
 

@@ -201,14 +201,14 @@ class OffsetCommitListener(BatchProgressListener):
     net.heartsavior listener (``SRC/Log2Hudi.scala:47-48``,
     ``pom.xml:135-139``) so lag is observable. The engine-native analog
     persists every batch's per-source ``endOffset`` into the TARGET
-    TABLE's commit metadata instead: durably to
-    ``_commits/_offsets/<query>.json`` the moment the progress event
-    fires, and embedded as ``stream_offsets`` in the next manifest the
+    TABLE's commit metadata instead: durably to a per-query offsets
+    file (``Timeline.record_stream_offsets``) the moment the progress
+    event fires, and embedded as ``stream_offsets`` in the next manifest the
     table writes (progress events arrive asynchronously AFTER batch
     N's commit, so batch N's offsets ride a LATER manifest — normally
     N+1, but the listener thread races the ingest thread, so the lag
     can stretch and a newer payload supersedes an unembedded older one;
-    the durable ``_offsets/`` sidecar always holds the newest. The
+    the durable per-query file always holds the newest. The
     read-and-clear is lock-guarded so a racing listener write is never
     silently discarded — it stays armed for the following manifest).
     Lag = broker head minus the recorded endOffset, readable by any

@@ -1,7 +1,7 @@
 """Driver-side cost probe for optimistic-publish conflict checking
 over a DEEP publish window (r8 verdict #5).
 
-``_check_publish_conflicts`` must prove a publish computed at an old
+``Timeline.check_conflicts`` must prove a publish computed at an old
 base snapshot serializes against every commit that landed since. Before
 r9 that proof was a per-file pairwise key-range walk — O(commits ×
 their_files × our_files) driver-side comparisons per publish, the spot
@@ -39,23 +39,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from emr_hudi_example_spark.lake.table import LakeTable  # noqa: E402
+from emr_hudi_example_spark.lake.timeline import (  # noqa: E402
+    Timeline,
+    key_summary,
+)
 
 WINDOW = 50  # commits between our base snapshot and the publish
 OUR_FILES = 100
-
-
-class _Dummy(LakeTable):
-    """Filesystem-only view: bypass the Spark-dependent __init__."""
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-        self.commits_dir = os.path.join(path, "_commits")
-        self._fence_ok = set()
-        self._manifest_mem = {}
-        self._commit_summary_cache = {}
-        self.lock_provider = None
-        self.table_type = "COPY_ON_WRITE"  # is_mor property reads this
 
 
 def _files(commit: int, n: int) -> list[dict]:
@@ -78,7 +68,7 @@ def _files(commit: int, n: int) -> list[dict]:
 
 def build(files_per_commit: int, with_summary: bool) -> str:
     d = tempfile.mkdtemp(prefix="conflict-probe-")
-    cdir = os.path.join(d, "_commits")
+    cdir = Timeline(d).commits_dir
     os.makedirs(cdir)
     for i in range(WINDOW + 1):  # +1: instant 0 is our base snapshot
         added = _files(i, files_per_commit) if i > 0 else []
@@ -92,7 +82,7 @@ def build(files_per_commit: int, with_summary: bool) -> str:
         if with_summary:
             m["key_summary"] = [
                 {"pp": pp, "env": env}
-                for pp, env in LakeTable._key_summary(added).items()
+                for pp, env in key_summary(added).items()
             ]
         with open(os.path.join(cdir, f"{i:06d}.json"), "w") as fh:
             json.dump(m, fh)
@@ -123,11 +113,17 @@ def _ours(kind: str) -> list[dict]:
     ]
 
 
-def _time_check(t: _Dummy, ours: list[dict], runs: int = 5) -> float:
+def check(t: Timeline, ours: list[dict]) -> None:
+    """The upsert publish check of ``ours`` against every commit after
+    the base snapshot ``000000``."""
+    t.check_conflicts("000000", "999999", ours, [], check_keys=True)
+
+
+def _time_check(t: Timeline, ours: list[dict], runs: int = 5) -> float:
     best = None
     for _ in range(runs):
         t0 = time.perf_counter()
-        t._check_publish_conflicts("000000", "999999", "upsert", ours, [])
+        check(t, ours)
         el = time.perf_counter() - t0
         best = el if best is None else min(best, el)
     return best
@@ -138,16 +134,14 @@ def main() -> None:
     for fpc in (100, 1000, 5000):
         rows = {}
         d = build(fpc, with_summary=True)
-        t = _Dummy(d)
+        t = Timeline(d)
         rows["summary-pruned"] = _time_check(t, _ours("disjoint"))
         rows["fallback-pairwise"] = _time_check(t, _ours("interleaved"))
         shutil.rmtree(d)
         d = build(fpc, with_summary=False)
-        t = _Dummy(d)
+        t = Timeline(d)
         t0 = time.perf_counter()
-        t._check_publish_conflicts(
-            "000000", "999999", "upsert", _ours("disjoint"), []
-        )
+        check(t, _ours("disjoint"))
         rows["legacy-cold"] = time.perf_counter() - t0
         rows["legacy-warm"] = _time_check(t, _ours("disjoint"))
         shutil.rmtree(d)

@@ -1,15 +1,16 @@
 """Driver-side cost probe for the zombie-fence read filter.
 
-``LakeTable.timeline()`` consults ``_lease/fences.json`` on every
-listing and, when takeover fences exist, checks each not-yet-cleared
-instant newer than a fence's snapshot head against its manifest's
-fencing token (``table.py::_zombie_instants``). This probe times the
-listing at high commit counts with and without fences, plus the
-warmed re-listing (clean verdicts are cached in ``_fence_ok``), to show
-the 100 TB-timeline planning overhead of the r6 fencing closure is
-negligible — the filter reads ONE small JSON when no takeover ever
-happened, and only suspects (instants after the newest takeover) pay a
-manifest open, once.
+``Timeline.instants()`` reads the takeover fences on every listing —
+one immutable ``_lease/fence-<token>.json`` record per lease takeover
+(``locks.py::read_fences``) — and, when fences exist, checks each
+not-yet-cleared instant newer than a fence's snapshot head against its
+manifest's fencing token (``timeline.py::Timeline._zombies``). This
+probe times the listing at high commit counts with and without a
+fence, plus the warmed re-listing (clean verdicts are cached), to show
+the planning overhead of the fencing closure is negligible: with no
+takeover the filter costs one failed open and one failed listing, and
+only suspects (instants after the newest takeover) pay a manifest
+open, once. Filesystem only: no Spark session starts.
 
 Run: python scripts/fence_probe.py
 """
@@ -18,30 +19,23 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
 import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from emr_hudi_example_spark.lake.table import LakeTable  # noqa: E402
-
-
-class _Dummy(LakeTable):
-    """Filesystem-only view: bypass the Spark-dependent __init__."""
-
-    def __init__(self, path: str) -> None:
-        self.path = path
-        self.commits_dir = os.path.join(path, "_commits")
-        self._fence_ok = set()
+from emr_hudi_example_spark.lake.locks import LocalFSStore  # noqa: E402
+from emr_hudi_example_spark.lake.timeline import Timeline  # noqa: E402
 
 
 def build(n_commits: int, fenced: bool) -> str:
     d = tempfile.mkdtemp(prefix="fence-probe-")
-    cdir = os.path.join(d, "_commits")
-    os.makedirs(cdir)
+    tl = Timeline(d)
+    os.makedirs(tl.commits_dir)
     for i in range(n_commits):
-        with open(os.path.join(cdir, f"{i:06d}.json"), "w") as fh:
+        with open(os.path.join(tl.commits_dir, f"{i:06d}.json"), "w") as fh:
             json.dump(
                 {"instant": f"{i:06d}", "action": "upsert", "added": [],
                  "replaced": [], "fence_token": 1}, fh)
@@ -49,22 +43,30 @@ def build(n_commits: int, fenced: bool) -> str:
         # one takeover at 90% of the timeline: the newest 10% of
         # instants are suspects on the first listing
         head = f"{int(n_commits * 0.9):06d}"
-        os.makedirs(os.path.join(d, "_lease"))
-        with open(os.path.join(d, "_lease", "fences.json"), "w") as fh:
-            json.dump({"fences": [{"token": 1, "timeline_head": head}]}, fh)
+        store = LocalFSStore(tl.lease_dir)
+        store.ensure()
+        store.put_if_absent(
+            f"fence-{1:020d}.json",
+            json.dumps({"token": 1, "timeline_head": head}),
+        )
     return d
 
 
 def probe(n: int) -> None:
     for label, fenced in (("no-fence", False), ("fenced", True)):
-        t = _Dummy(build(n, fenced))
-        t0 = time.perf_counter()
-        tl = t.timeline()
-        cold = time.perf_counter() - t0
-        t0 = time.perf_counter()
-        t.timeline()
-        warm = time.perf_counter() - t0
-        assert len(tl) == n
+        d = build(n, fenced)
+        try:
+            t = Timeline(d)
+            t0 = time.perf_counter()
+            tl = t.instants()
+            cold = time.perf_counter() - t0
+            t0 = time.perf_counter()
+            t.instants()
+            warm = time.perf_counter() - t0
+            assert len(tl) == n
+            assert len(t.fences()) == int(fenced)
+        finally:
+            shutil.rmtree(d)
         print(f"  {n:>7} commits {label:>9}: cold {cold*1e3:7.1f} ms, "
               f"warm {warm*1e3:7.1f} ms")
 

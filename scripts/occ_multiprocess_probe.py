@@ -37,7 +37,7 @@ Phases:
   reference's ASYNC compaction story (``SRC/KDS2Hudi.scala:131,133``)
   as a real cross-process writer/compactor/cleaner race. The fold
   holds no lock (appends never invalidate a plan; only replacements
-  do) and the cleaner honors live cross-process ``.inflight`` markers,
+  do) and the cleaner honors live cross-process inflight markers,
   so every ingest commit must land, at least one mid-ingest fold must
   commit, and after B's final drain the snapshot, the read-optimized
   view, and the full-range incremental read must all equal the
@@ -307,11 +307,10 @@ def contender(base: str) -> None:
     t0 = time.monotonic()
     p.acquire(wait_seconds=30.0)
     latency = round(time.monotonic() - t0, 3)
-    fence = os.path.join(base, "_lease", f"fence-{p.token:020d}.json")
     print("CONTENDER_RESULT " + json.dumps({
         "latency_sec": latency,
         "token": p.token,
-        "fence_recorded": os.path.exists(fence),
+        "fence_recorded": any(f["token"] == p.token for f in p.fences()),
     }), flush=True)
     p.release()
 

@@ -701,7 +701,7 @@ def run_compact_probe(spark: SparkSession, mult: int) -> list[dict]:
         ods.write(
             spark.createDataFrame(pd.DataFrame(sl)).coalesce(2), op="upsert"
         )
-    files = ods._live_files()
+    files = ods.tl.live_files()
     pids = {
         "py": os.getpid(),
         "jvm": spark.sparkContext._jvm.ProcessHandle.current().pid(),

@@ -41,7 +41,7 @@ def test_bucket_layout_one_file_per_bucket(spark, tmp_path):
     t = bucket_table(spark, tmp_path)
     base = cust(spark)
     t.write(base, op="insert", instant="001")
-    added = t._manifest("001")["added"]
+    added = t.tl.manifest("001")["added"]
     assert len(added) == 8  # one file per bucket (150 keys fill all 8)
     assert sorted(f["bucket"] for f in added) == list(range(8))
     assert all(f["bucket_n"] == 8 for f in added)
@@ -57,15 +57,15 @@ def test_bucket_upsert_targets_hit_buckets(spark, tmp_path):
     point = cust(spark, ver=2).filter(F.col("c_custkey") == 8)
     t.write(point, op="upsert", instant="002")
     assert t.last_scan["bucket"] == 7
-    assert len(t._manifest("002")["replaced"]) == 1
+    assert len(t.tl.manifest("002")["replaced"]) == 1
     snap = t.snapshot()
     assert snap.filter(F.col("ver") == 2).count() == 1
     assert snap.count() == cust(spark).count()
     # the rewritten file keeps its bucket stamp
-    [new_f] = t._manifest("002")["added"]
-    [old_p] = t._manifest("002")["replaced"]
+    [new_f] = t.tl.manifest("002")["added"]
+    [old_p] = t.tl.manifest("002")["replaced"]
     old_f = next(
-        f for f in t._manifest("001")["added"] if f["path"] == old_p
+        f for f in t.tl.manifest("001")["added"] if f["path"] == old_p
     )
     assert new_f["bucket"] == old_f["bucket"]
 
@@ -127,8 +127,8 @@ def test_bucket_read_prune_mor_supersession_and_out_of_order(
         op="upsert", instant="003",
     )
     # both deltas carry key 8's bucket stamp under the same modulus
-    d2 = t._manifest("002")["added"]
-    d3 = t._manifest("003")["added"]
+    d2 = t.tl.manifest("002")["added"]
+    d3 = t.tl.manifest("003")["added"]
     assert len(d2) == 1 and len(d3) == 1
     assert d2[0]["kind"] == "delta" and d3[0]["kind"] == "delta"
     assert d2[0]["bucket"] == d3[0]["bucket"]
@@ -163,7 +163,7 @@ def test_bucket_resize_is_conservative(spark, tmp_path):
     assert snap.filter(F.col("ver") == 2).count() == 1
     # the COW rewrite re-spreads the hit file's rows under the NEW
     # modulus: every added file is stamped n=8
-    added = t8._manifest("002")["added"]
+    added = t8.tl.manifest("002")["added"]
     assert added and all(f["bucket_n"] == 8 for f in added)
 
 
@@ -174,7 +174,7 @@ def test_bucket_compact_preserves_layout(spark, tmp_path):
     t.write(cust(spark), op="insert", instant="001")
     t.write(cust(spark, ver=2), op="upsert", instant="002")
     t.compact(instant="003")
-    added = t._manifest("003")["added"]
+    added = t.tl.manifest("003")["added"]
     assert sorted(f["bucket"] for f in added) == list(range(8))
     out = t.snapshot(predicate=[(RECORD_KEY_COL, "=", "8")])
     assert t.last_scan["bucket"] == 7

@@ -936,7 +936,10 @@ def test_soft_dedup_weight_mass_equals_unique_content(spark):
     w = D.soft_dedup_weights(docs)
     n_unique = (
         docs.selectExpr(
-            "md5(regexp_replace(lower(trim(text)), '\\\\s+', ' ')) AS fp"
+            # operators/text.py::_WS as real characters: Spark SQL reads
+            # the escape backslash-f as a plain "f"
+            "md5(regexp_replace(lower(trim(BOTH ' \t\n\r\f' FROM text)),"
+            " '\\\\s+', ' ')) AS fp"
         )
         .distinct()
         .count()

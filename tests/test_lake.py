@@ -16,7 +16,7 @@ from emr_hudi_example_spark.lake import (
     RECORD_KEY_COL,
     LakeTable,
 )
-from emr_hudi_example_spark.lake import table as table_mod
+from emr_hudi_example_spark.lake import timeline as timeline_mod
 
 SF = "/root/testdata/sf0.001"
 
@@ -351,7 +351,7 @@ def test_partitioned_cow_rewrites_only_affected(spark, tmp_path):
         "c_acctbal", F.lit(1.5)
     )
     t.write(upd, op="upsert", instant="002")
-    m = t._manifest("002")
+    m = t.tl.manifest("002")
     # only the BUILDING partition was rewritten
     assert all(f["partition"] == {"c_mktsegment": "BUILDING"} for f in m["added"])
     assert t.snapshot().count() == b.count()
@@ -632,14 +632,14 @@ def test_upsert_file_level_targeting(spark, tmp_path):
     hi = cust(spark, ver=1).filter(F.col("c_custkey") >= 100)
     t.write(lo, op="insert", instant="001")
     t.write(hi, op="insert", instant="002")
-    lo_files = {f["path"] for f in t._manifest("001")["added"]}
-    hi_files = {f["path"] for f in t._manifest("002")["added"]}
+    lo_files = {f["path"] for f in t.tl.manifest("001")["added"]}
+    hi_files = {f["path"] for f in t.tl.manifest("002")["added"]}
 
     one = cust(spark, ver=2).filter(F.col("c_custkey") == 5)
     t.write(one, op="upsert", instant="003")
-    m = t._manifest("003")
+    m = t.tl.manifest("003")
     assert set(m["replaced"]) <= lo_files  # only key-hit files rewritten
-    assert hi_files <= {f["path"] for f in t._live_files_at("003")}  # carried over
+    assert hi_files <= {f["path"] for f in t.tl.live_files("003")}  # carried over
     snap = t.snapshot()
     assert snap.filter(F.col("c_custkey") == 5).collect()[0]["ver"] == 2
     assert snap.count() == lo.count() + hi.count()
@@ -647,7 +647,7 @@ def test_upsert_file_level_targeting(spark, tmp_path):
     # delete targets files the same way
     t.write(cust(spark, ver=3).filter(F.col("c_custkey") == 101),
             op="delete", instant="004")
-    m4 = t._manifest("004")
+    m4 = t.tl.manifest("004")
     assert set(m4["replaced"]) <= hi_files  # lo-side files untouched
     assert t.snapshot().count() == lo.count() + hi.count() - 1
 
@@ -696,9 +696,9 @@ def test_compact_squashes_files_preserving_semantics(spark, tmp_path):
             op="insert", instant=inst,
         )
     before = {(r["c_custkey"], r["ver"]) for r in t.snapshot().collect()}
-    n_files_before = len(t._live_files())
+    n_files_before = len(t.tl.live_files())
     t.compact(instant="004")
-    assert len(t._live_files()) < n_files_before
+    assert len(t.tl.live_files()) < n_files_before
     assert {(r["c_custkey"], r["ver"]) for r in t.snapshot().collect()} == before
     # incremental over a range spanning the compaction: exactly commit 002+003 rows
     inc = t.incremental("001", "004")
@@ -787,7 +787,7 @@ def test_compact_sort_by_clusters_rows(spark, tmp_path):
         t.write(cust(spark, ver=2), op="insert", instant="002")
         assert fold(t) is not None
         # rows inside the (single) compacted file are key-ordered
-        path = [f["path"] for f in t._live_files()]
+        path = [f["path"] for f in t.tl.live_files()]
         assert len(path) == 1
         keys = pq.read_table(
             os.path.join(t.path, path[0]), columns=["c_custkey"]
@@ -822,7 +822,7 @@ def test_mor_upsert_matches_cow_semantics(spark, tmp_path):
     assert "_deleted" not in snap.columns
     # no rewrite happened: every commit only ADDED files
     for i in t.timeline():
-        assert t._manifest(i)["replaced"] == []
+        assert t.tl.manifest(i)["replaced"] == []
 
 
 def test_mor_delete_tombstone_and_resurrect(spark, tmp_path):
@@ -869,12 +869,12 @@ def test_mor_inline_compaction_trigger(spark, tmp_path):
     t.write(cust(spark, ver=2).filter(F.col("c_custkey") <= 5),
             op="upsert", instant="002")
     assert not any(
-        t._manifest(i)["action"] == "compact" for i in t.timeline()
+        t.tl.manifest(i)["action"] == "compact" for i in t.timeline()
     )
     t.write(cust(spark, ver=3).filter(F.col("c_custkey") <= 2),
             op="upsert", instant="003")
-    assert any(t._manifest(i)["action"] == "compact" for i in t.timeline())
-    live = t._live_files()
+    assert any(t.tl.manifest(i)["action"] == "compact" for i in t.timeline())
+    live = t.tl.live_files()
     assert all(f["kind"] == "base" for f in live)
     snap = t.snapshot()
     assert snap.count() == cust(spark).count()
@@ -889,15 +889,15 @@ def test_key_range_stats_prune_candidates(spark, tmp_path):
     hi = cust(spark, ver=1).filter(F.col("c_custkey") >= 100)
     t.write(lo, op="insert", instant="001")
     t.write(hi, op="insert", instant="002")
-    for f in t._live_files():
+    for f in t.tl.live_files():
         assert f["key_min"] is not None and f["key_max"] >= f["key_min"]
     # record key is the STRING form — probe keys 400..499 sort inside
     # "100".."99" lexicographically? use 5 (< "10") to stay disjoint
     t.write(cust(spark, ver=2).filter(F.col("c_custkey") == 0),
             op="upsert", instant="003")
     assert t.last_scan["key_range"] >= 1  # the hi-range file never scanned
-    m = t._manifest("003")
-    lo_files = {f["path"] for f in t._manifest("001")["added"]}
+    m = t.tl.manifest("003")
+    lo_files = {f["path"] for f in t.tl.manifest("001")["added"]}
     assert set(m["replaced"]) <= lo_files
     assert t.snapshot().filter(F.col("c_custkey") == 0).collect()[0]["ver"] == 2
 
@@ -923,7 +923,7 @@ def test_mor_schema_evolution_and_incremental(spark, tmp_path):
     t.compact(instant="003")
     snap2 = t.snapshot()
     assert {r["c_custkey"]: r["tag"] for r in snap2.collect()} == got
-    assert all(f["kind"] == "base" for f in t._live_files())
+    assert all(f["kind"] == "base" for f in t.tl.live_files())
 
 
 def test_restore_after_compact(spark, tmp_path):
@@ -1003,16 +1003,16 @@ def test_mor_inline_compaction_ignores_base_inserts(spark, tmp_path):
             op="insert", instant=inst,
         )
     assert not any(
-        t._manifest(i)["action"] == "compact" for i in t.timeline()
+        t.tl.manifest(i)["action"] == "compact" for i in t.timeline()
     )
     t.write(cust(spark, ver=2).filter(F.col("c_custkey") == 1),
             op="upsert", instant="005")
     assert not any(
-        t._manifest(i)["action"] == "compact" for i in t.timeline()
+        t.tl.manifest(i)["action"] == "compact" for i in t.timeline()
     )
     t.write(cust(spark, ver=3).filter(F.col("c_custkey") == 2),
             op="upsert", instant="006")
-    assert any(t._manifest(i)["action"] == "compact" for i in t.timeline())
+    assert any(t.tl.manifest(i)["action"] == "compact" for i in t.timeline())
 
 
 def test_incremental_refuses_archived_range(spark, tmp_path):
@@ -1172,13 +1172,13 @@ def test_async_compaction_snapshot_unchanged(spark, tmp_path):
     for x in (t, twin):
         x.write(b3, op="upsert", instant="003")
         x.write(victims, op="delete", instant="004")
-    pre = {f["path"] for f in t._live_files()}
+    pre = {f["path"] for f in t.tl.live_files()}
     inst = t.run_compaction(pid)
     assert inst is not None and t.pending_compactions() == []
-    post = {f["path"] for f in t._live_files()}
+    post = {f["path"] for f in t.tl.live_files()}
     # the post-schedule delta files survived the fold untouched
     later = {
-        f["path"] for i in ("003", "004") for f in t._manifest(i)["added"]
+        f["path"] for i in ("003", "004") for f in t.tl.manifest(i)["added"]
     }
     assert later <= pre and later <= post
     a = sorted(map(tuple, t.snapshot().select("c_custkey", "ver").collect()))
@@ -1244,7 +1244,7 @@ def test_async_compactor_concurrent_with_ingest(spark, tmp_path):
         comp.stop()
     assert comp.executed  # at least one plan ran in the background
     assert t.pending_compactions() == []
-    assert any(t._manifest(i)["action"] == "compact" for i in t.timeline())
+    assert any(t.tl.manifest(i)["action"] == "compact" for i in t.timeline())
     snap = t.snapshot()
     assert snap.count() == cust(spark).count()
     assert snap.filter((F.col("ver") == 7)).count() == 50
@@ -1470,7 +1470,7 @@ def test_async_compactor_abandons_corrupt_plan(spark, tmp_path):
     t.write(b.filter(F.col("c_custkey") % 2 == 1), op="insert", instant="002")
     pid = t.schedule_compaction()
     assert pid is not None
-    pfile = os.path.join(t.commits_dir, "_compaction", pid + ".json")
+    pfile = os.path.join(t.tl.commits_dir, "_compaction", pid + ".json")
     with open(pfile, "w") as fh:
         fh.write("{not valid json")
     c = AsyncCompactor(t, lock_backoff_seconds=0.01, max_generic_attempts=2)
@@ -1484,7 +1484,7 @@ def test_async_compactor_abandons_corrupt_plan(spark, tmp_path):
     assert not os.path.exists(pfile)
     assert pid not in t.pending_compactions()
     sidecar = os.path.join(
-        t.commits_dir, "_compaction", "_abandoned", pid + ".json"
+        t.tl.commits_dir, "_compaction", "_abandoned", pid + ".json"
     )
     tomb = _json.load(open(sidecar))
     assert "abandoned_error" in tomb and tomb["abandoned_attempts"] == 2
@@ -1497,7 +1497,7 @@ def test_async_compactor_abandons_corrupt_plan(spark, tmp_path):
         cust(spark, ver=3).filter(F.col("c_custkey") <= 5),
         op="insert", instant="003",
     )
-    _json.load(open(os.path.join(t.commits_dir, "003.json")))
+    _json.load(open(os.path.join(t.tl.commits_dir, "003.json")))
     pid2 = t.schedule_compaction()
     assert t.run_compaction(pid2) is not None
 
@@ -1735,7 +1735,7 @@ def test_zombie_publish_after_takeover_is_rolled_back(spark, tmp_path):
         t.write(cust(spark, ver=1), op="upsert", instant="001")
     assert calls["n"] == 2  # both commit-point checks ran
     assert t.timeline() == []
-    assert not _os.path.exists(_os.path.join(t.commits_dir, "001.json"))
+    assert not _os.path.exists(_os.path.join(t.tl.commits_dir, "001.json"))
 
 
 def test_zombie_crash_after_publish_is_fenced_at_read_planning(
@@ -1792,9 +1792,9 @@ def test_zombie_crash_after_publish_is_fenced_at_read_planning(
         t_a.write(cust(spark, ver=2), op="upsert", instant="002")
 
     # the late rename DID land — the manifest file exists on disk...
-    assert _os.path.exists(_os.path.join(t_a.commits_dir, "002.json"))
+    assert _os.path.exists(_os.path.join(t_a.tl.commits_dir, "002.json"))
     assert calls["b_token"] == 3  # a used 1 (commit 001) and 2 (the stall)
-    fences = t_a._fences()
+    fences = t_a.tl.fences()
     assert [(f["token"], f["timeline_head"]) for f in fences] == [(3, "001")]
 
     # ...but read planning ignores it, and the next writer builds on 001
@@ -1891,8 +1891,8 @@ def test_publish_conflict_key_summaries(spark, tmp_path):
     from emr_hudi_example_spark.lake import LakeTable
     from emr_hudi_example_spark.lake.table import ConcurrentWriteConflict
 
-    # _key_summary unit shape: per-partition fold, None = missing stats
-    s = LakeTable._key_summary([
+    # key_summary unit shape: per-partition fold, None = missing stats
+    s = timeline_mod.key_summary([
         {"partition_path": "p=a", "key_min": "5", "key_max": "7"},
         {"partition_path": "p=a", "key_min": "1", "key_max": "3"},
         {"partition_path": "p=b", "key_min": "2", "key_max": "4"},
@@ -1911,18 +1911,18 @@ def test_publish_conflict_key_summaries(spark, tmp_path):
     lo = cust(spark, ver=2).filter(F.col("c_custkey") <= 40)
     t.write_optimistic(lo, op="upsert", instant="002")
     # the published manifest carries the envelope
-    m = handle()._manifest("002")
+    m = handle().tl.manifest("002")
     assert m["key_summary"] and all(
         e["env"] is None or e["env"][0] <= e["env"][1]
         for e in m["key_summary"]
     )
     # summary path and legacy-derivation path agree exactly
     fresh = handle()
-    from_summary = fresh._commit_summary("002", m)
+    from_summary = fresh.tl._commit_summary("002", m)
     legacy = dict(m)
     legacy.pop("key_summary")
-    fresh._commit_summary_cache.clear()
-    assert fresh._commit_summary("002", legacy) == from_summary
+    fresh.tl.reset()
+    assert fresh.tl._commit_summary("002", legacy) == from_summary
     # drive the check directly against commit 002's REAL summary:
     # disjoint envelope (keys above every stored max) passes with no
     # per-file walk possible to object; identical envelope forces the
@@ -1930,18 +1930,18 @@ def test_publish_conflict_key_summaries(spark, tmp_path):
     pp, env = next(iter(from_summary.items()))
     above = env[1] + "~"  # '~' sorts above every digit
     t4 = handle()
-    t4._check_publish_conflicts(
-        "001", "zzz", "upsert",
+    t4.tl.check_conflicts(
+        "001", "zzz",
         [{"path": "x.parquet", "partition_path": pp,
           "key_min": above, "key_max": above + "9"}],
-        [],
+        [], check_keys=True,
     )
     with pytest.raises(ConcurrentWriteConflict, match="overlap"):
-        t4._check_publish_conflicts(
-            "001", "zzz", "upsert",
+        t4.tl.check_conflicts(
+            "001", "zzz",
             [{"path": "y.parquet", "partition_path": pp,
               "key_min": env[0], "key_max": env[1]}],
-            [],
+            [], check_keys=True,
         )
 
 
@@ -2093,7 +2093,7 @@ def test_optimistic_instant_overrun_aborts(spark, tmp_path):
                 .withColumn("c_custkey", F.col("c_custkey") + 99000),
                 op="insert", instant="005",  # out-runs A's planned 002
             )
-            assert t_b._manifest("005")["replaced"] == []
+            assert t_b.tl.manifest("005")["replaced"] == []
         return orig()
 
     t_a._writer_lock = lock_after_concurrent_commit
@@ -2250,10 +2250,10 @@ def test_two_successive_takeovers_fence_both_zombies(spark, tmp_path):
         spark, str(root), "testdb", "f3",
         record_keys=["c_custkey"], precombine="ver",
     )
-    assert len(reader._fences()) == 2
+    assert len(reader.tl.fences()) == 2
     # both zombie manifests exist on disk, neither is readable state
     for z in ("002", "004"):
-        assert _os.path.exists(_os.path.join(reader.commits_dir, z + ".json"))
+        assert _os.path.exists(_os.path.join(reader.tl.commits_dir, z + ".json"))
     assert reader.timeline() == ["001", "003", "005"]
     snap = reader.snapshot()
     assert snap.filter(F.col("ver").isin(2, 4)).count() == 0
@@ -2349,15 +2349,15 @@ def test_manifest_checkpoint_bounds_replay(spark, tmp_path):
             [f"data/{n - 1:03d}/part-0.parquet"] if n % 4 == 0 and n > 1 else []
         )
         t._write_manifest(inst, "insert", schema, added, replaced)
-    assert t._checkpoints(), "periodic checkpoints were never written"
+    assert t.tl.checkpoints(), "periodic checkpoints were never written"
 
     # fresh handle = cold cache, like a new session opening the table
     t2 = make_table(spark, tmp_path, name="many")
     reads = []
-    orig = LakeTable._manifest_any
-    t2._manifest_any = lambda inst: (reads.append(inst), orig(t2, inst))[1]
-    live = {f["path"] for f in t2._live_files()}
-    interval = table_mod.MANIFEST_CHECKPOINT_INTERVAL
+    orig = timeline_mod.Timeline.manifest_any
+    t2.tl.manifest_any = lambda inst: (reads.append(inst), orig(t2.tl, inst))[1]
+    live = {f["path"] for f in t2.tl.live_files()}
+    interval = timeline_mod.MANIFEST_CHECKPOINT_INTERVAL
     assert len(reads) <= interval + 1, (
         f"cold live-set read parsed {len(reads)} manifests; "
         f"expected <= interval ({interval}) + the target probe"
@@ -2371,7 +2371,7 @@ def test_manifest_checkpoint_bounds_replay(spark, tmp_path):
 
     # historical materialization (time travel) is also checkpoint-bounded
     reads.clear()
-    live_150 = {f["path"] for f in t2._live_files_at("150")}
+    live_150 = {f["path"] for f in t2.tl.live_files("150")}
     assert len(reads) <= interval + 1
     assert f"data/150/part-0.parquet" in live_150
 
@@ -2388,7 +2388,7 @@ def test_checkpoint_snapshot_correct_after_many_commits(spark, tmp_path):
             "ver", F.lit(n).cast("long")
         )
         t.write(upd, op="upsert", instant=f"{n:03d}")
-    assert t._checkpoints()
+    assert t.tl.checkpoints()
     t2 = make_table(spark, tmp_path, name="ck")  # cold cache
     snap = t2.snapshot()
     assert snap.count() == base.count()
@@ -2403,7 +2403,7 @@ def test_archival_pins_checkpoint_at_horizon(spark, tmp_path, monkeypatch):
     """archive_timeline leaves a checkpoint at the archival horizon so
     active-window replays never read archived manifests."""
     # force: no periodic checkpoints
-    monkeypatch.setattr(table_mod, "MANIFEST_CHECKPOINT_INTERVAL", 0)
+    monkeypatch.setattr(timeline_mod, "MANIFEST_CHECKPOINT_INTERVAL", 0)
     t = make_table(spark, tmp_path, name="arch", partition_keys=None)
     base = cust(spark, ver=1)
     t.write(base, op="insert", instant="001")
@@ -2414,11 +2414,11 @@ def test_archival_pins_checkpoint_at_horizon(spark, tmp_path, monkeypatch):
         )
     archived = t.archive_timeline(keep_commits=4)
     assert archived == ["001", "002", "003"]
-    assert any(c >= "003" for c in t._checkpoints())
+    assert any(c >= "003" for c in t.tl.checkpoints())
     t2 = make_table(spark, tmp_path, name="arch")
     reads = []
-    orig = LakeTable._manifest_any
-    t2._manifest_any = lambda inst: (reads.append(inst), orig(t2, inst))[1]
+    orig = timeline_mod.Timeline.manifest_any
+    t2.tl.manifest_any = lambda inst: (reads.append(inst), orig(t2.tl, inst))[1]
     assert t2.snapshot().count() == base.count()
     assert all(i > "003" for i in reads), "replay touched archived manifests"
 
@@ -2457,7 +2457,7 @@ def test_stats_skipping_cow_snapshot(spark, tmp_path):
             (F.col("o_orderdate") >= lo) & (F.col("o_orderdate") < hi)
         ).coalesce(1)
         t.write(b, op="insert", instant=f"00{i + 1}")
-    assert all("col_stats" in f for f in t._live_files())
+    assert all("col_stats" in f for f in t.tl.live_files())
 
     pred = [("o_orderdate", "between", ("1999-03-01", "1999-06-30"))]
     got = t.snapshot(predicate=pred)
@@ -2754,8 +2754,8 @@ def test_bloom_prunes_random_key_files(spark, tmp_path):
     t.write(batch, op="upsert", instant="005")
     assert t.last_scan["key_range"] == 0  # random keys: ranges overlap
     assert t.last_scan["key_bloom"] == 3  # blooms prune the other files
-    only_file_1 = {f["path"] for f in t._manifest("001")["added"]}
-    assert set(t._manifest("005")["replaced"]) == only_file_1
+    only_file_1 = {f["path"] for f in t.tl.manifest("001")["added"]}
+    assert set(t.tl.manifest("005")["replaced"]) == only_file_1
     snap = t.snapshot()
     assert snap.count() == base.count()
     assert (
@@ -2823,14 +2823,14 @@ def test_scan_report_not_left_over_from_previous_write(spark, tmp_path):
     assert t.last_scan["key_bloom"] == 3
     t.write(base.coalesce(1), op="insert_overwrite", instant="006")
     assert t.last_scan.considered == 0  # no keyed planning
-    assert len(t._live_files()) == 1
+    assert len(t.tl.live_files()) == 1
     t.write(
         _hashed_cust(spark, ver=3).filter(F.col("c_custkey") == 8),
         op="upsert", instant="007",
     )
     assert t.last_scan.considered == 1
     assert t.last_scan["key_bloom"] == 0
-    assert t.last_scan.kept == len(t._manifest("007")["replaced"]) == 1
+    assert t.last_scan.kept == len(t.tl.manifest("007")["replaced"]) == 1
 
 
 def test_bloom_module_determinism():
@@ -2922,7 +2922,7 @@ def test_bloom_legacy_flat_sidecar_keeps_files(spark, tmp_path):
             base.filter(F.col("c_custkey") % 2 == i).coalesce(1),
             op="insert", instant=f"00{i + 1}",
         )
-    legacy = [f["path"] for f in t._manifest("001")["added"]]
+    legacy = [f["path"] for f in t.tl.manifest("001")["added"]]
     empty = B.bloom_to_b64(B.build_bloom([], 1 << 20, 7))
     with open(os.path.join(t.bloom_dir, "001.json"), "w") as fh:
         json.dump({p: empty for p in legacy}, fh)
@@ -2930,7 +2930,7 @@ def test_bloom_legacy_flat_sidecar_keeps_files(spark, tmp_path):
     upd = _hashed_cust(spark, ver=2).filter(F.col("c_custkey") % 2 == 0)
     t2.write(upd, op="upsert", instant="003")
     assert t2.last_scan["key_bloom"] == 1  # file 002's bloom; 001 kept
-    assert set(t2._manifest("003")["replaced"]) == set(legacy)
+    assert set(t2.tl.manifest("003")["replaced"]) == set(legacy)
     snap = t2.snapshot()
     assert snap.count() == base.count()
     assert snap.filter(F.col("ver") == 2).count() == upd.count()
@@ -2951,7 +2951,7 @@ def test_delete_partition_manifest_only(spark, tmp_path):
     n_victim = t.snapshot().filter(F.col("c_mktsegment") == victim).count()
     removed = t.delete_partitions([{"c_mktsegment": victim}], instant="002")
     assert removed > 0
-    m = t._manifest("002")
+    m = t.tl.manifest("002")
     assert m["action"] == "delete_partition" and m["added"] == []
     snap = t.snapshot()
     assert snap.count() == n_before - n_victim
@@ -3055,7 +3055,7 @@ def test_insert_overwrite_partitioned_and_whole_table(spark, tmp_path):
         others.count()
         == cust(spark).filter(F.col("c_mktsegment") != victim).count()
     )
-    m = t._manifest("002")
+    m = t.tl.manifest("002")
     assert m["action"] == "insert_overwrite" and m["replaced"]
     # unpartitioned: whole-table replace
     u = make_table(spark, tmp_path, name="iow_flat")
@@ -3458,7 +3458,7 @@ def test_clean_during_optimistic_compute_keeps_inflight_files(
     assert snap.count() == cust(spark).count()
     assert snap.filter(F.col("ver") == 2).count() == cust(spark).count()
     # marker cleared after publish
-    assert reader._inflight_split() == (set(), set())
+    assert reader.tl.inflight_split() == (set(), set())
 
 
 def test_expired_inflight_marker_aborts_publish_not_corrupts(
@@ -3482,7 +3482,7 @@ def test_expired_inflight_marker_aborts_publish_not_corrupts(
     t_seed.write(cust(spark, ver=1), op="insert", instant="001")
 
     t_a, t_c = handle(), handle()
-    t_c.inflight_ttl_seconds = 0.0  # every marker counts as crashed
+    t_c.tl.inflight_ttl_seconds = 0.0  # every marker counts as crashed
     orig = t_a._writer_lock
     fired = {"n": 0}
 
@@ -3500,7 +3500,7 @@ def test_expired_inflight_marker_aborts_publish_not_corrupts(
     assert reader.timeline() == ["001"]  # nothing published
     assert reader.snapshot().filter(F.col("ver") == 2).count() == 0
     # the hostile clean also removed the stale marker
-    assert reader._inflight_split() == (set(), set())
+    assert reader.tl.inflight_split() == (set(), set())
 
 
 def test_inflight_heartbeat_outlives_ttl(spark, tmp_path):
@@ -3512,28 +3512,28 @@ def test_inflight_heartbeat_outlives_ttl(spark, tmp_path):
     import time as _time
 
     t = make_table(spark, tmp_path)
-    t.inflight_ttl_seconds = 2.0  # heartbeat interval = max(1, 2/3) = 1s
-    t._mark_inflight("009hbhb")
+    t.tl.inflight_ttl_seconds = 2.0  # heartbeat interval = max(1, 2/3) = 1s
+    t.tl.mark_inflight("009hbhb")
     _time.sleep(3.2)  # well past the TTL; 3 heartbeats have fired
-    live, stale = t._inflight_split()
+    live, stale = t.tl.inflight_split()
     assert live == {"009hbhb"} and stale == set()
-    t._clear_inflight("009hbhb")
-    assert t._inflight_split() == (set(), set())
+    t.tl.clear_inflight("009hbhb")
+    assert t.tl.inflight_split() == (set(), set())
     _time.sleep(1.5)  # a stopped heartbeat must not resurrect the marker
-    assert t._inflight_split() == (set(), set())
+    assert t.tl.inflight_split() == (set(), set())
 
 
 def test_clean_removes_stale_inflight_markers(spark, tmp_path):
     t = make_table(spark, tmp_path)
     t.write(cust(spark, ver=1), op="insert", instant="001")
-    t._mark_inflight("002zzzz")
-    live, stale = t._inflight_split()
+    t.tl.mark_inflight("002zzzz")
+    live, stale = t.tl.inflight_split()
     assert live == {"002zzzz"} and stale == set()
-    t.inflight_ttl_seconds = 0.0
-    live, stale = t._inflight_split()
+    t.tl.inflight_ttl_seconds = 0.0
+    live, stale = t.tl.inflight_split()
     assert live == set() and stale == {"002zzzz"}
     t.clean(retain_commits=2)
-    assert t._inflight_split() == (set(), set())
+    assert t.tl.inflight_split() == (set(), set())
 
 
 def test_file_lock_commits_survive_on_fenced_table(spark, tmp_path):
@@ -3562,7 +3562,7 @@ def test_file_lock_commits_survive_on_fenced_table(spark, tmp_path):
     b = LeaseLockProvider(tpath, lease_seconds=60.0, holder="b")
     b.acquire(5.0)
     b.release()
-    assert t_a._fences()  # fence recorded
+    assert t_a.tl.fences()  # fence recorded
 
     # later operator writes via the DEFAULT provider (O_EXCL file lock)
     t_file = LakeTable(
@@ -3617,7 +3617,7 @@ def test_fence_records_are_immutable_per_token_files(spark, tmp_path):
         spark, str(root), "testdb", "ff",
         record_keys=["c_custkey"], precombine="ver",
     )
-    assert [f["token"] for f in t._fences()] == [3, 5, 7]
+    assert [f["token"] for f in t.tl.fences()] == [3, 5, 7]
 
 
 def test_async_compaction_fold_does_not_block_concurrent_append(
@@ -3663,14 +3663,14 @@ def test_async_compaction_fold_does_not_block_concurrent_append(
     reader = handle()
     tl = reader.timeline()
     assert fired["inst_b"] in tl and inst in tl  # BOTH commits landed
-    assert reader._manifest(inst)["action"] == "compact"
+    assert reader.tl.manifest(inst)["action"] == "compact"
     snap = reader.snapshot()
     assert snap.count() == cust(spark).count()
     # the concurrent delta's rows win their keys (newest precombine)
     assert snap.filter(F.col("ver") == 3).count() == 10
     assert snap.filter(F.col("ver") == 2).count() == 30
     # no leftover inflight markers
-    assert reader._inflight_split() == (set(), set())
+    assert reader.tl.inflight_split() == (set(), set())
 
 
 def test_async_compaction_plan_goes_stale_during_fold(spark, tmp_path):
@@ -3724,7 +3724,7 @@ def test_async_compaction_plan_goes_stale_during_fold(spark, tmp_path):
             if fn.endswith(".parquet")
         ]
         assert files == []
-    assert reader._inflight_split() == (set(), set())
+    assert reader.tl.inflight_split() == (set(), set())
 
 
 def test_thread_stress_writers_compactor_cleaner(spark, tmp_path):
@@ -3835,10 +3835,10 @@ def test_thread_stress_writers_compactor_cleaner(spark, tmp_path):
     # executed fold committed a "compact" action (MOR appends can
     # never stale a plan — nothing replaces base files but compaction)
     assert scheduled
-    tl_actions = [reader._manifest(i)["action"] for i in reader.timeline()]
+    tl_actions = [reader.tl.manifest(i)["action"] for i in reader.timeline()]
     assert len(compacted) >= 1 and "compact" in tl_actions
     # no dangling inflight markers; a fresh reader replays the same state
-    assert reader._inflight_split() == (set(), set())
+    assert reader.tl.inflight_split() == (set(), set())
     fresh = handle().snapshot()
     assert fresh.filter(F.col("ver") == final_ver).count() == n_total
 
@@ -3855,7 +3855,7 @@ def test_small_files_strategy_cow_pins_only_small(spark, tmp_path):
     t.write(cust(spark, ver=1), op="insert", instant="001")
     t.write(cust(spark, ver=1).limit(5), op="insert", instant="002")
     t.write(cust(spark, ver=1).limit(5), op="insert", instant="003")
-    live = t._live_files()
+    live = t.tl.live_files()
     assert all(isinstance(f.get("bytes"), int) for f in live)
     sizes = sorted(t._file_bytes(f) for f in live)
     big = max(sizes)
@@ -3869,14 +3869,14 @@ def test_small_files_strategy_cow_pins_only_small(spark, tmp_path):
     import os as _os
 
     plan = _json.load(open(_os.path.join(
-        t.commits_dir, "_compaction", pid + ".json")))
+        t.tl.commits_dir, "_compaction", pid + ".json")))
     assert plan["strategy"] == "small_files"
     assert set(plan["files"]) == small_paths  # the big file is NOT pinned
 
     n = t.snapshot().count()
     inst = t.run_compaction(pid)
     assert inst is not None
-    after = t._live_files()
+    after = t.tl.live_files()
     assert t.snapshot().count() == n  # data unchanged
     big_paths = {f["path"] for f in live if t._file_bytes(f) >= big}
     assert big_paths <= {f["path"] for f in after}  # big file survived
@@ -3907,8 +3907,8 @@ def test_small_files_strategy_mor_is_partition_granular(spark, tmp_path):
     import os as _os
 
     plan = _json.load(open(_os.path.join(
-        t.commits_dir, "_compaction", pid + ".json")))
-    pinned = [f for f in t._live_files() if f["path"] in set(plan["files"])]
+        t.tl.commits_dir, "_compaction", pid + ".json")))
+    pinned = [f for f in t.tl.live_files() if f["path"] in set(plan["files"])]
     assert pinned and all(
         f["partition_path"] == f"c_mktsegment={seg}" for f in pinned
     )
@@ -3925,11 +3925,11 @@ def test_small_files_strategy_mor_is_partition_granular(spark, tmp_path):
     # resurrection: the fold dropped the tombstone AND the old row
     # other partitions' files untouched
     untouched = {
-        f["path"] for f in t._live_files()
+        f["path"] for f in t.tl.live_files()
         if f["partition_path"] != f"c_mktsegment={seg}"
     }
     orig_untouched = {
-        f["path"] for f in t._manifest("001")["added"]
+        f["path"] for f in t.tl.manifest("001")["added"]
         if f["partition_path"] != f"c_mktsegment={seg}"
     }
     assert orig_untouched <= untouched
@@ -4074,7 +4074,7 @@ def test_clustering_auto_ranges_from_manifest_stats(spark, tmp_path):
     import os as _os
 
     with open(
-        _os.path.join(t.commits_dir, "_compaction", pid + ".json")
+        _os.path.join(t.tl.commits_dir, "_compaction", pid + ".json")
     ) as fh:
         plan = _json.load(fh)
     lo_c, hi_c, lo_k, hi_k = orders.agg(
@@ -4346,7 +4346,7 @@ def test_type_widening_schema_evolution(spark, tmp_path):
     # manifest records the widened schema
     import json as _json
 
-    m = t._manifest("002")
+    m = t.tl.manifest("002")
     names = {f["name"]: f["type"] for f in m["schema"]["fields"]}
     assert names["n"] == "long" and names["x"] == "double"
     # a narrower batch after widening casts UP, never narrows back
@@ -4568,7 +4568,7 @@ def test_type_widening_mor_compaction(spark, tmp_path):
     # compaction folds the narrow base + wide delta into wide bases
     t.compact(instant="003")
     assert not any(
-        f.get("kind") == "delta" for f in t._live_files()
+        f.get("kind") == "delta" for f in t.tl.live_files()
     )
     snap = t.snapshot()
     assert dict(snap.dtypes)["n"] == "bigint"
@@ -4613,7 +4613,7 @@ def test_concurrent_index_builds_all_land_and_probe(spark, tmp_path):
         assert os.path.isdir(os.path.join(t.index_dir, inst))
         assert os.path.exists(os.path.join(t.bloom_dir, inst + ".json"))
         assert os.path.exists(os.path.join(t.col_bloom_dir, inst + ".json"))
-    live = t._live_files()
+    live = t.tl.live_files()
     assert all(
         f.get("indexed") and f.get("bloom") and f.get("col_bloom")
         for f in live
@@ -4667,7 +4667,7 @@ def test_partition_stats_index_prunes_whole_partitions(spark, tmp_path):
         instant="002",
     )
     n_a_files = len(
-        [f for f in t._live_files() if f["partition"] == {"p": "A"}]
+        [f for f in t.tl.live_files() if f["partition"] == {"p": "A"}]
     )
     assert n_a_files >= 2  # the point: MANY files die with one check
     got = t.snapshot(predicate=[("price", ">=", 1000.0)])
@@ -4807,7 +4807,7 @@ def test_bulk_insert_global_sort_disjoint_key_ranges(spark, tmp_path):
         cust(spark), op="bulk_insert", instant="001",
         sort_mode="GLOBAL_SORT", sort_files=6,
     )
-    files = t._live_files()
+    files = t.tl.live_files()
     assert len(files) >= 4
     ranges = sorted((f["key_min"], f["key_max"]) for f in files)
     assert all(r[0] is not None and r[1] >= r[0] for r in ranges)
@@ -4845,7 +4845,7 @@ def test_bulk_insert_global_sort_partitioned(spark, tmp_path):
         sort_mode="GLOBAL_SORT", sort_files=10,
     )
     by_pp: dict = {}
-    for f in t._live_files():
+    for f in t.tl.live_files():
         by_pp.setdefault(f["partition_path"], []).append(
             (f["key_min"], f["key_max"])
         )
@@ -5047,8 +5047,8 @@ def test_mor_tombstone_gate(spark, tmp_path):
             cust(spark, ver=2).filter("c_custkey <= 5"),
             op="upsert", instant="002",
         )
-        assert [f["tombstones"] for f in t._live_files()] == [False] * len(
-            t._live_files()
+        assert [f["tombstones"] for f in t.tl.live_files()] == [False] * len(
+            t.tl.live_files()
         )
         for df in (t.snapshot(), t.incremental(None), t.incremental("001")):
             assert not _has_join(df)
@@ -5068,9 +5068,9 @@ def test_mor_tombstone_gate(spark, tmp_path):
         instant="003",
     )
     for t in tables.values():
-        assert [f["tombstones"] for f in t._manifest("003")["added"]] == [
+        assert [f["tombstones"] for f in t.tl.manifest("003")["added"]] == [
             True
-        ] * len(t._manifest("003")["added"])
+        ] * len(t.tl.manifest("003")["added"])
         for df in (t.snapshot(), t.incremental(None), t.incremental("002")):
             assert _has_join(df)
             assert df.filter("c_custkey = 3").count() == 0
@@ -5079,7 +5079,7 @@ def test_mor_tombstone_gate(spark, tmp_path):
     # manifests written before the flag existed: the join stays
     legacy = make_table(spark, tmp_path, name="legacy", table_type="MERGE_ON_READ")
     legacy.write(cust(spark), op="upsert", instant="001")
-    mpath = os.path.join(legacy.commits_dir, "001.json")
+    mpath = os.path.join(legacy.tl.commits_dir, "001.json")
     with open(mpath) as fh:
         m = json.load(fh)
     for f in m["added"]:
@@ -5087,16 +5087,16 @@ def test_mor_tombstone_gate(spark, tmp_path):
     with open(mpath, "w") as fh:
         json.dump(m, fh)
     legacy = make_table(spark, tmp_path, name="legacy", table_type="MERGE_ON_READ")
-    assert all("tombstones" not in f for f in legacy._live_files())
+    assert all("tombstones" not in f for f in legacy.tl.live_files())
     assert _has_join(legacy.snapshot())
     assert legacy.snapshot().count() == n
 
     # compaction folds the tombstones away: its base files carry none
     t = tables["ser"]
     inst = t.compact()
-    assert [f["tombstones"] for f in t._manifest(inst)["added"]] == [
+    assert [f["tombstones"] for f in t.tl.manifest(inst)["added"]] == [
         False
-    ] * len(t._manifest(inst)["added"])
+    ] * len(t.tl.manifest(inst)["added"])
     assert not _has_join(t.snapshot())
     assert t.snapshot().count() == n - 1
     assert t.snapshot().filter("c_custkey = 3").count() == 0
@@ -5192,7 +5192,7 @@ def test_scan_report_accounts_for_every_read(report_tables, table_type, layer):
             scan
         )
     t.snapshot(predicate=pred)
-    assert t.last_scan.considered == len(t._live_files())
+    assert t.last_scan.considered == len(t.tl.live_files())
     assert t.last_scan[layer] > 0, t.last_scan
 
 
@@ -5222,8 +5222,8 @@ def test_scan_report_accounts_for_every_cow_keyed_write(
         ),
     ]
     for write in writes:
-        live = len(t._live_files())
+        live = len(t.tl.live_files())
         inst = write()
         scan = t.last_scan
         assert scan.considered == live
-        assert scan.kept == len(t._manifest(inst)["replaced"]) > 0, scan
+        assert scan.kept == len(t.tl.manifest(inst)["replaced"]) > 0, scan

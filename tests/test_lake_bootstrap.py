@@ -63,7 +63,7 @@ def test_bootstrap_is_zero_rewrite_and_snapshot_correct(
     assert inst == "001"
     # the defining property: not one data file written by the engine
     assert _count_parquet(t.data_dir) == 0
-    assert all(f["external"] for f in t._live_files())
+    assert all(f["external"] for f in t.tl.live_files())
     snap = t.snapshot()
     expect = _customer(spark)
     assert snap.count() == expect.count()
@@ -104,7 +104,7 @@ def test_bootstrap_column_stats_skip_files(spark, tmp_path):
     )
     t = _table(spark, tmp_path, stats_columns=["c_custkey"])
     t.bootstrap_metadata_only(src, instant="001")
-    live = t._live_files()
+    live = t.tl.live_files()
     assert len(live) == 4
     assert all("c_custkey" in f.get("col_stats", {}) for f in live)
     got = t.snapshot(predicate=[("c_custkey", "<", 5)])
@@ -117,7 +117,7 @@ def test_upsert_migrates_only_key_hit_files(
 ):
     t = _table(spark, tmp_path, partition_keys=["c_mktsegment"])
     t.bootstrap_metadata_only(src_partitioned, instant="001")
-    n_ext0 = len(t._live_files())
+    n_ext0 = len(t.tl.live_files())
     delta = (
         _customer(spark)
         .filter(
@@ -128,7 +128,7 @@ def test_upsert_migrates_only_key_hit_files(
         .withColumn("c_acctbal", F.col("c_acctbal") + 1000.0)
     )
     t.write(delta, op="upsert", instant="002")
-    live = t._live_files()
+    live = t.tl.live_files()
     ext = [f for f in live if f.get("external")]
     internal = [f for f in live if not f.get("external")]
     # only the BUILDING file was rewritten; every other partition is
@@ -142,7 +142,7 @@ def test_upsert_migrates_only_key_hit_files(
         merged.filter(F.col("ver") == 2).count() == delta.count()
     )
     # and the replaced source file itself is untouched on disk
-    replaced = t._manifest("002")["replaced"]
+    replaced = t.tl.manifest("002")["replaced"]
     assert all(os.path.isabs(p) and os.path.exists(p) for p in replaced)
 
 
@@ -173,7 +173,7 @@ def test_key_scan_handles_mixed_internal_external_candidates(
         instant="002",
     )
     assert extra.count() == 0
-    live = t._live_files()
+    live = t.tl.live_files()
     assert any(not f.get("external") for f in live)
     # now hit ONE adopted file (high keys) + the internal file (key 0)
     hi = (
@@ -188,7 +188,7 @@ def test_key_scan_handles_mixed_internal_external_candidates(
         .withColumn("ver", F.lit(3).cast("long"))
     )
     t.write(delta, op="upsert", instant="003")
-    m = t._manifest("003")
+    m = t.tl.manifest("003")
     # exactly two files rewritten: the internal key-0 file and the
     # adopted top-range file — the other adopted files carried over
     assert len(m["replaced"]) == 2
@@ -214,7 +214,7 @@ def test_bootstrap_mor_appends_delta_without_touching_source(
     )
     t.write(delta, op="upsert", instant="002")
     # MOR: no adopted file replaced, delta appended engine-side
-    assert t._manifest("002")["replaced"] == []
+    assert t.tl.manifest("002")["replaced"] == []
     snap = t.snapshot()
     assert snap.count() == _customer(spark).count()
     assert snap.filter(F.col("ver") == 2).count() == delta.count()
@@ -225,7 +225,7 @@ def test_bootstrap_mor_appends_delta_without_touching_source(
         instant="003",
     )
     t.compact(instant="004")
-    live = t._live_files()
+    live = t.tl.live_files()
     assert all(not f.get("external") for f in live)
     assert t.snapshot().count() == _customer(spark).count() - 1
     # compaction replaced the adopted files in the manifest but never
@@ -309,7 +309,7 @@ def test_bootstrap_string_key_ranges_prune_upsert_planning(
         spark, str(tmp_path), "q", "bootsk", ["c_name_key"], "ver"
     )
     t.bootstrap_metadata_only(src, instant="001")
-    live = t._live_files()
+    live = t.tl.live_files()
     assert all(f["key_min"] is not None for f in live)
     one = (
         spark.read.parquet(src)
@@ -319,4 +319,4 @@ def test_bootstrap_string_key_ranges_prune_upsert_planning(
     )
     t.write(one, op="upsert", instant="002")
     assert t.last_scan["key_range"] >= 2  # only the low-range file scanned
-    assert len(t._manifest("002")["replaced"]) == 1
+    assert len(t.tl.manifest("002")["replaced"]) == 1

@@ -74,7 +74,7 @@ def _twin(spark, tmp, name, tt, history, fold):
 def _compacted(t, inst):
     """(rows of the files ``inst`` added, read through Spark under the
     stored schema; those files' manifest entries without name and size)."""
-    with open(os.path.join(t.commits_dir, inst + ".json")) as fh:
+    with open(os.path.join(t.tl.commits_dir, inst + ".json")) as fh:
         added = json.load(fh)["added"]
     rows = sorted(map(repr, t._read_files([f["path"] for f in added]).collect()))
     entries = [

@@ -106,7 +106,7 @@ def test_cas_race_single_winner(tmp_path, backend):
 def test_zombie_fenced_at_read_planning_over_memory_store(spark, tmp_path):
     """End-to-end over the NON-filesystem store: a superseded writer's
     late manifest rename is discarded by read planning, because
-    LakeTable._fences() merges the provider store's fence records —
+    Timeline.fences() merges the provider store's fence records —
     the fencing design transfers to object-store backends as-is."""
 
     class Crash(BaseException):

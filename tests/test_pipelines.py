@@ -400,7 +400,7 @@ def test_offset_commit_listener_lands_in_manifest(spark, tmp_path):
         )
         drain(q2)
         manifests = [
-            _json.load(open(_os.path.join(t.commits_dir, i + ".json")))
+            _json.load(open(_os.path.join(t.tl.commits_dir, i + ".json")))
             for i in t.timeline()
         ]
         stamped = [m for m in manifests if "stream_offsets" in m]

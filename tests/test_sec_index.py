@@ -255,7 +255,7 @@ def test_sec_index_survives_compaction_and_clean(spark, tmp_path):
     t.clean(retain_commits=1)
     live_instants = {
         f["path"].split(os.sep)[1].split("/")[0]
-        for f in t._live_files()
+        for f in t.tl.live_files()
     }
     for d in os.listdir(t.sec_index_dir):
         assert d in live_instants  # dead index dirs reclaimed
@@ -315,14 +315,14 @@ def test_backfill_enables_pruning_without_rewrites(spark, tmp_path):
             base.filter(F.col("c_custkey") % 4 == i).coalesce(1),
             op="insert", instant=f"00{i + 1}",
         )
-    data_files = {f["path"] for f in plain._live_files()}
+    data_files = {f["path"] for f in plain.tl.live_files()}
     t = sec_table(spark, tmp_path, name="bf")
     v = tag_of(spark, 8)
     t.snapshot(predicate=[("tag", "=", v)]).count()
     assert t.last_scan["sec_index"] == 0  # nothing covered yet
     inst = t.backfill_secondary_index()
     assert inst is not None
-    assert {f["path"] for f in t._live_files()} == data_files  # no rewrite
+    assert {f["path"] for f in t.tl.live_files()} == data_files  # no rewrite
     out = t.snapshot(predicate=[("tag", "=", v)])
     assert [r["c_custkey"] for r in out.select("c_custkey").collect()] == [8]
     assert t.last_scan["sec_index"] == 3
@@ -731,7 +731,7 @@ def test_leaked_stage_dir_is_not_probed(spark, tmp_path):
     want = t.last_scan["record_index"]
     assert want == 3
     wrong = next(
-        f["path"] for f in t._live_files() if f["path"].startswith("data/002/")
+        f["path"] for f in t.tl.live_files() if f["path"].startswith("data/002/")
     )
     leak = os.path.join(t.index_dir, "_bf_stage-x", "inst=001", "shard=0")
     os.makedirs(leak)

@@ -44,7 +44,7 @@ def build(spark, tmp, **kw):
 
 
 def selected(t, batch) -> set[str]:
-    live = t._live_files()
+    live = t.tl.live_files()
     return {f["path"] for f in t._key_hit_files(live, batch)}
 
 
