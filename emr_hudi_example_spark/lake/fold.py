@@ -96,11 +96,12 @@ def fold(
     out_dir: str,
     target_files_per_partition: int,
     sort_by: list | None,
+    schema: T.StructType,
 ) -> bool:
-    """Fold ``files`` of ``t`` into one key-sorted base file under
-    ``out_dir`` and return True; or return False, having written
-    nothing, when the gate, the table's shape or a file's columns are
-    not served here."""
+    """Fold ``files`` of ``t``, read under its stored ``schema``, into
+    one key-sorted base file under ``out_dir`` and return True; or
+    return False, having written nothing, when the gate, the table's
+    shape or a file's columns are not served here."""
     if (
         t.payload != "default"
         or sort_by
@@ -111,7 +112,6 @@ def fold(
         or not driver_buildable(t, files)
     ):
         return False
-    schema = t._stored_schema()
     want = [_arrow_type(f.dataType) for f in schema.fields]
     if any(w is None for w in want):
         return False

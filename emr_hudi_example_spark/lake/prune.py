@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from emr_hudi_example_spark.lake.columns import PARTITION_PATH_COL, RECORD_KEY_COL
+from emr_hudi_example_spark.lake.timeline import newest
 from emr_hudi_example_spark.lake.xxh import shard_of as xxh_shard
 
 if TYPE_CHECKING:
@@ -207,10 +208,13 @@ class FilePlanner:
                 continue  # operand/stat type mismatch: keep the file
         return True
 
-    def _partition_stats_at(self, instant: str) -> dict[str, dict]:
+    def _partition_stats_at(
+        self, instant: str, tl: list[str]
+    ) -> dict[str, dict]:
         """Per-partition aggregate of the live files' footer stats as of
-        ``instant`` — the engine's PARTITION-STATS INDEX (the analog of
-        Hudi 1.0's ``partition_stats`` metadata index): one pseudo-file
+        ``instant`` of listing ``tl`` — the engine's PARTITION-STATS
+        INDEX (the analog of Hudi 1.0's ``partition_stats`` metadata
+        index): one pseudo-file
         per partition whose [min, max] covers every live file in it, so
         a predicate that fails the aggregate provably fails every file
         and :meth:`_plan_read` drops the whole partition in
@@ -233,7 +237,7 @@ class FilePlanner:
         if hit is not None:
             return hit
         groups: dict[str, list[dict]] = {}
-        for f in self.tl.live_files(instant):
+        for f in self.tl.live_files(instant, tl):
             if f.get("rows") == 0:
                 continue  # rowless files can't match; don't let their
                 # stat-less footers veto the partition aggregate
@@ -282,14 +286,17 @@ class FilePlanner:
         self,
         files: list[dict],
         predicate: list[tuple] | None,
-        all_base: bool = False,
+        tl: list[str] | None = None,
         instant: str | None = None,
+        all_base: bool = False,
     ) -> Kept:
         """Driver-side file skipping for a predicate read, layer by
         layer: record-key point lookups (bucket, then record index),
         then the manifest's stats (partition aggregates, per-file
         min/max) and the secondary index and column bloom verdicts.
         Returns the kept files with the pass's :class:`ScanReport`.
+        The partition aggregates are ``instant``'s, of the op's listing
+        ``tl``; without an instant that layer does not run.
 
         The key layers are unconditionally MOR-safe: a file they drop
         provably holds no operand key, and any row the merge could
@@ -355,7 +362,7 @@ class FilePlanner:
         if instant is not None:
             dead_parts = {
                 pp
-                for pp, pf in self._partition_stats_at(instant).items()
+                for pp, pf in self._partition_stats_at(instant, tl).items()
                 if not self._stats_may_match(pf, predicate)
             }
 
@@ -472,35 +479,31 @@ class FilePlanner:
 
     def _view_files(
         self,
+        tl: list[str],
         partition_filter: dict[str, object] | None,
         as_of: str | None,
-    ) -> tuple[list[dict] | None, T.StructType | None, str | None]:
-        """The (files, as-of schema, resolved instant) a snapshot-style
-        view reads: time-travel resolution + driver-side partition
+    ) -> tuple[list[dict] | None, str | None]:
+        """The (files, resolved instant) a snapshot-style view of listing
+        ``tl`` reads: time-travel resolution + driver-side partition
         pruning, shared by :meth:`snapshot` and the metadata-only
-        aggregates. ``(None, None, None)`` means the as_of predates the
-        table (empty view); schema is None for the latest view (stored
-        schema). The resolved instant keys the partition-stats index
-        lookup in :meth:`_plan_read`."""
-        schema = None
+        aggregates. ``(None, None)`` means the as_of predates the table
+        (empty view). The resolved instant names the view's schema and
+        keys the partition-stats index lookup in :meth:`_plan_read`."""
         if as_of is not None:
-            past = [i for i in self.timeline() if i <= as_of]
+            past = [i for i in tl if i <= as_of]
             if not past:
                 # distinguish "predates the table" (empty view, by
                 # contract) from "predates the ARCHIVAL horizon" (the
                 # view existed — silently serving empty would corrupt
                 # any consumer diffing against it)
                 self._require_active_horizon(
-                    as_of, self.timeline(), f"as_of {as_of!r}", point=True
+                    as_of, tl, f"as_of {as_of!r}", point=True
                 )
-                return None, None, None
+                return None, None
             inst = past[-1]
-            m = self.tl.manifest(inst)
-            files = self.tl.live_files(inst)
-            schema = T.StructType.fromJson(m["schema"])  # as-of schema
         else:
-            inst = self.last_instant()
-            files = self.tl.live_files()
+            inst = newest(tl)
+        files = self.tl.live_files(inst, tl)
         if partition_filter:
             want = {k: str(v) for k, v in partition_filter.items()}
             files = [
@@ -508,13 +511,16 @@ class FilePlanner:
                 for f in files
                 if all(f["partition"].get(k) == v for k, v in want.items())
             ]
-        return files, schema, inst
+        return files, inst
 
     # ------------------------------------------------------ write planning
 
-    def _affected_files(self, batch: DataFrame) -> tuple[Kept, DataFrame]:
-        """Files that must be rewritten for this batch (with the
-        planning pass's :class:`ScanReport`), plus their rows.
+    def _affected_files(
+        self, batch: DataFrame, tl: list[str]
+    ) -> tuple[Kept, DataFrame]:
+        """Files live at the head of listing ``tl`` that must be
+        rewritten for this batch (with the planning pass's
+        :class:`ScanReport`), plus their rows.
 
         Two-level pruning — the engine's bloom-index analog
         (``SRC/Log2Hudi.scala:78-79``):
@@ -530,7 +536,8 @@ class FilePlanner:
            carried over by manifest reference, so COW write
            amplification scales with keys touched, not partition size.
         """
-        live = self.tl.live_files()
+        head = newest(tl)
+        live = self.tl.live_files(head, tl)
         minmax = None
         if self.partition_keys and not self.global_index:
             # ONE fused aggregate (r14): partition discovery AND the
@@ -557,7 +564,10 @@ class FilePlanner:
             else Kept(candidates, ScanReport(len(candidates)))
         )
         report = ScanReport(len(live), pruned + hits.report.pruned)
-        return Kept(hits, report), self._read_files([f["path"] for f in hits])
+        rows = self._read_files(
+            [f["path"] for f in hits], self._stored_schema(head)
+        )
+        return Kept(hits, report), rows
 
     @staticmethod
     def _plan_has_node(plan, names: tuple[str, ...], cap: int = 512) -> bool:
@@ -646,6 +656,9 @@ class FilePlanner:
             return Kept(kept, ScanReport(considered, tuple(pruned)))
 
         join_cols = self._key_cols()
+        key_schema = T.StructType(
+            [T.StructField(c, T.StringType()) for c in join_cols]
+        )
         # ONE capped collect of the batch's distinct join pairs turns
         # every probe below into driver-side arithmetic for point-sized
         # batches (bucket ids and index shards via the XXH64 twin,
@@ -768,7 +781,9 @@ class FilePlanner:
         scans = []
         if internal_c:
             scans.append(
-                self._read_files([f["path"] for f in internal_c]).select(
+                self._read_files(
+                    [f["path"] for f in internal_c], key_schema
+                ).select(
                     F.col("_metadata.file_path").alias("_fp"), *join_cols
                 )
             )
@@ -779,7 +794,7 @@ class FilePlanner:
             scans.append(
                 self._read_external(
                     [f["path"] for f in external_c],
-                    self._stored_schema(),
+                    key_schema,
                     join_cols=join_cols,
                 )
             )

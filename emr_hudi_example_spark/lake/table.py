@@ -87,6 +87,7 @@ from emr_hudi_example_spark.lake.prune import FilePlanner, Kept, ScanReport
 from emr_hudi_example_spark.lake.timeline import (
     ConcurrentWriteConflict,
     Timeline,
+    newest,
     write_json,
 )
 
@@ -361,7 +362,7 @@ class LakeTable(FilePlanner):
     def last_checkpoint_entry(self, source_id: str) -> dict | None:
         """Newest committed checkpoint dict for ``source_id``, extra
         keys (the pipelines' source-slice ``cursor``) included."""
-        return self.tl.last_checkpoint_entry(source_id)
+        return self.tl.last_checkpoint_entry(source_id, self.tl.instants())
 
     def record_stream_offsets(
         self, query_name: str, batch_id: int, sources: list[dict]
@@ -413,7 +414,7 @@ class LakeTable(FilePlanner):
             return self.tl.restore(instant)
 
     def exists(self) -> bool:
-        return self.last_instant() is not None
+        return self.tl.last() is not None
 
     def _key_cols(self) -> list[str]:
         """The columns that identify a record: the key alone under the
@@ -465,14 +466,12 @@ class LakeTable(FilePlanner):
 
     # --------------------------------------------------------------- reads
 
-    def _read_files(
-        self, files: list[str], schema: T.StructType | None = None
-    ) -> DataFrame:
-        """Scan manifest file paths. Table-relative paths are the normal
-        engine-written files; ABSOLUTE paths are externally-adopted
-        files (:meth:`bootstrap_metadata_only`) whose meta columns are
-        synthesized at read time from the bootstrap registry."""
-        schema = schema or self._stored_schema()
+    def _read_files(self, files: list[str], schema: T.StructType) -> DataFrame:
+        """Scan manifest file paths under ``schema``. Table-relative
+        paths are the normal engine-written files; ABSOLUTE paths are
+        externally-adopted files (:meth:`bootstrap_metadata_only`) whose
+        meta columns are synthesized at read time from the bootstrap
+        registry."""
         if not files:
             return _empty_df(self.spark, schema)
         internal = [f for f in files if not os.path.isabs(f)]
@@ -492,25 +491,16 @@ class LakeTable(FilePlanner):
         self, begin: str | None, tl: list[str], what: str,
         point: bool = False,
     ) -> None:
-        """Archival-horizon gate shared by the history reads: once
-        :meth:`archive_timeline` moved manifests out of the active
-        timeline, a range starting before the first active instant can
-        no longer enumerate the archived commits' files — serving it
+        """Archival-horizon gate shared by the history reads: a range
+        starting before the first active instant of listing ``tl`` can
+        no longer enumerate the archived commits' files, and serving it
         would silently drop rows (``incremental``) or misclassify
-        updates as inserts against an empty before-image (``changes``,
-        whose ``snapshot(as_of=begin)`` resolves to nothing). Fail like
-        Hudi does and point at the remedy.
-
-        ``point=True`` marks a POINT-IN-TIME lookup (``as_of``) rather
-        than a range start. For a point, an instant that predates the
-        EARLIEST ARCHIVED commit predates the table itself (r14 review /
-        r13 ADVICE): the view it names never existed, so it keeps the
-        pre-archival contract (empty view) — only ``first_archived <=
-        as_of < first_active`` falls in the archived era. A RANGE whose
-        start predates the first archived commit still INCLUDES every
-        archived commit, so ranges raise regardless (and ``begin is
-        None`` — "from the beginning of time" — always overlaps the
-        archived era)."""
+        updates as inserts (``changes``) — raise, as Hudi does.
+        ``point=True`` marks an ``as_of`` lookup: one that predates the
+        earliest ARCHIVED commit predates the table and keeps its empty
+        view; only ``first_archived <= as_of < first_active`` raises. A
+        range (``begin is None`` included) always overlaps the archived
+        era."""
         archived = self.tl.archived()
         if point and begin is not None and archived and begin < archived[0]:
             return  # pre-table point lookup: contractual empty view
@@ -549,11 +539,12 @@ class LakeTable(FilePlanner):
                 f"before clean(), or raise clean(retain_commits=...)"
             )
 
-    def _stored_schema(self) -> T.StructType:
-        last = self.last_instant()
-        if last is None:
+    def _stored_schema(self, head: str | None) -> T.StructType:
+        """The table schema as of ``head``, the op's listed head; a
+        None head is a table with no commit."""
+        if head is None:
             raise ValueError(f"table {self.db}.{self.table} does not exist")
-        return T.StructType.fromJson(self.tl.manifest(last)["schema"])
+        return T.StructType.fromJson(self.tl.manifest(head)["schema"])
 
     # ---------------------------------- externally-adopted file reads
     # (metadata-only bootstrap; see bootstrap_metadata_only below)
@@ -654,42 +645,27 @@ class LakeTable(FilePlanner):
         partition_filter: dict[str, object] | None = None,
         as_of: str | None = None,
     ) -> tuple[int, bool]:
-        """Exact row count of the snapshot view served from MANIFEST
-        stats alone — O(live file count) driver-side arithmetic, zero
-        scan, zero Spark jobs (the Iceberg/Hudi metadata-table
-        ``count(*)`` path; at 100 TB: milliseconds instead of a
-        full-corpus scan). Returns ``(count, from_metadata)``.
-
-        The fast path is EXACT only when no read-time merge can change
-        cardinality: COW tables qualify always (upserts merge and
-        deletes materialize at write — :meth:`_commit_delete`
-        anti-joins, so live COW files hold no tombstones); MOR does
-        not (the precombine merge collapses duplicate keys and
-        tombstone deltas kill rows at READ time), nor do files missing
-        a ``rows`` stat. Those fall back to an exact
-        ``snapshot().count()`` scan and report
-        ``from_metadata=False`` — correctness never depends on the
-        shortcut.
-
-        Retention interplay (deliberate): the metadata fast path needs
-        only the MANIFEST, so a COW ``as_of`` count keeps serving even
-        after the cleaner reaped that view's files; the scan fallback
-        (MOR / missing stats) inherits :meth:`snapshot`'s cleaned-files
-        contract error, and an as_of past the ARCHIVAL horizon raises
-        in :meth:`_view_files` like every history read."""
-        files, _, _ = self._view_files(partition_filter, as_of)
+        """Exact row count of the snapshot view from MANIFEST stats
+        alone — driver-side arithmetic, no scan, no Spark job (the
+        metadata-table ``count(*)`` path). Returns ``(count,
+        from_metadata)``. Exact only where no read-time merge can change
+        cardinality: COW (deletes materialize at write) with a ``rows``
+        stat on every file. MOR, or a file without the stat, falls back
+        to an exact ``snapshot().count()`` scan (``from_metadata=False``).
+        The fast path needs only the manifest, so a COW ``as_of`` count
+        serves even after the cleaner reaped that view's files; the
+        fallback keeps :meth:`snapshot`'s cleaned-files error, and an
+        as_of past the archival horizon raises like every history
+        read."""
+        tl = self.tl.instants()
+        files, _ = self._view_files(tl, partition_filter, as_of)
         if files is None:
             return 0, True
         if not self.is_mor and all(
             f.get("rows") is not None for f in files
         ):
             return sum(f["rows"] for f in files), True
-        return (
-            self.snapshot(
-                partition_filter=partition_filter, as_of=as_of
-            ).count(),
-            False,
-        )
+        return self._snapshot(tl, partition_filter, as_of).count(), False
 
     def metadata_min_max(
         self,
@@ -711,7 +687,8 @@ class LakeTable(FilePlanner):
         ``col`` (including all-NULL files — indistinguishable from
         stat-less), and for record-key stats absence. Empty files
         (``rows == 0``) are skipped, not a fallback trigger."""
-        files, _, _ = self._view_files(partition_filter, as_of)
+        tl = self.tl.instants()
+        files, _ = self._view_files(tl, partition_filter, as_of)
         if files is None:
             return None, None, True
         if not self.is_mor:
@@ -736,7 +713,7 @@ class LakeTable(FilePlanner):
                     return None, None, True  # view holds no rows
                 return min(los), max(his), True
         row = (
-            self.snapshot(partition_filter=partition_filter, as_of=as_of)
+            self._snapshot(tl, partition_filter, as_of)
             .agg(F.min(col), F.max(col))
             .collect()[0]
         )
@@ -765,35 +742,35 @@ class LakeTable(FilePlanner):
         0.11 data skipping); ``last_scan`` reports what each layer
         pruned.
         """
-        files, schema, inst = self._view_files(partition_filter, as_of)
+        return self._snapshot(
+            self.tl.instants(), partition_filter, as_of, predicate
+        )
+
+    def _snapshot(
+        self,
+        tl: list[str],
+        partition_filter: dict[str, object] | None = None,
+        as_of: str | None = None,
+        predicate: list[tuple] | None = None,
+    ) -> DataFrame:
+        """:meth:`snapshot` of the table state listing ``tl`` names."""
+        files, inst = self._view_files(tl, partition_filter, as_of)
         if files is None:
             self.last_scan = ScanReport()
-            return _empty_df(self.spark, self._stored_schema())
-        files = self._plan_read(files, predicate, instant=inst)
-        if as_of is not None and inst != self.last_instant():
+            return _empty_df(self.spark, self._stored_schema(newest(tl)))
+        files = self._plan_read(files, predicate, tl, inst)
+        if as_of is not None and inst != newest(tl):
             # time travel only — the latest view's files are live by
             # the cleaner's keep-set invariant
             self._require_live_paths(
                 [f["path"] for f in files], f"snapshot(as_of={as_of!r})"
             )
-        out = self._read_files([f["path"] for f in files], schema)
+        out = self._read_files(
+            [f["path"] for f in files], self._stored_schema(inst)
+        )
         if self.is_mor:
-            # merge-group-stable conjuncts push BELOW the merge:
-            # ``_record_key`` is constant within a merge unit, so
-            # pre-filtering selects whole groups and can never surface
-            # a stale version (general columns must stay post-merge —
-            # a newer non-matching version must still beat an older
-            # matching one). Catalyst then pushes the key filter into
-            # the parquet scan, where the r10 key-sorted data files
-            # serve it from row-group/page stats — the point-read
-            # plan at any file size.
-            stable = [
-                p for p in (predicate or []) if p[0] == RECORD_KEY_COL
-            ]
-            if stable:
-                out = out.filter(self._predicate_condition(stable))
-            out = self._merged_read(out, files)
-        if predicate:
+            out = self._merged_read(out, files, predicate)
+        elif predicate:
             out = out.filter(self._predicate_condition(predicate))
         self.last_scan = files.report
         return out
@@ -809,20 +786,43 @@ class LakeTable(FilePlanner):
         skippable)."""
         if not self.is_mor:
             return self.snapshot(predicate=predicate)
-        files = [f for f in self.tl.live_files() if f.get("kind", "base") == "base"]
+        tl = self.tl.instants()
+        files, head = self._view_files(tl, None, None)
+        files = [f for f in files if f.get("kind", "base") == "base"]
         # base-only read: no merge follows, so no delta can resurface a
         # skipped row — prune as if COW (all_base lifts the MOR rules
         # while keeping op validation and the report consistent).
         # The partition-stats aggregate covers deltas too — a superset
         # only widens ranges, so wholesale-prunes stay conservative.
-        files = self._plan_read(
-            files, predicate, all_base=True, instant=self.last_instant()
-        )
-        out = self._read_files([f["path"] for f in files]).drop(DELETED_COL)
+        files = self._plan_read(files, predicate, tl, head, all_base=True)
+        out = self._read_files(
+            [f["path"] for f in files], self._stored_schema(head)
+        ).drop(DELETED_COL)
         if predicate:
             out = out.filter(self._predicate_condition(predicate))
         self.last_scan = files.report
         return out
+
+    def _range_commits(
+        self, tl: list[str], begin: str | None, end: str | None, what: str
+    ) -> tuple[str | None, list[dict]]:
+        """The commits of listing ``tl`` in ``(begin, end]`` for
+        :meth:`incremental` and :meth:`changes`: ``(newest in-range
+        instant, the in-range manifests that change rows)``, after the
+        archival-horizon gate. Metadata-only ``index_backfill`` commits
+        re-list existing files and change no row: counting them would
+        scan a file twice when the range also holds its creating commit
+        (duplicate COW rows) and key-scan every covered file."""
+        self._require_active_horizon(begin, tl, what)
+        in_range = [
+            i for i in tl
+            if (begin is None or i > begin) and (end is None or i <= end)
+        ]
+        commits = [
+            m for m in map(self.tl.manifest, in_range)
+            if m.get("action") != "index_backfill"
+        ]
+        return newest(in_range), commits
 
     def incremental(
         self,
@@ -841,25 +841,13 @@ class LakeTable(FilePlanner):
         :meth:`snapshot`) before the scan, then applies the exact row
         filter.
         """
-        tl = self.timeline()
-        # commits before the archival horizon are no longer in the
-        # active timeline; serving a partial increment would silently
-        # drop their rows — fail like Hudi does and point at snapshot
-        self._require_active_horizon(begin, tl, "incremental range")
-        in_range = [
-            i for i in tl if (begin is None or i > begin) and (end is None or i <= end)
-        ]
+        tl = self.tl.instants()
+        last, commits = self._range_commits(
+            tl, begin, end, "incremental range"
+        )
         added: list[dict] = []
         seen_paths: set[str] = set()
-        for inst in in_range:
-            m = self.tl.manifest(inst)
-            if m.get("action") == "index_backfill":
-                # metadata-only commit: it re-lists EXISTING files purely
-                # to upgrade their index-coverage stamps and adds no rows.
-                # Including its "added" would scan a file twice whenever
-                # the range also contains the file's creating commit —
-                # exact duplicate rows on COW (the MOR merge masked it).
-                continue
+        for m in commits:
             for f in m["added"]:
                 if f["path"] not in seen_paths:
                     seen_paths.add(f["path"])
@@ -870,14 +858,12 @@ class LakeTable(FilePlanner):
         # range that are live at `end`, plus row-filter.
         live_at_end = {
             f["path"]
-            for f in (self.tl.live_files(in_range[-1]) if in_range else [])
+            for f in (self.tl.live_files(last, tl) if last else [])
         }
         fds = [f for f in added if f["path"] in live_at_end]
         # in-range files are a subset of the live set at the range end,
         # so that instant's partition-stats aggregate applies (superset)
-        fds = self._plan_read(
-            fds, predicate, instant=in_range[-1] if in_range else None
-        )
+        fds = self._plan_read(fds, predicate, tl, last)
         # an in-range file live at `end` can still be cleaned once the
         # retention horizon moves past `end` — fail with the contract
         # error, not PATH_NOT_FOUND mid-scan
@@ -885,7 +871,9 @@ class LakeTable(FilePlanner):
             [f["path"] for f in fds],
             f"incremental({begin!r}, {end!r})",
         )
-        df = self._read_files([f["path"] for f in fds])
+        df = self._read_files(
+            [f["path"] for f in fds], self._stored_schema(newest(tl))
+        )
         cond = F.lit(True)
         if begin is not None:
             cond = cond & (F.col(COMMIT_TIME_COL) > begin)
@@ -894,21 +882,8 @@ class LakeTable(FilePlanner):
         if self.is_mor:
             # merge within the range: one row per key (its newest
             # in-range version), matching what a COW rewrite would have
-            # produced; tombstones drop out in the merge. The predicate
-            # row filter applies AFTER the merge — filtering versions
-            # first could surface a stale matching version whose newest
-            # (non-matching) successor the filter removed. EXCEPT
-            # ``_record_key`` conjuncts: constant within a merge unit,
-            # they select whole groups and push below (see snapshot).
-            pre = df.filter(cond)
-            stable = [
-                p for p in (predicate or []) if p[0] == RECORD_KEY_COL
-            ]
-            if stable:
-                pre = pre.filter(self._predicate_condition(stable))
-            out = self._merged_read(pre, fds)
-            if predicate:
-                out = out.filter(self._predicate_condition(predicate))
+            # produced; tombstones drop out in the merge
+            out = self._merged_read(df.filter(cond), fds, predicate)
         else:
             if predicate:
                 cond = cond & self._predicate_condition(predicate)
@@ -932,24 +907,10 @@ class LakeTable(FilePlanner):
         Requires the replaced files to still exist (not yet cleaned) —
         the same retention contract Hudi's CDC read has.
         """
-        tl = self.timeline()
-        # same horizon rule as incremental(): an archived begin would
-        # silently misclassify updates as inserts (empty before-image)
-        # and, on MOR, drop archived commits' changes outright
-        self._require_active_horizon(begin, tl, "changes range")
-        in_range = [
-            i for i in tl
-            if (begin is None or i > begin) and (end is None or i <= end)
-        ]
+        tl = self.tl.instants()
+        _, commits = self._range_commits(tl, begin, end, "changes range")
         touched: list[str] = []
-        for inst in in_range:
-            m = self.tl.manifest(inst)
-            if m.get("action") == "index_backfill":
-                # metadata-only: re-lists every covered file but
-                # changes no row — including it would key-scan the
-                # whole table for a no-op commit (full-corpus I/O at
-                # 100 TB); same skip as incremental()
-                continue
+        for m in commits:
             touched.extend(f["path"] for f in m["added"])
             touched.extend(m["replaced"])
         key_cols = self._key_cols()
@@ -964,18 +925,17 @@ class LakeTable(FilePlanner):
         affected = self._read_files(
             sorted(set(touched)), schema=key_schema
         ).distinct()
+        stored = self._stored_schema(newest(tl))
         data_cols = [
-            f.name for f in self._stored_schema().fields
+            f.name for f in stored.fields
             if f.name not in META_COLS + [DELETED_COL]
         ]
-
-        stored = self._stored_schema()
 
         def image(as_of: str | None) -> DataFrame:
             if as_of is None:
                 snap = _empty_df(self.spark, stored)
             else:
-                snap = self.snapshot(as_of=as_of)
+                snap = self._snapshot(tl, as_of=as_of)
             for c in data_cols:  # pre-evolution snapshots lack new columns
                 if c not in snap.columns:
                     snap = snap.withColumn(
@@ -985,8 +945,8 @@ class LakeTable(FilePlanner):
                 *key_cols, F.struct(*data_cols).alias("_img")
             )
 
-        before = image(begin if begin is not None else None)
-        after = image(end if end is not None else (tl[-1] if tl else None))
+        before = image(begin)
+        after = image(end if end is not None else newest(tl))
         b = before.select(*key_cols, F.col("_img").alias("_before"))
         a = after.select(*key_cols, F.col("_img").alias("_after"))
         out = b.join(a, key_cols, "full_outer").withColumn(
@@ -1025,7 +985,7 @@ class LakeTable(FilePlanner):
             batch.filter(F.col("_commit_time") > cursor)
         """
         return (
-            self.spark.readStream.schema(self._stored_schema())
+            self.spark.readStream.schema(self._stored_schema(self.tl.last()))
             .option("recursiveFileLookup", "true")
             .parquet(self.data_dir)
         )
@@ -1082,16 +1042,18 @@ class LakeTable(FilePlanner):
                 f"sort_mode={sort_mode!r} applies only to bulk_insert"
             )
         with self._writer_lock():
+            tl = self.tl.instants()
             if checkpoint is not None:
-                last = self.last_checkpoint(checkpoint["source_id"])
+                cp = self.tl.last_checkpoint_entry(checkpoint["source_id"], tl)
+                last = (cp or {}).get("batch_id")
                 if last is not None and last >= checkpoint["batch_id"]:
                     self.last_scan = ScanReport()
                     return None  # replayed batch — already committed
-            inst = self.tl.next_instant(instant)
+            inst = self.tl.next_instant(instant, tl)
             out, scan = self._commit(
-                op, df, inst, sort_mode, sort_files, checkpoint
+                op, df, inst, tl, sort_mode, sort_files, checkpoint
             )
-            published = self._publish(inst, out, checkpoint)
+            published = self._publish(inst, out, tl, checkpoint)
         self.last_scan = scan
         return published
 
@@ -1100,47 +1062,54 @@ class LakeTable(FilePlanner):
         op: str,
         df: DataFrame,
         inst: str,
+        tl: list[str],
         sort_mode: str = "NONE",
         sort_files: int | None = None,
         checkpoint: dict | None = None,
     ) -> tuple[tuple | None, ScanReport]:
         """The compute step of every write op, shared by :meth:`write`
         and :meth:`write_optimistic`: write the op's data files under
-        ``inst``. Returns ``(out, report)``: ``out`` is ``(action,
-        schema, added, replaced)`` for the publish step, or None when
-        there is nothing to publish; ``report`` is the file planning
-        of a keyed COW rewrite (empty for every other op).
-        ``checkpoint`` is the streaming checkpoint the publish will
-        carry: an upsert with one always publishes."""
+        ``inst``, planned against the table state listing ``tl`` names.
+        Returns ``(out, report)``: ``out`` is ``(action, schema, added,
+        replaced)`` for the publish step, or None when there is nothing
+        to publish; ``report`` is the file planning of a keyed COW
+        rewrite (empty for every other op). ``checkpoint`` is the
+        streaming checkpoint the publish will carry: an upsert with one
+        always publishes."""
         if op in ("insert", "bulk_insert"):
-            out = self._commit_insert(df, inst, sort_mode, sort_files)
+            out = self._commit_insert(df, inst, tl, sort_mode, sort_files)
         elif op == "upsert":
-            return self._commit_upsert(df, inst, checkpoint)
+            return self._commit_upsert(df, inst, tl, checkpoint)
         elif op == "delete":
-            return self._commit_delete(df, inst)
+            return self._commit_delete(df, inst, tl)
         elif op == "insert_overwrite":
-            out = self._commit_insert_overwrite(df, inst)
+            out = self._commit_insert_overwrite(df, inst, tl)
         else:
             raise ValueError(f"unknown write op: {op}")
         return out, ScanReport()
 
     def _publish(
-        self, inst: str, out: tuple | None, checkpoint: dict | None = None
+        self,
+        inst: str,
+        out: tuple | None,
+        tl: list[str],
+        checkpoint: dict | None = None,
     ) -> str | None:
-        """The serialized publish step (writer lock held): the manifest
-        write, then the MOR inline-compaction check after a commit that
-        appended delta files. Lock-free publishers never fold inline —
-        it would stretch their short critical section."""
+        """The serialized publish step (writer lock held, ``tl`` listed
+        under it): the manifest write, then the MOR inline-compaction
+        check after a commit that appended delta files. Lock-free
+        publishers never fold inline — it would stretch their short
+        critical section."""
         if out is None:
             return None
-        self._write_manifest(inst, *out, checkpoint=checkpoint)
+        self._write_manifest(inst, *out, tl, checkpoint=checkpoint)
         if (
             self.inline_compact_deltas is not None
             and any(f["kind"] == "delta" for f in out[2])
-            and self._delta_commits_since_compact()
+            and 1 + self._delta_commits_since_compact(tl)
             >= self.inline_compact_deltas
         ):
-            self._compact_locked(None, 1)
+            self._compact_locked(None, 1, None, tl + [inst])
         return inst
 
     def write_optimistic(
@@ -1150,79 +1119,70 @@ class LakeTable(FilePlanner):
         instant: str | None = None,
     ) -> str | None:
         """Hudi's OPTIMISTIC multi-writer model (the concurrency mode
-        its ZooKeeper lock exists to arbitrate, ``SRC/package.scala:
-        38-47``): the same compute step as :meth:`write` — reading the
-        affected files, merging, writing the new data files — runs with
-        NO table lock held; the lock is taken only for a short
-        conflict-check + manifest publish. Concurrent writers whose
-        commits touch DISJOINT data both succeed with full parallelism
-        (the 100 TB pattern: per-partition backfill jobs, multi-tenant
-        ingest); a writer whose read set was modified underneath it —
-        or whose planned instant was out-run — raises
+        its ZooKeeper lock arbitrates, ``SRC/package.scala:38-47``): the
+        compute step of :meth:`write` — reading the affected files,
+        merging, writing the new data files — runs with NO lock,
+        planned against ``base``, the head of a first listing. The lock
+        is taken only for the conflict check against a second listing
+        and the manifest publish. Writers touching DISJOINT data both
+        succeed; a writer whose read set changed underneath it, or
+        whose planned instant was out-run, raises
         :class:`ConcurrentWriteConflict` and publishes nothing (its
-        data files are orphaned; the caller retries against fresh
-        state). Returns the committed instant, or None when nothing was
-        published (an empty upsert, exactly as :meth:`write`).
+        data files are orphaned; retry against fresh state). Returns
+        the committed instant, or None for an empty upsert, as
+        :meth:`write`.
 
-        Conflict rules at publish (file/key-stat level, like Hudi's
-        early conflict detection — conservative, never unsound):
+        Conflict rules against each commit after ``base``
+        (conservative, never unsound):
 
-        * a file this commit REPLACES was replaced by a concurrent
-          commit → lost update, abort;
-        * for key-merging ops, a concurrent commit ADDED a file whose
-          (partition, record-key range) overlaps one of ours → both
-          writers may have materialized the same key, abort
-          (``insert`` skips this: Hudi's insert is not key-unique);
-        * the newest published instant ≥ ours → instant-order
-          violation, abort (our data files are stamped with the
-          planned instant, so it cannot be reallocated).
+        * a file this commit REPLACES was replaced by it → lost update;
+        * for key-merging ops, it ADDED a file whose (partition,
+          record-key range) overlaps one of ours (``insert`` skips
+          this: it is not key-unique);
+        * its instant is ≥ ours → instant-order violation (our files
+          are stamped with the planned instant).
 
-        On a MERGE_ON_READ table every optimistic write is an APPEND
-        (delta files / tombstones, or base files for insert) and
-        appends COMMUTE: the read-time precombine merge resolves
-        overlapping keys identically in either publish order, and a
-        concurrent compaction's fold point precedes any later delta's
-        instant — so MOR needs only the instant-order check, never a
-        data conflict. This is exactly why the reference routes its
-        partitioned streaming tables to MOR (``SRC/package.scala:176``):
-        maximal writer concurrency. Inline compaction is NOT triggered
-        on the optimistic path (it would stretch the critical section);
-        use the async compactor.
-
-        The creating commit serializes (no read set exists to conflict
-        on). Exactly-once ``checkpoint`` batches belong to the
-        serialized streaming path.
+        On MERGE_ON_READ every optimistic write is an APPEND, and
+        appends commute under the read-time precombine merge, so MOR
+        needs only the instant-order check — why the reference routes
+        its partitioned streaming tables to MOR
+        (``SRC/package.scala:176``). Inline compaction never runs here;
+        use the async compactor. The creating commit serializes, and
+        exactly-once ``checkpoint`` batches belong to :meth:`write`.
         """
         if op not in ("insert", "upsert", "delete"):
             raise ValueError(f"unsupported optimistic op: {op}")
-        if not self.exists():
+        tl = self.tl.instants()
+        base = newest(tl)
+        if base is None:
             return self.write(df, op=op, instant=instant)
-        base = self.last_instant()
         if instant is None:
             # uniquify: concurrent writers allocating in the same
             # millisecond must not share a data directory / manifest
             # name (the suffix keeps the instant sorting after `base`)
-
-            inst = self.tl.next_instant(None) + "w" + uuid.uuid4().hex[:4]
+            inst = self.tl.next_instant(None, tl) + "w" + uuid.uuid4().hex[:4]
         else:
-            inst = self.tl.next_instant(instant)
+            inst = self.tl.next_instant(instant, tl)
 
         # announce the lock-free write BEFORE any data file exists so a
         # concurrent clean() (which cannot see our not-yet-published
         # manifest) never reaps the in-flight files as orphans
         self.tl.mark_inflight(inst)
         try:
-            out, scan = self._commit(op, df, inst)
+            # planned against `base`: the conflict check below compares
+            # the commits published after it
+            out, scan = self._commit(op, df, inst, tl)
             if out is not None:
                 with self._writer_lock():
+                    now = self.tl.instants()
                     self._survive_or_orphan(
                         out[2],
                         lambda: self.tl.check_conflicts(
                             base, inst, out[2], out[3],
-                            check_keys=not (op == "insert" or self.is_mor),
+                            not (op == "insert" or self.is_mor), now,
                         ),
                     )
-                    self._write_manifest(inst, *out)
+                    self._write_manifest(inst, *out, now)
         finally:
             self.tl.clear_inflight(inst)
         self.last_scan = scan
@@ -1280,14 +1240,17 @@ class LakeTable(FilePlanner):
                 "/".join(f"{k}={p[k]}" for k in self.partition_keys)
             )
         with self._writer_lock():
-            inst = self.tl.next_instant(instant)
+            tl = self.tl.instants()
+            head = newest(tl)
+            inst = self.tl.next_instant(instant, tl)
             doomed = [
                 f["path"]
-                for f in self.tl.live_files()
+                for f in self.tl.live_files(head, tl)
                 if f["partition_path"] in pps
             ]
             self._write_manifest(
-                inst, "delete_partition", self._stored_schema(), [], doomed
+                inst, "delete_partition", self._stored_schema(head), [],
+                doomed, tl,
             )
             return len(doomed)
 
@@ -1322,59 +1285,42 @@ class LakeTable(FilePlanner):
         precombine without a same-instant tombstone killing its own
         row).
 
-        AMBIGUOUS MATCHES RAISE (ANSI MERGE / Delta semantics, pinned by
-        ``tests/test_lake.py::test_merge_into_duplicate_match_raises``):
-        if more than one row matches for a record key — a duplicate-key
-        source hitting one target row, or one source row hitting
-        duplicate target rows from prior inserts — the merge raises
-        instead of committing. Silent resolution is unsound here: a
-        duplicate source routing one row to the delete clause and
-        another to the update clause would commit a same-instant
-        tombstone + data row whose visibility is table-type-dependent
-        (the MOR read merge kills same-commit data at or before a
-        tombstone; COW applies delete-then-update eagerly) — a COW/MOR
-        seam no precombine can arbitrate. Pre-aggregate the source to
-        one row per key (e.g. the a5 precombine-dedup shape) first, as
-        Delta requires. Unmatched duplicate-key INSERTS are not
-        ambiguous and flow through the upsert path's standard
-        precombine resolution; an INSERT-ONLY merge (no ``update_set``,
-        no ``delete_condition``) skips the gate — matched rows are
-        deliberately ignored there, so duplicates among them modify
-        nothing (ANSI's cardinality rule likewise applies only to
-        update/delete clauses).
+        AMBIGUOUS MATCHES RAISE (ANSI MERGE / Delta semantics): if more
+        than one row matches for a record key — a duplicate-key source,
+        or duplicate target rows from prior inserts — the merge raises
+        instead of committing. A duplicate source routing one row to
+        the delete clause and another to the update clause would commit
+        a same-instant tombstone + data row whose visibility differs
+        between COW and MOR. Pre-aggregate the source to one row per key
+        first, as Delta requires. An INSERT-ONLY merge (no
+        ``update_set``, no ``delete_condition``) skips the gate:
+        matched rows modify nothing there.
 
-        Concurrency (r14, closes the r13 TOCTOU): the ambiguity gate
-        and the matched/unmatched classification run optimistically
-        against a snapshot taken BEFORE the writer lock — but the
-        snapshot's instant is captured with the plan, and if the table
-        advanced by the time the lock is held, the WHOLE plan
-        (classification + gate) is re-derived under the lock against
-        the now-stable snapshot. A concurrent writer landing duplicate
-        target rows between gate and commit therefore trips the
-        re-derived gate instead of committing a silently ambiguous
-        merge; the no-conflict fast path pays nothing extra. (The
-        re-derive blocks other writers for one merge compute — the
-        price of exact ANSI cardinality, paid only when a conflict
-        actually happened.)
+        Concurrency: the classification and the ambiguity gate run
+        against the snapshot of a listing taken BEFORE the writer lock;
+        if the listing under the lock differs, both are re-derived
+        against it, so a concurrent writer landing duplicate target
+        rows trips the gate instead of evading it.
 
         Scale shape: matched/unmatched classification is ONE shuffle
         join of source against the snapshot on the record key; the
-        commit then reuses the upsert path's two-level file pruning
-        (partition prune + key-hit scan), so write amplification scales
-        with keys touched. Deletes ride the same commit: COW anti-joins
-        them out of the rewritten files; MOR appends tombstones into the
-        same delta batch.
+        commit then reuses the upsert path's file pruning, so write
+        amplification scales with keys touched. Deletes ride the same
+        commit: COW anti-joins them out of the rewritten files; MOR
+        appends tombstones into the same delta batch.
         """
-        if not self.exists():
+        planned = self.tl.instants()
+        if not planned:
             raise ValueError("merge_into on non-existent table")
 
-        def plan() -> tuple[DataFrame, DataFrame, list[str]]:
-            """Classification + ambiguity gate against the CURRENT
-            snapshot; returns (upserts, del_full, tcols). Called once
-            optimistically outside the lock, and re-called under the
-            lock iff the table advanced in between (the r13 TOCTOU)."""
-            tcols = self.logical().columns
-            t = self.logical().alias("t")
+        def plan(tl: list[str]) -> tuple[DataFrame, DataFrame, list[str]]:
+            """Classification + ambiguity gate against the snapshot
+            listing ``tl`` names; returns (upserts, del_full, tcols).
+            Called once optimistically outside the lock, and re-called
+            under the lock iff the table advanced in between."""
+            t = self._snapshot(tl).drop(*META_COLS)
+            tcols = t.columns
+            t = t.alias("t")
             s = source.alias("s")
             cond = None
             for k in self.record_keys:
@@ -1441,17 +1387,17 @@ class LakeTable(FilePlanner):
             inserts = s_only.select(*tcols)
             return updates.unionByName(inserts), del_full, tcols
 
-        base_inst = self.last_instant()
-        upserts, del_full, tcols = plan()
+        upserts, del_full, tcols = plan(planned)
         with self._writer_lock():
-            if self.last_instant() != base_inst:
+            tl = self.tl.instants()
+            if tl != planned:
                 # the table advanced between plan and lock: the gate and
                 # the matched/unmatched split are stale. Re-derive under
                 # the lock — no further commit can land, so this pass is
                 # exact (a concurrent duplicate-landing writer now trips
                 # the gate instead of evading it).
-                upserts, del_full, tcols = plan()
-            inst = self.tl.next_instant(instant)
+                upserts, del_full, tcols = plan(tl)
+            inst = self.tl.next_instant(instant, tl)
             up = self._prepare_batch(upserts, inst)
             # delete leg: combine=False — the ambiguity gate above
             # already guarantees one matched row per key, so a
@@ -1460,12 +1406,13 @@ class LakeTable(FilePlanner):
             dl = self._prepare_batch(del_full, inst, combine=False)
             if self.is_mor:
                 tomb = dl.withColumn(DELETED_COL, F.lit(True))
-                out = self._mor_append(up.unionByName(tomb), inst, "merge")
+                out = self._mor_append(up.unionByName(tomb), inst, "merge", tl)
                 scan = ScanReport()
             else:
-                up, dl = self._align_schema(up), self._align_schema(dl)
-                out, scan = self._keyed_rewrite("merge", inst, up, dl)
-            published = self._publish(inst, out)
+                up = self._align_schema(up, tl)
+                dl = self._align_schema(dl, tl)
+                out, scan = self._keyed_rewrite("merge", inst, tl, up, dl)
+            published = self._publish(inst, out, tl)
         self.last_scan = scan
         return published
 
@@ -1613,6 +1560,7 @@ class LakeTable(FilePlanner):
         self,
         df: DataFrame,
         inst: str,
+        tl: list[str],
         sort_mode: str = "NONE",
         sort_files: int | None = None,
     ) -> tuple:
@@ -1641,9 +1589,7 @@ class LakeTable(FilePlanner):
         lands as ONE pairwise-merged row on both table types and the
         one-version-per-(key, commit) invariant the fold equivalence
         rests on always holds."""
-        batch = self._prepare_batch(df, inst)
-        if self.exists():
-            batch = self._align_schema(batch)
+        batch = self._align_schema(self._prepare_batch(df, inst), tl)
         batch = self._apply_bulk_sort(batch, sort_mode, sort_files)
         # MOR inserts land as BASE files (Hudi routes inserts to parquet
         # base, only merges/deletes to the log). sort_mode=NONE is the
@@ -1688,7 +1634,9 @@ class LakeTable(FilePlanner):
             f"or PARTITION_SORT"
         )
 
-    def _commit_insert_overwrite(self, df: DataFrame, inst: str) -> tuple:
+    def _commit_insert_overwrite(
+        self, df: DataFrame, inst: str, tl: list[str]
+    ) -> tuple:
         """Hudi's ``insert_overwrite``: REPLACE the contents of every
         partition the batch touches (whole table when unpartitioned)
         with the batch — the idempotent full-refresh op for dimension
@@ -1697,10 +1645,8 @@ class LakeTable(FilePlanner):
         ``replaced`` = the touched partitions' previous live files —
         untouched partitions carry over by manifest reference, so the
         cost scales with the REFRESHED slice, never the table."""
-        batch = self._prepare_batch(df, inst)
-        if self.exists():
-            batch = self._align_schema(batch)
-        live = self.tl.live_files()
+        batch = self._align_schema(self._prepare_batch(df, inst), tl)
+        live = self.tl.live_files(newest(tl), tl)
         if self.partition_keys and live:
             batch.persist()
             try:
@@ -1722,7 +1668,11 @@ class LakeTable(FilePlanner):
         return "insert_overwrite", batch.schema, added, doomed
 
     def _commit_upsert(
-        self, df: DataFrame, inst: str, checkpoint: dict | None = None
+        self,
+        df: DataFrame,
+        inst: str,
+        tl: list[str],
+        checkpoint: dict | None = None,
     ) -> tuple[tuple | None, ScanReport]:
         """Keyed upsert. On an existing table with no ``checkpoint``,
         an EMPTY batch publishes nothing and returns None: one
@@ -1738,7 +1688,7 @@ class LakeTable(FilePlanner):
         batch = self._prepare_batch(df, inst)
         obs = (
             Observation()
-            if self.exists()
+            if tl
             and checkpoint is None
             and df.sparkSession._jsparkSession.equals(
                 self.spark._jsparkSession
@@ -1746,10 +1696,10 @@ class LakeTable(FilePlanner):
             else None
         )
         if self.is_mor:
-            return self._mor_append(batch, inst, "upsert", obs), ScanReport()
-        if self.exists():
-            batch = self._align_schema(batch)
-        return self._keyed_rewrite("upsert", inst, batch, obs=obs)
+            out = self._mor_append(batch, inst, "upsert", tl, obs)
+            return out, ScanReport()
+        batch = self._align_schema(batch, tl)
+        return self._keyed_rewrite("upsert", inst, tl, batch, obs=obs)
 
     @staticmethod
     def _observe_rows(
@@ -1776,31 +1726,32 @@ class LakeTable(FilePlanner):
         return True
 
     def _commit_delete(
-        self, df: DataFrame, inst: str
+        self, df: DataFrame, inst: str, tl: list[str]
     ) -> tuple[tuple | None, ScanReport]:
         """Delete by key (Hudi ``delete`` op; CDC DELETE routing,
         ``SRC/cdc/CanalParser.scala:13``). Partition-scoped unless
         ``global_index``; the delete batch only needs the key columns
         (plus partition columns when scoped)."""
-        if not self.exists():
+        if not tl:
             raise ValueError("delete on non-existent table")
         if self.is_mor:
             # tombstone delta: stored-schema row with _deleted=true; the
             # read merge kills every data row committed before it
             tomb = self._prepare_batch(df, inst, combine=False)
             out = self._mor_append(
-                tomb.withColumn(DELETED_COL, F.lit(True)), inst, "delete"
+                tomb.withColumn(DELETED_COL, F.lit(True)), inst, "delete", tl
             )
             return out, ScanReport()
         keys = df.filter(pk_not_null_condition(self.record_keys))
         return self._keyed_rewrite(
-            "delete", inst, deletes=self._stamp(keys, inst)
+            "delete", inst, tl, deletes=self._stamp(keys, inst)
         )
 
     def _keyed_rewrite(
         self,
         action: str,
         inst: str,
+        tl: list[str],
         upserts: DataFrame | None = None,
         deletes: DataFrame | None = None,
         obs: Observation | None = None,
@@ -1810,24 +1761,26 @@ class LakeTable(FilePlanner):
         of either frame (:meth:`_affected_files`), anti-join the
         ``deletes`` keys out of their rows, merge the ``upserts`` in
         (:meth:`_merge`) and write the result; the affected files are
-        the commit's ``replaced``. A creating upsert has no files: it
-        only dedups the batch. ``obs`` (see :meth:`_commit_upsert`)
-        observes ``upserts`` and turns an empty batch into no commit.
+        the commit's ``replaced``, planned against the head of ``tl``.
+        A creating upsert has no files: it only dedups the batch.
+        ``obs`` (see :meth:`_commit_upsert`) observes ``upserts`` and
+        turns an empty batch into no commit.
         Returns ``(out, report)`` — see :meth:`_commit`."""
         # M1 — persist around multi-action writes (SRC/package.scala:66,
         # 78): on an existing table the frames feed partition discovery,
         # the key-range agg, the key-hit scan AND the merge; only the
         # creating commit evaluates them once. The row count observes
         # the persisted frame, so every action reads through it.
+        head = newest(tl)
         cached = [f for f in (upserts, deletes) if f is not None]
-        if not (self.exists() or self.partition_keys):
+        if not (head or self.partition_keys):
             cached = []
         for f in cached:
             f.persist()
         try:
             if upserts is not None:
                 upserts = self._observe_rows(upserts, obs)
-            if not self.exists():
+            if head is None:
                 affected = Kept([], ScanReport())
                 rows = _empty_df(self.spark, upserts.schema)
             else:
@@ -1836,7 +1789,7 @@ class LakeTable(FilePlanner):
                     keys = upserts.unionByName(
                         deletes.select(*upserts.columns)
                     )
-                affected, rows = self._affected_files(keys)
+                affected, rows = self._affected_files(keys, tl)
             if deletes is not None:
                 cols = self._key_cols()
                 rows = rows.join(
@@ -1850,7 +1803,9 @@ class LakeTable(FilePlanner):
                 f.unpersist()
         if self._discard_if_empty(obs, inst):
             return None, affected.report
-        schema = self._stored_schema() if upserts is None else upserts.schema
+        schema = upserts.schema if upserts is not None else (
+            self._stored_schema(head)
+        )
         replaced = sorted({f["path"] for f in affected})
         return (action, schema, added, replaced), affected.report
 
@@ -1859,6 +1814,7 @@ class LakeTable(FilePlanner):
         batch: DataFrame,
         inst: str,
         action: str,
+        tl: list[str],
         obs: Observation | None = None,
     ) -> tuple | None:
         """MOR write path: append delta files, zero rewrite — write cost
@@ -1868,19 +1824,19 @@ class LakeTable(FilePlanner):
         no commit; the delta write IS the batch, so it counts the
         written rows.
         """
-        if self.exists():
-            batch = self._align_schema(batch)
+        batch = self._align_schema(batch, tl)
         added = self._write_data_files(batch, inst, kind="delta", obs=obs)
         if self._discard_if_empty(obs, inst):
             return None
         return action, batch.schema, added, []
 
-    def _delta_commits_since_compact(self) -> int:
-        """Commits that actually ADDED delta files since the last
-        compaction — base-file inserts don't need folding and must not
-        trigger premature full-table rewrites (Hudi counts the same)."""
+    def _delta_commits_since_compact(self, tl: list[str]) -> int:
+        """Commits of listing ``tl`` that actually ADDED delta files
+        since the last compaction — base-file inserts don't need folding
+        and must not trigger premature full-table rewrites (Hudi counts
+        the same)."""
         n = 0
-        for i in reversed(self.timeline()):
+        for i in reversed(tl):
             m = self.tl.manifest(i)
             if m["action"] == "compact":
                 break
@@ -1889,52 +1845,43 @@ class LakeTable(FilePlanner):
         return n
 
     def _merged_read(
-        self, df: DataFrame, files: list[dict] | None = None
+        self,
+        df: DataFrame,
+        files: list[dict] | None = None,
+        predicate: list[tuple] | None = None,
     ) -> DataFrame:
         """MOR snapshot merge of ``df``, the scan of the manifest
-        entries ``files`` (None: unknown): newest surviving row per key.
-        Data rows committed before a key's newest tombstone are dead
-        (matching the COW delete-then-reinsert semantics exactly); among
-        the live rows the ``(precombine, _commit_time)`` max wins.
-        Aggregations with a partial aggregate before the shuffle; Spark
-        plans them as ``SortAggregate``s with a ``Sort`` on each side of
-        the exchange (struct ``max_by`` and string ``max`` buffers are
-        not mutable fixed-width, so no hash aggregate serves them).
+        entries ``files`` (None: unknown): newest surviving row per key,
+        filtered by ``predicate``. Data rows committed before a key's
+        newest tombstone are dead (the COW delete-then-reinsert
+        semantics); among the live rows the ``(precombine,
+        _commit_time)`` max wins. The predicate's ``_record_key``
+        conjuncts also filter BELOW the merge — constant within a merge
+        unit, they select whole groups, and the parquet scan serves them
+        from the key-sorted files' page stats; every other conjunct
+        filters after it, since a newer non-matching version must still
+        beat an older matching one. Spark plans the aggregations as
+        ``SortAggregate``s (struct ``max_by`` buffers are not
+        fixed-width).
 
         The tombstone sub-plan (a ``groupBy`` of the tombstones joined
-        back onto the data rows — one shuffle job and one broadcast job
-        per read) is planned only when some scanned entry may hold a
-        tombstone: every MOR file records ``"tombstones"`` from its
-        footer's ``_deleted`` max at write time, and an entry without
-        the key (written before the flag existed, or adopted) counts as
-        holding one, as does an unknown scan. An upsert-only table
-        therefore merges with the single aggregation.
+        back onto the data rows: one shuffle and one broadcast job) is
+        planned only when some scanned entry may hold a tombstone — its
+        ``"tombstones"`` flag, from the footer's ``_deleted`` max, is not
+        False — so an upsert-only table merges with one aggregation.
 
-        With ``payload='partial_update'`` the aggregation additionally
-        folds each data column to its newest ELIGIBLE non-null version
-        (one ``max_by`` per column plus a running-max window for
-        eligibility — see the inline note) — the MOR twin of
-        :meth:`_merge`'s COW fold. Soundness of column
-        inheritance under deletes is the tombstone filter ABOVE the
-        fold: every version at or before a key's newest tombstone is
-        dropped first, so a patch can never inherit a column through a
-        delete — the exact property the COW path gets from eager delete
-        materialization. Note for :meth:`incremental` (which reuses
-        this merge over in-range files only): the fold sees in-range
-        versions, so a sparse patch surfaces with nulls for columns
-        last set before the range — Hudi's partial-update payload has
-        the same incremental-read caveat.
-
-        The fold's row-level (commit, precombine) replay equals the
-        commit-unit pairwise model because partial_update write paths
-        pre-combine every batch (:meth:`_precombine_batch`): one
-        version per (key, commit) is a table invariant. The remaining
-        ways to violate it are adopting foreign files via bootstrap
-        (where the fold degrades to row-level replay of the
-        duplicates) and a same-commit tombstone + data row for one
-        key, which only an ambiguous MERGE could produce — and
-        :meth:`merge_into` raises on ambiguous matches instead of
-        committing one."""
+        With ``payload='partial_update'`` each data column also folds to
+        its newest ELIGIBLE non-null version (see the inline note) — the
+        MOR twin of :meth:`_merge`'s COW fold. The tombstone filter runs
+        first, so a patch never inherits a column through a delete. Over
+        :meth:`incremental`'s in-range files a sparse patch surfaces with
+        nulls for columns last set before the range, as in Hudi. The
+        row-level replay equals the pairwise payload model because
+        partial_update writes pre-combine every batch
+        (:meth:`_precombine_batch`): one version per (key, commit)."""
+        stable = [p for p in (predicate or []) if p[0] == RECORD_KEY_COL]
+        if stable:
+            df = df.filter(self._predicate_condition(stable))
         part_cols = self._key_cols()
         out_cols = [c for c in df.columns if c != DELETED_COL]
         if DELETED_COL in df.columns and (
@@ -2044,12 +1991,16 @@ class LakeTable(FilePlanner):
                             F.col(c), F.col(f"_ff_{c}"), F.col(f"_r.{c}")
                         ).alias(c)
                     )
-            return agged.select(*outs)
-        # the tombstone join moves its key columns to the front — restore
-        # the stored column order
-        return df.groupBy(*part_cols).agg(winner).select(
-            *[F.col(f"_r.{c}") for c in out_cols]
-        )
+            out = agged.select(*outs)
+        else:
+            # the tombstone join moves its key columns to the front —
+            # restore the stored column order
+            out = df.groupBy(*part_cols).agg(winner).select(
+                *[F.col(f"_r.{c}") for c in out_cols]
+            )
+        if predicate:
+            out = out.filter(self._predicate_condition(predicate))
+        return out
 
     # ------------------------------------------------------------ internals
 
@@ -2078,7 +2029,7 @@ class LakeTable(FilePlanner):
             return batch_dt
         return stored_dt
 
-    def _align_schema(self, batch: DataFrame) -> DataFrame:
+    def _align_schema(self, batch: DataFrame, tl: list[str]) -> DataFrame:
         """Schema evolution on write, Hudi-style semantics: batch
         columns missing from the table → null (the reference gets this
         implicitly from ``from_json`` against the target schema,
@@ -2092,8 +2043,13 @@ class LakeTable(FilePlanner):
         metadata-only, exactly the COW-cheap path. A batch that already
         has the stored columns, in order and at their types, is returned
         as it is: nothing to cast, and no per-column projection to build.
+        The stored schema is the head's of listing ``tl``; on a table
+        with no commit the batch defines the schema and is returned as
+        it is.
         """
-        stored = self._stored_schema()
+        if not tl:
+            return batch
+        stored = self._stored_schema(tl[-1])
         if [(f.name, f.dataType) for f in batch.schema.fields] == [
             (f.name, f.dataType) for f in stored.fields
         ]:
@@ -2151,36 +2107,30 @@ class LakeTable(FilePlanner):
     ) -> str | None:
         """The one async indexer over ``cols`` behind
         :meth:`backfill_record_index` and
-        :meth:`backfill_secondary_index` (Hudi's async indexer /
-        ``hoodie.metadata.index.async`` analog): index the live files
-        written before an index was enabled — or before a column
-        joined it — WITHOUT rewriting any data. At 100 TB this is the
-        difference between "index the table" costing one
-        column-pruned index scan versus a full rewrite of every file.
+        :meth:`backfill_secondary_index` (Hudi's async indexer): index
+        the live files written before an index was enabled — or before
+        a column joined it — WITHOUT rewriting any data.
 
-        Under the writer lock: find the live files whose ``covered``
-        columns miss one of ``cols``, per creating instant; batch them
-        by the read schema of their missing columns (the record key
-        reads as the string the engine stamps; data columns read as
-        the creating commit's schema, and a file whose origin manifest
-        is unreadable stays un-covered — conservative keep-all); sweep
-        what a crashed predecessor left; build each batch into the
-        files' CREATING-instant dirs (where probes look — the dirs the
-        cleaner protects while the files are live), honoring each
-        dir's ``.nshards`` modulus and naming the parts for this
-        backfill's instant; then record coverage with one
-        metadata-only ``index_backfill`` commit that re-adds the files
-        as ``stamp`` upgrades them (the ordinary replaced+added replay
-        applies it — no new timeline semantics). Data files are
-        untouched; incremental/CDC readers are unaffected because
-        their row filters use the rows' original ``_commit_time``. A
-        racing optimistic writer that touched the same files sees a
-        (false but safe) publish conflict and retries. Idempotent:
-        returns None when every live file is covered."""
+        Under the writer lock, over the live set of the listing taken
+        there: find the live files whose ``covered`` columns miss one of
+        ``cols``; batch them by the read schema of their missing
+        columns (the creating commit's; a file whose origin manifest is
+        unreadable stays un-covered); sweep what a crashed predecessor
+        left; build each batch into the files' CREATING-instant dirs,
+        where probes look, honoring each dir's ``.nshards`` modulus;
+        then record coverage with one metadata-only ``index_backfill``
+        commit that re-adds the files as ``stamp`` upgrades them. Row
+        filters of incremental/CDC reads use the rows' own
+        ``_commit_time``, so they are unaffected; a racing optimistic
+        writer that touched the same files sees a (false but safe)
+        conflict. Idempotent: returns None when every live file is
+        covered."""
         want = set(cols)
         with self._writer_lock():
+            tl = self.tl.instants()
+            head = newest(tl)
             by_inst: dict[str, list[dict]] = {}
-            for f in self.tl.live_files():
+            for f in self.tl.live_files(head, tl):
                 if not f.get("external") and not want <= covered(f):
                     by_inst.setdefault(
                         creating_instant(f["path"]), []
@@ -2207,7 +2157,7 @@ class LakeTable(FilePlanner):
             if not batches:
                 return None
             files = [f for fl in batches.values() for f in fl]
-            inst = self.tl.next_instant(None)
+            inst = self.tl.next_instant(None, tl)
             idx.sweep(
                 {creating_instant(f["path"]) for f in files},
                 self._is_backfill_commit,
@@ -2225,9 +2175,10 @@ class LakeTable(FilePlanner):
             self._write_manifest(
                 inst,
                 "index_backfill",
-                self._stored_schema(),
+                self._stored_schema(head),
                 [stamp(f) for f in files],
                 [f["path"] for f in files],
+                tl,
             )
             return inst
 
@@ -2552,10 +2503,12 @@ class LakeTable(FilePlanner):
         schema: T.StructType,
         added: list[dict],
         replaced: list[str],
+        tl: list[str],
         checkpoint: dict | None = None,
     ) -> None:
         """Build the enabled index sidecars over ``added``, stamp the
-        files they cover, then publish the commit through
+        files they cover, then publish the commit after the head of
+        ``tl``, the listing taken under the writer lock, through
         :meth:`Timeline.publish` (writing the manifest IS the
         commit)."""
         # adopted (external) files are not index-built: they lack the
@@ -2649,7 +2602,8 @@ class LakeTable(FilePlanner):
             for f in indexable:
                 f[flag] = val  # same dicts enter the live set
         self.tl.publish(
-            instant, action, schema.jsonValue(), added, replaced, checkpoint
+            instant, action, schema.jsonValue(), added, replaced, tl,
+            checkpoint,
         )
 
     # ------------------------------------------ metadata-only bootstrap
@@ -2664,21 +2618,15 @@ class LakeTable(FilePlanner):
         in ``pipelines/bootstrap.py`` is its full-rewrite cousin, from
         ``SRC/Hive2Hudi.scala:23-35``).
 
-        The commit is a pure metadata pass: list the files, read ONE
-        parquet footer per file for column stats, write the manifest
-        referencing the files in place (absolute paths + ``external``
-        flag). At 100 TB that is minutes of driver+footer I/O instead of
-        rewriting the corpus. From then on the table behaves normally:
-
-        - reads synthesize the meta columns on the fly
-          (:meth:`_stamp_external`) and still file-skip on the footer
-          stats harvested here;
-        - upserts copy-on-write ONLY the key-hit files, so data
-          migrates into engine-written files incrementally;
-          :meth:`compact` migrates everything in one (lock-free) fold;
-        - ``clean()``/``restore()`` never delete adopted files —
-          replaced entries just leave the live set (the source
-          directory stays user-owned).
+        The commit is a pure metadata pass, under the writer lock from
+        the emptiness check on: list the files, read ONE parquet footer
+        per file for column stats, write the manifest referencing the
+        files in place (absolute paths + ``external`` flag). Reads then
+        synthesize the meta columns (:meth:`_stamp_external`); upserts
+        copy-on-write only the key-hit files, so data migrates into
+        engine-written files incrementally; ``clean()``/``restore()``
+        never delete adopted files (the source directory stays
+        user-owned).
 
         Layout contract: unpartitioned table → any ``*.parquet`` below
         ``source_dir``; partitioned → hive-style ``key=value``
@@ -2690,103 +2638,100 @@ class LakeTable(FilePlanner):
         other key shapes stay conservatively unpruned (a numeric
         footer min/max does not bound the stringified record key).
         """
-        if self.exists():
-            raise ValueError(
-                "metadata-only bootstrap requires an empty table"
-            )
-        base = os.path.abspath(source_dir)
-        found: list[str] = []
-        for root, _dirs, fns in os.walk(base):
-            for fn in fns:
-                if fn.endswith(".parquet"):
-                    found.append(os.path.join(root, fn))
-        found.sort()
-        if not found:
-            raise ValueError(f"no parquet files under {base!r}")
-        want_stats = [RECORD_KEY_COL] + self.stats_columns
-        string_key = (
-            self.record_keys[0] if len(self.record_keys) == 1 else None
-        )
-        if string_key is not None and string_key not in want_stats:
-            want_stats = want_stats + [string_key]
-        parts: list[tuple[str, dict, str]] = []
-        for full in found:
-            partition: dict[str, str] = {}
-            rel_dir = os.path.relpath(os.path.dirname(full), base)
-            for seg in rel_dir.split(os.sep):
-                if "=" in seg:
-                    k, v = seg.split("=", 1)
-                    partition[k] = unquote(v)
-            if set(partition) != set(self.partition_keys):
-                raise ValueError(
-                    f"{full!r}: partition dirs {sorted(partition)} do not"
-                    f" match partition_keys {self.partition_keys}"
-                )
-            pp = (
-                "/".join(
-                    f"{k}={partition[k]}" for k in self.partition_keys
-                )
-                if partition
-                else ""
-            )
-            parts.append((full, partition, pp))
-        # adoption scans an EXTERNAL dataset — often the largest single
-        # listing the table ever sees — so the footer probes especially
-        # benefit from the thread pool (see _file_stats_parallel)
-        stats = self._file_stats_parallel(found, want_stats)
-        records: list[dict] = []
-        for (full, partition, pp), (ranges, nbytes) in zip(parts, stats):
-            nrows = ranges.pop("__rows__", None)
-            kmin = kmax = None
-            if string_key is not None:
-                kr = ranges.get(string_key)
-                # valid only for a STRING key: the record key is the
-                # value itself, so footer order == record-key order
-                if (
-                    kr is not None
-                    and isinstance(kr[0], str)
-                    and isinstance(kr[1], str)
-                ):
-                    kmin, kmax = kr
-            col_stats = {
-                c: [self._stat_json(r[0]), self._stat_json(r[1])]
-                for c, r in ranges.items()
-                if c in self.stats_columns
-                and r is not None
-                and self._stat_json(r[0]) is not None
-                and self._stat_json(r[1]) is not None
-            }
-            entry = {
-                "path": full,
-                "partition": partition,
-                "partition_path": pp,
-                "kind": "base",
-                "key_min": kmin,
-                "key_max": kmax,
-                "bytes": nbytes,
-                "external": True,
-            }
-            if nrows is not None:
-                entry["rows"] = nrows[0]
-            if col_stats:
-                entry["col_stats"] = col_stats
-            records.append(entry)
-        raw = self._external_raw(base, found)
-        missing = [
-            c
-            for c in self.record_keys + [self.precombine]
-            if c not in raw.columns
-        ]
-        if missing:
-            raise ValueError(
-                f"adopted files lack required columns {missing}"
-            )
         with self._writer_lock():
-            if self.exists():
-                raise ConcurrentWriteConflict(
-                    "another writer initialized the table during bootstrap"
+            tl = self.tl.instants()
+            if tl:
+                raise ValueError(
+                    "metadata-only bootstrap requires an empty table"
                 )
-            inst = self.tl.next_instant(instant)
+            base = os.path.abspath(source_dir)
+            found: list[str] = []
+            for root, _dirs, fns in os.walk(base):
+                for fn in fns:
+                    if fn.endswith(".parquet"):
+                        found.append(os.path.join(root, fn))
+            found.sort()
+            if not found:
+                raise ValueError(f"no parquet files under {base!r}")
+            want_stats = [RECORD_KEY_COL] + self.stats_columns
+            string_key = (
+                self.record_keys[0] if len(self.record_keys) == 1 else None
+            )
+            if string_key is not None and string_key not in want_stats:
+                want_stats = want_stats + [string_key]
+            parts: list[tuple[str, dict, str]] = []
+            for full in found:
+                partition: dict[str, str] = {}
+                rel_dir = os.path.relpath(os.path.dirname(full), base)
+                for seg in rel_dir.split(os.sep):
+                    if "=" in seg:
+                        k, v = seg.split("=", 1)
+                        partition[k] = unquote(v)
+                if set(partition) != set(self.partition_keys):
+                    raise ValueError(
+                        f"{full!r}: partition dirs {sorted(partition)} do not"
+                        f" match partition_keys {self.partition_keys}"
+                    )
+                pp = (
+                    "/".join(
+                        f"{k}={partition[k]}" for k in self.partition_keys
+                    )
+                    if partition
+                    else ""
+                )
+                parts.append((full, partition, pp))
+            # adoption scans an EXTERNAL dataset — often the largest single
+            # listing the table ever sees — so the footer probes especially
+            # benefit from the thread pool (see _file_stats_parallel)
+            stats = self._file_stats_parallel(found, want_stats)
+            records: list[dict] = []
+            for (full, partition, pp), (ranges, nbytes) in zip(parts, stats):
+                nrows = ranges.pop("__rows__", None)
+                kmin = kmax = None
+                if string_key is not None:
+                    kr = ranges.get(string_key)
+                    # valid only for a STRING key: the record key is the
+                    # value itself, so footer order == record-key order
+                    if (
+                        kr is not None
+                        and isinstance(kr[0], str)
+                        and isinstance(kr[1], str)
+                    ):
+                        kmin, kmax = kr
+                col_stats = {
+                    c: [self._stat_json(r[0]), self._stat_json(r[1])]
+                    for c, r in ranges.items()
+                    if c in self.stats_columns
+                    and r is not None
+                    and self._stat_json(r[0]) is not None
+                    and self._stat_json(r[1]) is not None
+                }
+                entry = {
+                    "path": full,
+                    "partition": partition,
+                    "partition_path": pp,
+                    "kind": "base",
+                    "key_min": kmin,
+                    "key_max": kmax,
+                    "bytes": nbytes,
+                    "external": True,
+                }
+                if nrows is not None:
+                    entry["rows"] = nrows[0]
+                if col_stats:
+                    entry["col_stats"] = col_stats
+                records.append(entry)
+            raw = self._external_raw(base, found)
+            missing = [
+                c
+                for c in self.record_keys + [self.precombine]
+                if c not in raw.columns
+            ]
+            if missing:
+                raise ValueError(
+                    f"adopted files lack required columns {missing}"
+                )
+            inst = self.tl.next_instant(instant, tl)
             stamped = self._stamp(raw, inst)
             if self.is_mor:
                 stamped = stamped.withColumn(DELETED_COL, F.lit(False))
@@ -2797,7 +2742,7 @@ class LakeTable(FilePlanner):
             )
             self._external_cache = bases
             self._write_manifest(
-                inst, "bootstrap", stamped.schema, records, []
+                inst, "bootstrap", stamped.schema, records, [], tl
             )
         return inst
 
@@ -2856,29 +2801,35 @@ class LakeTable(FilePlanner):
         exact: in-range original files are replaced (not live at the
         range end → skipped), the compacted files carry the rows, and
         the ``(begin, end]`` row filter keeps each row exactly once.
+        Returns None on a table with no commit.
         """
-        if not self.exists():
-            return None
         with self._writer_lock():
+            tl = self.tl.instants()
+            if not tl:
+                return None
             return self._compact_locked(
-                instant, target_files_per_partition, sort_by
+                instant, target_files_per_partition, sort_by, tl
             )
 
     def _compact_locked(
         self,
         instant: str | None,
         target_files_per_partition: int,
-        sort_by: list | None = None,
+        sort_by: list | None,
+        tl: list[str],
     ) -> str:
-        inst = self.tl.next_instant(instant)
-        live = self.tl.live_files()
-        added = self._fold(live, inst, target_files_per_partition, sort_by)
+        """Fold every file live at the head of ``tl``, the listing
+        taken under the writer lock, into one commit."""
+        head = newest(tl)
+        inst = self.tl.next_instant(instant, tl)
+        live = self.tl.live_files(head, tl)
+        schema = self._stored_schema(head)
+        added = self._fold(
+            live, inst, target_files_per_partition, sort_by, schema
+        )
         self._write_manifest(
-            inst,
-            "compact",
-            self._stored_schema(),
-            added,
-            sorted(f["path"] for f in live),
+            inst, "compact", schema, added, sorted(f["path"] for f in live),
+            tl,
         )
         return inst
 
@@ -2888,10 +2839,12 @@ class LakeTable(FilePlanner):
         inst: str,
         target_files_per_partition: int,
         sort_by: list | None,
+        schema: T.StructType,
     ) -> list[dict]:
         """The ONE compaction fold behind :meth:`compact`, inline MOR
-        compaction and :meth:`run_compaction`: rewrite ``files`` into
-        fresh base files under ``inst``. On MOR the deltas and
+        compaction and :meth:`run_compaction`: rewrite ``files``, read
+        under the stored ``schema``, into fresh base files under
+        ``inst``. On MOR the deltas and
         tombstones fold in; the rows keep their ``_commit_time`` and
         the column set stays the stored schema (all-false ``_deleted``)
         so later reads are uniform.
@@ -2902,10 +2855,10 @@ class LakeTable(FilePlanner):
         through Spark below."""
         out_dir = os.path.join(self.data_dir, inst)
         if fold_mod.fold(
-            self, files, out_dir, target_files_per_partition, sort_by
+            self, files, out_dir, target_files_per_partition, sort_by, schema
         ):
             return self._describe_data_files(out_dir, "base")
-        df = self._read_files([f["path"] for f in files])
+        df = self._read_files([f["path"] for f in files], schema)
         if self.is_mor:
             df = self._merged_read(df, files).withColumn(
                 DELETED_COL, F.lit(False)
@@ -3034,47 +2987,33 @@ class LakeTable(FilePlanner):
         sort_spec: list | None = None,
         target_files_per_partition: int | None = None,
     ) -> str | None:
-        """Async-compaction phase 1 (the reference runs compaction async
-        on the KDS path, ``SRC/KDS2Hudi.scala:131-133``; Hudi's
-        schedule/execute split): pin a compaction PLAN — a file set
-        chosen by ``strategy`` — on the timeline sidecar, and return
-        immediately. Ingest keeps committing; ``run_compaction`` later
-        folds ONLY the pinned files.
+        """Async-compaction phase 1 (Hudi's schedule/execute split; the
+        reference compacts async on the KDS path,
+        ``SRC/KDS2Hudi.scala:131-133``): pin a compaction PLAN — the
+        file set ``strategy`` picks from the live set of the listing
+        taken under the writer lock — and return. Ingest keeps
+        committing; :meth:`run_compaction` later folds ONLY the pinned
+        files.
 
-        Strategies (Hudi's pluggable ``CompactionStrategy`` analog —
-        at 100 TB "compact everything" is never the plan):
+        * ``full`` — every live file (the default).
+        * ``small_files`` — picks by the ``bytes`` stat the manifests
+          record. On COW: the files smaller than
+          ``small_file_limit_bytes`` (at least 2); any COW subset folds
+          safely. On MOR the unit is the PARTITION: all live files of
+          every partition with a delta file or 2+ small base files. That
+          is a correctness boundary: the fold drops merged-away
+          tombstones, sound only if no older row of a tombstoned key
+          survives outside the pinned set, and a key lives inside one
+          partition under the per-partition index. A global-index MOR
+          table therefore refuses ``small_files`` (``ValueError``).
 
-        * ``full`` — every live file (the default; the safe universal
-          fold).
-        * ``small_files`` — bounded-IO selection driven by the ``bytes``
-          size stat each manifest records at write time (no per-file
-          stat storm at schedule). On COW: the individual files smaller
-          than ``small_file_limit_bytes`` (≥2, else nothing to gain) —
-          any COW subset folds safely (no merge semantics across files,
-          just a re-cluster). On MOR the unit is the PARTITION: pin ALL
-          live files of every partition that has a delta file or ≥2
-          small base files. Partition granularity is a CORRECTNESS
-          boundary, not a heuristic: the fold drops merged-away
-          tombstones, which is only sound if no OLDER row for a
-          tombstoned key survives outside the pinned set — under the
-          per-partition index a key lives entirely inside its
-          partition, so pinning whole partitions preserves the
-          invariant. A global-index MOR table (keys move between
-          partitions) therefore refuses ``small_files`` with a
-          ``ValueError`` — use ``full``.
-
-        ``sort_spec`` pins CLUSTERING intent in the plan (r7 verdict
-        #5 — Hudi's async *clustering* through the same schedule/run
-        split as compaction): a JSON-declarative list of column names
-        and/or ``{"zorder": {"cols": [...], "bits": ..., "ranges":
-        [[lo, hi], ...]}}`` dicts, validated and serialized at schedule
-        time and materialized into the range-partitioned rewrite by
-        whichever executor (``run_compaction`` caller or an
-        ``AsyncCompactor`` daemon) later runs the plan — lock-free,
-        exactly like an unclustered fold. ``target_files_per_partition``
-        pins the output-file fan-out the same way.
-
-        Returns the plan id, or None when the strategy selects nothing.
+        ``sort_spec`` pins clustering intent in the plan: a JSON list of
+        column names and/or ``{"zorder": {"cols": [...], "bits": ...,
+        "ranges": [[lo, hi], ...] | "auto"}}`` dicts, validated here and
+        materialized by whichever executor runs the plan;
+        ``target_files_per_partition`` pins the output fan-out the same
+        way. Returns the plan id, or None when the strategy selects
+        nothing.
         """
         if strategy not in ("full", "small_files"):
             raise ValueError(f"unknown compaction strategy: {strategy}")
@@ -3094,10 +3033,11 @@ class LakeTable(FilePlanner):
                 "table (a tombstoned key's older row may live in an "
                 "unpinned partition); use strategy='full'"
             )
-        if not self.exists():
-            return None
         with self._writer_lock():
-            live = self.tl.live_files()
+            tl = self.tl.instants()
+            if not tl:
+                return None
+            live = self.tl.live_files(tl[-1], tl)
             if strategy == "small_files":
                 # the selection itself guarantees worthwhile work: a
                 # delta to fold, or ≥2 small files to squash
@@ -3109,10 +3049,10 @@ class LakeTable(FilePlanner):
                     return None
             elif len(live) <= 1:
                 return None
-            pid = plan_id or self.tl.next_instant(None)
+            pid = plan_id or self.tl.next_instant(None, tl)
             plan = {
                 "plan_id": pid,
-                "scheduled_after": self.last_instant(),
+                "scheduled_after": tl[-1],
                 "strategy": strategy,
                 "files": sorted(f["path"] for f in live),
             }
@@ -3170,46 +3110,30 @@ class LakeTable(FilePlanner):
         plan's pinned files into fresh base files; delta files committed
         AFTER the schedule are untouched and keep merging on top at read.
 
-        Plan-carried clustering (r7 verdict #5): when the caller leaves
-        ``sort_by`` / ``target_files_per_partition`` unset, the plan's
-        pinned ``sort_spec`` / ``target_files`` (from
-        ``schedule_compaction``) drive the fold — so an
-        ``AsyncCompactor`` daemon executes scheduled CLUSTERING
-        (z-order rewrite) lock-free with no per-plan arguments, and the
-        clustering intent survives process boundaries. Explicit
-        arguments override the plan.
+        When the caller leaves ``sort_by`` /
+        ``target_files_per_partition`` unset, the plan's pinned
+        ``sort_spec`` / ``target_files`` drive the fold, so an
+        ``AsyncCompactor`` runs scheduled clustering with no arguments.
 
-        Correctness of the partial fold: the per-key merge is a max over
+        The partial fold is exact: the per-key merge is a max over
         ``(precombine, _commit_time)``, so folding the pinned subset
-        first and merging later deltas at read gives the same winner as
-        the one-shot merge; and a pinned tombstone can be dropped after
-        the fold because every post-schedule row carries a strictly
-        newer ``_commit_time`` than it (commit instants are monotonic).
+        first and merging later deltas at read picks the same winner,
+        and a pinned tombstone can go because every post-schedule row
+        has a newer ``_commit_time``. The commit lands at the NEXT
+        instant (Hudi reserves the scheduled one); rows keep their
+        ``_commit_time``, so incremental reads stay exact. Returns the
+        committed instant, or None when the plan is stale (a pinned
+        file was replaced; the plan is discarded).
 
-        The commit lands at the NEXT instant (unlike Hudi, which
-        reserves the scheduled instant) — incremental reads stay exact
-        either way because rows keep their original ``_commit_time``.
-        Returns the committed instant, or None when the plan is stale
-        (a pinned file was already replaced — e.g. an inline compaction
-        ran in between; the plan is discarded, as only the file set it
-        pinned could make the partial fold safe).
-
-        Concurrency (r6 verdict #1): the HEAVY fold — the same
-        :meth:`_fold` :meth:`compact` runs, over the pinned files —
-        holds NO table lock, like ``write_optimistic``'s compute step
-        (an inflight marker keeps the cleaner off the half-written
-        files). The lock is taken only for a short publish through the
-        step ``write_optimistic`` uses (:meth:`_survive_or_orphan`):
-        re-verify the plan file still exists, its pinned files are all
-        still live and the fold's output was not reaped, rename the
-        provisional data dir to the final instant, and write the
-        manifest. Concurrent APPENDS (streaming ingest, MOR
-        deltas, optimistic inserts) therefore never wait on a large fold
-        and never invalidate it — only a commit that REPLACED a pinned
-        file does, in which case the fold's output is abandoned to the
-        lazy cleaner and the plan discarded (a mid-fold replacement can
-        also surface as a read error inside the Spark job: same
-        situation one step earlier — the plan was doomed either way).
+        Concurrency: the fold (:meth:`_fold`, over the pinned files of
+        the first listing) holds NO lock; an inflight marker keeps the
+        cleaner off its files. The publish, under the lock with a
+        second listing, re-verifies through :meth:`_survive_or_orphan`
+        that the plan file exists, its pinned files are live and the
+        output was not reaped, renames the provisional data dir to the
+        final instant and writes the manifest. Concurrent appends never
+        wait on a fold or invalidate it; a commit that REPLACED a pinned
+        file abandons the output to the cleaner and discards the plan.
         """
         if plan_id is None:
             pending = self.pending_compactions()
@@ -3226,7 +3150,9 @@ class LakeTable(FilePlanner):
             sort_by = self._sort_by_from_spec(plan["sort_spec"])
         if target_files_per_partition is None:
             target_files_per_partition = int(plan.get("target_files", 1))
-        live_by_path = {f["path"]: f for f in self.tl.live_files()}
+        tl = self.tl.instants()
+        head = newest(tl)
+        live_by_path = {f["path"]: f for f in self.tl.live_files(head, tl)}
         pinned_paths = set(plan["files"])
         if not pinned_paths <= set(live_by_path):
             self.tl.discard_plan(plan_id)  # a pinned file was replaced
@@ -3238,21 +3164,23 @@ class LakeTable(FilePlanner):
         # the PUBLISHED instant is allocated later, under the lock, and
         # the dir renamed to it so path-derived instants (bloom sidecar
         # lookup, cleaner pruning) stay consistent
-        prov = self.tl.next_instant(None) + "c" + uuid.uuid4().hex[:4]
+        prov = self.tl.next_instant(None, tl) + "c" + uuid.uuid4().hex[:4]
         self.tl.mark_inflight(prov)
         try:
             # ---- fold: NO LOCK HELD (the expensive part — at 100 TB
             # this is a full rewrite of the pinned file set)
             added = self._fold(
-                pinned, prov, target_files_per_partition, sort_by
+                pinned, prov, target_files_per_partition, sort_by,
+                self._stored_schema(head),
             )
 
-            def plan_holds() -> None:
+            def plan_holds(now: list[str]) -> None:
                 if self.tl.read_plan(plan_id) is None:
                     raise ConcurrentWriteConflict(
                         f"compaction plan {plan_id} run by another executor"
                     )
-                if not pinned_paths <= {f["path"] for f in self.tl.live_files()}:
+                live = self.tl.live_files(newest(now), now)
+                if not pinned_paths <= {f["path"] for f in live}:
                     self.tl.discard_plan(plan_id)
                     raise ConcurrentWriteConflict(
                         f"compaction plan {plan_id} went stale during the fold"
@@ -3262,18 +3190,20 @@ class LakeTable(FilePlanner):
             # the output; a reaped output (the fold out-lived its
             # inflight TTL) keeps the plan for a retry
             with self._writer_lock():
+                now = self.tl.instants()
                 try:
-                    self._survive_or_orphan(added, plan_holds)
+                    self._survive_or_orphan(added, lambda: plan_holds(now))
                 except ConcurrentWriteConflict:
                     return None
-                inst = self.tl.next_instant(None)
+                inst = self.tl.next_instant(None, now)
                 added = self._relocate_fold(prov, inst, added)
                 self._write_manifest(
                     inst,
                     "compact",
-                    self._stored_schema(),
+                    self._stored_schema(newest(now)),
                     added,
                     sorted(pinned_paths),
+                    now,
                 )
                 self.tl.discard_plan(plan_id)
                 return inst
@@ -3318,7 +3248,7 @@ class LakeTable(FilePlanner):
         last ``retain_commits`` — the reference's cleaner policy
         (``CLEANER_COMMITS_RETAINED=2``, ``SRC/package.scala:28-30``).
         Also removes orphan files from crashed writes. Returns deleted
-        relative paths.
+        relative paths. ``retain_commits`` must be at least 1.
 
         Takes the writer lock: a SERIALIZED in-flight write's data files
         exist before its manifest does and would otherwise look like
@@ -3330,22 +3260,27 @@ class LakeTable(FilePlanner):
         — the marker is removed and the files reclaimed (any such writer
         still alive aborts at publish via the added-files existence
         check, never publishing a manifest to deleted data)."""
-        if not self.timeline():
-            return []
+        if retain_commits < 1:
+            raise ValueError(
+                f"retain_commits must be >= 1, got {retain_commits}"
+            )
         with self._writer_lock():
             # the timeline is read under the lock: a lock-free writer
             # that published while we waited has cleared its inflight
             # marker, so only its manifest still protects its files
-            return self._clean_locked(self.timeline(), retain_commits)
+            tl = self.tl.instants()
+            if not tl:
+                return []
+            return self._clean_locked(tl, retain_commits)
 
     def _clean_locked(self, tl: list[str], retain_commits: int) -> list[str]:
         keep = set()
         for inst in tl[-retain_commits:]:
-            keep |= {f["path"] for f in self.tl.live_files(inst)}
+            keep |= {f["path"] for f in self.tl.live_files(inst, tl)}
         # savepointed instants pin their whole live set regardless of
         # the retention horizon (Hudi savepoint semantics)
         for sp in self.savepoints():
-            keep |= {f["path"] for f in self.tl.live_files(sp)}
+            keep |= {f["path"] for f in self.tl.live_files(sp, tl)}
         inflight, stale_inflight = self.tl.inflight_split()
         for inst in stale_inflight:
             self.tl.clear_inflight(inst)  # crashed writer: files now fair game

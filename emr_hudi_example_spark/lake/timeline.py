@@ -35,6 +35,14 @@ Design notes (100 TB):
   (:meth:`Timeline.publish`); a crashed write leaves invisible orphan
   data files that the cleaner removes. Every JSON file here is written
   the same way (:func:`write_json`), so a reader never sees a torn one.
+- *One listing per op; helpers take the head.* Each ``LakeTable`` op
+  lists the log once (:meth:`Timeline.instants`, after acquiring the
+  writer lock when it takes one) and passes that listing, or its head
+  (:func:`newest`), to every helper — ``next_instant``, ``live_files``,
+  ``publish``, ``check_conflicts`` and ``last_checkpoint_entry`` take it
+  as an argument. So the live set, schema, partition stats, conflict
+  base and next instant of an op describe one table state. The listing
+  is never state on the Timeline: one handle may serve two threads.
 """
 
 from __future__ import annotations
@@ -72,6 +80,12 @@ def json_stems(d: str) -> list[str]:
     return sorted(
         f[: -len(".json")] for f in os.listdir(d) if f.endswith(".json")
     )
+
+
+def newest(tl: list[str]) -> str | None:
+    """The head of listing ``tl``: its newest instant, None when the
+    table has no commit."""
+    return tl[-1] if tl else None
 
 
 def write_json(path: str, obj, check=None) -> None:
@@ -181,20 +195,16 @@ class Timeline:
     def archived(self) -> list[str]:
         return json_stems(self.archived_dir)
 
-    def all_instants(self) -> list[str]:
-        """Archived + active instants, ascending (archival moves a
-        prefix)."""
-        return self.archived() + self.instants()
-
     def checkpoints(self) -> list[str]:
         """Instants with a full live-file checkpoint, ascending."""
         return json_stems(self.ckpt_dir)
 
-    def next_instant(self, requested: str | None) -> str:
-        """Monotone instant allocation; explicit instants (tests,
-        deterministic replays) must still advance the timeline."""
+    def next_instant(self, requested: str | None, tl: list[str]) -> str:
+        """Monotone instant allocation after the head of listing
+        ``tl``; explicit instants (tests, deterministic replays) must
+        still advance the timeline."""
         inst = requested or now_instant()
-        last = self.last()
+        last = newest(tl)
         if last is not None and inst <= last:
             if requested is not None:
                 raise ValueError(
@@ -290,19 +300,29 @@ class Timeline:
             with open(os.path.join(self.archived_dir, instant + ".json")) as fh:
                 return json.load(fh)
 
-    def live_files(self, instant: str | None = None) -> list[dict]:
-        """Live file records as of ``instant`` (default: the newest
-        commit; [] on an empty table): the newest full checkpoint ≤
-        instant (or the session cache when newer) plus a forward replay
-        of the manifest deltas after it. Legacy manifests that embed a
-        full ``live_files`` list act as materialized points too. The
-        records are shared with the manifest cache: read-only."""
+    def live_files(
+        self, instant: str | None = None, tl: list[str] | None = None
+    ) -> list[dict]:
+        """Live file records as of ``instant``: the newest full
+        checkpoint ≤ instant (or the session cache when newer) plus a
+        forward replay of the manifest deltas after it. Legacy manifests
+        that embed a full ``live_files`` list act as materialized points
+        too. The records are shared with the manifest cache: read-only.
+
+        ``tl`` is the caller's listing, which holds ``instant``; the
+        replay walks it instead of listing again (without one, this
+        lists). ``instant`` defaults to the newest commit; [] on a table
+        with none. The session cache rolls forward to the newest
+        instant asked for."""
+        if tl is None:
+            tl = self.instants()
         if instant is None:
-            instant = self.last()
+            instant = newest(tl)
             if instant is None:
                 return []
-        if self._live is not None and self._live[0] == instant:
-            return self._live[1]
+        cached = self._live
+        if cached is not None and cached[0] == instant:
+            return cached[1]
         target = self.manifest_any(instant)
         if "live_files" in target:  # legacy full-list manifest: direct
             # copy: the manifest dict is cache-backed and immutable
@@ -315,12 +335,19 @@ class Timeline:
             with open(os.path.join(self.ckpt_dir, start + ".json")) as fh:
                 live = json.load(fh)["live_files"]
         if (
-            self._live is not None
-            and self._live[0] <= instant
-            and (start is None or self._live[0] > start)
+            cached is not None
+            and cached[0] <= instant
+            and (start is None or cached[0] > start)
         ):
-            start, live = self._live[0], list(self._live[1])
-        for i in self.all_instants():
+            start, live = cached[0], list(cached[1])
+        # archival moves a prefix: a replay from inside the active
+        # window never needs the archived manifests
+        history = (
+            tl
+            if tl and start is not None and start >= tl[0]
+            else self.archived() + tl
+        )
+        for i in history:
             if (start is not None and i <= start) or i > instant:
                 continue
             m = self.manifest_any(i)
@@ -329,16 +356,18 @@ class Timeline:
                 continue
             replaced = set(m["replaced"])
             live = [f for f in live if f["path"] not in replaced] + m["added"]
-        if instant == self.last():
+        if cached is None or cached[0] <= instant:
             self._live = (instant, live)
         return live
 
-    def last_checkpoint_entry(self, source_id: str) -> dict | None:
+    def last_checkpoint_entry(
+        self, source_id: str, tl: list[str]
+    ) -> dict | None:
         """Newest committed streaming checkpoint dict for
-        ``source_id``, scanning back through the archived manifests
-        too: losing sight of an archived one would silently re-apply a
-        replayed batch."""
-        for i in reversed(self.all_instants()):
+        ``source_id`` in listing ``tl``, scanning back through the
+        archived manifests too: losing sight of an archived one would
+        silently re-apply a replayed batch."""
+        for i in reversed(self.archived() + tl):
             cp = self.manifest_any(i).get("checkpoint")
             if cp and cp.get("source_id") == source_id:
                 return cp
@@ -353,6 +382,7 @@ class Timeline:
         schema: dict,
         added: list[dict],
         replaced: list[str],
+        tl: list[str],
         checkpoint: dict | None = None,
     ) -> None:
         """Writing the manifest IS the commit (writer lock held). The
@@ -360,11 +390,10 @@ class Timeline:
         the streaming ``checkpoint`` the write carries (data and cursor
         commit atomically, as Hudi keeps checkpoints in commit
         metadata) and any stream offsets the listener armed; the live
-        set rolls forward in the session cache and is checkpointed
-        every ``MANIFEST_CHECKPOINT_INTERVAL`` commits."""
-        # roll the live set forward while last() still names the
-        # previous commit
-        prev = self.live_files()
+        set rolls forward from the head of ``tl``, the listing taken
+        under the lock, in the session cache and is checkpointed every
+        ``MANIFEST_CHECKPOINT_INTERVAL`` commits."""
+        prev = self.live_files(newest(tl), tl)
         replaced_set = set(replaced)
         live = [f for f in prev if f["path"] not in replaced_set] + added
         manifest = {
@@ -412,10 +441,9 @@ class Timeline:
             raise
         self._live = (instant, live)
         if MANIFEST_CHECKPOINT_INTERVAL:
-            newest = (self.checkpoints() or [None])[-1]
-            n_since = len(
-                [i for i in self.instants() if newest is None or i > newest]
-            )
+            ckpt = (self.checkpoints() or [None])[-1]
+            # this commit plus the listed ones after the checkpoint
+            n_since = 1 + sum(1 for i in tl if ckpt is None or i > ckpt)
             if n_since >= MANIFEST_CHECKPOINT_INTERVAL:
                 self._write_checkpoint(instant, live)
 
@@ -451,19 +479,20 @@ class Timeline:
         added: list[dict],
         replaced: list[str],
         check_keys: bool,
+        tl: list[str],
     ) -> None:
         """Raise :class:`ConcurrentWriteConflict` unless publishing a
-        commit computed at snapshot ``base`` is equivalent to SOME
-        serial order (``LakeTable.write_optimistic`` states the rules).
-        ``check_keys`` asks for the added-vs-added key-overlap proof
-        that key-unique COW ops need.
+        commit computed at snapshot ``base`` after the commits of
+        listing ``tl`` (taken under the writer lock) is equivalent to
+        SOME serial order (``LakeTable.write_optimistic`` states the
+        rules). ``check_keys`` asks for the added-vs-added key-overlap
+        proof that key-unique COW ops need.
 
         Cost: one SUMMARY lookup per commit since base — per-partition
         envelopes are compared first, and only (commit, partition)
         pairs whose envelopes intersect descend to the exact per-file
         proof. Disjoint envelopes imply no file pair can overlap, so
         the pruning is exact."""
-        tl = self.instants()
         if tl and tl[-1] >= inst:
             raise ConcurrentWriteConflict(
                 f"instant order: published {tl[-1]!r} >= planned {inst!r}"
@@ -631,7 +660,7 @@ class Timeline:
     # --------------------------------------------------------- savepoints
 
     def savepoint(self, instant: str) -> None:
-        if instant not in self.all_instants():
+        if instant not in self.archived() + self.instants():
             raise ValueError(f"unknown instant {instant!r}")
         write_json(
             os.path.join(self.savepoint_dir, instant + ".json"),
@@ -694,7 +723,9 @@ class Timeline:
     def archive(self, keep_commits: int) -> list[str]:
         """Move manifests older than the last ``keep_commits`` into
         ``_archived/``, stopping at the earliest savepoint. Returns the
-        archived instants."""
+        archived instants. ``keep_commits`` must be at least 1."""
+        if keep_commits < 1:
+            raise ValueError(f"keep_commits must be >= 1, got {keep_commits}")
         tl = self.instants()
         to_archive = tl[:-keep_commits] if len(tl) > keep_commits else []
         sps = self.savepoints()
@@ -708,7 +739,7 @@ class Timeline:
         # manifest_any fallback still covers a lost checkpoint)
         horizon = to_archive[-1]
         if not any(c >= horizon for c in self.checkpoints()):
-            self._write_checkpoint(horizon, self.live_files(horizon))
+            self._write_checkpoint(horizon, self.live_files(horizon, tl))
         os.makedirs(self.archived_dir, exist_ok=True)
         for inst in to_archive:
             os.replace(
@@ -737,7 +768,7 @@ class Timeline:
             if i <= instant
             for f in self.manifest(i)["added"]
         }
-        keep_files |= {f["path"] for f in self.live_files(instant)}
+        keep_files |= {f["path"] for f in self.live_files(instant, tl)}
         for i in self.archived():
             keep_files |= {f["path"] for f in self.manifest_any(i)["added"]}
         for i in doomed:

@@ -119,7 +119,7 @@ def run_dwd2dm_loop(
     while max_ticks is None or ticks < max_ticks:
         if interval_seconds:
             _time.sleep(interval_seconds)
-        end = dwd.last_instant() if dwd.exists() else None
+        end = dwd.last_instant()
         if end is None or (begin is not None and end <= begin):
             ticks += 1  # nothing published since the cursor — idle
             continue

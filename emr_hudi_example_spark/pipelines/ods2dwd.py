@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from emr_hudi_example_spark.functions.core import created_ts_expr, now_instant, nvl
+from emr_hudi_example_spark.functions.core import created_ts_expr
 from emr_hudi_example_spark.lake import COMMIT_TIME_COL, LakeTable
 from emr_hudi_example_spark.operators.relational import dim_enrich_left_join
 
@@ -35,8 +35,6 @@ def init_cursor(table: LakeTable) -> str | None:
     next incremental read return the identical slice. At scale this
     replaces a full snapshot scan per restart with one directory
     listing."""
-    if not table.exists():
-        return None
     return table.last_instant()
 
 
@@ -75,7 +73,8 @@ def dwd_increment(
     aborts on instant-order violation), so the slice (begin, end] is
     final the moment it is read.
     """
-    if not ods.exists():  # cold start: source not yet seeded — idle tick
+    head = ods.last_instant()
+    if head is None:  # cold start: source not yet seeded — idle tick
         # Return ``begin`` UNCHANGED (possibly None) rather than seeding
         # the cursor from the wall clock (r14 review): a first creating
         # commit allocates its instant before publishing, so a
@@ -85,7 +84,7 @@ def dwd_increment(
         # default closes. The cursor stays unset until the source
         # actually publishes.
         return begin
-    end = end or ods.last_instant() or now_instant()
+    end = end or head
     if begin is not None and end <= begin:
         return begin  # nothing published since the cursor — idle tick
     inc = ods.incremental(begin, end)
@@ -189,7 +188,7 @@ def run_ods2dwd_streaming(
     from emr_hudi_example_spark.streaming.sources import start_foreach_batch
 
     query_name = "ODS2DWDStream"
-    cp = dwd.last_checkpoint_entry(query_name) if dwd.exists() else None
+    cp = dwd.last_checkpoint_entry(query_name)
     state = {"cur": (cp or {}).get("cursor") or init_cursor(dwd)}
     defaults = enrich_cols or {}
 

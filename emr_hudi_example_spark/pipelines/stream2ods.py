@@ -30,7 +30,7 @@ def target_schema(table: LakeTable):
     from emr_hudi_example_spark.lake.table import DELETED_COL, META_COLS
 
     drop = set(META_COLS) | {DELETED_COL, "created_ts"}
-    schema = table._stored_schema()
+    schema = table._stored_schema(table.last_instant())
     return type(schema)([f for f in schema.fields if f.name not in drop])
 
 

@@ -116,7 +116,7 @@ def _ours(kind: str) -> list[dict]:
 def check(t: Timeline, ours: list[dict]) -> None:
     """The upsert publish check of ``ours`` against every commit after
     the base snapshot ``000000``."""
-    t.check_conflicts("000000", "999999", ours, [], check_keys=True)
+    t.check_conflicts("000000", "999999", ours, [], True, t.instants())
 
 
 def _time_check(t: Timeline, ours: list[dict], runs: int = 5) -> float:

@@ -104,3 +104,25 @@ def count_jobs(spark, fn: Callable[[], Any]) -> tuple[int, Any]:
     j0 = newest()
     out = fn()
     return newest() - j0, out
+
+
+def count_listings(fn: Callable[[], Any]) -> tuple[int, Any]:
+    """``(commit-log listings fn() took, its result)``: the calls to
+    ``Timeline.instants``, which lists ``_commits/`` and re-reads the
+    lease fences. ``lake/timeline.py`` states the one-listing-per-op
+    rule these counts pin."""
+    from emr_hudi_example_spark.lake.timeline import Timeline
+
+    orig = Timeline.instants
+    n = [0]
+
+    def counted(self):
+        n[0] += 1
+        return orig(self)
+
+    Timeline.instants = counted
+    try:
+        out = fn()
+    finally:
+        Timeline.instants = orig
+    return n[0], out

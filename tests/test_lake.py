@@ -546,15 +546,15 @@ def test_align_schema_noop_returns_batch(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path), "d", "t", ["k"], "ver")
     t.write(spark.createDataFrame([("a", 1, 7)], "k string, ver long, v int"),
             op="insert", instant="001")
-    stored = t._stored_schema()
+    stored = t._stored_schema(t.last_instant())
     same = spark.createDataFrame([("b", 2, 8, "002", "b", "")], stored)
-    assert t._align_schema(same) is same
+    assert t._align_schema(same, t.timeline()) is same
     wide = same.withColumn("v", F.col("v").cast("long"))
-    aligned = t._align_schema(wide)
+    aligned = t._align_schema(wide, t.timeline())
     assert aligned is not wide
     assert dict(aligned.dtypes)["v"] == "bigint"
     missing = same.drop("v")
-    aligned = t._align_schema(missing)
+    aligned = t._align_schema(missing, t.timeline())
     assert dict(aligned.dtypes)["v"] == "int"
     assert aligned.columns == stored.fieldNames()
     assert aligned.collect()[0]["v"] is None
@@ -1934,14 +1934,14 @@ def test_publish_conflict_key_summaries(spark, tmp_path):
         "001", "zzz",
         [{"path": "x.parquet", "partition_path": pp,
           "key_min": above, "key_max": above + "9"}],
-        [], check_keys=True,
+        [], check_keys=True, tl=t4.timeline(),
     )
     with pytest.raises(ConcurrentWriteConflict, match="overlap"):
         t4.tl.check_conflicts(
             "001", "zzz",
             [{"path": "y.parquet", "partition_path": pp,
               "key_min": env[0], "key_max": env[1]}],
-            [], check_keys=True,
+            [], check_keys=True, tl=t4.timeline(),
         )
 
 
@@ -2348,7 +2348,7 @@ def test_manifest_checkpoint_bounds_replay(spark, tmp_path):
         replaced = (
             [f"data/{n - 1:03d}/part-0.parquet"] if n % 4 == 0 and n > 1 else []
         )
-        t._write_manifest(inst, "insert", schema, added, replaced)
+        t._write_manifest(inst, "insert", schema, added, replaced, t.timeline())
     assert t.tl.checkpoints(), "periodic checkpoints were never written"
 
     # fresh handle = cold cache, like a new session opening the table
@@ -4704,7 +4704,7 @@ def test_partition_stats_statless_file_vetoes_wholesale_prune(spark, tmp_path):
     assert t.last_scan.partitions_pruned == 0  # stat-less file vetoed it
     assert t.last_scan.dropped == 1  # the 001 file still dies per-file
     assert got.count() == 0
-    agg = t._partition_stats_at("002")["p=A"]
+    agg = t._partition_stats_at("002", t.timeline())["p=A"]
     assert "price" not in agg.get("col_stats", {})
 
 

@@ -76,7 +76,8 @@ def _compacted(t, inst):
     stored schema; those files' manifest entries without name and size)."""
     with open(os.path.join(t.tl.commits_dir, inst + ".json")) as fh:
         added = json.load(fh)["added"]
-    rows = sorted(map(repr, t._read_files([f["path"] for f in added]).collect()))
+    schema = t._stored_schema(t.last_instant())
+    rows = sorted(map(repr, t._read_files([f["path"] for f in added], schema).collect()))
     entries = [
         {k: v for k, v in f.items() if k not in ("path", "bytes")}
         for f in added

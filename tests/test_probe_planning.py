@@ -174,7 +174,7 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
 
     t._key_hit_files = spy
     jobs_fused, (affected, _old) = count_jobs(
-        spark, lambda: t._affected_files(batch)
+        spark, lambda: t._affected_files(batch, t.timeline())
     )
     # the fusion itself: the key range arrived pre-fused
     assert captured.get("minmax") is not None
@@ -187,7 +187,7 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
     # strictly fewer Spark jobs on the identical batch
     t._key_hit_files = lambda c, b, minmax=None: orig(c, b, minmax=None)
     jobs_unfused, (affected2, _old2) = count_jobs(
-        spark, lambda: t._affected_files(batch)
+        spark, lambda: t._affected_files(batch, t.timeline())
     )
     assert [f["path"] for f in affected2] == [f["path"] for f in affected]
     assert jobs_fused < jobs_unfused, (jobs_fused, jobs_unfused)
