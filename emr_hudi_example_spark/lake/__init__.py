@@ -24,6 +24,7 @@ from emr_hudi_example_spark.lake.table import (
     PARTITION_PATH_COL,
     RECORD_KEY_COL,
     LakeTable,
+    TableNotFound,
     reference_table_type,
 )
 
@@ -43,6 +44,7 @@ __all__ = [
     "ConcurrentWriteConflict",
     "LakeTable",
     "ScanReport",
+    "TableNotFound",
     "META_COLS",
     "COMMIT_TIME_COL",
     "RECORD_KEY_COL",

@@ -1,34 +1,47 @@
-"""One in-driver compaction fold: pyarrow reads, folds and writes.
+"""The in-driver kernel: pyarrow reads, merges and writes small files.
 
-The reference leaves MOR compaction to Hudi, which folds log files into
-base files inline (``SRC/util/HudiConfig.scala:21-23``). The engine's
-fold (:meth:`LakeTable._fold`, behind ``compact()``, inline MOR
-compaction and ``run_compaction``) is a Spark read, a ``max_by``
-aggregation and a Spark write: two jobs whose fixed cost dwarfs the
-work when the files are small. A medallion-sized compaction rewrites
-under 1 MB. So below the shared driver gate
+Two of the engine's rewrites are a few Spark jobs whose fixed cost
+dwarfs the work when the files are small, and this module serves both
+below the shared driver gate
 (:func:`~emr_hudi_example_spark.lake.index.driver_buildable`: local FS,
-at most 64 files, manifest bytes within ``driver_probe_max_bytes``) the
-fold runs here, with no Spark job, and writes one key-sorted base file
-whose rows, read back through Spark under the stored schema, equal the
-Spark route's:
+at most 64 files, manifest bytes within ``driver_probe_max_bytes`` and
+manifest rows within ``DRIVER_BUILD_MAX_ROWS``), with one shape
+predicate (:func:`serves`), one merge ranking (:func:`_winners`) and
+one writer (:func:`_write`). Each writes one key-sorted base file whose
+rows, read back through Spark under the stored schema, equal the Spark
+route's.
 
-- MOR: a data row committed at or before its key's newest tombstone is
-  dead; per key (:meth:`LakeTable._key_cols`) the max
-  ``(precombine, _commit_time)`` wins, a null precombine ranking lowest
-  and NaN highest (Spark's struct order); rows keep their
-  ``_commit_time`` and ``_deleted`` is written false. Exact ties (one
-  key, precombine and commit twice: an in-batch duplicate) are
-  unspecified on both routes; here the row read last wins.
-- COW: no dedup; insert duplicates survive, as on the Spark route.
+- **Compaction fold** (:func:`fold`, behind :meth:`LakeTable._fold`:
+  ``compact()``, inline MOR compaction and ``run_compaction``; the
+  reference leaves it to Hudi, ``SRC/util/HudiConfig.scala:21-23``).
+  MOR: a data row committed at or before its key's newest tombstone is
+  dead; per key (:meth:`LakeTable._key_cols`) the max ``(precombine,
+  _commit_time)`` wins; rows keep their ``_commit_time`` and
+  ``_deleted`` is written false. COW: no dedup; insert duplicates
+  survive, as on the Spark route. No Spark job.
+- **Copy-on-write keyed rewrite** (:func:`collect` and :func:`rewrite`,
+  behind :meth:`LakeTable._keyed_rewrite`: COW upsert, delete and the
+  COW leg of ``merge_into``; the reference's delta-merge into its mart,
+  ``SRC/DWD2DM.scala:54-85``). The batch and the delete keys are
+  collected once through Arrow, capped at ``DRIVER_BUILD_MAX_ROWS``;
+  the file planning takes the collected keys; rows of the affected files
+  whose key is deleted drop out, then per key the max ``(precombine,
+  _is_new)`` wins, as in :meth:`LakeTable._merge`. The collect is its
+  one Spark action.
+
+In both rankings a null precombine ranks lowest and NaN highest
+(Spark's struct order). Exact ties (one key and precombine twice on
+the same side: an in-batch or insert duplicate) are unspecified on
+both routes; here the row read last wins.
 
 Shapes it declines, so the Spark route runs: ``partial_update``,
-``sort_by`` or more than one output file, partition keys, a bucket
-index, adopted (absolute-path) files, and any stored column type
-outside :data:`_ARROW_TYPES` (plus decimals). Files are declined too
-when a column cannot be read as the stored type by one of Spark's own
-upcasts, or when a float ``stats_columns`` column of the result holds a
-NaN.
+partition keys, a bucket index, adopted (absolute-path) files, and any
+column type outside :data:`_ARROW_TYPES` (plus decimals); for the fold
+also ``sort_by`` or more than one output file, and for the rewrite a
+creating commit or a batch over the cap. Files are declined when a
+column cannot be read as the written type by one of Spark's own
+upcasts, and a result is declined when a float ``stats_columns`` column
+holds a NaN.
 """
 
 from __future__ import annotations
@@ -37,6 +50,7 @@ import json
 import os
 import shutil
 import uuid
+from dataclasses import dataclass
 from typing import TYPE_CHECKING
 
 import numpy as np
@@ -50,17 +64,22 @@ from emr_hudi_example_spark.lake.columns import (
     DELETED_COL,
     RECORD_KEY_COL,
 )
-from emr_hudi_example_spark.lake.index import driver_buildable
+from emr_hudi_example_spark.lake.index import (
+    DRIVER_BUILD_MAX_ROWS,
+    driver_buildable,
+)
 
 if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
+
     from emr_hudi_example_spark.lake.table import LakeTable
 
-#: stored column types the fold serves: each reads from a Spark-written
+#: stored column types the kernels serve: each reads from a Spark-written
 #: file and writes back so that Spark reads the same values under the
-#: stored schema. Timestamps are written as INT96, as Spark writes them
-#: (and so without footer stats, as Spark's); that is also why
-#: ``timestamp_ntz`` is left out: pyarrow's INT96 switch would take it
-#: too. Nanosecond timestamps never arise: INT96 reads in microseconds.
+#: stored schema. Timestamps are written as UTC-adjusted INT64 micros
+#: without footer stats (Spark's INT96 carries none); ``timestamp_ntz``
+#: is left out. Nanosecond timestamps never arise: INT96 reads in
+#: microseconds.
 _ARROW_TYPES = {
     T.BooleanType(): pa.bool_(),
     T.ByteType(): pa.int8(),
@@ -90,6 +109,28 @@ def _arrow_type(dt: T.DataType) -> pa.DataType | None:
     return _ARROW_TYPES.get(dt)
 
 
+def serves(
+    t: LakeTable, schema: T.StructType, files: list[dict] = ()
+) -> bool:
+    """The one shape predicate of both kernels: ``t``'s shape, the
+    ``schema`` the result is written under and ``files``, the files
+    read, are served here."""
+    return (
+        t.payload == "default"
+        and not t.partition_keys
+        and not t.bucket_index
+        and not any(os.path.isabs(f["path"]) for f in files)
+        and all(_arrow_type(f.dataType) is not None for f in schema.fields)
+        and driver_buildable(t, files)
+    )
+
+
+def _arrow_schema(schema: T.StructType) -> pa.Schema:
+    return pa.schema(
+        [(f.name, _arrow_type(f.dataType)) for f in schema.fields]
+    )
+
+
 def fold(
     t: LakeTable,
     files: list[dict],
@@ -102,29 +143,16 @@ def fold(
     one key-sorted base file under ``out_dir`` and return True; or
     return False, having written nothing, when the gate, the table's
     shape or a file's columns are not served here."""
-    if (
-        t.payload != "default"
-        or sort_by
-        or target_files_per_partition != 1
-        or t.partition_keys
-        or t.bucket_index
-        or any(os.path.isabs(f["path"]) for f in files)
-        or not driver_buildable(t, files)
+    if sort_by or target_files_per_partition != 1 or not serves(
+        t, schema, files
     ):
         return False
-    want = [_arrow_type(f.dataType) for f in schema.fields]
-    if any(w is None for w in want):
-        return False
-    tbl = _read(t, files, pa.schema(zip(schema.fieldNames(), want)))
+    tbl = _read(t, files, _arrow_schema(schema))
     if tbl is None:
         return False
     # the fold picks row indices; the rows are copied once, in key order
     rows = _fold_mor(tbl, t._key_cols(), t.precombine) if t.is_mor else None
-    keys = tbl.column(RECORD_KEY_COL)
-    if rows is not None:
-        keys = keys.take(rows)
-    order = pc.sort_indices(keys, null_placement="at_start").to_numpy()
-    out = tbl.take(order if rows is None else rows[order])
+    out = _key_sorted(tbl, rows)
     if t.is_mor:
         # the Spark route moves _deleted last (the merge drops it, the
         # fold appends it back)
@@ -132,18 +160,129 @@ def fold(
             pa.field(DELETED_COL, pa.bool_()),
             pa.array(np.zeros(out.num_rows, bool)),
         )
-    if any(
+    if _nan_in_stats(t, out):
+        return False
+    _write(t, out, schema, out_dir)
+    return True
+
+
+@dataclass(frozen=True)
+class Batch:
+    """A keyed rewrite's batch, collected: the upsert rows under the
+    written schema's types, the delete keys, and the distinct non-null
+    key tuples of both (the planner's ``pairs``)."""
+
+    upserts: pa.Table | None
+    deletes: pa.Table | None
+    pairs: list[tuple]
+
+
+def collect(
+    t: LakeTable,
+    schema: T.StructType,
+    upserts: DataFrame | None,
+    deletes: DataFrame | None,
+) -> Batch | None:
+    """Collect a keyed rewrite's batch when ``t``'s shape and the
+    written ``schema`` are served and each frame holds at most
+    ``DRIVER_BUILD_MAX_ROWS`` rows (``deletes``: its key columns only);
+    else None. One capped Arrow collect per frame."""
+    if not serves(t, schema):
+        return None
+    keys = t._key_cols()
+    up = dl = None
+    if upserts is not None and (up := _collected(upserts)) is None:
+        return None
+    if deletes is not None and (
+        dl := _collected(deletes.select(*keys))
+    ) is None:
+        return None
+    distinct = (
+        pa.concat_tables([f.select(keys) for f in (up, dl) if f is not None])
+        .group_by(keys)
+        .aggregate([])
+        .drop_null()
+    )
+    pairs = list(zip(*(distinct.column(k).to_pylist() for k in keys)))
+    return Batch(up, dl, pairs)
+
+
+def _collected(df: DataFrame) -> pa.Table | None:
+    """``df``'s rows under the Arrow types of its Spark schema, or None
+    when it holds more than ``DRIVER_BUILD_MAX_ROWS``."""
+    tbl = df.limit(DRIVER_BUILD_MAX_ROWS + 1).toArrow()
+    if tbl.num_rows > DRIVER_BUILD_MAX_ROWS:
+        return None
+    want = _arrow_schema(df.schema)
+    return pa.Table.from_arrays(
+        [c.cast(w.type) for c, w in zip(tbl.columns, want)], schema=want
+    )
+
+
+def rewrite(
+    t: LakeTable,
+    files: list[dict],
+    schema: T.StructType,
+    batch: Batch,
+    out_dir: str,
+) -> bool:
+    """The keyed rewrite of ``files``, the affected files, with the
+    collected ``batch``: write their rows with the deleted keys dropped
+    and the upserts merged in, as one key-sorted base file under
+    ``out_dir``, and return True; or return False, having written
+    nothing, when the gate, a file's columns or the result are not
+    served here."""
+    if not serves(t, schema, files):
+        return False
+    old = _read(t, files, _arrow_schema(schema))
+    if old is None:
+        return False
+    keys = t._key_cols()
+    if batch.deletes is not None and old.num_rows:
+        # the Spark route's left anti-join; in read order, so that an
+        # exact tie still keeps the row read last
+        live = (
+            old.select(keys)
+            .append_column("_i", pa.array(np.arange(old.num_rows)))
+            .join(batch.deletes, keys, join_type="left anti")
+        )
+        old = old.take(np.sort(live.column("_i").to_numpy()))
+    rows = None
+    if batch.upserts is not None:
+        old = pa.concat_tables([old, batch.upserts])
+        n_new = batch.upserts.num_rows
+        is_new = np.zeros(old.num_rows, np.int8)
+        is_new[old.num_rows - n_new:] = 1
+        rows = _winners(
+            old.select(keys), old.column(t.precombine), pa.array(is_new)
+        )
+    out = _key_sorted(old, rows)
+    if _nan_in_stats(t, out):
+        return False
+    _write(t, out, schema, out_dir)
+    return True
+
+
+def _key_sorted(tbl: pa.Table, rows: np.ndarray | None) -> pa.Table:
+    """Rows ``rows`` of ``tbl`` (None: all), copied once, in key order."""
+    keys = tbl.column(RECORD_KEY_COL)
+    if rows is not None:
+        keys = keys.take(rows)
+    order = pc.sort_indices(keys, null_placement="at_start").to_numpy()
+    return tbl.take(order if rows is None else rows[order])
+
+
+def _nan_in_stats(t: LakeTable, out: pa.Table) -> bool:
+    """A float ``stats_columns`` column of ``out`` holds a NaN:
+    parquet-mr counts NaN as the max; Arrow's footer stats skip it, and
+    a NaN-free max would let a predicate read prune a file whose NaN
+    rows match (NaN sorts above every number)."""
+    return any(
         pa.types.is_floating(out.schema.field(c).type)
         and pc.any(pc.is_nan(out.column(c))).as_py()
         for c in t.stats_columns
         if c in out.column_names
-    ):
-        # parquet-mr counts NaN as the max; Arrow's footer stats skip
-        # it, and a NaN-free max would let a predicate read prune a
-        # file whose NaN rows match (NaN sorts above every number)
-        return False
-    _write(t, out, schema, out_dir)
-    return True
+    )
 
 
 def _read(
@@ -176,6 +315,13 @@ def _read(
                         have.get_field_index(fld.name)
                     ).physical_type == "INT96"
                 )
+                if int96 and pf.metadata.created_by.startswith(
+                    "parquet-cpp-arrow"
+                ):
+                    # pyarrow writes a pre-1970 INT96 with a negative
+                    # nanos-of-day, which its own microsecond read
+                    # takes as unsigned (+584 years); Spark reads it
+                    return None
                 if not int96 and (col.type, fld.type) not in _UPCASTS:
                     return None
                 col = col.cast(fld.type)
@@ -212,31 +358,38 @@ def _fold_mor(tbl: pa.Table, keys: list[str], precombine: str) -> np.ndarray:
         )
         # in read order, so that an exact tie keeps the row read last
         rows = np.sort(hit.filter(live).column("_i").to_numpy())
-    # rank every row by (precombine, _commit_time); the sort places
-    # nulls and NaN together, so a validity column in front ranks null
-    # lowest and leaves NaN above +inf, as Spark's struct order does
-    pre = tbl.column(precombine).take(rows)
+    return rows[
+        _winners(
+            tbl.select(keys).take(rows),
+            tbl.column(precombine).take(rows),
+            tbl.column(COMMIT_TIME_COL).take(rows),
+        )
+    ]
+
+
+def _winners(
+    keys: pa.Table, pre: pa.ChunkedArray, tie: pa.Array
+) -> np.ndarray:
+    """The merge ranking of both kernels: per distinct row of ``keys``,
+    the index of its max ``(pre, tie)`` row. The sort places nulls and
+    NaN together, so a validity column in front ranks a null ``pre``
+    lowest and leaves NaN above +inf, as Spark's struct order does; of
+    exact ties the row with the higher index wins."""
     order = pc.sort_indices(
-        pa.table({
-            "v": pc.is_valid(pre),
-            "p": pre,
-            "c": tbl.column(COMMIT_TIME_COL).take(rows),
-        }),
+        pa.table({"v": pc.is_valid(pre), "p": pre, "c": tie}),
         [("v", "ascending"), ("p", "ascending"), ("c", "ascending")],
         null_placement="at_end",
     ).to_numpy()
-    rank = np.empty(len(rows), np.int64)
-    rank[order] = np.arange(len(rows))
+    rank = np.empty(len(order), np.int64)
+    rank[order] = np.arange(len(order))
     best = (
-        tbl.select(keys)
-        .take(rows)
-        .append_column("_rank", pa.array(rank))
-        .group_by(keys)
+        keys.append_column("_rank", pa.array(rank))
+        .group_by(keys.column_names)
         .aggregate([("_rank", "max")])
         .column("_rank_max")
         .to_numpy()
     )
-    return rows[order[best]]
+    return order[best]
 
 
 def _write(
@@ -247,7 +400,9 @@ def _write(
     parquet-mr falls back to plain encoding (a dictionary on every
     column made a compacted medallion file 21% larger), and a page
     index is written, as parquet-mr writes one. The Spark version key
-    makes Spark read INT96 and dates without calendar rebasing."""
+    makes Spark read timestamps and dates without calendar rebasing.
+    Timestamp columns get no footer stats, as Spark's INT96 ones have
+    none, so the manifest's ``col_stats`` equal the Spark route's."""
     n = tbl.num_rows
     dictionary = [
         c for c in tbl.column_names
@@ -273,7 +428,10 @@ def _write(
         compression="snappy",
         use_dictionary=dictionary,
         write_page_index=True,
-        use_deprecated_int96_timestamps=True,
+        write_statistics=[
+            c for c in tbl.column_names
+            if not pa.types.is_timestamp(tbl.schema.field(c).type)
+        ],
         store_schema=False,
     )
     os.replace(tmp, os.path.join(out_dir, name))

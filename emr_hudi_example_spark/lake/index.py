@@ -51,9 +51,13 @@ if TYPE_CHECKING:
 #: a point probe footer-plans the read and touches ~one row group of this
 #: size at any table scale (Hudi HFile-seek analog; see planned_probe_read)
 INDEX_ROW_GROUP_BYTES = 1 << 20
-#: the driver-side (pyarrow) build serves commits of at most this many
-#: files whose manifest-recorded bytes fit ``driver_probe_max_bytes``
+#: the driver-side (pyarrow) builds serve at most this many files, whose
+#: manifest-recorded bytes fit ``driver_probe_max_bytes`` and whose
+#: manifest-recorded rows sum to at most ``DRIVER_BUILD_MAX_ROWS``: the
+#: bytes are compressed, so only the rows bound what the decoded
+#: columns take in driver memory
 DRIVER_BUILD_MAX_FILES = 64
+DRIVER_BUILD_MAX_ROWS = 1 << 19
 #: prefix of the stage dirs the Spark build writes before moving its part
 #: files into the per-instant dirs
 STAGE_PREFIX = "_bf_stage-"
@@ -69,15 +73,20 @@ def creating_instant(path: str) -> str:
 
 
 def driver_buildable(table: "LakeTable", files: list[dict]) -> bool:
-    """Gate for driver-side (pyarrow) sidecar builds: local FS and a
-    point-sized commit (≤ ``DRIVER_BUILD_MAX_FILES`` files whose
-    manifest-recorded bytes sum under the driver probe budget)."""
+    """The one gate of the driver-side (pyarrow) builds, folds and
+    rewrites: local FS, a positive driver probe budget, and at most
+    ``DRIVER_BUILD_MAX_FILES`` files whose manifest-recorded bytes sum
+    within that budget and rows within ``DRIVER_BUILD_MAX_ROWS``. A file
+    without a recorded size or row count declines."""
     sizes = [f.get("bytes") for f in files]
+    rows = [f.get("rows") for f in files]
     return (
         table.driver_io_local
+        and table.driver_probe_max_bytes > 0
         and len(files) <= DRIVER_BUILD_MAX_FILES
-        and all(isinstance(s, int) for s in sizes)
+        and all(isinstance(s, int) for s in sizes + rows)
         and sum(sizes) <= table.driver_probe_max_bytes
+        and sum(rows) <= DRIVER_BUILD_MAX_ROWS
     )
 
 

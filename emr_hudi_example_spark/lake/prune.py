@@ -516,11 +516,16 @@ class FilePlanner:
     # ------------------------------------------------------ write planning
 
     def _affected_files(
-        self, batch: DataFrame, tl: list[str]
-    ) -> tuple[Kept, DataFrame]:
+        self,
+        batch: DataFrame,
+        tl: list[str],
+        pairs: list[tuple] | None = None,
+    ) -> Kept:
         """Files live at the head of listing ``tl`` that must be
-        rewritten for this batch (with the planning pass's
-        :class:`ScanReport`), plus their rows.
+        rewritten for this batch, with the planning pass's
+        :class:`ScanReport`. ``pairs``: the batch's distinct non-null
+        :meth:`_key_cols` tuples when the caller already collected them
+        (see :meth:`_key_hit_files`).
 
         Two-level pruning — the engine's bloom-index analog
         (``SRC/Log2Hudi.scala:78-79``):
@@ -559,15 +564,11 @@ class FilePlanner:
             # unpartitioned table (single "" partition) or global index
             candidates, pruned = live, ()
         hits = (
-            self._key_hit_files(candidates, batch, minmax=minmax)
+            self._key_hit_files(candidates, batch, minmax=minmax, pairs=pairs)
             if len(candidates) > 1
             else Kept(candidates, ScanReport(len(candidates)))
         )
-        report = ScanReport(len(live), pruned + hits.report.pruned)
-        rows = self._read_files(
-            [f["path"] for f in hits], self._stored_schema(head)
-        )
-        return Kept(hits, report), rows
+        return Kept(hits, ScanReport(len(live), pruned + hits.report.pruned))
 
     @staticmethod
     def _plan_has_node(plan, names: tuple[str, ...], cap: int = 512) -> bool:
@@ -636,11 +637,16 @@ class FilePlanner:
         candidates: list[dict],
         batch: DataFrame,
         minmax: tuple | None = None,
+        pairs: list[tuple] | None = None,
     ) -> Kept:
         """File targeting: range-prune candidates against the manifest's
         per-file key stats (driver-side, no I/O), then scan the
         survivors' key columns and keep files holding a batch key.
         Returns the hit files with the pass's :class:`ScanReport`.
+        ``pairs``, the batch's distinct non-null join pairs a caller
+        already collected, stand in for the capped collect below; more
+        than ``driver_probe_max_keys`` of them plan as a batch too large
+        to collect does, with their key range as ``minmax``.
 
         With ``bloom_index``, range-prune survivors are additionally
         probed against their per-file key blooms (lake/bloom.py) —
@@ -668,8 +674,11 @@ class FilePlanner:
         # original Spark jobs; the collect then cost one extra
         # partial-agg pass over the (persisted) batch. Null-key pairs
         # are dropped to match join semantics (null matches nothing).
-        pairs: list[tuple] | None = None
-        if self._point_probe_plausible(batch):
+        if pairs is not None and len(pairs) > self.driver_probe_max_keys:
+            # the Spark layers below, but the key range is in hand
+            minmax = min(p[-1] for p in pairs), max(p[-1] for p in pairs)
+            pairs = None
+        elif pairs is None and self._point_probe_plausible(batch):
             rows = (
                 batch.select(*join_cols)
                 .distinct()

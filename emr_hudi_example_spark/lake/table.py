@@ -99,6 +99,10 @@ _KEY_SCHEMA = T.StructType([T.StructField(RECORD_KEY_COL, T.StringType())])
 _PT_PREFIX = "__pt_"
 
 
+class TableNotFound(ValueError):
+    """A read or keyed op on a table with no commit."""
+
+
 def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """Schema-typed EMPTY DataFrame as a LOCAL relation: Catalyst's
     empty-relation propagation folds it, so downstream actions cost no
@@ -543,7 +547,7 @@ class LakeTable(FilePlanner):
         """The table schema as of ``head``, the op's listed head; a
         None head is a table with no commit."""
         if head is None:
-            raise ValueError(f"table {self.db}.{self.table} does not exist")
+            raise TableNotFound(f"table {self.db}.{self.table} does not exist")
         return T.StructType.fromJson(self.tl.manifest(head)["schema"])
 
     # ---------------------------------- externally-adopted file reads
@@ -1765,47 +1769,84 @@ class LakeTable(FilePlanner):
         A creating upsert has no files: it only dedups the batch.
         ``obs`` (see :meth:`_commit_upsert`) observes ``upserts`` and
         turns an empty batch into no commit.
+
+        On an existing table whose shape the in-driver kernel serves,
+        the frames are collected once (``lake/fold.py``: :func:`collect`),
+        the planning takes the collected keys, and files within the
+        shared driver gate are merged and written there
+        (:func:`rewrite`); the collected row count stands in for
+        ``obs``. Everything else takes the Spark route below.
         Returns ``(out, report)`` — see :meth:`_commit`."""
+        head = newest(tl)
+        schema = upserts.schema if upserts is not None else (
+            self._stored_schema(head)
+        )
+        local = None
+        if head is not None:
+            local = fold_mod.collect(self, schema, upserts, deletes)
         # M1 — persist around multi-action writes (SRC/package.scala:66,
         # 78): on an existing table the frames feed partition discovery,
         # the key-range agg, the key-hit scan AND the merge; only the
-        # creating commit evaluates them once. The row count observes
-        # the persisted frame, so every action reads through it.
-        head = newest(tl)
-        cached = [f for f in (upserts, deletes) if f is not None]
-        if not (head or self.partition_keys):
-            cached = []
+        # creating commit evaluates them once, and so does a collected
+        # batch whose keys the planner takes as they are (the merge is
+        # then its one Spark action, if any). The row count observes the
+        # persisted frame, so every action reads through it.
+        spark_plans = (
+            local is None or len(local.pairs) > self.driver_probe_max_keys
+        )
+        cached = [
+            f for f in (upserts, deletes)
+            if f is not None and spark_plans and (head or self.partition_keys)
+        ]
         for f in cached:
             f.persist()
         try:
-            if upserts is not None:
+            if local is None and upserts is not None:
                 upserts = self._observe_rows(upserts, obs)
             if head is None:
                 affected = Kept([], ScanReport())
-                rows = _empty_df(self.spark, upserts.schema)
             else:
                 keys = upserts if deletes is None else deletes
                 if upserts is not None and deletes is not None:
                     keys = upserts.unionByName(
                         deletes.select(*upserts.columns)
                     )
-                affected, rows = self._affected_files(keys, tl)
-            if deletes is not None:
-                cols = self._key_cols()
-                rows = rows.join(
-                    deletes.select(*cols).distinct(), cols, "left_anti"
+                affected = self._affected_files(
+                    keys, tl, None if local is None else local.pairs
                 )
-            if upserts is not None:
-                rows = self._merge(rows, upserts)
-            added = self._write_data_files(rows, inst)
+            if local is not None:
+                # the collect counted the batch: an empty one is no
+                # commit, and nothing is written for it
+                if obs is not None and not local.upserts.num_rows:
+                    return None, affected.report
+                obs = None
+            out_dir = os.path.join(self.data_dir, inst)
+            if local is not None and fold_mod.rewrite(
+                self, affected, schema, local, out_dir
+            ):
+                added = self._describe_data_files(out_dir, "base")
+            else:
+                rows = (
+                    self._read_files(
+                        [f["path"] for f in affected],
+                        self._stored_schema(head),
+                    )
+                    if head is not None
+                    else _empty_df(self.spark, upserts.schema)
+                )
+                if deletes is not None:
+                    cols = self._key_cols()
+                    rows = rows.join(
+                        deletes.select(*cols).distinct(), cols, "left_anti"
+                    )
+                if upserts is not None:
+                    rows = self._merge(rows, upserts)
+                added = self._write_data_files(rows, inst)
         finally:
             for f in cached:
                 f.unpersist()
         if self._discard_if_empty(obs, inst):
             return None, affected.report
-        schema = upserts.schema if upserts is not None else (
-            self._stored_schema(head)
-        )
         replaced = sorted({f["path"] for f in affected})
         return (action, schema, added, replaced), affected.report
 

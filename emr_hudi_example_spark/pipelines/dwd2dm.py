@@ -17,7 +17,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from emr_hudi_example_spark.functions.core import created_ts_expr
-from emr_hudi_example_spark.lake import LakeTable
+from emr_hudi_example_spark.lake import LakeTable, TableNotFound
+from emr_hudi_example_spark.lake.table import _empty_df
 from emr_hudi_example_spark.operators.relational import delta_merge_running_agg
 
 
@@ -56,20 +57,24 @@ def dm_increment(
     ``dm.write``, and an upsert into an existing mart publishes nothing
     for an empty slice (``LakeTable._commit_upsert`` counts the batch
     on the write's own jobs). An unseeded mart is created by the first
-    tick, empty slice or not: a creating commit always publishes."""
-    if not dwd.exists():  # cold start: source not yet seeded
+    tick, empty slice or not: a creating commit always publishes.
+
+    Each table's commit log is listed once per op: the slice read and
+    the mart snapshot raise :class:`TableNotFound` on a table with no
+    commit, which is the cold start (no source yet: nothing to do) and
+    the unseeded mart (no running sums yet)."""
+    try:
+        inc = dwd.incremental(begin, end)
+    except TableNotFound:  # cold start: source not yet seeded
         return None
-    inc = dwd.incremental(begin, end)
     inc_agg = inc.groupBy(*group_cols).agg(F.sum(value_col).alias(sum_alias))
-    if dm.exists():
+    try:
         snapshot = dm.logical().select(*group_cols, sum_alias)
-    else:
+    except TableNotFound:
         # unseeded mart: the increment IS the seed (fresh empty LOCAL
         # relation, not a derived one — a self-join would be ambiguous,
         # and createDataFrame([], schema) is a LogicalRDD that costs a
         # round of empty tasks per action)
-        from emr_hudi_example_spark.lake.table import _empty_df
-
         sel = inc_agg.select(*group_cols, sum_alias)
         snapshot = _empty_df(inc_agg.sparkSession, sel.schema)
     merged = delta_merge_running_agg(

@@ -12,13 +12,16 @@ the round-1 probe: the resulting clone clusters are a worst-case
 duplicate-heavy corpus and exercise the LSH skew caps for real.
 
 Usage: python scripts/scale_probe.py [--lake-only|--ext-only|--pipe-only|
---compact-only] [mult ...] (default mults: 1 5 25; ``--lake-only`` runs
-just the lake-kernel legs — point reads, index/sidecar builds, bucket
-MOR — for the deep 100× runs where the corpus operators would dominate
-wall-clock; ``--ext-only`` the dedup/ANN extension legs;
+--compact-only|--cow-upsert-only] [mult ...] (default mults: 1 5 25;
+``--lake-only`` runs just the lake-kernel legs — point reads,
+index/sidecar builds, bucket MOR — for the deep 100× runs where the
+corpus operators would dominate wall-clock; ``--ext-only`` the dedup/ANN extension legs;
 ``--pipe-only`` the streaming-state + medallion legs, r13;
 ``--compact-only`` the in-driver compaction fold against the Spark fold
-on a medallion-shaped ODS table, e.g. ``--compact-only 1 10 100``)
+on a medallion-shaped ODS table, e.g. ``--compact-only 1 10 100``;
+``--cow-upsert-only`` the in-driver copy-on-write upsert against the
+Spark rewrite on a mart-shaped table, e.g. ``--cow-upsert-only 1 10
+100``)
 Writes scaled parquet under /tmp/scale_probe/ and prints one JSON line
 per (multiplier, operator) plus a summary table; results are recorded
 in BASELINE.md.
@@ -733,6 +736,87 @@ def run_compact_probe(spark: SparkSession, mult: int) -> list[dict]:
     return recs
 
 
+def run_cow_upsert_probe(spark: SparkSession, mult: int) -> list[dict]:
+    """A copy-on-write upsert at ``mult``× a mart-shaped table (the
+    medallion DM: two string keys, a double sum and a long precombine,
+    written by one creating upsert; 1× = 20,000 rows) with a batch of a
+    tenth of that, half
+    updates and half new keys: the in-driver route (``lake/fold.py``,
+    its gate forced open, row cap included) against the Spark rewrite
+    (gate forced shut), min of 2 over fresh copies of one table. Each
+    record says whether the table and batch sit under the shared driver
+    gate and the collect cap, and gives the upsert's wall time and the
+    peak RSS growth of the Python driver and of the JVM during it."""
+    from emr_hudi_example_spark.lake import LakeTable
+    from emr_hudi_example_spark.lake import fold, index
+
+    n, b = 20_000 * mult, 2_000 * mult
+
+    def rows(lo: int, hi: int, ts: int) -> DataFrame:
+        return spark.range(lo, hi).select(
+            F.concat(F.lit("Brand#"), (F.col("id") / 3).cast("long"))
+            .cast("string").alias("p_brand"),
+            F.element_at(
+                F.array(F.lit("A"), F.lit("N"), F.lit("R")),
+                (F.col("id") % 3 + 1).cast("int"),
+            ).alias("l_returnflag"),
+            (F.col("id") * 1.25).alias("qty_sum"),
+            F.lit(ts).cast("long").alias("created_ts"),
+        )
+
+    def table(base: str) -> LakeTable:
+        return LakeTable(
+            spark, base, "bench", "dm", ["p_brand", "l_returnflag"],
+            "created_ts",
+        )
+
+    src = f"{WORK}/cow_upsert_x{mult}"
+    shutil.rmtree(src, ignore_errors=True)
+    dm = table(src)
+    dm.write(rows(0, n, 1), op="upsert")
+    files = dm.tl.live_files()
+    batch = rows(n - b // 2, n + b // 2, 2).cache()
+    batch.count()
+    pids = {
+        "py": os.getpid(),
+        "jvm": spark.sparkContext._jvm.ProcessHandle.current().pid(),
+    }
+    cap = index.DRIVER_BUILD_MAX_ROWS
+    recs = []
+    for route, gate, rows_cap in (
+        # the collect's limit() takes a Java int
+        ("kernel", 1 << 62, (1 << 31) - 2), ("spark", 0, cap),
+    ):
+        index.DRIVER_BUILD_MAX_ROWS = fold.DRIVER_BUILD_MAX_ROWS = rows_cap
+        best = None
+        try:
+            for _ in range(2):
+                dst = f"{WORK}/cow_upsert_x{mult}_{route}"
+                shutil.rmtree(dst, ignore_errors=True)
+                shutil.copytree(src, dst)
+                t = table(dst)
+                t.driver_probe_max_bytes = gate
+                with _PeakRss(pids) as rss:
+                    t0 = time.perf_counter()
+                    t.write(batch, op="upsert")
+                    wall = round(time.perf_counter() - t0, 3)
+                if best is None or wall < best[0]:
+                    best = (wall, rss.growth_mb)
+        finally:
+            index.DRIVER_BUILD_MAX_ROWS = fold.DRIVER_BUILD_MAX_ROWS = cap
+        rec = {
+            "op": f"cow_upsert_{route}", "mult": mult, "wall_sec": best[0],
+            "rows": t.snapshot().count(), "batch_rows": b,
+            "in_mb": round(sum(f["bytes"] for f in files) / 2**20, 2),
+            "under_gate": index.driver_buildable(dm, files) and b <= cap,
+            "rss_growth_mb": best[1],
+        }
+        print(json.dumps(rec), flush=True)
+        recs.append(rec)
+    batch.unpersist()
+    return recs
+
+
 def main() -> None:
     args = sys.argv[1:]
     lake_only = "--lake-only" in args
@@ -740,9 +824,10 @@ def main() -> None:
     pipe_only = "--pipe-only" in args
     ann_only = "--ann-only" in args
     compact_only = "--compact-only" in args
+    cow_upsert_only = "--cow-upsert-only" in args
     flags = (
         "--lake-only", "--ext-only", "--pipe-only", "--ann-only",
-        "--compact-only",
+        "--compact-only", "--cow-upsert-only",
     )
     mults = [int(a) for a in args if a not in flags] or [1, 5, 25]
     sys.path.insert(0, ROOT)
@@ -757,6 +842,8 @@ def main() -> None:
     for m in mults:
         if compact_only:
             all_recs.extend(run_compact_probe(spark, m))
+        elif cow_upsert_only:
+            all_recs.extend(run_cow_upsert_probe(spark, m))
         elif ann_only:
             all_recs.extend(run_ann_probe(spark, m))
         elif pipe_only:

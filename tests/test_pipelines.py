@@ -1275,11 +1275,13 @@ def test_medallion_tick_job_budget(spark, tmp_path):
     ``dwd_increment`` + ``dm_increment`` — on a small ODS (MOR) → DWD
     (MOR) → DM (COW) chain. The same tick took 18 jobs while the ticks
     guarded the write with ``persist`` → ``isEmpty`` and every MOR read
-    planned the tombstone join; it takes 10 now that the upsert counts
-    its own batch and upsert-only MOR reads merge without the join. A
-    compaction tick's ``ods.compact(); dwd.compact()`` folds in-driver
-    under the shared driver gate (``lake/fold.py``): 0 jobs, where the
-    Spark fold took 2 per table."""
+    planned the tombstone join, and 10 once the upsert counted its own
+    batch and upsert-only MOR reads merged without the join. It takes 8
+    now that the mart upsert merges and writes in-driver
+    (``lake/fold.py``): ``dm_increment`` is the batch collect alone, at
+    most 4 jobs, where the Spark rewrite took 6. A compaction tick's
+    ``ods.compact(); dwd.compact()`` folds in-driver under the same
+    gate: 0 jobs, where the Spark fold took 2 per table."""
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_quantity",
         "l_returnflag",
@@ -1312,14 +1314,17 @@ def test_medallion_tick_job_budget(spark, tmp_path):
         def tick():
             ods.write(sl(t), op="upsert")
             dwd_increment(ods, part, dwd, cur, created_ts_millis=t + 1)
-            return dm_increment(dwd, dm, dm_cur, dwd.last_instant(), *agg,
-                                created_ts_millis=t + 1)
+            end = dwd.last_instant()
+            return count_jobs(spark, lambda: dm_increment(
+                dwd, dm, dm_cur, end, *agg, created_ts_millis=t + 1
+            ))
 
-        jobs, inst = count_jobs(spark, tick)
+        jobs, (dm_jobs, inst) = count_jobs(spark, tick)
         assert inst is not None
         cur, dm_cur = ods.last_instant(), dwd.last_instant()
-        counts.append(jobs)
-    assert max(counts) <= 10, counts
+        counts.append((jobs, dm_jobs))
+    assert max(j for j, _ in counts) <= 8, counts
+    assert max(d for _, d in counts) <= 4, counts
     jobs, _ = count_jobs(spark, lambda: (ods.compact(), dwd.compact()))
     assert jobs == 0, jobs
     assert dwd.snapshot().count() == li.filter(

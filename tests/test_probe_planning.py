@@ -168,12 +168,12 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
     captured = {}
     orig = t._key_hit_files
 
-    def spy(c, b, minmax=None):
+    def spy(c, b, minmax=None, **kw):
         captured["minmax"] = minmax
-        return orig(c, b, minmax=minmax)
+        return orig(c, b, minmax=minmax, **kw)
 
     t._key_hit_files = spy
-    jobs_fused, (affected, _old) = count_jobs(
+    jobs_fused, affected = count_jobs(
         spark, lambda: t._affected_files(batch, t.timeline())
     )
     # the fusion itself: the key range arrived pre-fused
@@ -185,8 +185,10 @@ def test_affected_files_fused_planning_large_batch(spark, tmp_path):
     # (minmax dropped, _key_hit_files re-derives it with its own
     # batch-wide aggregation) and require the fused path to plan in
     # strictly fewer Spark jobs on the identical batch
-    t._key_hit_files = lambda c, b, minmax=None: orig(c, b, minmax=None)
-    jobs_unfused, (affected2, _old2) = count_jobs(
+    t._key_hit_files = lambda c, b, minmax=None, **kw: orig(
+        c, b, minmax=None, **kw
+    )
+    jobs_unfused, affected2 = count_jobs(
         spark, lambda: t._affected_files(batch, t.timeline())
     )
     assert [f["path"] for f in affected2] == [f["path"] for f in affected]
