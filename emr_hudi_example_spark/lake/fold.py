@@ -22,12 +22,16 @@ route's.
 - **Copy-on-write keyed rewrite** (:func:`collect` and :func:`rewrite`,
   behind :meth:`LakeTable._keyed_rewrite`: COW upsert, delete and the
   COW leg of ``merge_into``; the reference's delta-merge into its mart,
-  ``SRC/DWD2DM.scala:54-85``). The batch and the delete keys are
-  collected once through Arrow, capped at ``DRIVER_BUILD_MAX_ROWS``;
-  the file planning takes the collected keys; rows of the affected files
+  ``SRC/DWD2DM.scala:54-85``). When the head's live files pass the
+  gate and the batch's plan is not clearly huge, the batch and the
+  delete keys are collected once through Arrow, capped so that they
+  and the live files' rows stay within ``DRIVER_BUILD_MAX_ROWS``; the
+  file planning takes the collected keys; rows of the affected files
   whose key is deleted drop out, then per key the max ``(precombine,
   _is_new)`` wins, as in :meth:`LakeTable._merge`. The collect is its
-  one Spark action.
+  one Spark action. Once collected, the batch is those rows on either
+  route: a Spark route after a decline below plans and merges them
+  (:meth:`Batch.frames`).
 
 In both rankings a null precombine ranks lowest and NaN highest
 (Spark's struct order). Exact ties (one key and precombine twice on
@@ -38,10 +42,10 @@ Shapes it declines, so the Spark route runs: ``partial_update``,
 partition keys, a bucket index, adopted (absolute-path) files, and any
 column type outside :data:`_ARROW_TYPES` (plus decimals); for the fold
 also ``sort_by`` or more than one output file, and for the rewrite a
-creating commit or a batch over the cap. Files are declined when a
-column cannot be read as the written type by one of Spark's own
-upcasts, and a result is declined when a float ``stats_columns`` column
-holds a NaN.
+creating commit, live files over the gate or a batch over the cap.
+Files are declined when a column cannot be read as the written type by
+one of Spark's own upcasts, and a result is declined when a float
+``stats_columns`` column holds a NaN.
 """
 
 from __future__ import annotations
@@ -59,18 +63,15 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pa_pq
 from pyspark.sql import types as T
 
+from emr_hudi_example_spark.lake import index as index_mod
 from emr_hudi_example_spark.lake.columns import (
     COMMIT_TIME_COL,
     DELETED_COL,
     RECORD_KEY_COL,
 )
-from emr_hudi_example_spark.lake.index import (
-    DRIVER_BUILD_MAX_ROWS,
-    driver_buildable,
-)
 
 if TYPE_CHECKING:
-    from pyspark.sql import DataFrame
+    from pyspark.sql import DataFrame, SparkSession
 
     from emr_hudi_example_spark.lake.table import LakeTable
 
@@ -121,7 +122,7 @@ def serves(
         and not t.bucket_index
         and not any(os.path.isabs(f["path"]) for f in files)
         and all(_arrow_type(f.dataType) is not None for f in schema.fields)
-        and driver_buildable(t, files)
+        and index_mod.driver_buildable(t, files)
     )
 
 
@@ -176,25 +177,50 @@ class Batch:
     deletes: pa.Table | None
     pairs: list[tuple]
 
+    def frames(
+        self, spark: SparkSession, schema: T.StructType
+    ) -> tuple[DataFrame | None, DataFrame | None]:
+        """The collected rows as Spark frames (the upserts under
+        ``schema``), for the Spark layers after a collect: they plan and
+        merge the rows the collect saw, not a second read of a source
+        that need not agree with the first."""
+        return (
+            None if self.upserts is None
+            else spark.createDataFrame(self.upserts, schema),
+            None if self.deletes is None
+            else spark.createDataFrame(self.deletes),
+        )
+
 
 def collect(
     t: LakeTable,
     schema: T.StructType,
+    live: list[dict],
     upserts: DataFrame | None,
     deletes: DataFrame | None,
 ) -> Batch | None:
-    """Collect a keyed rewrite's batch when ``t``'s shape and the
-    written ``schema`` are served and each frame holds at most
-    ``DRIVER_BUILD_MAX_ROWS`` rows (``deletes``: its key columns only);
-    else None. One capped Arrow collect per frame."""
-    if not serves(t, schema):
+    """Collect a keyed rewrite's batch when ``t``'s shape, the written
+    ``schema`` and ``live``, the head's live files, are served (so the
+    gate cannot turn down any subset of them the planner picks), each
+    frame is plausibly point-sized by its plan's estimate
+    (:meth:`LakeTable._point_probe_plausible`), and the frames' rows
+    (``deletes``: its key columns only) with the live files' manifest
+    rows sum to at most ``DRIVER_BUILD_MAX_ROWS``, the rows the rewrite
+    may hold; else None. One capped Arrow collect per frame."""
+    frames = [f for f in (upserts, deletes) if f is not None]
+    if not serves(t, schema, live) or not all(
+        t._point_probe_plausible(f) for f in frames
+    ):
         return None
+    room = index_mod.DRIVER_BUILD_MAX_ROWS - sum(f["rows"] for f in live)
     keys = t._key_cols()
     up = dl = None
-    if upserts is not None and (up := _collected(upserts)) is None:
-        return None
+    if upserts is not None:
+        if (up := _collected(upserts, room)) is None:
+            return None
+        room -= up.num_rows
     if deletes is not None and (
-        dl := _collected(deletes.select(*keys))
+        dl := _collected(deletes.select(*keys), room)
     ) is None:
         return None
     distinct = (
@@ -207,11 +233,11 @@ def collect(
     return Batch(up, dl, pairs)
 
 
-def _collected(df: DataFrame) -> pa.Table | None:
+def _collected(df: DataFrame, cap: int) -> pa.Table | None:
     """``df``'s rows under the Arrow types of its Spark schema, or None
-    when it holds more than ``DRIVER_BUILD_MAX_ROWS``."""
-    tbl = df.limit(DRIVER_BUILD_MAX_ROWS + 1).toArrow()
-    if tbl.num_rows > DRIVER_BUILD_MAX_ROWS:
+    when it holds more than ``cap``."""
+    tbl = df.limit(cap + 1).toArrow()
+    if tbl.num_rows > cap:
         return None
     want = _arrow_schema(df.schema)
     return pa.Table.from_arrays(

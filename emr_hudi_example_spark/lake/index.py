@@ -55,9 +55,10 @@ INDEX_ROW_GROUP_BYTES = 1 << 20
 #: manifest-recorded bytes fit ``driver_probe_max_bytes`` and whose
 #: manifest-recorded rows sum to at most ``DRIVER_BUILD_MAX_ROWS``: the
 #: bytes are compressed, so only the rows bound what the decoded
-#: columns take in driver memory
+#: columns take in driver memory (the copy-on-write rewrite counts its
+#: collected batch against the same cap, ``fold.collect``)
 DRIVER_BUILD_MAX_FILES = 64
-DRIVER_BUILD_MAX_ROWS = 1 << 19
+DRIVER_BUILD_MAX_ROWS = 1 << 20
 #: prefix of the stage dirs the Spark build writes before moving its part
 #: files into the per-instant dirs
 STAGE_PREFIX = "_bf_stage-"

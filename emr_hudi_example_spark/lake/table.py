@@ -1770,12 +1770,15 @@ class LakeTable(FilePlanner):
         ``obs`` (see :meth:`_commit_upsert`) observes ``upserts`` and
         turns an empty batch into no commit.
 
-        On an existing table whose shape the in-driver kernel serves,
-        the frames are collected once (``lake/fold.py``: :func:`collect`),
-        the planning takes the collected keys, and files within the
-        shared driver gate are merged and written there
-        (:func:`rewrite`); the collected row count stands in for
-        ``obs``. Everything else takes the Spark route below.
+        On an existing table whose shape and live files the in-driver
+        kernel serves, the frames are collected once (``lake/fold.py``:
+        :func:`collect`), the planning takes the collected keys, and the
+        affected files are merged and written there (:func:`rewrite`);
+        the collected row count stands in for ``obs``. From the collect
+        on, the batch is the collected rows: the Spark layers that plan
+        a batch over ``driver_probe_max_keys`` and a Spark merge after
+        the kernel declines read them as frames, not the source again.
+        Everything else takes the Spark route below.
         Returns ``(out, report)`` — see :meth:`_commit`."""
         head = newest(tl)
         schema = upserts.schema if upserts is not None else (
@@ -1783,20 +1786,24 @@ class LakeTable(FilePlanner):
         )
         local = None
         if head is not None:
-            local = fold_mod.collect(self, schema, upserts, deletes)
-        # M1 — persist around multi-action writes (SRC/package.scala:66,
-        # 78): on an existing table the frames feed partition discovery,
-        # the key-range agg, the key-hit scan AND the merge; only the
-        # creating commit evaluates them once, and so does a collected
-        # batch whose keys the planner takes as they are (the merge is
-        # then its one Spark action, if any). The row count observes the
-        # persisted frame, so every action reads through it.
-        spark_plans = (
-            local is None or len(local.pairs) > self.driver_probe_max_keys
+            local = fold_mod.collect(
+                self, schema, self.tl.live_files(head, tl), upserts, deletes
+            )
+        # a collected batch the Spark layers plan: its rows as frames
+        local_frames = (
+            local is not None and len(local.pairs) > self.driver_probe_max_keys
         )
+        if local_frames:
+            upserts, deletes = local.frames(self.spark, schema)
+        # M1 — persist around multi-action writes (SRC/package.scala:66,
+        # 78): on an existing table the source frames feed partition
+        # discovery, the key-range agg, the key-hit scan AND the merge;
+        # only the creating commit evaluates them once. The row count
+        # observes the persisted frame, so every action reads through it.
         cached = [
             f for f in (upserts, deletes)
-            if f is not None and spark_plans and (head or self.partition_keys)
+            if f is not None and local is None
+            and (head or self.partition_keys)
         ]
         for f in cached:
             f.persist()
@@ -1808,8 +1815,9 @@ class LakeTable(FilePlanner):
             else:
                 keys = upserts if deletes is None else deletes
                 if upserts is not None and deletes is not None:
-                    keys = upserts.unionByName(
-                        deletes.select(*upserts.columns)
+                    kc = self._key_cols()
+                    keys = upserts.select(*kc).unionByName(
+                        deletes.select(*kc)
                     )
                 affected = self._affected_files(
                     keys, tl, None if local is None else local.pairs
@@ -1826,6 +1834,8 @@ class LakeTable(FilePlanner):
             ):
                 added = self._describe_data_files(out_dir, "base")
             else:
+                if local is not None and not local_frames:
+                    upserts, deletes = local.frames(self.spark, schema)
                 rows = (
                     self._read_files(
                         [f["path"] for f in affected],

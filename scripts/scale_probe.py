@@ -29,6 +29,7 @@ in BASELINE.md.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -669,12 +670,41 @@ class _PeakRss:
         }
 
 
+#: the routes the compaction and copy-on-write probes time, as
+#: ``(name, driver_probe_max_bytes, DRIVER_BUILD_MAX_ROWS)`` (None: the
+#: default): the in-driver kernel with the shared gate forced open, row
+#: cap included (the collect's ``limit()`` takes a Java int), the Spark
+#: route with it shut, and the defaults, which pick one of the two
+_ROUTES = (
+    ("kernel", 1 << 62, (1 << 31) - 2),
+    ("spark", 0, None),
+    ("default", None, None),
+)
+
+
+@contextlib.contextmanager
+def _gate(t, budget: int | None, rows_cap: int | None):
+    """Set ``t``'s driver byte budget and the shared row cap for one
+    timed run; the cap is put back after it."""
+    from emr_hudi_example_spark.lake import index
+
+    cap = index.DRIVER_BUILD_MAX_ROWS
+    if budget is not None:
+        t.driver_probe_max_bytes = budget
+    if rows_cap is not None:
+        index.DRIVER_BUILD_MAX_ROWS = rows_cap
+    try:
+        yield
+    finally:
+        index.DRIVER_BUILD_MAX_ROWS = cap
+
+
 def run_compact_probe(spark: SparkSession, mult: int) -> list[dict]:
     """The compaction fold at ``mult``× the medallion ODS table after
     10 ticks (1× = 6,000 first rows, then 1,900-2,100 rows a tick with
     a fifth re-emitted; two files a commit, as ``local[2]`` writes
-    them): the in-driver kernel (``lake/fold.py``, its gate forced
-    open) against the Spark fold (gate forced shut), min of 2 over
+    them) on each of :data:`_ROUTES` (the in-driver kernel,
+    ``lake/fold.py``; the Spark fold; the defaults), min of 2 over
     fresh copies of one table. Each record says whether the files sit
     under the shared driver gate (``index.driver_buildable``), and
     gives the fold's wall time and the peak RSS growth of the Python
@@ -710,15 +740,14 @@ def run_compact_probe(spark: SparkSession, mult: int) -> list[dict]:
         "jvm": spark.sparkContext._jvm.ProcessHandle.current().pid(),
     }
     recs = []
-    for route, gate in (("kernel", 1 << 62), ("spark", 0)):
+    for route, budget, rows_cap in _ROUTES:
         best = None
         for _ in range(2):
             dst = f"{WORK}/compact_x{mult}_{route}"
             shutil.rmtree(dst, ignore_errors=True)
             shutil.copytree(src, dst)
             t = table(dst)
-            t.driver_probe_max_bytes = gate
-            with _PeakRss(pids) as rss:
+            with _gate(t, budget, rows_cap), _PeakRss(pids) as rss:
                 t0 = time.perf_counter()
                 t.compact()
                 wall = round(time.perf_counter() - t0, 3)
@@ -740,15 +769,13 @@ def run_cow_upsert_probe(spark: SparkSession, mult: int) -> list[dict]:
     """A copy-on-write upsert at ``mult``× a mart-shaped table (the
     medallion DM: two string keys, a double sum and a long precombine,
     written by one creating upsert; 1× = 20,000 rows) with a batch of a
-    tenth of that, half
-    updates and half new keys: the in-driver route (``lake/fold.py``,
-    its gate forced open, row cap included) against the Spark rewrite
-    (gate forced shut), min of 2 over fresh copies of one table. Each
-    record says whether the table and batch sit under the shared driver
-    gate and the collect cap, and gives the upsert's wall time and the
+    tenth of that, half updates and half new keys) on each of
+    :data:`_ROUTES` (the in-driver route, ``lake/fold.py``; the Spark
+    rewrite; the defaults), min of 2 over fresh copies of one table. Each
+    record says whether the table sits under the shared driver gate and
+    its rows with the batch's under the row cap, and gives the upsert's wall time and the
     peak RSS growth of the Python driver and of the JVM during it."""
-    from emr_hudi_example_spark.lake import LakeTable
-    from emr_hudi_example_spark.lake import fold, index
+    from emr_hudi_example_spark.lake import LakeTable, index
 
     n, b = 20_000 * mult, 2_000 * mult
 
@@ -781,34 +808,28 @@ def run_cow_upsert_probe(spark: SparkSession, mult: int) -> list[dict]:
         "py": os.getpid(),
         "jvm": spark.sparkContext._jvm.ProcessHandle.current().pid(),
     }
-    cap = index.DRIVER_BUILD_MAX_ROWS
     recs = []
-    for route, gate, rows_cap in (
-        # the collect's limit() takes a Java int
-        ("kernel", 1 << 62, (1 << 31) - 2), ("spark", 0, cap),
-    ):
-        index.DRIVER_BUILD_MAX_ROWS = fold.DRIVER_BUILD_MAX_ROWS = rows_cap
+    for route, budget, rows_cap in _ROUTES:
         best = None
-        try:
-            for _ in range(2):
-                dst = f"{WORK}/cow_upsert_x{mult}_{route}"
-                shutil.rmtree(dst, ignore_errors=True)
-                shutil.copytree(src, dst)
-                t = table(dst)
-                t.driver_probe_max_bytes = gate
-                with _PeakRss(pids) as rss:
-                    t0 = time.perf_counter()
-                    t.write(batch, op="upsert")
-                    wall = round(time.perf_counter() - t0, 3)
-                if best is None or wall < best[0]:
-                    best = (wall, rss.growth_mb)
-        finally:
-            index.DRIVER_BUILD_MAX_ROWS = fold.DRIVER_BUILD_MAX_ROWS = cap
+        for _ in range(2):
+            dst = f"{WORK}/cow_upsert_x{mult}_{route}"
+            shutil.rmtree(dst, ignore_errors=True)
+            shutil.copytree(src, dst)
+            t = table(dst)
+            with _gate(t, budget, rows_cap), _PeakRss(pids) as rss:
+                t0 = time.perf_counter()
+                t.write(batch, op="upsert")
+                wall = round(time.perf_counter() - t0, 3)
+            if best is None or wall < best[0]:
+                best = (wall, rss.growth_mb)
         rec = {
             "op": f"cow_upsert_{route}", "mult": mult, "wall_sec": best[0],
             "rows": t.snapshot().count(), "batch_rows": b,
             "in_mb": round(sum(f["bytes"] for f in files) / 2**20, 2),
-            "under_gate": index.driver_buildable(dm, files) and b <= cap,
+            "under_gate": (
+                index.driver_buildable(dm, files)
+                and n + b <= index.DRIVER_BUILD_MAX_ROWS
+            ),
             "rss_growth_mb": best[1],
         }
         print(json.dumps(rec), flush=True)

@@ -25,7 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from emr_hudi_example_spark.lake import LakeTable
-from emr_hudi_example_spark.lake import fold
+from emr_hudi_example_spark.lake import fold, index
 from emr_hudi_example_spark.lake.index import (
     DRIVER_BUILD_MAX_FILES,
     DRIVER_BUILD_MAX_ROWS,
@@ -269,15 +269,76 @@ def test_empty_batches(spark, tmp_path):
     assert inst == "002"
 
 
-def test_over_cap_batch_falls_back(spark, tmp_path, monkeypatch):
-    """A batch over the collect cap takes the Spark route, with the
-    same result."""
-    monkeypatch.setattr(fold, "DRIVER_BUILD_MAX_ROWS", 2)
+@pytest.mark.parametrize("keys", [[1, 2, 3], [1, 2, 3, 4]])
+def test_over_cap_batch_falls_back(spark, tmp_path, monkeypatch, keys):
+    """A batch under the row cap whose rows with the table's exceed it
+    (the rows the rewrite would hold) takes the Spark route, with the
+    same result; at the cap it takes the driver route."""
+    monkeypatch.setattr(index, "DRIVER_BUILD_MAX_ROWS", 5)
+
+    def history(t):
+        t.write(_df(spark, _rows([1, 2], 1.0, 1)).coalesce(1),
+                op="insert", instant="001")
+
     _assert_same(_twin(
-        spark, tmp_path, "cap", _base(spark),
-        lambda t: t.write(_df(spark, _rows([1, 2, 3], 2.0, 2)),
+        spark, tmp_path, "cap", history,
+        lambda t: t.write(_df(spark, _rows(keys, 2.0, 2)),
+                          op="upsert", instant="002"),
+    ), driver_route=len(keys) + 2 <= 5)
+
+
+def test_live_set_over_gate_skips_the_collect(spark, tmp_path, monkeypatch):
+    """A small batch into a table whose live files exceed the driver
+    gate takes the Spark route without collecting the batch, even when
+    the files it touches would fit: the gate is checked on the head's
+    live set before the collect."""
+
+    def history(t):
+        _base(spark)(t)
+        live = t.tl.live_files()
+        t.driver_probe_max_bytes = sum(f["bytes"] for f in live) - 1
+        assert driver_buildable(t, live[:1])
+
+    collects = []
+    monkeypatch.setattr(fold, "_collected", lambda *a: collects.append(a))
+    _assert_same(_twin(
+        spark, tmp_path, "gate", history,
+        lambda t: t.write(_df(spark, _rows([1], 2.0, 2)),
                           op="upsert", instant="002"),
     ), driver_route=False)
+    assert not collects
+
+
+def test_decline_after_collect_merges_the_collected_rows(
+    spark, tmp_path, monkeypatch
+):
+    """When the kernel declines after the collect (here: a NaN in a
+    float stats column), the Spark route merges the collected rows, not
+    a second read of the source. The source file changes under the
+    write between the collect and the merge: a merge of the second read
+    would upsert a key the planning never saw, next to its old row."""
+    src = tmp_path / "src.json"
+    src.write_text('{"k": "k01", "ver": 2.0}\n')
+    t = LakeTable(spark, str(tmp_path), "t", "nd", ["k"], "ver",
+                  stats_columns=STATS)
+    _base(spark)(t)
+    batch = (
+        spark.read.schema("k string, ver double").json(str(src))
+        .join(_df(spark, _rows([1, 5], 1.0, 1)).drop("ver"), "k")
+        .withColumn("f", F.lit(float("nan")).cast("float"))
+        .select(*_df(spark, []).columns)
+    )
+    rewrite = fold.rewrite
+
+    def changed_source(*args):
+        src.write_text('{"k": "k05", "ver": 2.0}\n')  # same length
+        return rewrite(*args)
+
+    monkeypatch.setattr(fold, "rewrite", changed_source)
+    inst = t.write(batch, op="upsert", instant="002")
+    assert _spark_wrote(t, inst)
+    got = sorted((r.k, r.ver) for r in t.snapshot().collect())
+    assert len(got) == 12 and ("k01", 2.0) in got and ("k05", 1.0) in got
 
 
 def test_nan_stats_column_declines(spark, tmp_path):
