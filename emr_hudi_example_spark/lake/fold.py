@@ -1,15 +1,15 @@
 """The in-driver kernel: pyarrow reads, merges and writes small files.
 
-Two of the engine's rewrites are a few Spark jobs whose fixed cost
-dwarfs the work when the files are small, and this module serves both
-below the shared driver gate
+Three of the engine's writes are a few Spark jobs whose fixed cost
+dwarfs the work when the files are small, and this module serves all
+three below one shared gate
 (:func:`~emr_hudi_example_spark.lake.index.driver_buildable`: local FS,
 at most 64 files, manifest bytes within ``driver_probe_max_bytes`` and
 manifest rows within ``DRIVER_BUILD_MAX_ROWS``), with one shape
-predicate (:func:`serves`), one merge ranking (:func:`_winners`) and
-one writer (:func:`_write`). Each writes one key-sorted base file whose
-rows, read back through Spark under the stored schema, equal the Spark
-route's.
+predicate (:func:`serves`), one collect (:func:`_collected`), one merge
+ranking (:func:`_winners`) and one writer (:func:`_write`). Each writes
+one key-sorted file whose rows, read back through Spark under the
+stored schema, equal the Spark route's.
 
 - **Compaction fold** (:func:`fold`, behind :meth:`LakeTable._fold`:
   ``compact()``, inline MOR compaction and ``run_compaction``; the
@@ -23,15 +23,32 @@ route's.
   behind :meth:`LakeTable._keyed_rewrite`: COW upsert, delete and the
   COW leg of ``merge_into``; the reference's delta-merge into its mart,
   ``SRC/DWD2DM.scala:54-85``). When the head's live files pass the
-  gate and the batch's plan is not clearly huge, the batch and the
-  delete keys are collected once through Arrow, capped so that they
-  and the live files' rows stay within ``DRIVER_BUILD_MAX_ROWS``; the
-  file planning takes the collected keys; rows of the affected files
-  whose key is deleted drop out, then per key the max ``(precombine,
-  _is_new)`` wins, as in :meth:`LakeTable._merge`. The collect is its
-  one Spark action. Once collected, the batch is those rows on either
-  route: a Spark route after a decline below plans and merges them
-  (:meth:`Batch.frames`).
+  gate, the batch and the delete keys are collected, capped so that
+  they and the live files' rows stay within ``DRIVER_BUILD_MAX_ROWS``;
+  the file planning takes the collected keys; rows of the affected
+  files whose key is deleted drop out, then per key the max
+  ``(precombine, _is_new)`` wins, as in :meth:`LakeTable._merge`. Once
+  collected, the batch is those rows on either route: a Spark route
+  after a decline below plans and merges them (:meth:`Batch.frames`).
+- **Merge-on-read delta append** (:func:`collect_append` and
+  :func:`append`, behind :meth:`LakeTable._mor_append`: MOR upsert,
+  tombstone delete and the MOR leg of ``merge_into``; the reference
+  makes ODS and DWD MERGE_ON_READ so that a tick only appends,
+  ``SRC/MSK2Hudi.scala:42``). An append reads no files, so the gate
+  sees none; the stamped, aligned batch is collected, capped at
+  ``DRIVER_BUILD_MAX_ROWS``, and written key-sorted as one delta file,
+  every row kept (the read merge and the fold rank them). After a
+  decline below, the Spark writer writes the collected rows.
+
+The one collect plans its frame once: it builds ``df.limit(cap + 1)``,
+applies the shared "clearly huge" rule
+(:func:`~emr_hudi_example_spark.lake.prune.clearly_huge`, which the
+write planner's distinct-keys probe uses too) to the optimized node
+under its limit nodes, and runs that same Dataset, its Arrow batches
+zstd-compressed (:func:`_to_arrow`). A clearly huge frame is not
+collected; a frame over the cap is, up to ``cap + 1`` rows, and then
+declines. The collect is the rewrite's and the append's one Spark
+action.
 
 In both rankings a null precombine ranks lowest and NaN highest
 (Spark's struct order). Exact ties (one key and precombine twice on
@@ -41,8 +58,9 @@ both routes; here the row read last wins.
 Shapes it declines, so the Spark route runs: ``partial_update``,
 partition keys, a bucket index, adopted (absolute-path) files, and any
 column type outside :data:`_ARROW_TYPES` (plus decimals); for the fold
-also ``sort_by`` or more than one output file, and for the rewrite a
-creating commit, live files over the gate or a batch over the cap.
+also ``sort_by`` or more than one output file, for the rewrite a
+creating commit or live files over the gate, and for the rewrite and
+the append a clearly huge frame or a batch over the cap.
 Files are declined when a column cannot be read as the written type by
 one of Spark's own upcasts, and a result is declined when a float
 ``stats_columns`` column holds a NaN.
@@ -53,6 +71,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+import threading
 import uuid
 from dataclasses import dataclass
 from typing import TYPE_CHECKING
@@ -69,11 +88,15 @@ from emr_hudi_example_spark.lake.columns import (
     DELETED_COL,
     RECORD_KEY_COL,
 )
+from emr_hudi_example_spark.lake.prune import clearly_huge
 
 if TYPE_CHECKING:
     from pyspark.sql import DataFrame, SparkSession
 
     from emr_hudi_example_spark.lake.table import LakeTable
+
+#: held while a collect sets the session's Arrow codec (:func:`_to_arrow`)
+_CODEC_LOCK = threading.Lock()
 
 #: stored column types the kernels serve: each reads from a Spark-written
 #: file and writes back so that Spark reads the same values under the
@@ -201,26 +224,22 @@ def collect(
 ) -> Batch | None:
     """Collect a keyed rewrite's batch when ``t``'s shape, the written
     ``schema`` and ``live``, the head's live files, are served (so the
-    gate cannot turn down any subset of them the planner picks), each
-    frame is plausibly point-sized by its plan's estimate
-    (:meth:`LakeTable._point_probe_plausible`), and the frames' rows
-    (``deletes``: its key columns only) with the live files' manifest
-    rows sum to at most ``DRIVER_BUILD_MAX_ROWS``, the rows the rewrite
-    may hold; else None. One capped Arrow collect per frame."""
-    frames = [f for f in (upserts, deletes) if f is not None]
-    if not serves(t, schema, live) or not all(
-        t._point_probe_plausible(f) for f in frames
-    ):
+    gate cannot turn down any subset of them the planner picks), no
+    frame's plan is clearly huge, and the frames' rows (``deletes``:
+    its key columns only) with the live files' manifest rows sum to at
+    most ``DRIVER_BUILD_MAX_ROWS``, the rows the rewrite may hold; else
+    None. One capped Arrow collect per frame (:func:`_collected`)."""
+    if not serves(t, schema, live):
         return None
     room = index_mod.DRIVER_BUILD_MAX_ROWS - sum(f["rows"] for f in live)
     keys = t._key_cols()
     up = dl = None
     if upserts is not None:
-        if (up := _collected(upserts, room)) is None:
+        if (up := _collected(t, upserts, room)) is None:
             return None
         room -= up.num_rows
     if deletes is not None and (
-        dl := _collected(deletes.select(*keys), room)
+        dl := _collected(t, deletes.select(*keys), room)
     ) is None:
         return None
     distinct = (
@@ -233,16 +252,75 @@ def collect(
     return Batch(up, dl, pairs)
 
 
-def _collected(df: DataFrame, cap: int) -> pa.Table | None:
+def collect_append(t: LakeTable, batch: DataFrame) -> pa.Table | None:
+    """A delta append's stamped, aligned ``batch``, collected when
+    ``t``'s shape and the batch's schema are served (an append reads no
+    files, so the gate sees none), its plan is not clearly huge and it
+    holds at most ``DRIVER_BUILD_MAX_ROWS`` rows; else None, and
+    nothing was collected or, over the cap, nothing kept."""
+    if not serves(t, batch.schema):
+        return None
+    return _collected(t, batch, index_mod.DRIVER_BUILD_MAX_ROWS)
+
+
+def _collected(t: LakeTable, df: DataFrame, cap: int) -> pa.Table | None:
     """``df``'s rows under the Arrow types of its Spark schema, or None
-    when it holds more than ``cap``."""
-    tbl = df.limit(cap + 1).toArrow()
+    when its plan is clearly huge (:func:`prune.clearly_huge` under
+    ``t``'s driver byte budget; then nothing is collected) or it holds
+    more than ``cap``. Catalyst plans the frame once: the rule reads
+    the optimized node under ``df.limit(cap + 1)``'s limit nodes, and
+    the collect runs that same Dataset, whose optimized plan is
+    cached."""
+    lim = df.limit(cap + 1)
+    node = lim._jdf.queryExecution().optimizedPlan()
+    while str(node.nodeName()) in ("GlobalLimit", "LocalLimit"):
+        node = node.children().apply(0)
+    if clearly_huge(node, t.driver_probe_max_bytes):
+        return None
+    tbl = _to_arrow(lim)
     if tbl.num_rows > cap:
         return None
     want = _arrow_schema(df.schema)
     return pa.Table.from_arrays(
         [c.cast(w.type) for c, w in zip(tbl.columns, want)], schema=want
     )
+
+
+def _to_arrow(df: DataFrame) -> pa.Table:
+    """``df.toArrow()`` with the Arrow batches zstd-compressed on their
+    way from the JVM. Uncompressed, the socket carried about 4× the bytes
+    of the parquet the rows make (252 KB against 57 KB for a 2,400-row
+    medallion ODS batch), more than the Spark write the collect replaces
+    wrote; compressed, 65 KB. The codec is a session setting that the
+    inputs of Python UDFs read too, so it is set for this collect alone,
+    under a lock: two collects in one process could otherwise restore
+    each other's setting."""
+    key = "spark.sql.execution.arrow.compression.codec"
+    conf = df.sparkSession.conf
+    with _CODEC_LOCK:
+        old = conf.get(key, None)
+        conf.set(key, "zstd")
+        try:
+            return df.toArrow()
+        finally:
+            if old is None:
+                conf.unset(key)
+            else:
+                conf.set(key, old)
+
+
+def append(
+    t: LakeTable, rows: pa.Table, schema: T.StructType, out_dir: str
+) -> bool:
+    """Write the collected delta ``rows`` (see :func:`collect_append`)
+    as one key-sorted delta file under ``out_dir`` and return True; or
+    return False, having written nothing, when a float
+    ``stats_columns`` column holds a NaN."""
+    out = _key_sorted(rows, None)
+    if _nan_in_stats(t, out):
+        return False
+    _write(t, out, schema, out_dir)
+    return True
 
 
 def rewrite(

@@ -594,43 +594,21 @@ class FilePlanner:
 
     def _point_probe_plausible(self, batch: DataFrame) -> bool:
         """Cheap driver-side pre-check for the capped distinct-keys
-        collect below: skip the probe when Catalyst's plan-size
-        estimate PROVES the batch is far beyond point-sized, so large
-        batches (which would overflow the key cap and fall back to the
-        Spark path anyway) no longer pay an extra pass per commit.
-        Unknown or default-inflated estimates keep the probe — only
-        confident evidence disables a fast path, so point batches from
-        any source keep their r9 planning wins.
-        ``driver_probe_max_keys=0`` disables the probe outright."""
+        collect below: skip the probe when ``batch``'s plan is clearly
+        huge (:func:`clearly_huge`), so large batches (which would
+        overflow the key cap and fall back to the Spark path anyway) no
+        longer pay an extra pass per commit. Unknown or
+        default-inflated estimates keep the probe — only confident
+        evidence disables a fast path, so point batches from any source
+        keep their r9 planning wins. ``driver_probe_max_keys=0``
+        disables the probe outright."""
         if self.driver_probe_max_keys <= 0:
             return False
         try:
             plan = batch._jdf.queryExecution().optimizedPlan()
-            size = int(str(plan.stats().sizeInBytes()))
-            # Without CBO, Filter/Join nodes pass the CHILD's size
-            # through unchanged — a 1-row point batch filtered out of
-            # a 300 MB source estimates 300 MB. Such estimates are an
-            # upper bound, not evidence; keep the probe (r10
-            # self-review finding — the gate must only fire on
-            # trustworthy "clearly huge" verdicts). Detection walks the
-            # tree's ``nodeName()`` (derived from the operator CLASS
-            # name, stable across Spark's string-rendering changes)
-            # instead of substring-matching ``plan.toString()`` (r10
-            # ADVICE); ``tests/test_write_fastpath.py`` pins the names
-            # against the running Spark.
-            shrinkable = self._plan_has_node(
-                plan, ("Filter", "Join", "Aggregate")
-            )
         except Exception:
             return True
-        # sane, known estimate far above point scale → clearly not a
-        # point batch (1 << 61 guards the Long.MaxValue "unknown"
-        # default and inflated garbage)
-        return not (
-            not shrinkable
-            and 0 < size < (1 << 61)
-            and size > 8 * self.driver_probe_max_bytes
-        )
+        return not clearly_huge(plan, self.driver_probe_max_bytes)
 
     def _key_hit_files(
         self,
@@ -995,3 +973,28 @@ class FilePlanner:
             kept = idx.probe(fl, operands, col=col, canon=canon)
             misses |= {f["path"] for f in fl if f["path"] not in kept}
         return misses
+
+
+def clearly_huge(plan, max_bytes: int) -> bool:
+    """The one "clearly huge" rule of the driver collects (the
+    distinct-keys probe, :meth:`FilePlanner._point_probe_plausible`, and
+    the kernel collect, ``lake/fold.py``): optimized Catalyst ``plan``
+    (py4j) has a sane, known size estimate above ``8 * max_bytes``
+    that no node could have shrunk. Without CBO, Filter/Join/Aggregate
+    nodes pass the CHILD's size through unchanged — a 1-row point batch
+    filtered out of a 300 MB source estimates 300 MB — so such an
+    estimate is an upper bound, not evidence (r10 self-review finding).
+    Detection walks the tree's ``nodeName()`` (derived from the
+    operator CLASS name, stable across Spark's string-rendering
+    changes; ``tests/test_write_fastpath.py`` pins the names against
+    the running Spark). ``1 << 61`` guards the Long.MaxValue "unknown"
+    default and inflated garbage. A plan whose estimate cannot be read
+    is not clearly huge."""
+    try:
+        size = int(str(plan.stats().sizeInBytes()))
+        shrinkable = FilePlanner._plan_has_node(
+            plan, ("Filter", "Join", "Aggregate")
+        )
+    except Exception:
+        return False
+    return not shrinkable and 0 < size < (1 << 61) and size > 8 * max_bytes

@@ -1688,7 +1688,11 @@ class LakeTable(FilePlanner):
         So does a batch from another session (a ``foreachBatch`` frame
         lives in the stream's cloned session): an observation completes
         only in the session it was attached in, and the COW merge runs
-        in the table's."""
+        in the table's. On the in-driver routes (``lake/fold.py``: the
+        COW keyed rewrite and the MOR delta append) the batch's one
+        Arrow collect counts it instead, under the same rules: an empty
+        batch that would have been observed writes nothing and
+        publishes nothing."""
         batch = self._prepare_batch(df, inst)
         obs = (
             Observation()
@@ -1874,12 +1878,34 @@ class LakeTable(FilePlanner):
         ``obs`` (see :meth:`_commit_upsert`) turns an empty batch into
         no commit; the delta write IS the batch, so it counts the
         written rows.
+
+        When the in-driver kernel serves the table's shape and the
+        aligned batch (``lake/fold.py``: :func:`collect_append`), the
+        batch is collected once through Arrow and written as one
+        key-sorted delta file (:func:`append`); the collected row count
+        stands in for ``obs``, so an empty batch writes nothing and
+        publishes nothing. If the kernel declines after the collect (a
+        NaN in a float stats column), the Spark writer writes the
+        collected rows, not a second read of the source. A batch over
+        ``DRIVER_BUILD_MAX_ROWS`` takes the Spark write after the capped
+        collect finds so; a declined shape or a clearly huge plan takes
+        it with no collect.
         """
         batch = self._align_schema(batch, tl)
+        schema = batch.schema
+        rows = fold_mod.collect_append(self, batch)
+        if rows is not None:
+            if obs is not None and not rows.num_rows:
+                return None
+            out_dir = os.path.join(self.data_dir, inst)
+            if fold_mod.append(self, rows, schema, out_dir):
+                added = self._describe_data_files(out_dir, "delta")
+                return action, schema, added, []
+            batch, obs = self.spark.createDataFrame(rows, schema), None
         added = self._write_data_files(batch, inst, kind="delta", obs=obs)
         if self._discard_if_empty(obs, inst):
             return None
-        return action, batch.schema, added, []
+        return action, schema, added, []
 
     def _delta_commits_since_compact(self, tl: list[str]) -> int:
         """Commits of listing ``tl`` that actually ADDED delta files

@@ -12,7 +12,8 @@ the round-1 probe: the resulting clone clusters are a worst-case
 duplicate-heavy corpus and exercise the LSH skew caps for real.
 
 Usage: python scripts/scale_probe.py [--lake-only|--ext-only|--pipe-only|
---compact-only|--cow-upsert-only] [mult ...] (default mults: 1 5 25;
+--compact-only|--cow-upsert-only|--mor-append-only] [mult ...]
+(default mults: 1 5 25;
 ``--lake-only`` runs just the lake-kernel legs — point reads,
 index/sidecar builds, bucket MOR — for the deep 100× runs where the
 corpus operators would dominate wall-clock; ``--ext-only`` the dedup/ANN extension legs;
@@ -21,7 +22,9 @@ corpus operators would dominate wall-clock; ``--ext-only`` the dedup/ANN extensi
 on a medallion-shaped ODS table, e.g. ``--compact-only 1 10 100``;
 ``--cow-upsert-only`` the in-driver copy-on-write upsert against the
 Spark rewrite on a mart-shaped table, e.g. ``--cow-upsert-only 1 10
-100``)
+100``; ``--mor-append-only`` the in-driver delta append against the
+Spark delta write on a medallion ODS table, e.g. ``--mor-append-only 1
+10 25 50 600``, where 600× is past the row cap)
 Writes scaled parquet under /tmp/scale_probe/ and prints one JSON line
 per (multiplier, operator) plus a summary table; results are recorded
 in BASELINE.md.
@@ -838,6 +841,70 @@ def run_cow_upsert_probe(spark: SparkSession, mult: int) -> list[dict]:
     return recs
 
 
+def run_mor_append_probe(spark: SparkSession, mult: int) -> list[dict]:
+    """A merge-on-read delta append at ``mult``× a medallion ODS tick
+    (1× = 1,900-2,100 new rows, plus up to 1,200 re-emitted keys, into
+    an ODS table created with 6,000 rows) on each of :data:`_ROUTES`
+    (the in-driver append, ``lake/fold.py``; the Spark delta write; the
+    defaults), min of 2 over fresh copies of one table. Each record says
+    whether the batch is within the row cap, and gives the append's
+    wall time, the bytes per row of the delta files it added and the
+    peak RSS growth of the Python driver and of the JVM during it. Past
+    the cap the default route collects ``DRIVER_BUILD_MAX_ROWS + 1``
+    rows before it declines to the Spark write."""
+    import pandas as pd
+
+    from emr_hudi_example_spark.lake import LakeTable, index
+    from lakebench.gen import medallion_plan
+
+    plan = medallion_plan(
+        1, 2, first_rows=6_000, tick_rows=(1_900 * mult, 2_100 * mult)
+    )
+
+    def table(base: str) -> LakeTable:
+        return LakeTable(
+            spark, base, "bench", "ods", ["l_orderkey", "l_linenumber"],
+            "created_ts", table_type="MERGE_ON_READ",
+        )
+
+    src = f"{WORK}/mor_append_x{mult}"
+    shutil.rmtree(src, ignore_errors=True)
+    table(src).write(
+        spark.createDataFrame(pd.DataFrame(plan["slices"][0])), op="upsert"
+    )
+    batch = spark.createDataFrame(pd.DataFrame(plan["slices"][1]))
+    n = len(plan["slices"][1]["l_orderkey"])
+    pids = {
+        "py": os.getpid(),
+        "jvm": spark.sparkContext._jvm.ProcessHandle.current().pid(),
+    }
+    recs = []
+    for route, budget, rows_cap in _ROUTES:
+        best = None
+        for _ in range(2):
+            dst = f"{WORK}/mor_append_x{mult}_{route}"
+            shutil.rmtree(dst, ignore_errors=True)
+            shutil.copytree(src, dst)
+            t = table(dst)
+            with _gate(t, budget, rows_cap), _PeakRss(pids) as rss:
+                t0 = time.perf_counter()
+                inst = t.write(batch, op="upsert")
+                wall = round(time.perf_counter() - t0, 3)
+            if best is None or wall < best[0]:
+                best = (wall, rss.growth_mb)
+        added = t.tl.manifest(inst)["added"]
+        rec = {
+            "op": f"mor_append_{route}", "mult": mult, "wall_sec": best[0],
+            "rows": n, "files": len(added),
+            "bytes_per_row": round(sum(f["bytes"] for f in added) / n, 1),
+            "under_cap": n <= index.DRIVER_BUILD_MAX_ROWS,
+            "rss_growth_mb": best[1],
+        }
+        print(json.dumps(rec), flush=True)
+        recs.append(rec)
+    return recs
+
+
 def main() -> None:
     args = sys.argv[1:]
     lake_only = "--lake-only" in args
@@ -846,9 +913,10 @@ def main() -> None:
     ann_only = "--ann-only" in args
     compact_only = "--compact-only" in args
     cow_upsert_only = "--cow-upsert-only" in args
+    mor_append_only = "--mor-append-only" in args
     flags = (
         "--lake-only", "--ext-only", "--pipe-only", "--ann-only",
-        "--compact-only", "--cow-upsert-only",
+        "--compact-only", "--cow-upsert-only", "--mor-append-only",
     )
     mults = [int(a) for a in args if a not in flags] or [1, 5, 25]
     sys.path.insert(0, ROOT)
@@ -865,6 +933,8 @@ def main() -> None:
             all_recs.extend(run_compact_probe(spark, m))
         elif cow_upsert_only:
             all_recs.extend(run_cow_upsert_probe(spark, m))
+        elif mor_append_only:
+            all_recs.extend(run_mor_append_probe(spark, m))
         elif ann_only:
             all_recs.extend(run_ann_probe(spark, m))
         elif pipe_only:

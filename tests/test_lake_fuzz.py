@@ -31,6 +31,7 @@ precombine when unmatched.
 """
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -134,6 +135,7 @@ _FUZZ_INDEXES = {
     "bloom_index": True,
     "secondary_index_columns": ["payload"],
 }
+_UNPARTITIONED = {"partition_keys": []}
 
 
 @pytest.mark.parametrize(
@@ -156,6 +158,13 @@ _FUZZ_INDEXES = {
         # just the A/B point checks (r10 verdict #3)
         ("COPY_ON_WRITE", None, _FUZZ_INDEXES, True),
         ("MERGE_ON_READ", 4, _FUZZ_INDEXES, True),
+        # unpartitioned: the shapes the in-driver kernels serve
+        # (lake/fold.py) — the COW keyed rewrite, the MOR delta append
+        # and the MOR compaction fold — against the sequential model
+        pytest.param("COPY_ON_WRITE", None, _UNPARTITIONED, False,
+                     id="COPY_ON_WRITE-None-unpartitioned-False"),
+        pytest.param("MERGE_ON_READ", 4, _UNPARTITIONED, False,
+                     id="MERGE_ON_READ-4-unpartitioned-False"),
     ],
 )
 @pytest.mark.parametrize(
@@ -175,10 +184,10 @@ def test_op_sequence_matches_model(
     tmp = tmp_path_factory.mktemp("fuzz")
     t = LakeTable(
         spark, str(tmp), "f", "t", ["k"], "ver",
-        partition_keys=["part"], table_type=table_type,
+        table_type=table_type,
         inline_compact_deltas=inline,
         stats_columns=["ver", "payload"],
-        **indexes,
+        **{"partition_keys": ["part"], **indexes},
     )
     if spark_only:
         t.driver_io_local = False
@@ -305,7 +314,7 @@ def test_op_sequence_matches_model(
         assert _snap_rows(t.snapshot()) == _model_rows(model), (
             f"divergence after op {counter} ({table_type}, seed {seed})"
         )
-        if indexes:
+        if "secondary_index_columns" in indexes:
             # sec-index read after EVERY op (r9 verdict #4): _batch
             # re-rolls ``payload`` on each upsert, so the indexed
             # value CHANGES for existing keys across the sequence —
@@ -357,9 +366,10 @@ def test_op_sequence_matches_model(
     assert _snap_rows(inc) == _model_rows(model)
 
     # partition_filter prunes to exactly the model's slice
-    got = _snap_rows(t.snapshot(partition_filter={"part": 1}))
-    want = {r for r in _model_rows(model) if r[3] == 1}
-    assert got == want
+    if t.partition_keys:
+        got = _snap_rows(t.snapshot(partition_filter={"part": 1}))
+        want = {r for r in _model_rows(model) if r[3] == 1}
+        assert got == want
 
     # stats-pruned predicate reads: file skipping on the randomized
     # column ranges must never drop a matching row (skipping is an
@@ -394,6 +404,14 @@ def test_op_sequence_matches_model(
     if spark_only:
         # no code path may silently re-enable the driver fast paths
         assert t.driver_io_local is False
+    if not t.partition_keys:
+        # every write but a COW creating upsert took an in-driver kernel
+        # (the append, the rewrite or the fold): no _SUCCESS marker
+        spark_written = {
+            d for d in os.listdir(t.data_dir)
+            if os.path.exists(os.path.join(t.data_dir, d, "_SUCCESS"))
+        }
+        assert spark_written <= {history[0][0]}, spark_written
 
 
 @pytest.mark.parametrize("spark_only", [False, True])

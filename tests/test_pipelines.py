@@ -1279,7 +1279,11 @@ def test_medallion_tick_job_budget(spark, tmp_path):
     batch and upsert-only MOR reads merged without the join. It takes 8
     now that the mart upsert merges and writes in-driver
     (``lake/fold.py``): ``dm_increment`` is the batch collect alone, at
-    most 4 jobs, where the Spark rewrite took 6. A compaction tick's
+    most 4 jobs, where the Spark rewrite took 6. The two MOR delta
+    appends write in-driver too, so no job of the tick is a Spark
+    write: ``ods.write`` is 1 job, the batch collect, and
+    ``dwd_increment`` is 3, the ODS incremental read, the ``part``
+    join and the batch collect. A compaction tick's
     ``ods.compact(); dwd.compact()`` folds in-driver under the same
     gate: 0 jobs, where the Spark fold took 2 per table."""
     li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
