@@ -8,7 +8,6 @@ from emr_hudi_example_spark.functions.core import (
     now_instant,
     nvl,
     pk_not_null_condition,
-    pk_not_null_filter_sql,
 )
 from emr_hudi_example_spark.functions.json_schema import (
     get_json_value,
@@ -25,7 +24,6 @@ __all__ = [
     "now_instant",
     "nvl",
     "pk_not_null_condition",
-    "pk_not_null_filter_sql",
     "get_json_value",
     "is_valid_json",
     "json_to_struct_type",

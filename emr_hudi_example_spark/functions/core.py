@@ -81,12 +81,6 @@ def pk_not_null_condition(keys: list[str]) -> Column:
     return reduce(lambda a, b: a & b, (F.col(k).isNotNull() for k in keys))
 
 
-def pk_not_null_filter_sql(keys: list[str]) -> str:
-    """Same predicate as the SQL string the reference builds
-    (SRC/package.scala:185-188) — kept for SQL-string call sites."""
-    return " and ".join(f"{k} is not null" for k in keys)
-
-
 def ensure_parallelism(df, min_partitions: int | None = None):
     """Widen a too-narrow input to the session's parallelism.
 

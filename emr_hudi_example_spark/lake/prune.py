@@ -540,6 +540,8 @@ class FilePlanner:
            batch's distinct keys. Candidate files with no key hit are
            carried over by manifest reference, so COW write
            amplification scales with keys touched, not partition size.
+           A lone candidate skips the scan layers, not every key check
+           (:meth:`_lone_file_missed`).
         """
         head = newest(tl)
         live = self.tl.live_files(head, tl)
@@ -563,12 +565,42 @@ class FilePlanner:
         else:
             # unpartitioned table (single "" partition) or global index
             candidates, pruned = live, ()
-        hits = (
-            self._key_hit_files(candidates, batch, minmax=minmax, pairs=pairs)
-            if len(candidates) > 1
-            else Kept(candidates, ScanReport(len(candidates)))
-        )
+        if len(candidates) > 1:
+            hits = self._key_hit_files(
+                candidates, batch, minmax=minmax, pairs=pairs
+            )
+        elif candidates and self._lone_file_missed(
+            candidates[0], batch, minmax, pairs
+        ):
+            hits = Kept([], ScanReport(1, (("key_range", 1),)))
+        else:
+            hits = Kept(candidates, ScanReport(len(candidates)))
         return Kept(hits, ScanReport(len(live), pruned + hits.report.pruned))
+
+    @staticmethod
+    def _lone_file_missed(f: dict, batch: DataFrame, minmax, pairs) -> bool:
+        """True when ``batch`` provably holds none of ``f``'s keys, ``f``
+        being the one candidate file. Collected ``pairs`` prove only an
+        empty batch (the in-driver kernel rewrites a lone file its keys
+        miss). Otherwise the batch's key range must meet ``f``'s: the
+        fused ``minmax``, else the batch's least key, one top-1 job
+        that also fills the persisted batch's cache (an aggregate costs
+        two jobs more)."""
+        if pairs is not None:
+            return not pairs
+        if minmax is None:
+            row = (
+                batch.select(RECORD_KEY_COL)
+                .orderBy(F.col(RECORD_KEY_COL).asc_nulls_last())
+                .first()
+            )
+            minmax = (row[0] if row else None, None)
+        lo, hi = minmax
+        if lo is None:  # no key: an empty batch
+            return True
+        return f.get("key_min") is not None and (
+            f["key_max"] < lo or (hi is not None and f["key_min"] > hi)
+        )
 
     @staticmethod
     def _plan_has_node(plan, names: tuple[str, ...], cap: int = 512) -> bool:

@@ -62,11 +62,9 @@ from concurrent.futures import ThreadPoolExecutor
 from typing import Callable
 from urllib.parse import unquote, urlparse
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from py4j.protocol import Py4JJavaError
 
 from emr_hudi_example_spark.functions.core import pk_not_null_condition
 from emr_hudi_example_spark.lake import bloom as bloom_mod
@@ -1678,57 +1676,34 @@ class LakeTable(FilePlanner):
         tl: list[str],
         checkpoint: dict | None = None,
     ) -> tuple[tuple | None, ScanReport]:
-        """Keyed upsert. On an existing table with no ``checkpoint``,
-        an EMPTY batch publishes nothing and returns None: one
-        ``Observation`` counts the batch on the write's own jobs (no
-        separate ``isEmpty`` pass), and a zero count drops
-        ``data/<inst>/`` before the manifest — the manifest rename is
-        the commit. A creating commit still publishes (it creates the
-        table), and so does a checkpointed one (its cursor must land).
-        So does a batch from another session (a ``foreachBatch`` frame
-        lives in the stream's cloned session): an observation completes
-        only in the session it was attached in, and the COW merge runs
-        in the table's. On the in-driver routes (``lake/fold.py``: the
-        COW keyed rewrite and the MOR delta append) the batch's one
-        Arrow collect counts it instead, under the same rules: an empty
-        batch that would have been observed writes nothing and
-        publishes nothing."""
+        """Keyed upsert. On an existing table with no ``checkpoint``
+        (``skip_empty``), an EMPTY batch publishes nothing and returns
+        None. A creating commit still publishes (it creates the table),
+        and so does a checkpointed one (its cursor must land). The
+        in-driver routes (``lake/fold.py``: the COW keyed rewrite and
+        the MOR delta append) see the empty batch in their Arrow
+        collect and write nothing. The Spark routes read it from the
+        footers of the files they wrote (:meth:`_discard_if_empty`):
+        every one holds 0 rows, or the write made none (an empty
+        ``partitionBy`` or bucket write). Hudi and Delta take a
+        commit's row counts from its data files the same way; a COW
+        batch with no key rewrites no live file (:meth:`_affected_files`)."""
         batch = self._prepare_batch(df, inst)
-        obs = (
-            Observation()
-            if tl
-            and checkpoint is None
-            and df.sparkSession._jsparkSession.equals(
-                self.spark._jsparkSession
-            )
-            else None
-        )
+        skip_empty = bool(tl) and checkpoint is None
         if self.is_mor:
-            out = self._mor_append(batch, inst, "upsert", tl, obs)
+            out = self._mor_append(batch, inst, "upsert", tl, skip_empty)
             return out, ScanReport()
         batch = self._align_schema(batch, tl)
-        return self._keyed_rewrite("upsert", inst, tl, batch, obs=obs)
+        return self._keyed_rewrite(
+            "upsert", inst, tl, batch, skip_empty=skip_empty
+        )
 
-    @staticmethod
-    def _observe_rows(
-        batch: DataFrame, obs: Observation | None
-    ) -> DataFrame:
-        if obs is None:
-            return batch
-        return batch.observe(obs, F.count(F.lit(1)).alias("rows"))
-
-    def _discard_if_empty(self, obs: Observation | None, inst: str) -> bool:
-        """After the data write: True when the observed batch had no
-        rows — ``data/<inst>/`` is removed and the caller publishes no
-        manifest. A metric the write did not deliver (Spark hands back
-        an empty row, which ``get`` rejects) publishes as before."""
-        if obs is None:
-            return False
-        try:
-            rows = obs.get["rows"]
-        except Py4JJavaError:
-            return False
-        if rows:
+    def _discard_if_empty(self, added: list[dict], inst: str) -> bool:
+        """After a Spark data write: True when every file in ``added``
+        holds 0 rows by its footer (also when there is none) —
+        ``data/<inst>/`` is removed and the caller publishes no
+        manifest. A file whose row count is unknown publishes."""
+        if any(f.get("rows", 1) for f in added):
             return False
         shutil.rmtree(os.path.join(self.data_dir, inst), ignore_errors=True)
         return True
@@ -1762,7 +1737,7 @@ class LakeTable(FilePlanner):
         tl: list[str],
         upserts: DataFrame | None = None,
         deletes: DataFrame | None = None,
-        obs: Observation | None = None,
+        skip_empty: bool = False,
     ) -> tuple[tuple | None, ScanReport]:
         """The ONE copy-on-write keyed rewrite behind upsert, delete and
         the COW leg of :meth:`merge_into`: find the files holding a key
@@ -1771,17 +1746,17 @@ class LakeTable(FilePlanner):
         (:meth:`_merge`) and write the result; the affected files are
         the commit's ``replaced``, planned against the head of ``tl``.
         A creating upsert has no files: it only dedups the batch.
-        ``obs`` (see :meth:`_commit_upsert`) observes ``upserts`` and
-        turns an empty batch into no commit.
+        ``skip_empty`` (see :meth:`_commit_upsert`) turns an empty
+        ``upserts`` into no commit.
 
         On an existing table whose shape and live files the in-driver
         kernel serves, the frames are collected once (``lake/fold.py``:
         :func:`collect`), the planning takes the collected keys, and the
-        affected files are merged and written there (:func:`rewrite`);
-        the collected row count stands in for ``obs``. From the collect
-        on, the batch is the collected rows: the Spark layers that plan
-        a batch over ``driver_probe_max_keys`` and a Spark merge after
-        the kernel declines read them as frames, not the source again.
+        affected files are merged and written there (:func:`rewrite`).
+        From the collect on, the batch is the collected rows: the Spark
+        layers that plan a batch over ``driver_probe_max_keys`` and a
+        Spark merge after the kernel declines read them as frames, not
+        the source again.
         Everything else takes the Spark route below.
         Returns ``(out, report)`` — see :meth:`_commit`."""
         head = newest(tl)
@@ -1802,8 +1777,7 @@ class LakeTable(FilePlanner):
         # M1 — persist around multi-action writes (SRC/package.scala:66,
         # 78): on an existing table the source frames feed partition
         # discovery, the key-range agg, the key-hit scan AND the merge;
-        # only the creating commit evaluates them once. The row count
-        # observes the persisted frame, so every action reads through it.
+        # only the creating commit evaluates them once.
         cached = [
             f for f in (upserts, deletes)
             if f is not None and local is None
@@ -1812,8 +1786,6 @@ class LakeTable(FilePlanner):
         for f in cached:
             f.persist()
         try:
-            if local is None and upserts is not None:
-                upserts = self._observe_rows(upserts, obs)
             if head is None:
                 affected = Kept([], ScanReport())
             else:
@@ -1826,12 +1798,9 @@ class LakeTable(FilePlanner):
                 affected = self._affected_files(
                     keys, tl, None if local is None else local.pairs
                 )
-            if local is not None:
-                # the collect counted the batch: an empty one is no
-                # commit, and nothing is written for it
-                if obs is not None and not local.upserts.num_rows:
-                    return None, affected.report
-                obs = None
+            if skip_empty and local is not None and not local.upserts.num_rows:
+                # the collect counted the batch: nothing is written
+                return None, affected.report
             out_dir = os.path.join(self.data_dir, inst)
             if local is not None and fold_mod.rewrite(
                 self, affected, schema, local, out_dir
@@ -1859,7 +1828,7 @@ class LakeTable(FilePlanner):
         finally:
             for f in cached:
                 f.unpersist()
-        if self._discard_if_empty(obs, inst):
+        if skip_empty and self._discard_if_empty(added, inst):
             return None, affected.report
         replaced = sorted({f["path"] for f in affected})
         return (action, schema, added, replaced), affected.report
@@ -1870,40 +1839,37 @@ class LakeTable(FilePlanner):
         inst: str,
         action: str,
         tl: list[str],
-        obs: Observation | None = None,
+        skip_empty: bool = False,
     ) -> tuple | None:
         """MOR write path: append delta files, zero rewrite — write cost
         is O(batch), deferred to the read merge / compaction (the trade
         the reference buys with MERGE_ON_READ, ``SRC/MSK2Hudi.scala:42``).
-        ``obs`` (see :meth:`_commit_upsert`) turns an empty batch into
-        no commit; the delta write IS the batch, so it counts the
-        written rows.
+        ``skip_empty`` (see :meth:`_commit_upsert`) turns an empty
+        batch into no commit.
 
         When the in-driver kernel serves the table's shape and the
         aligned batch (``lake/fold.py``: :func:`collect_append`), the
         batch is collected once through Arrow and written as one
-        key-sorted delta file (:func:`append`); the collected row count
-        stands in for ``obs``, so an empty batch writes nothing and
-        publishes nothing. If the kernel declines after the collect (a
-        NaN in a float stats column), the Spark writer writes the
-        collected rows, not a second read of the source. A batch over
-        ``DRIVER_BUILD_MAX_ROWS`` takes the Spark write after the capped
-        collect finds so; a declined shape or a clearly huge plan takes
-        it with no collect.
+        key-sorted delta file (:func:`append`). If the kernel declines
+        after the collect (a NaN in a float stats column), the Spark
+        writer writes the collected rows, not a second read of the
+        source. A batch over ``DRIVER_BUILD_MAX_ROWS`` takes the Spark
+        write after the capped collect finds so; a declined shape or a
+        clearly huge plan takes it with no collect.
         """
         batch = self._align_schema(batch, tl)
         schema = batch.schema
         rows = fold_mod.collect_append(self, batch)
         if rows is not None:
-            if obs is not None and not rows.num_rows:
+            if skip_empty and not rows.num_rows:
                 return None
             out_dir = os.path.join(self.data_dir, inst)
             if fold_mod.append(self, rows, schema, out_dir):
                 added = self._describe_data_files(out_dir, "delta")
                 return action, schema, added, []
-            batch, obs = self.spark.createDataFrame(rows, schema), None
-        added = self._write_data_files(batch, inst, kind="delta", obs=obs)
-        if self._discard_if_empty(obs, inst):
+            batch = self.spark.createDataFrame(rows, schema)
+        added = self._write_data_files(batch, inst, kind="delta")
+        if skip_empty and self._discard_if_empty(added, inst):
             return None
         return action, schema, added, []
 
@@ -2357,14 +2323,11 @@ class LakeTable(FilePlanner):
         instant: str,
         kind: str = "base",
         key_sort: bool = True,
-        obs: Observation | None = None,
     ) -> list[dict]:
         """Write one commit's data files under ``data/<instant>/`` with
         hive-style ``__pt_<col>=<val>`` layout; returns file records
         (relative path + partition values + kind base|delta) for the
-        manifest. ``obs`` counts the written rows at the top of the
-        write plan: observed below the bucket shuffle, an empty batch's
-        metric would vanish with the empty stage AQE prunes."""
+        manifest."""
         out_dir = os.path.join(self.data_dir, instant)
         writer = df
         pt_cols = []
@@ -2401,7 +2364,6 @@ class LakeTable(FilePlanner):
         # protection if those modes ever change their key.
         if key_sort:
             writer = writer.sortWithinPartitions(*pt_cols, RECORD_KEY_COL)
-        writer = self._observe_rows(writer, obs)
         w = writer.write.mode("overwrite")
         if pt_cols:
             w = w.partitionBy(*pt_cols)
@@ -2472,8 +2434,10 @@ class LakeTable(FilePlanner):
             if self.is_mor:
                 # the footer's _deleted max gates the read merge's
                 # tombstone join (:meth:`_merged_read`); no statistic
-                # means "may hold one"
-                entry["tombstones"] = deleted is None or bool(deleted[1])
+                # means "may hold one", unless the file has no rows
+                entry["tombstones"] = (
+                    bool(deleted[1]) if deleted else entry.get("rows") != 0
+                )
             if col_stats:
                 entry["col_stats"] = col_stats
             if bucket is not None:

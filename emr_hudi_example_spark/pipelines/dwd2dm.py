@@ -55,9 +55,9 @@ def dm_increment(
 
     No ``persist``/``isEmpty`` guard: the merged frame goes straight to
     ``dm.write``, and an upsert into an existing mart publishes nothing
-    for an empty slice (``LakeTable._commit_upsert`` counts the batch
-    on the write's own jobs). An unseeded mart is created by the first
-    tick, empty slice or not: a creating commit always publishes.
+    for an empty slice (``LakeTable._commit_upsert``). An unseeded
+    mart is created by the first tick, empty slice or not: a creating
+    commit always publishes.
 
     Each table's commit log is listed once per op: the slice read and
     the mart snapshot raise :class:`TableNotFound` on a table with no

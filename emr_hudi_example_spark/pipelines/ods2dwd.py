@@ -53,8 +53,8 @@ def dwd_increment(
 
     The enriched slice goes straight to ``dwd.write``: no ``persist``,
     no ``isEmpty`` pass. An empty slice on an existing DWD publishes
-    no commit — the upsert counts its batch on the write's own jobs
-    (``LakeTable._commit_upsert``) — and the cursor still advances.
+    no commit (``LakeTable._commit_upsert``), and the cursor still
+    advances.
 
     Column mapping note: the reference enriches TPC-DS ``inventory`` with
     ``item`` (nvl(i_brand,'N/A')); the driver fixtures map this to

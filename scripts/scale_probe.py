@@ -922,9 +922,13 @@ def main() -> None:
     sys.path.insert(0, ROOT)
     from emr_hudi_example_spark.session import get_spark_session
 
-    # cores and shuffle partitions from $SPARK_GRAFT_CPUS
+    # cores and shuffle partitions from $SPARK_GRAFT_CPUS; the heap is
+    # half of physical RAM, at most 48g
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    heap_gb = max(1, min(48, ram_gb // 2))
     spark = get_spark_session(
-        app_name="scale-probe", extra_conf={"spark.driver.memory": "48g"}
+        app_name="scale-probe",
+        extra_conf={"spark.driver.memory": f"{heap_gb}g"},
     )
     spark.sparkContext.setLogLevel("ERROR")
     all_recs = []

@@ -17,6 +17,7 @@ from emr_hudi_example_spark.lake import (
     LakeTable,
 )
 from emr_hudi_example_spark.lake import timeline as timeline_mod
+from tests.harness import count_jobs
 
 SF = "/root/testdata/sf0.001"
 
@@ -4942,33 +4943,71 @@ def test_functional_index_statless_and_partition_stats(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "tt,kw",
+    "tt,kw,spark_route",
     [
-        ("COPY_ON_WRITE", {}),
-        ("MERGE_ON_READ", {}),
-        # the bucket shuffle's empty stage is pruned by AQE: the count
-        # must sit above it
-        ("MERGE_ON_READ", {"bucket_index": 4}),
+        ("COPY_ON_WRITE", {}, False),
+        ("MERGE_ON_READ", {}, False),
+        ("MERGE_ON_READ", {"bucket_index": 4}, False),
+        ("COPY_ON_WRITE", {"partition_keys": ["c_mktsegment"]}, False),
+        ("MERGE_ON_READ", {"partition_keys": ["c_mktsegment"]}, False),
+        # the unpartitioned tables off the in-driver kernel: a MOR
+        # delta write of one 0-row file, a COW rewrite of one live file
+        ("COPY_ON_WRITE", {}, True),
+        ("MERGE_ON_READ", {}, True),
+    ],
+    ids=[
+        "COPY_ON_WRITE-kw0", "MERGE_ON_READ-kw1", "MERGE_ON_READ-kw2",
+        "COPY_ON_WRITE-partitioned", "MERGE_ON_READ-partitioned",
+        "COPY_ON_WRITE-spark", "MERGE_ON_READ-spark",
     ],
 )
-def test_empty_upsert_publishes_nothing(spark, tmp_path, tt, kw):
+def test_empty_upsert_publishes_nothing(
+    spark, tmp_path, monkeypatch, tt, kw, spark_route
+):
     """An empty upsert on an existing table returns None, leaves the
     timeline unchanged and leaves no ``data/<inst>/`` directory; the
     next non-empty upsert lands exactly. A creating commit and a
     checkpointed write still publish when empty (the table must come
-    into being; the cursor must land). Before the upsert counted its
-    own batch, both table types published an empty commit."""
+    into being; the cursor must land). The kernel routes see the empty
+    batch in their collect; the Spark routes (partitioned, bucket, or
+    the kernel shut) in the footers of the files they wrote. On the
+    forced COW route the table is one live file: the empty batch
+    touches no key, so it rewrites none of the file's rows, and a 2-key
+    upsert still takes 3 jobs, its key check filling the batch's
+    cache."""
+    from emr_hudi_example_spark.lake import fold
+
+    if spark_route:
+        monkeypatch.setattr(fold, "serves", lambda *a, **k: False)
+    written = []
+    describe = LakeTable._describe_data_files
+
+    def spy(self, out_dir, kind):
+        added = describe(self, out_dir, kind)
+        written.extend(f["rows"] for f in added)
+        return added
+
+    monkeypatch.setattr(LakeTable, "_describe_data_files", spy)
     t = make_table(spark, tmp_path, table_type=tt, **kw)
     n = cust(spark).count()
     empty = cust(spark, ver=2).filter("c_custkey < 0")
     assert t.write(empty, op="upsert", instant="000") == "000"
     t.write(cust(spark), op="upsert", instant="001")
+    written.clear()
     assert t.write(empty, op="upsert", instant="002") is None
     assert t.timeline() == ["000", "001"]
     assert not os.path.exists(os.path.join(t.data_dir, "002"))
+    assert sum(written) == 0
 
     upd = cust(spark, ver=3).filter(F.col("c_custkey").isin(1, 2))
-    assert t.write(upd, op="upsert", instant="003") == "003"
+    if spark_route and tt == "COPY_ON_WRITE":
+        assert len(t.tl.live_files()) == 1
+        jobs, inst = count_jobs(
+            spark, lambda: t.write(upd, op="upsert", instant="003")
+        )
+        assert inst == "003" and jobs <= 3
+    else:
+        assert t.write(upd, op="upsert", instant="003") == "003"
     assert t.timeline() == ["000", "001", "003"]
     snap = t.snapshot()
     assert snap.count() == n
@@ -4983,9 +5022,11 @@ def test_empty_upsert_publishes_nothing(spark, tmp_path, tt, kw):
     assert t.snapshot().count() == n
 
     # the optimistic route runs the same compute step: no commit either
+    written.clear()
     assert t.write_optimistic(empty, op="upsert", instant="005") is None
     assert t.timeline()[-1] == "004"
     assert not os.path.exists(os.path.join(t.data_dir, "005"))
+    assert sum(written) == 0
     assert t.write_optimistic(upd, op="upsert", instant="006") == "006"
     assert t.snapshot().count() == n
 
@@ -5029,14 +5070,16 @@ def _has_join(df) -> bool:
     )
 
 
-def test_mor_tombstone_gate(spark, tmp_path):
+def test_mor_tombstone_gate(spark, tmp_path, monkeypatch):
     """The MOR read merge plans its tombstone join only when a scanned
     file may hold a tombstone. Upsert-only: no Join in the snapshot or
     incremental plan. After a serialized delete, an optimistic delete,
     or a merge with a delete leg, the join is back and the deleted key
     is gone. Entries without the ``tombstones`` flag keep the join;
-    compaction output carries ``tombstones: false``."""
+    compaction output and 0-row deltas carry ``tombstones: false``."""
     import json
+
+    from emr_hudi_example_spark.lake import fold
 
     n = cust(spark).count()
     tables = {}
@@ -5100,6 +5143,21 @@ def test_mor_tombstone_gate(spark, tmp_path):
     assert not _has_join(t.snapshot())
     assert t.snapshot().count() == n - 1
     assert t.snapshot().filter("c_custkey = 3").count() == 0
+
+    # an empty checkpointed upsert off the kernel publishes one 0-row
+    # delta: its footer has no _deleted statistic, and no rows either
+    monkeypatch.setattr(fold, "serves", lambda *a, **k: False)
+    t = make_table(spark, tmp_path, name="zero", table_type="MERGE_ON_READ")
+    t.write(cust(spark), op="upsert", instant="001")
+    t.write(
+        cust(spark).filter("c_custkey < 0"), op="upsert", instant="002",
+        checkpoint={"source_id": "src", "batch_id": 0},
+    )
+    assert [
+        (f["rows"], f["tombstones"]) for f in t.tl.manifest("002")["added"]
+    ] == [(0, False)]
+    assert not _has_join(t.snapshot())
+    assert t.snapshot().count() == n
 
 
 # ------------------------------------------------------ scan reports

@@ -1222,7 +1222,7 @@ def test_empty_tick_publishes_nothing(spark, tmp_path, tt):
     """``dwd_increment`` and ``dm_increment`` on an empty slice publish
     nothing (``dm_increment`` returns None) and leave no data
     directory behind, and the next non-empty tick lands exactly. The
-    ticks carry no ``isEmpty`` guard: the upsert counts its own batch."""
+    ticks carry no ``isEmpty`` guard: the upsert skips an empty batch."""
     nation = spark.read.parquet(f"{SF}/nation.parquet").withColumn(
         "created_ts", F.lit(1).cast("long")
     )
@@ -1268,6 +1268,41 @@ def test_empty_tick_publishes_nothing(spark, tmp_path, tt):
     assert sorted(
         map(tuple, dm.logical().select("r_name", "key_sum").collect())
     ) == sorted(map(tuple, expect.collect()))
+
+
+@pytest.mark.parametrize("tt", ["COPY_ON_WRITE", "MERGE_ON_READ"])
+def test_empty_foreach_batch_upsert_publishes_nothing(spark, tmp_path, tt):
+    """An upsert of an empty ``foreachBatch`` frame with no checkpoint,
+    on an existing table, returns None and leaves the timeline
+    unchanged. The frame lives in the stream's cloned session; the
+    kernel's collect and the written footers see its rows in any
+    session."""
+    from emr_hudi_example_spark.streaming.sources import (
+        drain, start_foreach_batch,
+    )
+
+    nation = spark.read.parquet(f"{SF}/nation.parquet")
+    t = LakeTable(spark, str(tmp_path), "fb", "nation", ["n_nationkey"],
+                  "created_ts", table_type=tt)
+    t.write(nation.withColumn("created_ts", F.lit(1).cast("long")),
+            op="upsert", instant="001")
+    src = tmp_path / "src"
+    nation.write.parquet(str(src))
+    stream = (
+        spark.readStream.schema(nation.schema).parquet(str(src))
+        .filter("n_nationkey < 0")
+        .withColumn("created_ts", F.lit(2).cast("long"))
+    )
+    got = []
+    drain(start_foreach_batch(
+        stream,
+        lambda b, _id: got.append(t.write(b, op="upsert")),
+        str(tmp_path / "ckpt"),
+        query_name="EmptyForeachBatch",
+    ))
+    assert got == [None]
+    assert t.timeline() == ["001"]
+    assert t.snapshot().count() == nation.count()
 
 
 def test_medallion_tick_job_budget(spark, tmp_path):
