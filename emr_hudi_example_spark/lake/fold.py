@@ -37,8 +37,10 @@ stored schema, equal the Spark route's.
   ``SRC/MSK2Hudi.scala:42``). An append reads no files, so the gate
   sees none; the stamped, aligned batch is collected, capped at
   ``DRIVER_BUILD_MAX_ROWS``, and written key-sorted as one delta file,
-  every row kept (the read merge and the fold rank them). After a
-  decline below, the Spark writer writes the collected rows.
+  every row kept (the read merge and the fold rank them). A file in
+  which no key occurs twice is marked ``unique`` in the manifest, so a
+  read of it alone skips the merge. After a decline below, the Spark
+  writer writes the collected rows.
 
 The one collect plans its frame once: it builds ``df.limit(cap + 1)``,
 applies the shared "clearly huge" rule
@@ -68,7 +70,6 @@ one of Spark's own upcasts, and a result is declined when a float
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import threading
@@ -186,7 +187,7 @@ def fold(
         )
     if _nan_in_stats(t, out):
         return False
-    _write(t, out, schema, out_dir)
+    _write(t, out, out_dir)
     return True
 
 
@@ -309,18 +310,20 @@ def _to_arrow(df: DataFrame) -> pa.Table:
                 conf.set(key, old)
 
 
-def append(
-    t: LakeTable, rows: pa.Table, schema: T.StructType, out_dir: str
-) -> bool:
+def append(t: LakeTable, rows: pa.Table, out_dir: str) -> bool | None:
     """Write the collected delta ``rows`` (see :func:`collect_append`)
-    as one key-sorted delta file under ``out_dir`` and return True; or
-    return False, having written nothing, when a float
-    ``stats_columns`` column holds a NaN."""
+    as one key-sorted delta file under ``out_dir`` and return whether
+    no ``_record_key`` occurs twice in it (one neighbour compare over
+    the sorted keys); or return None, having written nothing, when a
+    float ``stats_columns`` column holds a NaN."""
     out = _key_sorted(rows, None)
     if _nan_in_stats(t, out):
-        return False
-    _write(t, out, schema, out_dir)
-    return True
+        return None
+    _write(t, out, out_dir)
+    keys = out.column(RECORD_KEY_COL)
+    return not keys.null_count and not pc.any(
+        pc.equal(keys[1:], keys[:-1])
+    ).as_py()
 
 
 def rewrite(
@@ -363,7 +366,7 @@ def rewrite(
     out = _key_sorted(old, rows)
     if _nan_in_stats(t, out):
         return False
-    _write(t, out, schema, out_dir)
+    _write(t, out, out_dir)
     return True
 
 
@@ -496,30 +499,27 @@ def _winners(
     return order[best]
 
 
-def _write(
-    t: LakeTable, tbl: pa.Table, schema: T.StructType, out_dir: str
-) -> None:
+def _write(t: LakeTable, tbl: pa.Table, out_dir: str) -> None:
     """Write ``tbl`` as one Spark-style part file. The dictionary is
-    kept only on columns with at most rows/2 distinct values, as
-    parquet-mr falls back to plain encoding (a dictionary on every
-    column made a compacted medallion file 21% larger), and a page
-    index is written, as parquet-mr writes one. The Spark version key
-    makes Spark read timestamps and dates without calendar rebasing.
-    Timestamp columns get no footer stats, as Spark's INT96 ones have
-    none, so the manifest's ``col_stats`` equal the Spark route's."""
-    n = tbl.num_rows
+    kept only on columns with at most half as many distinct values as
+    rows, judged on the first 2^16 rows (the whole column of every
+    small file), as parquet-mr falls back to plain encoding (a
+    dictionary on every column made a compacted medallion file 21%
+    larger), and a page index is written, as parquet-mr writes one.
+    The footer carries Spark's version key, so Spark reads dates and
+    timestamps without calendar rebasing under any
+    ``datetimeRebaseModeInRead``; pyarrow writes key-value metadata
+    only along with the Arrow schema (``store_schema``). Timestamp
+    columns get no footer stats, as Spark's INT96 ones have none, so
+    the manifest's ``col_stats`` equal the Spark route's."""
+    head = tbl.slice(0, 1 << 16)
     dictionary = [
         c for c in tbl.column_names
-        if 2 * pc.count_distinct(tbl.column(c)).as_py() <= n
+        if 2 * pc.count_distinct(head.column(c)).as_py() <= head.num_rows
     ]
-    by_name = {f.name: f for f in schema.fields}
-    row_schema = T.StructType([by_name[c] for c in tbl.column_names])
-    tbl = tbl.replace_schema_metadata({
-        "org.apache.spark.version": t.spark.version,
-        "org.apache.spark.sql.parquet.row.metadata": json.dumps(
-            row_schema.jsonValue()
-        ),
-    })
+    tbl = tbl.replace_schema_metadata(
+        {"org.apache.spark.version": t.spark.version}
+    )
     # a fold over the same instant replaces what an earlier, failed
     # attempt left, as the Spark route's overwrite does
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -536,6 +536,5 @@ def _write(
             c for c in tbl.column_names
             if not pa.types.is_timestamp(tbl.schema.field(c).type)
         ],
-        store_schema=False,
     )
     os.replace(tmp, os.path.join(out_dir, name))

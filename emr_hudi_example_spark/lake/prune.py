@@ -38,8 +38,9 @@ class ScanReport:
     """What one planning pass did: the files it considered and, in
     pipeline order, how many files each layer that ran dropped.
 
-    Read layers: ``bucket`` → ``record_index`` → ``partition_stats`` →
-    ``col_stats`` → ``sec_index`` → ``col_bloom``. Write layers:
+    Read layers: ``commit_time`` (incremental reads) → ``bucket`` →
+    ``record_index`` → ``partition_stats`` → ``col_stats`` →
+    ``sec_index`` → ``col_bloom``. Write layers:
     ``partition`` → ``bucket`` → ``record_index`` → ``key_range`` →
     ``key_bloom`` → ``key_scan``. ``partitions_pruned`` counts the
     whole partitions the partition-stats layer proved dead."""
@@ -63,11 +64,15 @@ class ScanReport:
 
 class Kept(list):
     """The file entries a planning pass kept, carrying its
-    :class:`ScanReport` — a list, so callers iterate the survivors."""
+    :class:`ScanReport` — a list, so callers iterate the survivors.
+    ``no_key``: a write planning pass proved its batch holds no key."""
 
-    def __init__(self, files, report: ScanReport) -> None:
+    def __init__(
+        self, files, report: ScanReport, no_key: bool = False
+    ) -> None:
         super().__init__(files)
         self.report = report
+        self.no_key = no_key
 
 
 #: datetime-shaped strings for predicate-vs-stat comparisons: ISO 'T'
@@ -289,14 +294,21 @@ class FilePlanner:
         tl: list[str] | None = None,
         instant: str | None = None,
         all_base: bool = False,
+        span: tuple[str | None, str | None] | None = None,
     ) -> Kept:
-        """Driver-side file skipping for a predicate read, layer by
-        layer: record-key point lookups (bucket, then record index),
-        then the manifest's stats (partition aggregates, per-file
-        min/max) and the secondary index and column bloom verdicts.
+        """Driver-side file skipping for a read, layer by layer: an
+        incremental read's commit range ``span`` (``(begin, end]``,
+        None bounds open) against each file's ``ct_range``, then, for a
+        predicate, record-key point lookups (bucket, then record index),
+        the manifest's stats (partition aggregates, per-file min/max)
+        and the secondary index and column bloom verdicts.
         Returns the kept files with the pass's :class:`ScanReport`.
         The partition aggregates are ``instant``'s, of the op's listing
         ``tl``; without an instant that layer does not run.
+
+        The ``commit_time`` layer drops only files whose every row the
+        read's ``_commit_time`` row filter would drop, and that filter
+        runs before the MOR merge: no dropped row could have won it.
 
         The key layers are unconditionally MOR-safe: a file they drop
         provably holds no operand key, and any row the merge could
@@ -321,18 +333,27 @@ class FilePlanner:
         either way. Empty files (rows == 0) skip unconditionally — no
         row of theirs can win any merge."""
         considered = len(files)
-        if not predicate:
-            return Kept(files, ScanReport(considered))
-        for col, op, _val in predicate:
-            if op not in self._PRED_OPS:
-                raise ValueError(
-                    f"unknown predicate op {op!r}; use one of {self._PRED_OPS}"
-                )
         pruned: list[tuple[str, int]] = []
 
         def drop(layer: str, before: list[dict], kept: list[dict]):
             pruned.append((layer, len(before) - len(kept)))
             return kept
+
+        if span is not None:
+            begin, end = span
+            files = drop("commit_time", files, [
+                f for f in files
+                if not (ct := f.get("ct_range"))
+                or ((begin is None or ct[1] > begin)
+                    and (end is None or ct[0] <= end))
+            ])
+        if not predicate:
+            return Kept(files, ScanReport(considered, tuple(pruned)))
+        for col, op, _val in predicate:
+            if op not in self._PRED_OPS:
+                raise ValueError(
+                    f"unknown predicate op {op!r}; use one of {self._PRED_OPS}"
+                )
 
         # record-key point lookups: the first ``=``/``in`` conjunct on
         # the key whose operands are all strings
@@ -542,6 +563,10 @@ class FilePlanner:
            amplification scales with keys touched, not partition size.
            A lone candidate skips the scan layers, not every key check
            (:meth:`_lone_file_missed`).
+
+        The result's ``no_key`` is set when the batch's key range,
+        from the fused aggregate or the lone file's least-key job, is
+        null: the batch is empty.
         """
         head = newest(tl)
         live = self.tl.live_files(head, tl)
@@ -565,36 +590,41 @@ class FilePlanner:
         else:
             # unpartitioned table (single "" partition) or global index
             candidates, pruned = live, ()
-        if len(candidates) > 1:
-            hits = self._key_hit_files(
-                candidates, batch, minmax=minmax, pairs=pairs
-            )
-        elif candidates and self._lone_file_missed(
-            candidates[0], batch, minmax, pairs
-        ):
-            hits = Kept([], ScanReport(1, (("key_range", 1),)))
-        else:
-            hits = Kept(candidates, ScanReport(len(candidates)))
-        return Kept(hits, ScanReport(len(live), pruned + hits.report.pruned))
-
-    @staticmethod
-    def _lone_file_missed(f: dict, batch: DataFrame, minmax, pairs) -> bool:
-        """True when ``batch`` provably holds none of ``f``'s keys, ``f``
-        being the one candidate file. Collected ``pairs`` prove only an
-        empty batch (the in-driver kernel rewrites a lone file its keys
-        miss). Otherwise the batch's key range must meet ``f``'s: the
-        fused ``minmax``, else the batch's least key, one top-1 job
-        that also fills the persisted batch's cache (an aggregate costs
-        two jobs more)."""
-        if pairs is not None:
-            return not pairs
-        if minmax is None:
+        if len(candidates) == 1 and pairs is None and minmax is None:
+            # the batch's least key, for the lone file's check: one
+            # top-1 job that also fills the persisted batch's cache (an
+            # aggregate costs two jobs more)
             row = (
                 batch.select(RECORD_KEY_COL)
                 .orderBy(F.col(RECORD_KEY_COL).asc_nulls_last())
                 .first()
             )
             minmax = (row[0] if row else None, None)
+        if len(candidates) > 1:
+            hits = self._key_hit_files(
+                candidates, batch, minmax=minmax, pairs=pairs
+            )
+        elif candidates and self._lone_file_missed(
+            candidates[0], minmax, pairs
+        ):
+            hits = Kept([], ScanReport(1, (("key_range", 1),)))
+        else:
+            hits = Kept(candidates, ScanReport(len(candidates)))
+        return Kept(
+            hits,
+            ScanReport(len(live), pruned + hits.report.pruned),
+            no_key=minmax is not None and minmax[0] is None,
+        )
+
+    @staticmethod
+    def _lone_file_missed(f: dict, minmax, pairs) -> bool:
+        """True when the batch provably holds none of ``f``'s keys, ``f``
+        being the one candidate file. Collected ``pairs`` prove only an
+        empty batch (the in-driver kernel rewrites a lone file its keys
+        miss). Otherwise the batch's key range ``minmax`` (``hi`` None
+        when only the least key is known) must meet ``f``'s."""
+        if pairs is not None:
+            return not pairs
         lo, hi = minmax
         if lo is None:  # no key: an empty batch
             return True

@@ -101,6 +101,16 @@ class TableNotFound(ValueError):
     """A read or keyed op on a table with no commit."""
 
 
+def _marked_unique(added: list[dict], unique: bool) -> list[dict]:
+    """``added``, each entry marked ``unique: true`` when its writer
+    proved that no key occurs twice in the file (:meth:`LakeTable.
+    _merged_read` skips the merge over one such file)."""
+    if unique:
+        for f in added:
+            f["unique"] = True
+    return added
+
+
 def _empty_df(spark: SparkSession, schema: T.StructType) -> DataFrame:
     """Schema-typed EMPTY DataFrame as a LOCAL relation: Catalyst's
     empty-relation propagation folds it, so downstream actions cost no
@@ -838,10 +848,19 @@ class LakeTable(FilePlanner):
 
         File pruning: only files *added* by commits in range are scanned;
         the ``_commit_time`` row filter then drops carried-over older rows
-        that COW rewrites copied into those files. ``predicate``
-        additionally skips in-range files by manifest column stats (see
+        that COW rewrites copied into those files. The ``commit_time``
+        layer applies that filter to whole files first: an in-range file
+        whose ``ct_range`` misses ``(begin, end]`` (a compaction's base
+        file, whose rows keep their older commit times) is not opened;
+        a file without the statistic is. ``predicate`` additionally
+        skips in-range files by manifest column stats (see
         :meth:`snapshot`) before the scan, then applies the exact row
         filter.
+
+        On MOR the surviving files merge per key (:meth:`_merged_read`);
+        a lone ``unique`` delta without tombstones, the usual tick of a
+        pipeline that reads each new commit once, is returned as scanned
+        and filtered, with no shuffle.
         """
         tl = self.tl.instants()
         last, commits = self._range_commits(
@@ -865,7 +884,7 @@ class LakeTable(FilePlanner):
         fds = [f for f in added if f["path"] in live_at_end]
         # in-range files are a subset of the live set at the range end,
         # so that instant's partition-stats aggregate applies (superset)
-        fds = self._plan_read(fds, predicate, tl, last)
+        fds = self._plan_read(fds, predicate, tl, last, span=(begin, end))
         # an in-range file live at `end` can still be cleaned once the
         # retention horizon moves past `end` — fail with the contract
         # error, not PATH_NOT_FOUND mid-scan
@@ -1747,7 +1766,8 @@ class LakeTable(FilePlanner):
         the commit's ``replaced``, planned against the head of ``tl``.
         A creating upsert has no files: it only dedups the batch.
         ``skip_empty`` (see :meth:`_commit_upsert`) turns an empty
-        ``upserts`` into no commit.
+        ``upserts`` into no commit, decided before any merge or write
+        when the collect or the planning has counted it.
 
         On an existing table whose shape and live files the in-driver
         kernel serves, the frames are collected once (``lake/fold.py``:
@@ -1798,8 +1818,12 @@ class LakeTable(FilePlanner):
                 affected = self._affected_files(
                     keys, tl, None if local is None else local.pairs
                 )
-            if skip_empty and local is not None and not local.upserts.num_rows:
-                # the collect counted the batch: nothing is written
+            if skip_empty and (
+                affected.no_key
+                if local is None else not local.upserts.num_rows
+            ):
+                # the collect counted the batch, or the planner found no
+                # key in it: nothing is written
                 return None, affected.report
             out_dir = os.path.join(self.data_dir, inst)
             if local is not None and fold_mod.rewrite(
@@ -1850,7 +1874,8 @@ class LakeTable(FilePlanner):
         When the in-driver kernel serves the table's shape and the
         aligned batch (``lake/fold.py``: :func:`collect_append`), the
         batch is collected once through Arrow and written as one
-        key-sorted delta file (:func:`append`). If the kernel declines
+        key-sorted delta file (:func:`append`), marked ``unique`` when
+        no key occurs twice in it. If the kernel declines
         after the collect (a NaN in a float stats column), the Spark
         writer writes the collected rows, not a second read of the
         source. A batch over ``DRIVER_BUILD_MAX_ROWS`` takes the Spark
@@ -1864,9 +1889,10 @@ class LakeTable(FilePlanner):
             if skip_empty and not rows.num_rows:
                 return None
             out_dir = os.path.join(self.data_dir, inst)
-            if fold_mod.append(self, rows, schema, out_dir):
+            unique = fold_mod.append(self, rows, out_dir)
+            if unique is not None:
                 added = self._describe_data_files(out_dir, "delta")
-                return action, schema, added, []
+                return action, schema, _marked_unique(added, unique), []
             batch = self.spark.createDataFrame(rows, schema)
         added = self._write_data_files(batch, inst, kind="delta")
         if skip_empty and self._discard_if_empty(added, inst):
@@ -1921,12 +1947,29 @@ class LakeTable(FilePlanner):
         nulls for columns last set before the range, as in Hudi. The
         row-level replay equals the pairwise payload model because
         partial_update writes pre-combine every batch
-        (:meth:`_precombine_batch`): one version per (key, commit)."""
+        (:meth:`_precombine_batch`): one version per (key, commit).
+
+        When ``files`` is one entry marked ``unique`` (its writer proved
+        each key occurs once: a kernel delta append, a MOR compaction)
+        and ``tombstones: false``, every row is its key's only version
+        and wins on every payload: the scan is returned projected and
+        filtered, with no exchange, aggregate or tombstone join. Several
+        unique files still merge, since a key may occur in two."""
+        out_cols = [c for c in df.columns if c != DELETED_COL]
+        if (
+            files is not None
+            and len(files) == 1
+            and files[0].get("unique")
+            and files[0].get("tombstones") is False
+        ):
+            out = df.select(*out_cols)
+            if predicate:
+                out = out.filter(self._predicate_condition(predicate))
+            return out
         stable = [p for p in (predicate or []) if p[0] == RECORD_KEY_COL]
         if stable:
             df = df.filter(self._predicate_condition(stable))
         part_cols = self._key_cols()
-        out_cols = [c for c in df.columns if c != DELETED_COL]
         if DELETED_COL in df.columns and (
             files is None
             or any(f.get("tombstones") is not False for f in files)
@@ -2374,8 +2417,9 @@ class LakeTable(FilePlanner):
         """Manifest entries for the parquet files under ``out_dir`` (one
         commit's data dir), from the layout and each file's footer:
         partition values and bucket from the ``__pt_``/``__bk=`` dirs,
-        ``rows``, ``key_min``/``key_max``, ``col_stats``, ``bytes`` and
-        on MOR ``tombstones``. The one describer behind both writers, the
+        ``rows``, ``key_min``/``key_max``, ``ct_range`` (the
+        ``_commit_time`` min and max), ``col_stats``, ``bytes`` and on
+        MOR ``tombstones``. The one describer behind both writers, the
         Spark write and the in-driver fold (``lake/fold.py``). Hidden
         names (``.``/``_`` prefixes: checksums, markers, temp files) are
         not data files."""
@@ -2398,7 +2442,7 @@ class LakeTable(FilePlanner):
                 walked.append((full, rel, partition, bucket, pp))
         stats = self._file_stats_parallel(
             [full for full, *_ in walked],
-            [RECORD_KEY_COL]
+            [RECORD_KEY_COL, COMMIT_TIME_COL]
             + self.stats_columns
             + ([DELETED_COL] if self.is_mor else []),
         )
@@ -2409,10 +2453,12 @@ class LakeTable(FilePlanner):
             nrows = ranges.pop("__rows__", None)
             deleted = ranges.pop(DELETED_COL, None)
             kmin, kmax = ranges.get(RECORD_KEY_COL) or (None, None)
+            ct = ranges.get(COMMIT_TIME_COL)
             col_stats = {
                 c: [self._stat_json(r[0]), self._stat_json(r[1])]
                 for c, r in ranges.items()
-                if c != RECORD_KEY_COL
+                if c in self.stats_columns
+                and c != RECORD_KEY_COL
                 and r is not None
                 and self._stat_json(r[0]) is not None
                 and self._stat_json(r[1]) is not None
@@ -2431,6 +2477,10 @@ class LakeTable(FilePlanner):
             }
             if nrows is not None:
                 entry["rows"] = nrows[0]
+            if ct is not None:
+                # incremental reads drop a file whose rows all fall
+                # outside their commit range (:meth:`incremental`)
+                entry["ct_range"] = list(ct)
             if self.is_mor:
                 # the footer's _deleted max gates the read merge's
                 # tombstone join (:meth:`_merged_read`); no statistic
@@ -2888,7 +2938,8 @@ class LakeTable(FilePlanner):
         ``inst``. On MOR the deltas and
         tombstones fold in; the rows keep their ``_commit_time`` and
         the column set stays the stored schema (all-false ``_deleted``)
-        so later reads are uniform.
+        so later reads are uniform, and every output file is marked
+        ``unique``.
 
         Files under the shared driver gate, of a table shape
         ``lake/fold.py`` serves, fold in-driver with pyarrow: the same
@@ -2898,18 +2949,22 @@ class LakeTable(FilePlanner):
         if fold_mod.fold(
             self, files, out_dir, target_files_per_partition, sort_by, schema
         ):
-            return self._describe_data_files(out_dir, "base")
-        df = self._read_files([f["path"] for f in files], schema)
-        if self.is_mor:
-            df = self._merged_read(df, files).withColumn(
-                DELETED_COL, F.lit(False)
+            added = self._describe_data_files(out_dir, "base")
+        else:
+            df = self._read_files([f["path"] for f in files], schema)
+            if self.is_mor:
+                df = self._merged_read(df, files).withColumn(
+                    DELETED_COL, F.lit(False)
+                )
+            df = self._cluster_for_compact(
+                df, files, target_files_per_partition, sort_by
             )
-        df = self._cluster_for_compact(
-            df, files, target_files_per_partition, sort_by
-        )
-        # sort_by clustering (when given) owns the row order — default
-        # compaction keeps the key sort
-        return self._write_data_files(df, inst, key_sort=not sort_by)
+            # sort_by clustering (when given) owns the row order —
+            # default compaction keeps the key sort
+            added = self._write_data_files(df, inst, key_sort=not sort_by)
+        # the MOR fold leaves one row per key, split across the files
+        # by partition (and bucket): every file holds each key once
+        return _marked_unique(added, self.is_mor)
 
     # -------------------------------------------- async (scheduled) compaction
 

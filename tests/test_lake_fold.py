@@ -176,3 +176,32 @@ def test_declined_shapes_fold_through_spark(spark, tmp_path):
     assert jobs > 0
     got = {r["k"]: r["ver"] for r in t.snapshot().collect()}
     assert len(got) == 6 and got["k01"] == 2.0 and got["k02"] == 3.0
+
+
+def test_kernel_files_read_under_rebase_exception(spark, tmp_path):
+    """Dates and timestamps before 1582 read back equal from a kernel
+    fold and a Spark fold with Spark 3's default rebase mode,
+    ``EXCEPTION``: the kernel's footer carries Spark's version key, so
+    Spark takes its values as proleptic Gregorian, as it does for its
+    own files, instead of refusing to guess."""
+
+    def history(t):
+        t.write(spark.createDataFrame(_rows(range(12), 1.0, 1), SCHEMA),
+                op="upsert", instant="001")
+
+    pair = _twin(spark, tmp_path, "rebase", "MERGE_ON_READ", history,
+                 lambda t: t.compact(instant="002"))
+    keys = ("spark.sql.parquet.datetimeRebaseModeInRead",
+            "spark.sql.parquet.int96RebaseModeInRead")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "EXCEPTION")
+        rows_k, rows_s = (_compacted(t, inst)[0] for t, inst, _ in pair)
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert rows_k == rows_s and len(rows_k) == 12
